@@ -4,49 +4,47 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Write-once materialization seam for derived relations a pipeline
-  * would persist as tables (the converged dedup cluster assignment,
-  * the verified near-dup pair relation): a production deployment
-  * derives these ONCE per corpus snapshot and every downstream report
-  * reads the written table — re-deriving the full iterative/LSH
-  * pipeline per consumer was the repo's slowest query class twice
-  * over. Entries are DISK-BACKED: compute writes the relation to a
-  * warehouse-dir parquet/bucketed table ([[servedDir]] /
-  * [[prepareServedTable]]) and stores the lazy read plan, so a hit is
-  * a parquet scan of the written table — the honest production shape,
-  * and zero executor-memory residency between hits (r15 verdict: RAM
-  * localCheckpoint entries × a 314-query sweep plausibly drove the
-  * driver host into paging). Bench reports the cold derivation time
-  * separately via [[computeCount]].
+/** The one session-lifetime cache for derived relations and other
+  * intermediates a pipeline would otherwise re-derive per consumer:
+  * the written serving tables (dedup clusters, near-dup pairs, bucketed
+  * band/edge layouts, the CDC latest-state table), the persisted CDC
+  * envelope logs, and the incremental-dedup base index.
   *
-  * Staleness + lifetime (the r11 advice on the old per-file memo —
-  * unbounded, no invalidation, pinned for the JVM's life):
+  * Key: (application, session, corpus dir, tag), and a hit must also
+  * match the corpus FINGERPRINT the entry was built under. The
+  * fingerprint hashes every file's name, size and mtime under
+  * `sfDir`, so rewriting the corpus within a session makes the next
+  * lookup release the stale entry and rebuild — correctness does not
+  * depend on anyone remembering to invalidate. The listing is one
+  * driver-side metadata scan per lookup: microseconds locally, one
+  * LIST per query on an object store — noise next to the derivation
+  * it saves. A hit is only served to the session that built it.
   *
-  *  - The key embeds a FINGERPRINT of the corpus directory (every
-  *    file's name, size, mtime). Rewriting the data under `sfDir`
-  *    within a session changes the fingerprint, so the stale entry is
-  *    simply never hit again (and ages out of the LRU below) —
-  *    correctness does not depend on anyone remembering to
-  *    invalidate. The listing is one driver-side metadata scan per
-  *    lookup: microseconds locally, one LIST per query on an object
-  *    store — noise next to the derivation it saves.
-  *  - The cache is LRU-capped at [[MaxEntries]]. Eviction drops the
-  *    strong reference to the lazy READ PLAN only — the written
-  *    parquet/table stays on disk, so a re-derivation after eviction
-  *    OVERWRITES the served directory in place. Caveat: a caller that
-  *    held the pre-eviction DataFrame across that overwrite would read
-  *    deleted files (FileNotFoundException), unlike the old RAM
-  *    localCheckpoint entries which kept working until GC. The
-  *    bench/verify drivers and tests never hold a served frame across
-  *    an eviction+recompute (MaxEntries=32 exceeds the live tag count),
-  *    so this stays a documented edge, not a versioned-dir scheme.
-  *    [[invalidate]]/[[clearAll]] give tests and hosts an explicit
-  *    path.
-  *  - Sessions pin nothing beyond their live entries: when the
-  *    application ends, a listener clears the whole cache.
+  * Release action: every entry carries one, run exactly once when the
+  * entry leaves the cache —
+  *  - a written served table: nothing. Compute wrote the relation to a
+  *    warehouse-dir parquet/bucketed table ([[servedDir]] /
+  *    [[prepareServedTable]]) and the entry holds only the lazy read
+  *    plan, so it pins no executor memory; a re-derivation overwrites
+  *    the served directory in place (a caller that held the old frame
+  *    across that overwrite would read deleted files — the bench and
+  *    verify mains and the tests never do, MaxEntries exceeds the live
+  *    tag count);
+  *  - a persisted frame: `unpersist()`;
+  *  - the dedup base index: `BaseIndex.unpersist()`.
+  *
+  * Release points: a fingerprint mismatch on lookup, LRU eviction
+  * past [[MaxEntries]], [[invalidate]] (every entry of a corpus dir),
+  * [[release]] (every entry of one session — for hosts retiring
+  * short-lived sessions under a long-lived context), and application
+  * end (a listener per SparkContext releases that application's
+  * entries only).
+  *
+  * Bench reports the cold derivation time separately via
+  * [[computeCount]].
   */
 object Memo {
-  private val MaxEntries = 32
+  private[graft] val MaxEntries = 32
 
   /** Bucket count for the written serving layouts (band tables, graph
     * edges, the CDC latest-state table) — sized to the execution
@@ -58,16 +56,21 @@ object Memo {
     * ingest exactly the same way. */
   val ServingBuckets = 32
 
-  private final case class Entry(sfDir: String, df: DataFrame)
+  private final class Entry(val app: String, val session: SparkSession, val sfDir: String,
+                            val fingerprint: String, val value: Any, release: () => Unit) {
+    def free(): Unit = try release() catch { case _: Throwable => () }
+  }
 
   // Access-order LinkedHashMap = LRU; all access synchronized on it
-  // (compute runs under the lock, matching the old computeIfAbsent
-  // semantics — callers are the single-threaded bench/verify drivers
-  // and test suites, and duplicate concurrent derivation would be the
-  // worse failure mode).
+  // (compute runs under the lock: callers are the single-threaded
+  // bench/verify mains and test suites, and duplicate concurrent
+  // derivation would be the worse failure mode).
   private val cache = new java.util.LinkedHashMap[String, Entry](16, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[String, Entry]): Boolean =
-      size() > MaxEntries
+    override def removeEldestEntry(e: java.util.Map.Entry[String, Entry]): Boolean = {
+      val evict = size() > MaxEntries
+      if (evict) e.getValue.free()
+      evict
+    }
   }
 
   private val computes = new AtomicLong
@@ -112,36 +115,55 @@ object Memo {
       .map(b => f"$b%02x").mkString
   }
 
-  /** The memoized relation for (session, corpus dir, tag), deriving it
-    * with `compute` on miss. `compute` should WRITE the relation to
-    * disk (parquet under [[servedDir]], or saveAsTable after
-    * [[prepareServedTable]]) and return the read plan over the written
-    * files — the stored value then pins no executor memory. */
-  def cached(spark: SparkSession, sfDir: String, tag: String)
-            (compute: => DataFrame): DataFrame = {
-    val key = s"${spark.sparkContext.applicationId}/${System.identityHashCode(spark)}" +
-      s"|$sfDir|$tag|${fingerprint(sfDir)}"
+  /** The memoized value for (session, corpus dir, tag), deriving it
+    * with `compute` on miss; `release` frees what the value pins when
+    * the entry leaves the cache (see the object doc). */
+  def cached[T](spark: SparkSession, sfDir: String, tag: String, release: T => Unit)
+               (compute: => T): T = {
+    val app = spark.sparkContext.applicationId
+    val key = s"$app/${System.identityHashCode(spark)}|$sfDir|$tag"
+    val fp = fingerprint(sfDir)
     cache.synchronized {
       val hit = cache.get(key)
-      if (hit != null) hit.df
+      if (hit != null && (hit.session eq spark) && hit.fingerprint == fp) hit.value.asInstanceOf[T]
       else {
+        // a stale entry is released BEFORE the rebuild: Spark's cache
+        // manager matches persisted frames by plan, so a rebuilt frame
+        // over the rewritten files would otherwise serve the old blocks
+        if (hit != null) { cache.remove(key); hit.free() }
         registerCleanup(spark)
         computes.incrementAndGet()
-        val df = compute
-        cache.put(key, Entry(sfDir, df))
-        df
+        val v = compute
+        cache.put(key, new Entry(app, spark, sfDir, fp, v, () => release(v)))
+        v
       }
     }
   }
 
-  /** Drop every entry derived from `sfDir` (all sessions, all tags) —
-    * the explicit hook for a caller that knows it rewrote the corpus
-    * and wants the blocks released now rather than LRU-aged. */
-  def invalidate(sfDir: String): Unit = cache.synchronized {
-    cache.entrySet().removeIf(e => e.getValue.sfDir == sfDir)
+  /** [[cached]] for a relation `compute` WROTE to disk (parquet under
+    * [[servedDir]], or saveAsTable after [[prepareServedTable]]),
+    * returning the read plan over the written files — nothing to
+    * release. */
+  def cached(spark: SparkSession, sfDir: String, tag: String)
+            (compute: => DataFrame): DataFrame =
+    cached[DataFrame](spark, sfDir, tag, _ => ())(compute)
+
+  private def releaseWhere(p: Entry => Boolean): Unit = cache.synchronized {
+    val it = cache.values().iterator()
+    while (it.hasNext) {
+      val e = it.next()
+      if (p(e)) { e.free(); it.remove() }
+    }
   }
 
-  def clearAll(): Unit = cache.synchronized { cache.clear() }
+  /** Release every entry derived from `sfDir` (all sessions, all tags) —
+    * for a caller that knows it rewrote the corpus and wants the blocks
+    * released now rather than LRU-aged. */
+  def invalidate(sfDir: String): Unit = releaseWhere(_.sfDir == sfDir)
+
+  /** Release every entry owned by `spark`. Safe to call on a session
+    * with nothing memoized. */
+  def release(spark: SparkSession): Unit = releaseWhere(_.session eq spark)
 
   /** Warehouse-dir path for a served parquet relation derived from a
     * corpus dir — `<warehouse>/<prefix><md5(sfDir)>`. Shared by every
@@ -269,16 +291,17 @@ object Memo {
   }
 
   // one application-end listener per SparkContext, so a dying app
-  // releases every entry (and thus every pinned session/block).
+  // releases its own entries (and thus every pinned session/block).
   private val hookedApps = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private def registerCleanup(spark: SparkSession): Unit = {
     val sc = spark.sparkContext
-    if (hookedApps.add(sc.applicationId)) {
+    val app = sc.applicationId
+    if (hookedApps.add(app)) {
       sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
         override def onApplicationEnd(
             e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-          hookedApps.remove(sc.applicationId)
-          clearAll()
+          hookedApps.remove(app)
+          releaseWhere(_.app == app)
         }
       })
     }

@@ -989,14 +989,14 @@ object Dedup {
     val docs = Tables.documents(spark, sfDir)
     val srcNum = expr("cast(substring(source, 4) as int)")
     val fresh = docs.filter(srcNum >= 10)
-    // The base index is session-memoized: repeated invocations (a bench
-    // loop, a nightly job re-run in one session) reuse ONE persisted
-    // bands frame + ONE broadcast Bloom instead of stacking a new pair
-    // per call — which is also the production shape: the base corpus
-    // index outlives any single probe batch. Evicted (and unpersisted)
-    // when the owning SparkContext ends, so a later session in the same
-    // JVM starts cold and leaks nothing.
-    val index = memoIndex(spark, sfDir)(
+    // The base index is session-memoized in graft.Memo: repeated
+    // invocations (a bench loop, a nightly job re-run in one session)
+    // reuse ONE persisted bands frame + ONE Bloom filter instead of
+    // stacking a new pair per call — which is also the production
+    // shape: the base corpus index outlives any single probe batch.
+    // Memo unpersists it when the entry is released.
+    val index = graft.Memo.cached(spark, sfDir, "dedup_base_index",
+        (_: BaseIndex).unpersist())(
       buildBaseIndex(docs.filter(srcNum < 10)))
     fresh.join(dedupAgainstIndex(fresh, index, threshold),
         Seq("doc_id"), "left_anti")
@@ -1024,7 +1024,8 @@ object Dedup {
     * (~1.2 MB per million keys at 1% fpp, broadcast). Built ONCE and
     * probed by every incoming batch — [[graft.streaming.StreamingDedup]]
     * holds one per stream (exposed on its handle for cleanup at stream
-    * stop); [[incrementalCleaned]] memoizes one per (session, corpus).
+    * stop); [[incrementalCleaned]] memoizes one per (session, corpus)
+    * in [[graft.Memo]].
     * Call [[BaseIndex.unpersist]] when done with an owned index. */
   final case class BaseIndex(
       bands: DataFrame,
@@ -1038,54 +1039,6 @@ object Dedup {
     def unpersist(): Unit = {
       try bands.unpersist() catch { case _: Throwable => () }
     }
-  }
-
-  private val indexCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), BaseIndex]()
-  private val indexEvictionHooked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[SparkSession]()
-
-  /** One [[BaseIndex]] per (session, corpus dir), dropped when the
-    * session's context ends — the same session-lifetime memo contract
-    * as CdcQueries' envelope-log cache.
-    *
-    * Lifecycle caveat: automatic eviction fires at CONTEXT end. A
-    * deployment that serves many short-lived sessions over one
-    * long-lived context (the `SparkSession.newSession()` pattern) would
-    * accumulate one persisted bands frame + broadcast Bloom per retired
-    * session until the context dies — such callers must call
-    * [[evictIndexesFor]] when retiring a session. */
-  private def memoIndex(spark: SparkSession, sfDir: String)
-                       (build: => BaseIndex): BaseIndex = {
-    if (indexEvictionHooked.add(spark)) {
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-          evictIndexesFor(spark)
-      })
-    }
-    indexCache.computeIfAbsent((spark, sfDir), _ => build)
-  }
-
-  /** Drop (and unpersist) every memoized base index owned by `spark` —
-    * the context-end listener body, and the PUBLIC release hook for
-    * deployments retiring short-lived sessions under a long-lived
-    * context (see [[memoIndex]]'s lifecycle caveat); also exercised by
-    * the session-hygiene spec (a later session in the same JVM must
-    * start cold). Safe to call on a session with nothing memoized. */
-  def evictIndexesFor(spark: SparkSession): Unit = {
-    indexEvictionHooked.remove(spark)
-    val it = indexCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq spark) { e.getValue.unpersist(); it.remove() }
-    }
-  }
-
-  /** Number of memoized base indexes owned by `spark` (spec hook). */
-  private[graft] def cachedIndexCount(spark: SparkSession): Int = {
-    import scala.jdk.CollectionConverters._
-    indexCache.keySet.asScala.count(_._1 eq spark)
   }
 
   private def bandKeyCol = concat_ws(":", col("lang"), col("band_idx"), col("band_key"))

@@ -83,7 +83,8 @@ case class BagMergeAgg(
     }
 
   /** JSON string unescape (the donor is Spark's own canonical
-    * rendering, so only standard escapes appear). */
+    * rendering, so only standard escapes appear); null on a malformed
+    * unicode escape. */
   private def unescape(raw: String): String =
     if (raw.indexOf('\\') < 0) raw
     else {
@@ -95,7 +96,9 @@ case class BagMergeAgg(
           j += 1
           raw.charAt(j) match {
             case 'u' =>
-              sb.append(Integer.parseInt(raw.substring(j + 1, j + 5), 16).toChar)
+              val hex = raw.substring(j + 1, math.min(j + 5, raw.length))
+              if (hex.length < 4 || !hex.forall(Character.digit(_, 16) >= 0)) return null
+              sb.append(Integer.parseInt(hex, 16).toChar)
               j += 4
             case 'b' => sb.append('\b')
             case 'f' => sb.append('\f')
@@ -117,6 +120,10 @@ case class BagMergeAgg(
       // clone out of Spark's reused buffers before storing/scanning
       val db = donor.asInstanceOf[UTF8String].getBytes.clone()
       if (db.nonEmpty && db(0) == '{') {
+        // entries are staged and offered only once the whole object
+        // has parsed: a malformed donor contributes nothing (the old
+        // `try_cast(... AS MAP)` null behavior)
+        val staged = mutable.ArrayBuffer.empty[(String, Array[Byte])]
         var i = 1
         def skipWs(): Unit =
           while (i < db.length && (db(i) == ' ' || db(i) == '\t' ||
@@ -134,11 +141,11 @@ case class BagMergeAgg(
               if (db(i) == '\\') i += 1
               i += 1
             }
-            val key = unescape(new String(db, kStart, i - kStart,
-              java.nio.charset.StandardCharsets.UTF_8))
+            val key = if (i >= db.length) null else unescape(new String(db,
+              kStart, i - kStart, java.nio.charset.StandardCharsets.UTF_8))
             i += 1 // closing quote
             skipWs()
-            if (i < db.length && db(i) == ':') {
+            if (key != null && i < db.length && db(i) == ':') {
               i += 1
               skipWs()
               // value span: balanced scan to the next top-level ',' or '}'
@@ -159,13 +166,16 @@ case class BagMergeAgg(
                 } else if (c == ',' && depth == 0) done = true
                 else i += 1
               }
-              offer(buf, key, db,
-                java.util.Arrays.copyOfRange(db, vStart, i))
-              skipWs()
-              if (i < db.length && db(i) == ',') { i += 1; skipWs() }
+              if (!done || i == vStart) ok = false
+              else {
+                staged += ((key, java.util.Arrays.copyOfRange(db, vStart, i)))
+                skipWs()
+                if (i < db.length && db(i) == ',') { i += 1; skipWs() }
+              }
             } else ok = false
           }
         }
+        if (ok && i < db.length) staged.foreach { case (k, v) => offer(buf, k, db, v) }
       }
     }
     buf

@@ -4381,11 +4381,12 @@ object KqlParser {
     df
   }
 
-  /** Does `sql` mention `name` as a standalone identifier? (Helper
-    * names are engine-generated `__…` identifiers, so a textual
-    * word-boundary test is exact.) */
+  /** Does `sql` mention `name` as a standalone identifier? Matched
+    * case-insensitively, as Spark resolves column names. (Helper names
+    * are engine-generated `__…` identifiers, so a textual word-boundary
+    * test is exact.) */
   private def refersTo(sql: String, name: String): Boolean =
-    ("(?<![A-Za-z0-9_])" + java.util.regex.Pattern.quote(name) +
+    ("(?i)(?<![A-Za-z0-9_])" + java.util.regex.Pattern.quote(name) +
       "(?![A-Za-z0-9_])").r.findFirstIn(sql).isDefined
 
   /** The SQL fragments a helper EVALUATES over the frame — what the

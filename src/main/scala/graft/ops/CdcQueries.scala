@@ -23,33 +23,16 @@ import graft.model.Schemas
   */
 object CdcQueries {
 
-  /** Per-(session, sfDir) memo of the rendered envelope logs. All seven
-    * `cdc_*` queries start from one of three synthetic logs; without
-    * sharing, each query re-renders the same to_json derivation (~2.5 s
-    * apiece at sf0.1 — ≈15 s of pure fixture rebuilding per bench run).
-    * The memo caches the *fixture*, not the operator under test: decode/
-    * unwrap/materialize plans downstream are unchanged, so correctness
-    * hashes are identical. Keyed by the session object itself so a
-    * stopped test session's entries can't be resurrected by a new one;
-    * a context-end listener (registered once per session) evicts that
-    * session's entries, so long-lived JVMs that create many sessions
-    * (the test runner, a multi-tenant service) don't retain stopped
-    * sessions and their cached plans forever. */
-  private val logCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-
-  private val evictionHooked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[SparkSession]()
-
+  /** The rendered envelope logs, memoized in [[graft.Memo]] (tag
+    * `cdc_log:<name>`). All seven `cdc_*` queries start from one of
+    * three synthetic logs; without sharing, each query re-renders the
+    * same to_json derivation (~2.5 s apiece at sf0.1 — ≈15 s of pure
+    * fixture rebuilding per bench run). The memo caches the *fixture*,
+    * not the operator under test: decode/unwrap/materialize plans
+    * downstream are unchanged, so correctness hashes are identical.
+    * Released entries are unpersisted. */
   private def memoLog(name: String, spark: SparkSession, sfDir: String)
-                     (build: => DataFrame): DataFrame = {
-    if (evictionHooked.add(spark)) {
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-          evictLogsFor(spark)
-      })
-    }
+                     (build: => DataFrame): DataFrame =
     // DISK_ONLY, not the default heap-deserialized cache (r15 verdict
     // #1): three JSON-string logs held deserialized on-heap for the
     // whole sweep contributed to the peak RSS that paged the driver
@@ -63,31 +46,10 @@ object CdcQueries {
     // core. A real CDC topic is many-partitioned at the broker; the
     // round-robin spread models exactly that (row order is not part of
     // any cdc query's contract — ordering comes from the lsn column).
-    logCache.computeIfAbsent((spark, sfDir, name),
-      _ => build.repartition(spark.sparkContext.defaultParallelism)
-        .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
-  }
-
-  /** Drop (and unpersist) every cached envelope log owned by `spark` —
-    * the context-end listener body, exposed for the session-hygiene
-    * spec (a later session in the same JVM must start cold). */
-  private[graft] def evictLogsFor(spark: SparkSession): Unit = {
-    evictionHooked.remove(spark)
-    val it = logCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq spark) {
-        try e.getValue.unpersist() catch { case _: Throwable => () }
-        it.remove()
-      }
+    graft.Memo.cached(spark, sfDir, s"cdc_log:$name", (_: DataFrame).unpersist()) {
+      build.repartition(spark.sparkContext.defaultParallelism)
+        .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     }
-  }
-
-  /** Number of cached envelope logs owned by `spark` (spec hook). */
-  private[graft] def cachedLogCount(spark: SparkSession): Int = {
-    import scala.jdk.CollectionConverters._
-    logCache.keySet.asScala.count(_._1 eq spark)
-  }
 
   private val nullRow: Column = lit(null).cast(Schemas.orderRow)
 
@@ -188,18 +150,21 @@ object CdcQueries {
     // every build (and by ServingHandoffSpec / RestartRecoverySpec).
     graft.Memo.cachedServedTable(spark, sfDir, "cdc_latest_served",
         table, bucketCols = Seq("orderid"), buildTag = "r18") {
-      val scratch = java.nio.file.Files
-        .createTempDirectory("graft_cdc_serve").toString
-      eventLog(spark, sfDir).write.parquet(s"$scratch/input")
-      val stream = spark.readStream.schema("value STRING")
-        .parquet(s"$scratch/input")
-      val q = graft.streaming.Materializer.startUpsert(stream,
-        tablePath = s"$scratch/upsert", checkpointPath = s"$scratch/ck",
-        trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      q.awaitTermination()
-      graft.streaming.Sinks.readLatest(spark, s"$scratch/upsert")
-        .write.bucketBy(graft.Memo.ServingBuckets, "orderid").sortBy("orderid")
-        .mode("overwrite").saveAsTable(table)
+      // the event-log copy, every upsert version and the stream
+      // checkpoint: none of it outlives the compacted table
+      val scratch = java.nio.file.Files.createTempDirectory("graft_cdc_serve")
+      try {
+        eventLog(spark, sfDir).write.parquet(s"$scratch/input")
+        val stream = spark.readStream.schema("value STRING")
+          .parquet(s"$scratch/input")
+        val q = graft.streaming.Materializer.startUpsert(stream,
+          tablePath = s"$scratch/upsert", checkpointPath = s"$scratch/ck",
+          trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        q.awaitTermination()
+        graft.streaming.Sinks.readLatest(spark, s"$scratch/upsert")
+          .write.bucketBy(graft.Memo.ServingBuckets, "orderid").sortBy("orderid")
+          .mode("overwrite").saveAsTable(table)
+      } finally org.apache.commons.io.FileUtils.deleteQuietly(scratch.toFile): Unit
     }.select(col("orderid"), col("custid"), col("amount"), col("city"))
   }
 

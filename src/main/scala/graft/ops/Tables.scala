@@ -17,26 +17,27 @@ object Tables {
   val cities: Seq[String] =
     Seq("New Delhi", "Seattle", "New York", "Austin", "Chicago", "Cleveland")
 
-  /** Process-wide parquet schema memo (full path → schema). Schema
-    * inference on a bare `spark.read.parquet` runs a footer-reading
-    * Spark job (SchemaMergeUtils.mergeSchemasInParallel) on EVERY
-    * call — measured at ~85% of a KQL stage-pipeline translation and
-    * ~60 ms per table read, paid again by every query construction.
-    * The corpus files are immutable for a process's lifetime (the
-    * driver's testdata is read-only; a production deployment reads
-    * through a catalog that carries the schema), so the schema is
-    * looked up once per path and passed explicitly thereafter — the
+  /** Process-wide parquet schema memo. Schema inference on a bare
+    * `spark.read.parquet` runs a footer-reading Spark job
+    * (SchemaMergeUtils.mergeSchemasInParallel) on EVERY call — measured
+    * at ~85% of a KQL stage-pipeline translation and ~60 ms per table
+    * read, paid again by every query construction. So the schema is
+    * inferred once per key and passed explicitly thereafter — the
     * DataFrames produced are identical, only the inference job
-    * disappears. NOTE events.ts flavor detection still works: the
-    * memo stores whatever flavor the file carries, under whatever
-    * session conf (nanosAsLong) the first reader set — [[events]] is
-    * the only in-library reader of that file and always sets it. */
-  private val schemaMemo =
-    new scala.collection.concurrent.TrieMap[String, org.apache.spark.sql.types.StructType]
+    * disappears. The key is everything the inferred schema depends on:
+    * the path, the file's size and mtime (one status call — a rewrite
+    * in place re-infers), and the session's nanosAsLong setting (the
+    * events.ts flavor [[events]] reads). */
+  private val schemaMemo = new scala.collection.concurrent.TrieMap[
+    (String, Long, Long, String), org.apache.spark.sql.types.StructType]
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    val schema = schemaMemo.getOrElseUpdate(path, spark.read.parquet(path).schema)
+    val p = new org.apache.hadoop.fs.Path(path)
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+    val key = (path, st.getLen, st.getModificationTime,
+      spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"))
+    val schema = schemaMemo.getOrElseUpdate(key, spark.read.parquet(path).schema)
     spark.read.schema(schema).parquet(path)
   }
 

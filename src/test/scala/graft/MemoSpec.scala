@@ -2,14 +2,15 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the [[Memo]] seam's lifecycle contract (r11 advice: the old
   * per-file memo had no invalidation and pinned entries for the JVM
   * lifetime): corpus-fingerprint staleness detection, explicit
-  * invalidation, and the compute counter Bench uses to label cold
-  * runs. */
+  * invalidation, release actions run on eviction and invalidation,
+  * and the compute counter Bench uses to label cold runs. */
 class MemoSpec extends AnyFunSuite {
   private lazy val spark = SparkSession.builder()
     .master("local[2]")
@@ -131,5 +132,65 @@ class MemoSpec extends AnyFunSuite {
       .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
       .bucketSpec
     assert(bucketSpec.exists(_.bucketColumnNames == Seq("id")))
+  }
+
+  /** A persisted `rows`-row entry under `dir`, materialized; returns the
+    * frame and the persisted-RDD ids it added. (Distinct row counts keep
+    * the plans distinct, so no test shares another's cached blocks.) */
+  private def persistedEntry(dir: String, tag: String, rows: Int): (DataFrame, Set[Int]) = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val df = Memo.cached(spark, dir, tag, (_: DataFrame).unpersist()) {
+      spark.range(0, rows, 1, 1).toDF("id").persist()
+    }
+    assert(df.count() == rows && df.storageLevel != StorageLevel.NONE)
+    val added = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    assert(added.nonEmpty, "the persisted entry should pin blocks")
+    (df, added)
+  }
+
+  private def assertReleased(df: DataFrame, added: Set[Int]): Unit = {
+    assert(df.storageLevel == StorageLevel.NONE, "release must unpersist the entry")
+    assert(spark.sparkContext.getPersistentRDDs.keySet.intersect(added).isEmpty,
+      "release must free the entry's blocks")
+  }
+
+  test("LRU eviction of a persisted entry releases its blocks") {
+    val dir = Files.createTempDirectory("memoLru").toString
+    val (df, added) = persistedEntry(dir, "lru", 7)
+    (1 to Memo.MaxEntries).foreach { i =>
+      Memo.cached(spark, dir, s"filler$i", (_: String) => ())(s"v$i")
+    }
+    assertReleased(df, added)
+  }
+
+  test("invalidate of a persisted entry releases its blocks") {
+    val dir = Files.createTempDirectory("memoInv").toString
+    val (df, added) = persistedEntry(dir, "inv", 9)
+    Memo.invalidate(dir)
+    assertReleased(df, added)
+  }
+
+  test("rewriting a file under the corpus dir makes the next call miss the stale envelope log") {
+    val dir = Files.createTempDirectory("memoCdc")
+    // a minimal corpus: the `orders` columns the CDC fixtures derive from
+    def writeOrders(n: Int): Unit = {
+      val tmp = Files.createTempDirectory("memoCdcW").toString
+      spark.range(1, n + 1, 1, 1).selectExpr("id AS o_orderkey", "id * 3 AS o_custkey")
+        .write.mode("overwrite").parquet(tmp)
+      val part = new java.io.File(tmp).listFiles()
+        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+      Files.move(part.toPath, dir.resolve("orders.parquet"),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
+    writeOrders(40)
+    val log1 = graft.ops.CdcQueries.insertLog(spark, dir.toString)
+    assert(log1.count() == 40)
+    assert(graft.ops.CdcQueries.insertLog(spark, dir.toString) eq log1)
+    writeOrders(25)
+    val c0 = Memo.computeCount
+    val log2 = graft.ops.CdcQueries.insertLog(spark, dir.toString)
+    assert(Memo.computeCount == c0 + 1, "the rewrite must miss the stale log")
+    assert(log2.count() == 25)
+    Memo.invalidate(dir.toString)
   }
 }

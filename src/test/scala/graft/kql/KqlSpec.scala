@@ -894,6 +894,17 @@ class KqlSpec extends SparkSpec {
     assert(out.map(_.getInt(2)).toSeq == Seq(10, 11, 12))
   }
 
+  test("parser: extend sequences an item whose row function reads a same-stage column in other casing") {
+    // Spark resolves `w` to the column `W` assigned earlier in the same
+    // extend, so the batched helper path (which attaches `prev(w)`
+    // before `W` exists) must not be taken
+    val reg = Map("T" -> Seq(3, 1, 2).toDF("v"))
+    val out = KqlParser.run(
+      "T | sort by v asc | extend W = v * 2, p = prev(w) | project v, W, p", reg).collect()
+    assert(out.map(_.getInt(0)).toSeq == Seq(1, 2, 3))
+    assert(out(0).isNullAt(2) && out(1).getInt(2) == 2 && out(2).getInt(2) == 4)
+  }
+
   test("parser: prev/next refuse a non-literal offset loudly") {
     // r20 (r19 verdict #9): the legacy fallback planned a corpus-sized
     // single-partition window for a non-literal offset — a user query
@@ -1501,6 +1512,20 @@ class KqlSpec extends SparkSpec {
     // is the donor with the smaller canonical JSON (the 3-key one
     // starts '{"a' < '{"b')
     assert(out == """{"a\"q":1,"b":{"x":[1,2],"y":"}"},"cA":"v,w","z":3}""", out)
+  }
+
+  test("graft_make_bag: a donor with a truncated \\u escape or an unterminated string contributes nothing") {
+    graft.functions.GraftFunctions.register(spark)
+    val donors = Seq(
+      "{\"ok\":1}",
+      "{\"a\\u00\":2}",  // truncated unicode escape inside a key
+      "{\"b\":3,\"c\\u00", // donor cut off inside the escape
+      "{\"d\":\"open",      // unterminated string value
+      "{\"e\":4,\"f")       // unterminated key after a good entry
+    donors.toDF("d").createOrReplaceTempView("mk_bag_malformed")
+    val out = spark.sql("SELECT graft_make_bag(d) AS s FROM mk_bag_malformed")
+      .head().getString(0)
+    assert(out == """{"ok":1}""", out)
   }
 
   test("parser: series unary tier — abs/exp/log/sign/floor/ceiling/round/pow") {

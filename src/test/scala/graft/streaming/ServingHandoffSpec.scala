@@ -49,4 +49,22 @@ class ServingHandoffSpec extends SparkSpec {
       spark.conf.set("spark.sql.adaptive.enabled", prevA)
     }
   }
+
+  test("a cold build of the served table leaves no scratch dir behind") {
+    def scratchDirs(): Set[String] = Option(
+      new java.io.File(System.getProperty("java.io.tmpdir")).list())
+      .fold(Set.empty[String])(_.filter(_.startsWith("graft_cdc_serve")).toSet)
+    graft.ops.CdcQueries.latestServed(spark, sfDir).collect()
+    val table = "graft_latest_" + graft.Memo.pathDigest(sfDir)
+    // forget the entry AND the written table (with its reuse marker),
+    // so the next call replays the full stream build
+    graft.Memo.invalidate(sfDir)
+    graft.Memo.prepareServedTable(spark, table)
+    val before = scratchDirs()
+    val c0 = graft.Memo.computeCount
+    assert(graft.ops.CdcQueries.latestServed(spark, sfDir).count() > 0)
+    assert(graft.Memo.computeCount > c0 && spark.catalog.tableExists(table),
+      "the call must have rebuilt the served table")
+    assert(scratchDirs() == before)
+  }
 }
