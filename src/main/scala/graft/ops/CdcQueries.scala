@@ -128,11 +128,12 @@ object CdcQueries {
   /** q: the CDC→serving handoff END-TO-END (r12 verdict item 7 — the
     * engine's two halves previously met only in specs): the SAME mixed
     * envelope log as [[latestState]] replays through the STREAMING
-    * path — file-source stream → [[graft.streaming.StatefulLatestState]]
-    * (flatMapGroupsWithState upserts, Update mode) →
-    * [[graft.streaming.Sinks.upsertByKey]] versioned MERGE table
-    * (Trigger.AvailableNow; per-batch-id overwrite = exactly-once on
-    * at-least-once delivery) — and the final snapshot is COMPACTED
+    * path — file-source stream → stateless decode to one upsert row per
+    * event ([[graft.streaming.Materializer.startUpsert]]) →
+    * [[graft.streaming.Sinks.upsertByKey]] versioned MERGE table, the
+    * only latest-state store, tombstones included (Trigger.AvailableNow;
+    * per-batch-id overwrite = exactly-once on at-least-once delivery) —
+    * and the final snapshot of live rows is COMPACTED
     * into a bucketed serving table (bucketBy the upsert key, the
     * Memo/prepareServedTable seam every served layout uses). The
     * registered query reads the bucketed table; the oracle is

@@ -31,7 +31,10 @@ import graft.cdc.Cdc
   * Scale notes: the pipeline is stateless map-side work (parse, project,
   * cast) — parallelism equals source partitions, no shuffle at all unless
   * dedup/aggregation is enabled. Replay dedup uses event-time watermarks
-  * so state is bounded at any ingest volume.
+  * so state is bounded at any ingest volume. The upsert pipeline
+  * ([[startUpsert]]) keeps no streaming state either: the versioned sink
+  * table holds the latest state per key, tombstones included, and each
+  * micro-batch's only shuffle is the sink's keyed merge.
   */
 object Materializer {
 
@@ -69,18 +72,34 @@ object Materializer {
       }
       .start()
 
-  /** The full upsert pipeline: envelopes → per-key stateful latest
-    * state ([[StatefulLatestState]], Update-mode upserts) → MERGE-style
-    * versioned table ([[Sinks.upsertByKey]], version = micro-batch id,
-    * so batch retries overwrite their own output — exactly-once on
-    * at-least-once delivery). `readLatest(tablePath)` is always a
-    * complete, queryable current-state snapshot. */
+  /** The full upsert pipeline, stateless: envelopes → one
+    * [[StatefulLatestState.KeyState]]-shaped row per change event
+    * (`deleted = op == "d"`) → MERGE-style versioned table
+    * ([[Sinks.upsertByKey]], version = micro-batch id, so batch retries
+    * overwrite their own output — exactly-once on at-least-once
+    * delivery). The table is the only latest-state store: it keeps
+    * tombstones, so a stale replay loses to a delete across batches and
+    * restarts without a state store, and `readLatest(tablePath)` is
+    * always a complete, queryable current-state snapshot.
+    * Do not resume a checkpoint and table written by the earlier
+    * stateful form of this pipeline: its versions hold no tombstones
+    * (they lived in its state store), so a stale replay of a key deleted
+    * before the switch would come back. Rebuild such a table from the
+    * envelope log into a fresh table and checkpoint instead.
+    * [[StatefulLatestState]] stays the operator for consumers that need
+    * a per-key upsert STREAM rather than a table. */
   def startUpsert(envelopes: DataFrame, tablePath: String,
                   checkpointPath: String,
                   trigger: Trigger = Trigger.ProcessingTime("30 seconds")): StreamingQuery =
-    StatefulLatestState.latestState(envelopes).toDF()
+    StatefulLatestState.events(envelopes)
+      .select(col("orderid"), col("lsn"), (col("op") === "d").as("deleted"),
+        // a delete's `after` is null: its fields are placeholders
+        // nothing reads, since readLatest hides tombstones
+        coalesce(col("custid"), lit(0)).as("custid"),
+        coalesce(col("amount"), lit(0)).as("amount"),
+        coalesce(col("city"), lit("")).as("city"))
       .writeStream
-      .outputMode("update")
+      .outputMode("append")
       .option("checkpointLocation", checkpointPath)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>

@@ -19,18 +19,17 @@ import graft.model.Schemas
   *     (simulated by planting a debris `v=N+1` with wrong rows);
   *  2. a NEW SparkSession resumes from the same checkpoint with more
   *     input queued, including a stale replay BELOW a tombstoned key's
-  *     delete-lsn — detectable only if the flatMapGroupsWithState store
-  *     actually recovered (the merge sink alone cannot reject it,
-  *     because tombstoned keys are filtered out of snapshots);
+  *     delete-lsn — rejected only if the tombstone the table keeps in
+  *     its committed version is what the resumed merge starts from;
   *  3. the recovered run must re-execute the uncommitted batch id,
   *     OVERWRITE the debris (Sinks.upsertByKey merges from versions
   *     strictly below the batch id), and land exactly the batch
   *     latest-state oracle over the full log.
   *
   * In-JVM `spark.newSession()` is the honest cross-session form local
-  * mode allows (fresh session state; checkpoint, file-source log, state
-  * store and table all recovered from disk — nothing survives in the
-  * session object).
+  * mode allows (fresh session state; checkpoint, file-source log and
+  * table, tombstones included, all recovered from disk — nothing
+  * survives in the session object).
   */
 class RestartRecoverySpec extends SparkSpec {
 
@@ -96,8 +95,8 @@ class RestartRecoverySpec extends SparkSpec {
     val got = snapshot.select(col("orderid"), col("custid"), col("amount"), col("city"))
     assert(got.exceptAll(oracle).isEmpty && oracle.exceptAll(got).isEmpty,
       "recovered upsert table must be row-identical to the batch oracle")
-    // and the stale resurrection specifically lost to the RECOVERED
-    // tombstone (the snapshot alone could not have rejected it)
+    // and the stale resurrection specifically lost to the tombstone
+    // recovered from the table's last committed version
     assert(snapshot.filter(col("orderid") === 5).isEmpty,
       "tombstoned key must not be resurrected by a stale replay after restart")
     assert(got.count() == 2) // keys 1 (updated) and 4

@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Pins the CDC→serving handoff (r12 verdict item 7): the streaming
-  * path (file stream → StatefulLatestState upserts → versioned MERGE
-  * sink → bucketed compaction) must produce EXACTLY the batch
+  * path (file stream → stateless upsert rows → versioned MERGE sink
+  * with tombstones → bucketed compaction) must produce EXACTLY the batch
   * latest-state view, and the compacted table must carry the bucket
   * layout (an orderid aggregate plans with zero Exchange above the
   * scan — AQE and broadcast off, BucketedServeSpec's discipline). */

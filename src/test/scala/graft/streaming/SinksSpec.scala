@@ -2,6 +2,9 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -107,5 +110,80 @@ class SinksSpec extends SparkSpec {
     assert(latest.columns.contains("channel"))
     assert(latest.filter(col("orderid") === 1).select("channel").head().isNullAt(0))
     assert(latest.filter(col("orderid") === 2).select("channel").head().getString(0) == "web")
+  }
+
+  test("the latest committed version is found below the bound among many versions") {
+    val table = Files.createTempDirectory("graft-versions").toString + "/orders"
+    def version(v: Int): Unit =
+      Seq((1, v.toLong, false, v * 10)).toDF("orderid", "lsn", "deleted", "amount")
+        .coalesce(1).write.parquet(s"$table/v=$v")
+    (1 to 31).foreach(version)
+    // uncommitted: a crashed writer's complete part files, no _SUCCESS
+    Seq(31, 17).foreach(v => assert(new java.io.File(s"$table/v=$v/_SUCCESS").delete()))
+    def amounts(df: org.apache.spark.sql.DataFrame) =
+      df.select("orderid", "amount").as[(Int, Int)].collect().sorted.toSeq
+
+    assert(amounts(Sinks.readLatest(spark, table)) == Seq((1, 300)),
+      "the uncommitted highest version must be skipped")
+    // a retried batch 18 merges from v=16: v=17 is uncommitted
+    Sinks.upsertByKey(spark, Seq((2, 1L, false, 7)).toDF("orderid", "lsn", "deleted", "amount"),
+      table, newVersion = 18)
+    assert(amounts(spark.read.parquet(s"$table/v=18")) == Seq((1, 160), (2, 7)))
+    // batch 1 merges from nothing
+    Sinks.upsertByKey(spark, Seq((3, 1L, false, 9)).toDF("orderid", "lsn", "deleted", "amount"),
+      table, newVersion = 1)
+    assert(amounts(spark.read.parquet(s"$table/v=1")) == Seq((3, 9)))
+  }
+
+  /** Spark jobs started by `body`. The listener bus delivers events in
+    * order, so once a marker job submitted after `body` has arrived,
+    * every job of `body` has been seen. */
+  private def jobsStartedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    def inGroup(g: String)(f: => Unit): Unit = {
+      sc.setJobGroup(g, g)
+      try f finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      inGroup("probe")(body)
+      inGroup("marker")(sc.parallelize(Seq(1), 1).count(): Unit)
+      val deadline = System.currentTimeMillis() + 30000
+      while (!groups.contains("marker") && System.currentTimeMillis() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains("marker"), "marker job never reached the listener")
+      groups.asScala.count(_ == "probe")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("readLatest starts no Spark job and reads the version's own schema") {
+    val table = Files.createTempDirectory("graft-readpath").toString + "/orders"
+    Sinks.upsertByKey(spark,
+      Seq((1, 10L, false, 100)).toDF("orderid", "lsn", "deleted", "amount"),
+      table, newVersion = 1)
+    Sinks.upsertByKey(spark,
+      Seq((2, 20L, false, 150, "web")).toDF("orderid", "lsn", "deleted", "amount", "channel"),
+      table, newVersion = 2)
+    var latest: org.apache.spark.sql.DataFrame = null
+    assert(jobsStartedBy { latest = Sinks.readLatest(spark, table) } == 0,
+      "a snapshot read must not run a schema-inference job")
+    assert(latest.schema == spark.read.parquet(s"$table/v=2").schema)
+    assert(latest.columns.contains("channel"))
+    assert(latest.count() == 2)
+  }
+
+  test("a pre-evolution version without the tombstone column reads as all-live") {
+    val table = Files.createTempDirectory("graft-pretomb").toString + "/orders"
+    Seq((1, 10L, 100), (2, 20L, 150)).toDF("orderid", "lsn", "amount")
+      .write.parquet(s"$table/v=1")
+    val latest = Sinks.readLatest(spark, table)
+    assert(latest.schema == spark.read.parquet(s"$table/v=1").schema)
+    assert(latest.select("orderid", "amount").as[(Int, Int)].collect().sorted.toSeq ==
+      Seq((1, 100), (2, 150)))
   }
 }
