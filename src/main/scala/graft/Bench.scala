@@ -148,18 +148,19 @@ object Bench {
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), json + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] write $outFile failed: $e") }
-    println(s"""{"metric":"total","value":$total,"unit":"sec","total_excl_suspect":$cleanTotal,"n_excl_suspect":$cleanN,"n_queries":${results.size},$partialField$probes,"suspect":$suspects,"ambient":$ambient,"capped":$capped,"queries_file":"$outFile","sf":"$sfDir"}""")
-    // r20 (r19 verdict #3): the driver's per-query comparator came up
-    // empty two rounds running (PERF n_common: 0) — the full map lived
-    // only in the FILE artifact and the driver doesn't follow the
-    // queries_file pointer, while the single stdout line deliberately
-    // omits the map (r2/r3: ONE multi-KB line was truncated by the
-    // caller's bounded capture and the round lost every per-query
-    // number). Meet the driver halfway: AFTER the short always-
-    // parseable total line, print the same map as self-delimited
-    // chunked lines, each well under any sane line-capture bound, so
-    // a tail truncation can only lose trailing chunks — never the
-    // headline, and each surviving chunk parses on its own.
+    printHandoff(s"""{"metric":"total","value":$total,"unit":"sec","total_excl_suspect":$cleanTotal,"n_excl_suspect":$cleanN,"n_queries":${results.size},$partialField$probes,"suspect":$suspects,"ambient":$ambient,"capped":$capped,"queries_file":"$outFile","sf":"$sfDir"}""",
+      results)
+  }
+
+  /** The stdout handoff. The per-query comparator that reads stdout
+    * does not follow the `queries_file` pointer, and one multi-KB line
+    * gets truncated by the caller's bounded capture. So the per-query
+    * map goes out first as self-delimited chunk lines, each well under
+    * any line-capture bound and parseable on its own, and the short
+    * total line goes out LAST: the caller reads the last stdout line as
+    * the headline, and a tail capture must not lose it behind the
+    * chunks. */
+  private[graft] def printHandoff(totalLine: String, results: Seq[(String, QRes)]): Unit = {
     val entries = results.map { case (k, r) => "\"" + k + "\":" + r.min }
     val chunks = scala.collection.mutable.ArrayBuffer.empty[String]
     val cur = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -174,6 +175,7 @@ object Bench {
     chunks.zipWithIndex.foreach { case (c, i) =>
       println(s"""{"metric":"queries","part":${i + 1},"of":${chunks.length},"queries":$c}""")
     }
+    println(totalLine)
     System.out.flush()
   }
 

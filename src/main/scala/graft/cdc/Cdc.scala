@@ -83,16 +83,23 @@ object Cdc {
   def latestState(envelopes: DataFrame,
                   keyCol: Column,
                   orderCol: Column): DataFrame =
-    envelopes
+    latestByKey(
       // project BEFORE the shuffle: only op + after travel (the before
       // image and the 11-field source struct don't survive this
       // operator, so they must not survive the exchange either)
-      .select(keyCol.as("__key"), orderCol.as("__ord"),
-        struct(col("payload.op").as("op"), col("payload.after").as("after")).as("__ev"))
-      .groupBy(col("__key"))
-      .agg(max_by(col("__ev"), col("__ord")).as("__ev"))
-      .filter(col("__ev.op") =!= "d")
-      .select(col("__ev.after.*"))
+      envelopes.select(keyCol.as("__key"), orderCol.as("__ord"),
+        col("payload.op").as("op"), col("payload.after").as("after")),
+      "__key", "__ord")
+      .filter(col("op") =!= "d")
+      .select(col("after.*"))
+
+  /** The latest-state rule, shared by the batch view ([[latestState]])
+    * and the upsert sink's merge ([[graft.streaming.Sinks.upsertByKey]]):
+    * per `keyCol`, the whole row with the highest `ordCol` wins. */
+  def latestByKey(rows: DataFrame, keyCol: String, ordCol: String): DataFrame =
+    rows.groupBy(col(keyCol))
+      .agg(max_by(struct(rows.columns.map(col).toIndexedSeq: _*), col(ordCol)).as("s"))
+      .select(col("s.*"))
 
   /** Inverse of decode, for egress tests: render rows as Debezium-shaped
     * JSON envelopes (JsonConverter analog, pg-source-config.json:13).

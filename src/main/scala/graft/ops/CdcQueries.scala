@@ -276,7 +276,7 @@ object CdcQueries {
          |       city
          |FROM orders_info WHERE orderid % 17 <> 0""".stripMargin,
     // the streaming-materialized serving table must change HOW the
-    // state is produced (stateful stream → MERGE sink → bucketed
+    // state is produced (stateless stream → MERGE sink → bucketed
     // compaction), never WHAT it is — oracle reused verbatim.
     "cdc_latest_served" ->
       s"""${Sql.ordersInfoCte}

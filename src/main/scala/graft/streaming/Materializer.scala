@@ -38,27 +38,27 @@ import graft.cdc.Cdc
   */
 object Materializer {
 
-  /** Decode + unwrap + sink-projection on a streaming envelope frame —
-    * identical plan to the batch path (same code, Catalyst treats it
-    * incrementally). */
-  def transform(envelopes: DataFrame, dropDeletes: Boolean = true): DataFrame =
-    Cdc.sinkProjection(Cdc.unwrap(Cdc.decode(envelopes), dropDeletes))
-
   /** Decode with at-least-once replay protection: duplicate envelopes
     * (same source LSN + op) are dropped within the event-time watermark —
-    * bounded state, unbounded stream. */
+    * bounded state, unbounded stream. `dropDuplicatesWithinWatermark`
+    * evicts a key once the watermark passes it; plain `dropDuplicates`
+    * evicts only when the event-time column is a dedup key, so its state
+    * would grow with every event. */
   def dedupedEvents(envelopes: DataFrame, watermark: String = "10 minutes"): DataFrame =
     Cdc.decode(envelopes)
       .withColumn("event_ts", timestamp_millis(col("payload.ts_ms")))
       .withColumn("lsn", col("payload.source.lsn"))
       .withColumn("op", col("payload.op"))
       .withWatermark("event_ts", watermark)
-      .dropDuplicates("lsn", "op")
+      .dropDuplicatesWithinWatermark("lsn", "op")
 
   /** Start the materialization query: 30 s micro-batches (the reference's
     * flush.interval.ms), each batch appended to `outPath/batch=<id>` with
     * overwrite — re-delivered batches land on the same path, making the
-    * sink idempotent and the pipeline exactly-once end-to-end. */
+    * sink idempotent and the pipeline exactly-once end-to-end. A
+    * checkpoint written by the earlier `dropDuplicates` form of the
+    * replay dedup holds a different state operator and cannot be
+    * resumed; start such a stream on a fresh checkpoint. */
   def start(envelopes: DataFrame, outPath: String, checkpointPath: String,
             trigger: Trigger = Trigger.ProcessingTime("30 seconds"),
             dropDeletes: Boolean = true): StreamingQuery =
@@ -85,19 +85,20 @@ object Materializer {
     * stateful form of this pipeline: its versions hold no tombstones
     * (they lived in its state store), so a stale replay of a key deleted
     * before the switch would come back. Rebuild such a table from the
-    * envelope log into a fresh table and checkpoint instead.
-    * [[StatefulLatestState]] stays the operator for consumers that need
-    * a per-key upsert STREAM rather than a table. */
+    * envelope log into a fresh table and checkpoint instead. */
   def startUpsert(envelopes: DataFrame, tablePath: String,
                   checkpointPath: String,
                   trigger: Trigger = Trigger.ProcessingTime("30 seconds")): StreamingQuery =
-    StatefulLatestState.events(envelopes)
-      .select(col("orderid"), col("lsn"), (col("op") === "d").as("deleted"),
+    Cdc.decode(envelopes)
+      .select(
+        coalesce(col("payload.after.orderid"), col("payload.before.orderid")).as("orderid"),
+        col("payload.source.lsn").as("lsn"),
+        (col("payload.op") === "d").as("deleted"),
         // a delete's `after` is null: its fields are placeholders
         // nothing reads, since readLatest hides tombstones
-        coalesce(col("custid"), lit(0)).as("custid"),
-        coalesce(col("amount"), lit(0)).as("amount"),
-        coalesce(col("city"), lit("")).as("city"))
+        coalesce(col("payload.after.custid"), lit(0)).as("custid"),
+        coalesce(col("payload.after.amount"), lit(0)).as("amount"),
+        coalesce(col("payload.after.city"), lit("")).as("city"))
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointPath)

@@ -7,6 +7,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
+import graft.cdc.Cdc
+
 /** Sink-side data layout (SURVEY.md §2.F): the materialized table's
   * physical organization, which decides read cost at 100 TB.
   *
@@ -43,19 +45,15 @@ object Sinks {
     * lower-lsn replay loses to a delete in the same batch, in a later
     * batch and after a restart alike; the merge carries them like any
     * other row, and [[readLatest]] hides the rows whose `deleted`
-    * column is true. That column name is fixed: `tombstoneCol` must be
-    * `"deleted"` (any other value is rejected), since [[readLatest]]
-    * filters on it. With a transactional table format (Delta/Iceberg) this
-    * call becomes MERGE INTO; the contract — idempotent keyed upsert
+    * column is true. The merge is [[Cdc.latestByKey]], the same rule as
+    * the batch view. With a transactional table format (Delta/Iceberg)
+    * this call becomes MERGE INTO; the contract — idempotent keyed upsert
     * with tombstones — is identical, which is the point. At 100 TB the
     * rewrite is partition-scoped (hash-bucket the key space and rewrite
     * only buckets containing updated keys), not a full-table pass. */
   def upsertByKey(spark: SparkSession, updates: DataFrame, tablePath: String,
                   newVersion: Long, keyCol: String = "orderid",
-                  ordCol: String = "lsn",
-                  tombstoneCol: String = Tombstone): Unit = {
-    require(tombstoneCol == Tombstone,
-      s"the tombstone column must be '$Tombstone', got '$tombstoneCol'")
+                  ordCol: String = "lsn"): Unit = {
     val existing = latestVersion(spark, tablePath, below = newVersion) match {
       case Some(v) => readVersion(spark, tablePath, v)
       case None => spark.createDataFrame(
@@ -63,11 +61,10 @@ object Sinks {
     }
     // allowMissingColumns: an additively-evolved batch (new column)
     // merges against the old snapshot with nulls backfilled, instead of
-    // failing the pipeline on the first post-migration micro-batch
-    existing.unionByName(updates, allowMissingColumns = true)
-      .groupBy(col(keyCol))
-      .agg(max_by(struct(updates.columns.map(col).toIndexedSeq: _*), col(ordCol)).as("s"))
-      .select(col("s.*"))
+    // failing the pipeline on the first post-migration micro-batch;
+    // the new version keeps the batch's columns
+    Cdc.latestByKey(existing.unionByName(updates, allowMissingColumns = true)
+        .select(updates.columns.map(col).toIndexedSeq: _*), keyCol, ordCol)
       .write.mode("overwrite").parquet(s"$tablePath/v=$newVersion")
   }
 

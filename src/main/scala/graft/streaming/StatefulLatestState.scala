@@ -1,148 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-
-import graft.cdc.Cdc
-
-/** Streaming CDC latest-state via typed per-key state
-  * (`flatMapGroupsWithState`) — the incremental form of
-  * [[graft.cdc.Cdc.latestState]] (SURVEY.md §1.4, §7.4): one upserted
-  * row per key per micro-batch instead of a full-log re-aggregation.
-  *
-  * State model: per key, the highest-lsn event seen so far. Deletes keep
-  * the key's state (as a tombstone, `deleted=true`) rather than clearing
-  * it, so a late-arriving lower-lsn insert replayed after the delete
-  * (at-least-once, docker-compose.yaml:35-37) cannot resurrect the row —
-  * the lsn guard makes the operator idempotent under replay.
-  *
-  * Scale notes: state is one small case class per live key, hash-
-  * partitioned by key across executors (RocksDB state store at real
-  * volume); each micro-batch shuffles only its own events. Emission is
-  * OutputMode.Update — downstream sinks receive upserts keyed by
-  * orderid, the same contract an ADX/Delta MERGE sink consumes.
-  */
+/** The row shape of the CDC upsert table that
+  * [[Materializer.startUpsert]] writes through [[Sinks.upsertByKey]]:
+  * one row per key, the highest-lsn change seen so far. The table keeps
+  * no streaming state beside it; the latest-state rule lives in
+  * [[graft.cdc.Cdc.latestByKey]]. */
 object StatefulLatestState {
 
-  /** One decoded change event, flattened for typed state handling. */
-  case class ChangeEvent(orderid: Int, op: String, lsn: Long,
-                         custid: Option[Int], amount: Option[Int],
-                         city: Option[String])
-
-  /** Per-key materialized state (tombstoned, never resurrected). */
+  /** One key's current row. A delete stays as a tombstone
+    * (`deleted = true`), so a lower-lsn replay cannot resurrect the key;
+    * [[Sinks.readLatest]] hides tombstones. */
   case class KeyState(orderid: Int, lsn: Long, deleted: Boolean,
                       custid: Int, amount: Int, city: String)
-
-  /** Decode envelopes to typed events (streaming or batch frame). */
-  def events(envelopes: DataFrame): Dataset[ChangeEvent] = {
-    import envelopes.sparkSession.implicits._
-    Cdc.decode(envelopes).select(
-      coalesce(col("payload.after.orderid"), col("payload.before.orderid")).as("orderid"),
-      col("payload.op").as("op"),
-      col("payload.source.lsn").as("lsn"),
-      col("payload.after.custid").as("custid"),
-      col("payload.after.amount").as("amount"),
-      col("payload.after.city").as("city")).as[ChangeEvent]
-  }
-
-  /** The stateful stream: emits each key's new state whenever one of its
-    * events arrives. Pair with `.writeStream.outputMode("update")`.
-    * State never expires — correct under arbitrarily-late replays, at
-    * the cost of keeping tombstones forever. */
-  def latestState(envelopes: DataFrame): Dataset[KeyState] = {
-    import envelopes.sparkSession.implicits._
-    events(envelopes)
-      .groupByKey(_.orderid)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout())(update)
-  }
-
-  /** TTL variant: per-key state (including tombstones) is dropped once
-    * the event-time watermark passes its last event by `retention` —
-    * the bounded-state form a 100 TB key space requires. The explicit
-    * tradeoff: a replay arriving LATER than the retention window can
-    * resurrect a deleted key (its tombstone is gone), so `retention`
-    * must exceed the source's maximum redelivery lag — the same
-    * contract as the reference's offset-retention configuration
-    * (docker-compose.yaml:35-37). Input must carry a watermark on
-    * `event_ts` (use `withWatermark` upstream). */
-  def latestStateWithTtl(envelopes: DataFrame,
-                         retentionMs: Long = 24L * 3600 * 1000,
-                         watermark: String = "10 minutes"): Dataset[KeyState] = {
-    import envelopes.sparkSession.implicits._
-    val evs = Cdc.decode(envelopes).select(
-      coalesce(col("payload.after.orderid"), col("payload.before.orderid")).as("orderid"),
-      col("payload.op").as("op"),
-      col("payload.source.lsn").as("lsn"),
-      col("payload.after.custid").as("custid"),
-      col("payload.after.amount").as("amount"),
-      col("payload.after.city").as("city"),
-      timestamp_millis(col("payload.ts_ms")).as("event_ts"))
-      .withWatermark("event_ts", watermark)
-      .as[ChangeEventTs]
-    evs.groupByKey(_.orderid)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.EventTimeTimeout()) {
-        (key: Int, it: Iterator[ChangeEventTs], state: GroupState[TtlState]) =>
-          if (state.hasTimedOut) {
-            state.remove() // retention passed: drop the key's state
-            Iterator.empty
-          } else {
-            val batch = it.toList
-            val cur = fold(key,
-              batch.iterator.map(e =>
-                ChangeEvent(e.orderid, e.op, e.lsn, e.custid, e.amount, e.city)),
-              state.getOption.map(_.ks).orNull)
-            if (cur == null) Iterator.empty
-            else {
-              // retention clock runs on the MAX event time ever seen for
-              // the key, kept in state: a late-but-valid replay arriving
-              // after a newer-timestamp batch must not move the timeout
-              // backward and shorten the documented retention window
-              val maxTs = math.max(
-                state.getOption.map(_.maxEventTs).getOrElse(Long.MinValue),
-                batch.map(_.event_ts.getTime).max)
-              state.update(TtlState(cur, maxTs))
-              state.setTimeoutTimestamp(maxTs + retentionMs)
-              Iterator.single(cur)
-            }
-          }
-      }
-  }
-
-  /** [[ChangeEvent]] plus the event timestamp the TTL clock runs on. */
-  case class ChangeEventTs(orderid: Int, op: String, lsn: Long,
-                           custid: Option[Int], amount: Option[Int],
-                           city: Option[String], event_ts: java.sql.Timestamp)
-
-  /** TTL-variant state: the materialized row plus the monotone
-    * max-event-time its retention timeout is computed from. */
-  case class TtlState(ks: KeyState, maxEventTs: Long)
-
-  /** Pure lsn-guarded fold of a batch of events onto the previous state
-    * (null = no prior state); shared by both state-handling variants. */
-  private def fold(key: Int, evs: Iterator[ChangeEvent],
-                   cur0: KeyState): KeyState = {
-    var cur = cur0
-    evs.foreach { e =>
-      if (cur == null || e.lsn > cur.lsn) {
-        cur =
-          if (e.op == "d")
-            KeyState(key, e.lsn, deleted = true,
-              if (cur == null) 0 else cur.custid,
-              if (cur == null) 0 else cur.amount,
-              if (cur == null) "" else cur.city)
-          else
-            KeyState(key, e.lsn, deleted = false,
-              e.custid.getOrElse(0), e.amount.getOrElse(0), e.city.getOrElse(""))
-      }
-    }
-    cur
-  }
-
-  private def update(key: Int, evs: Iterator[ChangeEvent],
-                     state: GroupState[KeyState]): Iterator[KeyState] = {
-    val cur = fold(key, evs, state.getOption.orNull)
-    if (cur == null) Iterator.empty
-    else { state.update(cur); Iterator.single(cur) }
-  }
 }

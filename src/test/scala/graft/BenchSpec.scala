@@ -47,6 +47,19 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.parsePriorTimes(json, "cold") === Map("served" -> 3.5))
   }
 
+  test("stdout handoff: the total line is the last line, after every query chunk") {
+    val results = (1 to 200).map(i => f"query_$i%03d" -> Bench.QRes(0.5, suspect = false, capped = false))
+    val total = """{"metric":"total","value":100.0,"unit":"sec"}"""
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(out)(Bench.printHandoff(total, results))
+    val lines = out.toString("UTF-8").linesIterator.toSeq
+    assert(lines.last === total)
+    val chunks = lines.init
+    assert(chunks.size > 1 && chunks.forall(_.startsWith("""{"metric":"queries",""")))
+    assert(chunks.map(Bench.parsePriorTimes(_)).reduce(_ ++ _) ===
+      results.map { case (k, r) => k -> r.min }.toMap)
+  }
+
   test("memoColdQueries: every prewarm name is a registered query") {
     // The warmup pre-derives Memo-backed serving relations by running
     // these queries; a renamed/removed query would silently turn the

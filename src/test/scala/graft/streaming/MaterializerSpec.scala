@@ -48,6 +48,28 @@ class MaterializerSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("replay-dedup state is bounded: keys are evicted once the watermark passes them") {
+    implicit val sql = spark.sqlContext
+    val source = MemoryStream[String]
+    val q = Materializer.start(
+      source.toDF().select(col("value")),
+      outPath = Files.createTempDirectory("graft-evict-out").toString,
+      checkpointPath = Files.createTempDirectory("graft-evict-ckpt").toString,
+      trigger = Trigger.ProcessingTime(0))
+    def stateRows(): Long = q.lastProgress.stateOperators.head.numRowsTotal
+    try {
+      source.addData(env(1, 100, "Seattle", 1), env(2, 150, "Austin", 2),
+        env(3, 175, "Chicago", 3))
+      q.processAllAvailable()
+      assert(stateRows() == 3)
+      // an event an hour later moves the 10-minute watermark past the
+      // first three keys: their state must go, only the new key stays
+      source.addData(env(4, 200, "Denver", 3600))
+      q.processAllAvailable()
+      assert(stateRows() == 1, "dedup state must not grow with every event")
+    } finally q.stop()
+  }
+
   test("windowed city stats aggregate by event time with watermark") {
     implicit val sql = spark.sqlContext
     val source = MemoryStream[String]
