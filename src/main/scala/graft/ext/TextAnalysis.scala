@@ -1062,7 +1062,12 @@ object TextAnalysis {
 
   /** Shared CTE prefix for the BPE oracles: the k-step training loop
     * UNROLLED (b_k = step-k argmax via scalar subqueries, s_k = the
-    * post-merge histogram sequences). */
+    * post-merge histogram sequences). `b_k`, `s_k` (and the encode
+    * oracle's `e_k`) are `MATERIALIZED`: each is referenced four times
+    * by the next step, and DuckDB 1.0 inlines every reference of a plain
+    * CTE, so the work multiplied with each step (DuckDB 1.0, 4 threads,
+    * sf0.01: the plain 5-step encode did not finish in 30 s; materialized,
+    * 0.11 s, with rows identical to the plain form at 1–3 steps). */
   private def bpeCtes(steps: Int): String = {
     val sb = new StringBuilder
     sb.append(
@@ -1076,9 +1081,9 @@ object TextAnalysis {
          |  SELECT t[i] || ' ' || t[i + 1] AS pair, c
          |  FROM (SELECT string_split(seq, ' ') AS t, c FROM $prev),
          |       UNNEST(range(1, len(t))) AS u(i)),
-         |b$k AS (SELECT pair, CAST(SUM(c) AS BIGINT) AS n FROM p$k GROUP BY pair
+         |b$k AS MATERIALIZED (SELECT pair, CAST(SUM(c) AS BIGINT) AS n FROM p$k GROUP BY pair
          |        ORDER BY n DESC, pair ASC LIMIT 1),
-         |s$k AS (
+         |s$k AS MATERIALIZED (
          |  SELECT trim(replace(replace(' ' || seq || ' ',
          |      ' ' || (SELECT pair FROM b$k) || ' ',
          |      ' ' || (SELECT replace(pair, ' ', '') FROM b$k) || ' '),
@@ -1107,7 +1112,7 @@ object TextAnalysis {
         |       FROM w WHERE length(word) >= 1)""".stripMargin)
     for (k <- 1 to steps) {
       sb.append(s""",
-         |e$k AS (
+         |e$k AS MATERIALIZED (
          |  SELECT word, trim(replace(replace(' ' || seq || ' ',
          |      ' ' || (SELECT pair FROM b$k) || ' ',
          |      ' ' || (SELECT replace(pair, ' ', '') FROM b$k) || ' '),

@@ -80,13 +80,20 @@ object GraftFunctions {
     }
 }
 
-/** `spark.sql.extensions` entry point. */
+/** `spark.sql.extensions` entry point: the functions above, plus the
+  * optimizer rule that answers the dashboard's aggregates over an
+  * upsert table's latest version from its summary sidecar
+  * ([[graft.streaming.SummaryScan]]). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.all.foreach { case (name, builder) =>
       ext.injectFunction((
         FunctionIdentifier(name),
         new ExpressionInfo(classOf[GraftExtensions].getName, name),
         builder))
     }
+    // once, after operator optimization has settled the plan's shape:
+    // a shape that matches without a summary reads for it only once
+    ext.injectPreCBORule(graft.streaming.SummaryScan(_))
+  }
 }

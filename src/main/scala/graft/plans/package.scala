@@ -23,5 +23,10 @@ package graft
   * co-location), it belongs here as `LogicalPlan` + `Rule` +
   * `SparkStrategy` registered through
   * [[graft.functions.GraftExtensions]].
+  *
+  * The one rule that exists answers from data Catalyst cannot know
+  * about, so it lives beside that data: [[graft.streaming.SummaryScan]]
+  * replaces the dashboard's aggregate over an upsert table's latest
+  * version with the summary the sink wrote for that version.
   */
 package object plans

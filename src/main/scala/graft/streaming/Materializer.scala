@@ -80,7 +80,10 @@ object Materializer {
     * delivery). The table is the only latest-state store: it keeps
     * tombstones, so a stale replay loses to a delete across batches and
     * restarts without a state store, and `readLatest(tablePath)` is
-    * always a complete, queryable current-state snapshot.
+    * always a complete, queryable current-state snapshot. Each version
+    * also carries the per-city summary of its live rows, so the
+    * reference dashboard's `summarize … by city` reads over it are
+    * answered without a scan ([[SummaryScan]]).
     * Do not resume a checkpoint and table written by the earlier
     * stateful form of this pipeline: its versions hold no tombstones
     * (they lived in its state store), so a stale replay of a key deleted

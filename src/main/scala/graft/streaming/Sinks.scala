@@ -1,13 +1,17 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
+import java.io.{DataInputStream, DataOutputStream}
+
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumns, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types._
 
 import graft.cdc.Cdc
+import graft.functions.GroupSummaryAgg
 
 /** Sink-side data layout (SURVEY.md §2.F): the materialized table's
   * physical organization, which decides read cost at 100 TB.
@@ -48,9 +52,20 @@ object Sinks {
     * column is true. The merge is [[Cdc.latestByKey]], the same rule as
     * the batch view. With a transactional table format (Delta/Iceberg)
     * this call becomes MERGE INTO; the contract — idempotent keyed upsert
-    * with tombstones — is identical, which is the point. At 100 TB the
-    * rewrite is partition-scoped (hash-bucket the key space and rewrite
-    * only buckets containing updated keys), not a full-table pass. */
+    * with tombstones — is identical, which is the point.
+    *
+    * Each call rewrites the whole current table. A base + delta layout
+    * (cumulative deltas over compacted bases) was measured on the
+    * `cdc_live` benchmark and did not pay at 150k rows: bytes written
+    * per event fell ~5.5×, but a batch's cost is its fixed job overhead,
+    * not its bytes, and every read had to merge again (dashboard
+    * execution ~2×, freshness worse).
+    *
+    * When the version has the [[StatefulLatestState.SummaryBy]] columns
+    * and the tombstone flag, the write also observes their per-group
+    * summary ([[GroupSummaryAgg]], computed in the write's own tasks: no
+    * extra job) and, once `_SUCCESS` exists, writes it as the sidecar
+    * `v=N/_summary` that [[SummaryScan]] answers the dashboard from. */
   def upsertByKey(spark: SparkSession, updates: DataFrame, tablePath: String,
                   newVersion: Long, keyCol: String = "orderid",
                   ordCol: String = "lsn"): Unit = {
@@ -63,10 +78,80 @@ object Sinks {
     // merges against the old snapshot with nulls backfilled, instead of
     // failing the pipeline on the first post-migration micro-batch;
     // the new version keeps the batch's columns
-    Cdc.latestByKey(existing.unionByName(updates, allowMissingColumns = true)
+    val merged = Cdc.latestByKey(existing.unionByName(updates, allowMissingColumns = true)
         .select(updates.columns.map(col).toIndexedSeq: _*), keyCol, ordCol)
-      .write.mode("overwrite").parquet(s"$tablePath/v=$newVersion")
+    val dir = new Path(tablePath, s"v=$newVersion")
+    summaryColumns(merged.schema) match {
+      case None => merged.write.mode("overwrite").parquet(dir.toString)
+      case Some((group, measure)) =>
+        val observed = Observation()
+        val agg = GroupSummaryAgg(UnresolvedAttribute.quoted(group),
+          UnresolvedAttribute.quoted(measure), UnresolvedAttribute.quoted(Tombstone))
+        merged.observe(observed, GraftColumns.aggregate(agg).as(SummaryFile))
+          .write.mode("overwrite").parquet(dir.toString)
+        // null when a sum overflowed: the version then has no summary
+        Option(observed.get(SummaryFile)).foreach(bytes =>
+          writeSummary(spark, dir, group, measure, bytes.asInstanceOf[Array[Byte]]))
+    }
   }
+
+  /** The [[StatefulLatestState.SummaryBy]] columns, when a version of
+    * this schema can carry a summary of them: a string group, an
+    * integral measure and the tombstone flag. */
+  private def summaryColumns(schema: StructType): Option[(String, String)] = {
+    val (group, measure) = StatefulLatestState.SummaryBy
+    val types = schema.fields.map(f => f.name -> f.dataType).toMap
+    (types.get(group), types.get(measure), types.get(Tombstone)) match {
+      case (Some(StringType), Some(ByteType | ShortType | IntegerType | LongType),
+            Some(BooleanType)) => Some((group, measure))
+      case _ => None
+    }
+  }
+
+  /** Sidecar of a committed version: the live rows' per-group
+    * `(rows, nonNullMeasure, measureSum)` ([[GroupSummaryAgg]]), named
+    * by its group and measure columns. The `_` prefix hides it from
+    * Spark's file listing and from [[readVersion]]'s part-file scan; a
+    * retried batch's overwrite deletes it with the rest of `v=N`. */
+  private val SummaryFile = "_summary"
+
+  /** A version's summary, as [[summary]] reads it back. */
+  private[streaming] final case class VersionSummary(
+      group: String, measure: String, groups: GroupSummaryAgg.Buffer)
+
+  /** Written only after the version's `_SUCCESS`: a reader that finds
+    * the version committed but no sidecar answers from the scan. */
+  private def writeSummary(spark: SparkSession, dir: Path, group: String,
+                           measure: String, body: Array[Byte]): Unit = {
+    val path = new Path(dir, SummaryFile)
+    val out = new DataOutputStream(summaryFs(spark, path).create(path, true))
+    try { out.writeUTF(group); out.writeUTF(measure); out.write(body) }
+    finally out.close()
+  }
+
+  /** The sidecar's filesystem, without a checksummed filesystem's
+    * `.crc` twin: that second file doubled the sidecar's write cost,
+    * and [[GroupSummaryAgg.decode]] already rejects a torn file. */
+  private def summaryFs(spark: SparkSession, path: Path): FileSystem =
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration) match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case fs => fs
+    }
+
+  /** The summary sidecar of the version directory `dir`; None when it
+    * is absent, unreadable or marks an overflow, and for a truncated
+    * file (the group count no longer matches the entries). */
+  private[streaming] def summary(spark: SparkSession, dir: Path): Option[VersionSummary] =
+    scala.util.Try {
+      val path = new Path(dir, SummaryFile)
+      val in = new DataInputStream(summaryFs(spark, path).open(path))
+      try {
+        val group = in.readUTF()
+        val measure = in.readUTF()
+        val body = in.readAllBytes()
+        VersionSummary(group, measure, GroupSummaryAgg.decode(body))
+      } finally in.close()
+    }.toOption.filterNot(_.groups.overflow)
 
   /** The table's newest complete snapshot of live rows: tombstones are
     * filtered out null-safely — a pre-evolution row whose (newly added)
@@ -82,7 +167,7 @@ object Sinks {
   }
 
   /** The column that marks a row as a tombstone (a deleted key). */
-  private val Tombstone = "deleted"
+  private[streaming] val Tombstone = "deleted"
 
   /** Version `v` of the table, read with the schema Spark recorded in
     * one part file's footer (fetched on the driver), so no

@@ -12,4 +12,10 @@ object StatefulLatestState {
     * [[Sinks.readLatest]] hides tombstones. */
   case class KeyState(orderid: Int, lsn: Long, deleted: Boolean,
                       custid: Int, amount: Int, city: String)
+
+  /** `(group, measure)` of the per-version summary the sink keeps for
+    * this table: the live rows' `count()`, `sum(amount)` and
+    * `avg(amount)` by `city`, the reference dashboard's three tiles
+    * ([[Sinks.upsertByKey]], [[SummaryScan]]). */
+  val SummaryBy: (String, String) = ("city", "amount")
 }

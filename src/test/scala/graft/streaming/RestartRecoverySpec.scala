@@ -30,6 +30,10 @@ import graft.model.Schemas
   * mode allows (fresh session state; checkpoint, file-source log and
   * table, tombstones included, all recovered from disk — nothing
   * survives in the session object).
+  *
+  * A kill between a version's `_SUCCESS` and its summary sidecar leaves
+  * a committed version that dashboard reads answer by scanning; the
+  * retried batch rewrites both.
   */
 class RestartRecoverySpec extends SparkSpec {
 
@@ -100,5 +104,48 @@ class RestartRecoverySpec extends SparkSpec {
     assert(snapshot.filter(col("orderid") === 5).isEmpty,
       "tombstoned key must not be resurrected by a stale replay after restart")
     assert(got.count() == 2) // keys 1 (updated) and 4
+  }
+
+  test("killed after _SUCCESS but before the summary: reads scan, the retried " +
+       "batch rewrites the summary") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-restart-summary").toString
+    val in = s"$root/in"; val table = s"$root/table"; val ckpt = s"$root/ckpt"
+    def runToCompletion(s: org.apache.spark.sql.SparkSession): Unit =
+      Materializer.startUpsert(s.readStream.schema("value STRING").parquet(in),
+        tablePath = table, checkpointPath = ckpt, trigger = Trigger.AvailableNow())
+        .awaitTermination()
+    def dashboard() = graft.kql.KqlParser.run(graft.ops.ReferenceQueries.kqlTotalText,
+      Map("Orders" -> Sinks.readLatest(spark, table)))
+    def fires(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.exists(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    def totals(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
+    Seq(env(1, 100, 10), env(2, 150, 20), env(3, 70, 30)).toDF("value")
+      .write.mode("append").parquet(in)
+    runToCompletion(spark)
+    val vMax = Paths.get(table).toFile.list().filter(_.startsWith("v="))
+      .map(_.stripPrefix("v=").toLong).max
+
+    // the kill: batch vMax+1 committed its version (a stale merge here)
+    // but died before writing the summary and before the checkpoint
+    Sinks.upsertByKey(spark, Seq(StatefulLatestState.KeyState(9, 90L, false, 90, 900, "Austin"))
+      .toDF(), table, newVersion = vMax + 1)
+    assert(Files.deleteIfExists(Paths.get(s"$table/v=${vMax + 1}/_summary")))
+    val fallback = dashboard()
+    assert(!fires(fallback), "a committed version without a summary must be scanned")
+    assert(totals(fallback) == Map("Austin" -> 1220L))
+
+    Seq(env(1, 120, 11, op = "u"), env(2, 0, 21, op = "d"), env(4, 300, 40))
+      .toDF("value").write.mode("append").parquet(in)
+    runToCompletion(spark.newSession())
+
+    assert(new java.io.File(s"$table/v=${vMax + 1}/_summary").exists(),
+      "the retried batch must rewrite the summary")
+    val served = dashboard()
+    assert(fires(served))
+    assert(totals(served) == Map("Austin" -> 490L)) // keys 1 (120), 3 (70), 4 (300)
   }
 }

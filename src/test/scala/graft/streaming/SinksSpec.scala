@@ -177,6 +177,19 @@ class SinksSpec extends SparkSpec {
     assert(latest.count() == 2)
   }
 
+  test("the summary is observed inside the upsert's write: no extra Spark job") {
+    val table = Files.createTempDirectory("graft-observed").toString + "/orders"
+    def batch(v: Int) = (1 to 50).map(k => StatefulLatestState.KeyState(
+      k, v * 100L + k, k % 5 == 0, k, 100 + k, s"C${k % 3}")).toDF()
+    Sinks.upsertByKey(spark, batch(1), table, newVersion = 1)
+    val jobs = jobsStartedBy(Sinks.upsertByKey(spark, batch(2), table, newVersion = 2))
+    val plain = jobsStartedBy(Sinks.upsertByKey(spark, batch(3).drop("city"), table, newVersion = 3))
+    assert(jobs == plain, s"the observed write ran $jobs jobs, the plain write $plain")
+    assert(new java.io.File(s"$table/v=2/_summary").exists())
+    assert(!new java.io.File(s"$table/v=2/._summary.crc").exists(), "the sidecar has no .crc twin")
+    assert(!new java.io.File(s"$table/v=3/_summary").exists(), "a city-less version has no summary")
+  }
+
   test("a pre-evolution version without the tombstone column reads as all-live") {
     val table = Files.createTempDirectory("graft-pretomb").toString + "/orders"
     Seq((1, 10L, 100), (2, 20L, 150)).toDF("orderid", "lsn", "amount")

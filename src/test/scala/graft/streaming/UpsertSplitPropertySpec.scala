@@ -18,7 +18,10 @@ import graft.SparkSpec
   * rows must equal the batch `Cdc.latestState` materialization of the
   * same log, and its tombstones must be exactly the keys that view
   * drops. This is the property that makes the pipeline deployable: batch
-  * boundaries are an accident of trigger timing, never semantics. */
+  * boundaries are an accident of trigger timing, never semantics.
+  * After every batch, the newest version's summary sidecar (the
+  * dashboard's city → count/sum, [[SummaryScan]]) must equal the live
+  * rows so far aggregated from scratch. */
 class UpsertSplitPropertySpec extends SparkSpec {
   import spark.implicits._
 
@@ -52,10 +55,38 @@ class UpsertSplitPropertySpec extends SparkSpec {
     base ++ replays
   }
 
+  /** The batch latest-state view of `log`. */
+  private def latest(log: Seq[String]) =
+    graft.cdc.Cdc.latestState(graft.cdc.Cdc.decode(log.toDF("value")),
+      keyCol = coalesce(col("payload.after.orderid"), col("payload.before.orderid")),
+      orderCol = col("payload.source.lsn"))
+
+  /** city → (rows, non-null amounts, sum of amounts) of `log`'s live
+    * rows, aggregated from scratch. */
+  private def scratchSummary(log: Seq[String]): Map[String, (Long, Long, Long)] =
+    latest(log).groupBy("city").agg(count(lit(1)), count(col("amount")),
+        coalesce(sum(col("amount")), lit(0L)))
+      .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
+
+  /** The summary sidecar of the table's newest version. */
+  private def sinkSummary(table: String): Map[String, (Long, Long, Long)] = {
+    val newest = newestVersion(table)
+    val s = Sinks.summary(spark, new org.apache.hadoop.fs.Path(table, newest))
+    assert(s.exists(s => s.group == "city" && s.measure == "amount"), s"no summary in $newest")
+    import scala.jdk.CollectionConverters._
+    s.get.groups.groups.asScala.map { case (k, a) => k.toString -> ((a(0), a(1), a(2))) }.toMap
+  }
+
+  private def newestVersion(table: String): String =
+    new java.io.File(table).list().filter(_.startsWith("v="))
+      .maxBy(_.stripPrefix("v=").toLong)
+
   /** Run the upsert pipeline over `events` delivered in the given
-    * batches; return the final (orderid, amount, deleted) per key of the
-    * table's newest version, and its live rows as `readLatest` serves
-    * them. */
+    * batches, checking after every batch that the newest version's
+    * summary equals the delivered prefix's live rows aggregated by city
+    * from scratch; return the final (orderid, amount, deleted) per key
+    * of the table's newest version, and its live rows as `readLatest`
+    * serves them. */
   private def finalState(batches: Seq[Seq[String]], name: String)
       : (Set[(Int, Int, Boolean)], Set[(Int, Int)]) = {
     implicit val sql = spark.sqlContext
@@ -64,11 +95,16 @@ class UpsertSplitPropertySpec extends SparkSpec {
     val q = Materializer.startUpsert(source.toDF().select(col("value")),
       tablePath = table, checkpointPath = Files.createTempDirectory(name + "-ckpt").toString,
       trigger = Trigger.ProcessingTime(0))
+    var delivered = Seq.empty[String]
     try batches.foreach { b =>
-      if (b.nonEmpty) { source.addData(b); q.processAllAvailable() }
+      if (b.nonEmpty) {
+        source.addData(b); q.processAllAvailable()
+        delivered ++= b
+        assert(sinkSummary(table) == scratchSummary(delivered),
+          s"summary after ${delivered.size} events != from-scratch aggregate ($name)")
+      }
     } finally q.stop()
-    val newest = new java.io.File(table).list().filter(_.startsWith("v="))
-      .maxBy(_.stripPrefix("v=").toLong)
+    val newest = newestVersion(table)
     val all = spark.read.parquet(s"$table/$newest")
       .select("orderid", "amount", "deleted")
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getBoolean(2))).toSet
@@ -96,13 +132,11 @@ class UpsertSplitPropertySpec extends SparkSpec {
 
       // live rows must equal the batch materialization of the same log,
       // and the tombstones must be exactly the log's keys it drops
-      val decoded = graft.cdc.Cdc.decode(log.toDF("value"))
-      val key = coalesce(col("payload.after.orderid"), col("payload.before.orderid"))
-      val batch = graft.cdc.Cdc.latestState(decoded,
-        keyCol = key, orderCol = col("payload.source.lsn"))
-        .select("orderid", "amount")
+      val batch = latest(log).select("orderid", "amount")
         .collect().map(r => (r.getInt(0), r.getInt(1))).toSet
-      val logKeys = decoded.select(key).as[Int].collect().toSet
+      val logKeys = graft.cdc.Cdc.decode(log.toDF("value"))
+        .select(coalesce(col("payload.after.orderid"), col("payload.before.orderid")))
+        .as[Int].collect().toSet
       runs.foreach { case (_, live) =>
         assert(live == batch, s"served live rows != batch view (seed $seed)") }
       assert(s1.collect { case (k, _, true) => k } == logKeys -- batch.map(_._1),
