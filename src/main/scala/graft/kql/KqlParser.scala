@@ -48,7 +48,8 @@ import org.apache.spark.sql.functions._
   * map-side bin fan-out, see [[slidingBinFanout]]),
   * `evaluate narrow` (transpose to string
   * (Column, Value) pairs — first column as key, documented deviation
-  * from ADX's ordinal Row; other plugins rejected),
+  * from ADX's ordinal Row; every plugin binds through [[evalPlugins]],
+  * other names are rejected),
   * `project-reorder`, `parse`, `print` (table-less scalar row),
   * `range` (table-from-scalar-series, [[rangeVerb]]), `getschema`
   * (column introspection), `lookup` (dimension enrichment — broadcast
@@ -424,16 +425,17 @@ object KqlParser {
       // Extend-style assignment applying the row-window rewrite (shared
       // by `extend` and `serialize name = expr, ...`).
       def applyExtend(body: String): Unit = {
-        val items = splitTopLevel(body, ',').map(_.trim)
-        // r20 (r19 verdict #1): translate the WHOLE assignment list
-        // against one shared helper buffer FIRST, so helpers dedupe
-        // and batch ACROSS items (kql_serialize's prev/next/row_cumsum
-        // items now share one per-block stats pass instead of three),
-        // then attach all helpers, then apply the assignments in
-        // order. Translation-time frame context (pack_all's column
-        // set, let-shadowing) is simulated per item via `simCols`, so
-        // the text produced is identical to the sequential path's.
-        val helpers = scala.collection.mutable.ArrayBuffer.empty[SerialHelper]
+        // The assignment list is applied in maximal RUNS. Each run is
+        // translated against one shared helper buffer first, so helpers
+        // dedupe and batch across its items (kql_serialize's
+        // prev/next/row_cumsum items share one per-block stats pass),
+        // then its helpers attach and its assignments apply in order.
+        // A helper attaches before the run's assignments, so an item
+        // whose helpers read a name assigned earlier in the current run
+        // (`extend W = v * 2, p = prev(w)`) opens the next run instead.
+        // Translation-time frame context (pack_all's column set,
+        // let-shadowing) follows the items via `simCols`.
+        //
         // ADX pack_all() — a property bag of EVERY current column.
         // It needs frame context (the scalar translator sees only
         // text), so it desugars HERE to the equivalent bag_pack
@@ -445,43 +447,37 @@ object KqlParser {
         // pack_all must never see them.)
         var simCols = df.columns
           .filterNot(SerPins.contains).toIndexedSeq
-        val translated = items.map { item0 =>
-          val item = rewritePackAll(item0, simCols)
-          val (nameOpt, sql) = nameAndSql(item, scoped)
+        val helpers = scala.collection.mutable.ArrayBuffer.empty[SerialHelper]
+        val run = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+        def translate(item0: String): (String, String) = {
+          val (nameOpt, sql) = nameAndSql(rewritePackAll(item0, simCols), scoped)
           val name = nameOpt.getOrElse(
-            throw new IllegalArgumentException(s"extend needs 'name = expr': $item"))
-          val rewritten = rewriteSerialFns(sql, serialOrder, helpers)
-          if (!simCols.contains(name)) simCols = simCols :+ name
-          (name, rewritten)
+            throw new IllegalArgumentException(s"extend needs 'name = expr': $item0"))
+          (name, rewriteSerialFns(sql, serialOrder, helpers))
         }
-        val itemNames = translated.map(_._1).toSet
-        if (helpers.exists(h => helperInputs(h)
-            .exists(s => itemNames.exists(n => refersTo(s, n))))) {
-          // rare: a row-function argument references a column ASSIGNED
-          // in this same stage — the pre-attached batch can't see it,
-          // so fall back to strict per-item sequencing (the r19 path)
-          items.foreach { item0 =>
-            val item = rewritePackAll(item0,
-              df.columns.filterNot(SerPins.contains).toIndexedSeq)
-            val (nameOpt, sql) = nameAndSql(item, scoped)
-            val name = nameOpt.get
-            val hs = scala.collection.mutable.ArrayBuffer.empty[SerialHelper]
-            val rewritten = rewriteVariantPaths(
-              rewriteSerialFns(sql, serialOrder, hs), df)
-            df = attachSerialHelpers(df, hs.toSeq, serialItems)
-            df = df.extend(name, expr(rewritten))
-            if (hs.nonEmpty) df = df.drop(hs.map(_.name).toSeq: _*)
-          }
-        } else {
+        def applyRun(): Unit = {
           df = attachSerialHelpers(df, helpers.toSeq, serialItems)
-          translated.foreach { case (name, rewritten) =>
+          run.foreach { case (name, rewritten) =>
             // variant-path/column_ifexists resolution happens at apply
-            // time (after the previous items' columns exist), exactly
-            // as the sequential path resolved it
+            // time, after the previous items' columns exist
             df = df.extend(name, expr(rewriteVariantPaths(rewritten, df)))
           }
           if (helpers.nonEmpty) df = df.drop(helpers.map(_.name).toSeq: _*)
+          helpers.clear(); run.clear()
         }
+        splitTopLevel(body, ',').map(_.trim).foreach { item0 =>
+          val known = helpers.length
+          var item = translate(item0)
+          if (usedHelpers(item._2, helpers.toSeq).exists(h => helperInputs(h)
+              .exists(s => run.exists { case (n, _) => refersTo(s, n) }))) {
+            helpers.remove(known, helpers.length - known)
+            applyRun()
+            item = translate(item0)
+          }
+          run += item
+          if (!simCols.contains(item._1)) simCols = simCols :+ item._1
+        }
+        applyRun()
         // the pin columns persist across items (one pin per stage);
         // restore the serialized presentation order (the shift joins
         // and block windows scramble physical order; the frame's
@@ -715,138 +711,8 @@ object KqlParser {
               s"top-hitters expects 'N of key [by expr]': $other")
           }
         case "evaluate" =>
-          // `evaluate pivot(col[, agg[, groupCols…]])` — the one ADX
-          // plugin with a direct Spark-native equivalent
-          // (RelationalGroupedDataset.pivot). Pivot values are
-          // discovered from the data (one extra distinct scan, same as
-          // ADX's dynamic schema); absent (group, value) cells are null
-          // (Spark semantics — ADX also leaves them empty; oracles
-          // mirror with ELSE-less CASE sums). Default grouping: every
-          // column except the pivot column and the aggregate's input,
-          // ADX's rule. Other plugins are rejected loudly.
-          val body0 = rest.trim
-          if (body0.toLowerCase.startsWith("bag_unpack")) {
-            df = bagUnpackVerb(df, body0); serialOrder = None
-          } else if (body0.toLowerCase.startsWith("autocluster")) {
-            df = autoclusterVerb(df, body0); serialOrder = None
-          } else if (body0.toLowerCase.startsWith("basket")) {
-            df = basketVerb(df, body0); serialOrder = None
-          } else if (body0.toLowerCase.startsWith("diffpatterns")) {
-            df = diffPatternsVerb(df, body0); serialOrder = None
-          } else if (body0.toLowerCase.startsWith("sliding_window_counts")) {
-            df = slidingWindowCountsVerb(df, body0); serialOrder = None
-          } else if (body0.toLowerCase.startsWith("activity_engagement")) {
-            df = activityEngagementVerb(df, body0); serialOrder = None
-          } else if (body0.toLowerCase.startsWith("funnel_sequence_completion")) {
-            df = funnelCompletionVerb(df, body0, scoped); serialOrder = None
-          } else if (body0.toLowerCase.startsWith("funnel_sequence")) {
-            df = funnelSequenceVerb(df, body0); serialOrder = None
-          } else if (body0.toLowerCase.startsWith("activity_counts_metrics")) {
-            df = activityCountsMetricsVerb(df, body0); serialOrder = None
-          } else if (body0.toLowerCase.startsWith("new_activity_metrics")) {
-            df = newActivityMetricsVerb(df, body0); serialOrder = None
-          } else if (body0.toLowerCase.startsWith("rolling_percentile")) {
-            df = rollingPercentileVerb(df, body0); serialOrder = None
-          } else if (body0.toLowerCase.startsWith("active_users_count")) {
-            df = activeUsersCountVerb(df, body0); serialOrder = None
-          } else if (body0.toLowerCase.startsWith("sequence_detect")) {
-            df = sequenceDetectVerb(df, body0, scoped); serialOrder = None
-          } else if (body0.toLowerCase.startsWith("session_count")) {
-            df = sessionCountVerb(df, body0); serialOrder = None
-          } else if (body0.toLowerCase.startsWith("ipv4_lookup")) {
-            df = ipv4LookupVerb(df, body0, tbls, scoped); serialOrder = None
-          } else if (body0.toLowerCase.startsWith("geo_polygon_lookup")) {
-            df = geoPolygonLookupVerb(df, body0, tbls, scoped); serialOrder = None
-          } else if (body0.toLowerCase.startsWith("geo_line_lookup")) {
-            df = geoLineLookupVerb(df, body0, tbls, scoped); serialOrder = None
-          } else if (body0.toLowerCase.startsWith("preview")) {
-            // `evaluate preview(N)` — ADX returns TWO tables (an
-            // N-row sample + the total row count); a one-frame engine
-            // folds the count in as a constant `preview_total` column
-            // (broadcast one-row cross join, the repo's grand-total
-            // idiom — no window, no second pass over the driver).
-            // DEVIATION (documented): ADX's sample is arbitrary; an
-            // arbitrary subset cannot cross an oracle, so the sample
-            // here is the first N rows in the TOTAL ordering of all
-            // columns — Spark plans the sort+limit as
-            // TakeOrderedAndProject (top-N per partition + merge, no
-            // global sort shuffle), so the determinism is free at
-            // scale. Columns must be orderable — VARIANT/map columns
-            // are rejected loudly (project them away first; ADX's
-            // arbitrary sample has no such restriction, but an
-            // arbitrary sample cannot cross an oracle). Nulls sort
-            // LAST (asc_nulls_last) — DuckDB's ASC default, so the
-            // oracle compare holds on nullable columns too.
-            val open = body0.indexOf('(')
-            require(open > 0 && matchingParen(body0, open) == body0.length - 1,
-              s"evaluate preview expects preview(N): $body0")
-            val nArg = body0.substring(open + 1, body0.length - 1).trim
-            val n = scala.util.Try(nArg.toInt).getOrElse(
-              throw new IllegalArgumentException(
-                s"evaluate preview expects an integer literal row count: $nArg"))
-            require(n > 0, s"evaluate preview row count must be positive: $n")
-            require(!df.columns.contains("preview_total"),
-              "evaluate preview: a 'preview_total' column already exists")
-            val unorderable = df.schema.fields.filter { f =>
-              !org.apache.spark.sql.catalyst.expressions.RowOrdering
-                .isOrderable(f.dataType)
-            }.map(_.name)
-            require(unorderable.isEmpty,
-              "evaluate preview orders by every column for a deterministic " +
-                s"sample; non-orderable columns (project them away first): " +
-                unorderable.mkString(", "))
-            val totals = df.agg(count(lit(1)).as("preview_total"))
-            df = df.orderBy(df.columns.toIndexedSeq
-                .map(c => col(s"`$c`").asc_nulls_last): _*)
-              .limit(n).crossJoin(broadcast(totals))
-            serialOrder = None
-          } else if (body0.toLowerCase.matches("(?i)narrow\\s*\\(\\s*\\)")) {
-            // `evaluate narrow()` — ADX's transpose plugin: every value
-            // column becomes a (Column, Value) row pair, values cast to
-            // string (ADX's behavior — the output column is untyped
-            // text). DEVIATION (documented): ADX keys rows by an
-            // ordinal Row number, which has no deterministic meaning on
-            // a distributed frame; here the FIRST column is carried as
-            // the row key instead — project a unique key first.
-            require(df.columns.length >= 2,
-              "narrow needs a key column plus at least one value column")
-            val key = df.columns.head
-            val rest2 = df.columns.tail
-            val pairs = rest2.map(c => s"'$c', cast(`$c` as string)").mkString(", ")
-            df = df.selectExpr(s"`$key`",
-              s"stack(${rest2.length}, $pairs) as (Column, Value)")
-            serialOrder = None
-          } else {
-          require(body0.toLowerCase.startsWith("pivot"),
-            "evaluate supports only the pivot, bag_unpack, autocluster, " +
-              "basket, diffpatterns, sliding_window_counts, activity_engagement, " +
-              "activity_counts_metrics, new_activity_metrics, rolling_percentile, " +
-              "active_users_count, sequence_detect, session_count, ipv4_lookup, " +
-              "geo_polygon_lookup, geo_line_lookup, " +
-              s"funnel_sequence, funnel_sequence_completion, preview and narrow plugins: $body0")
-          val open = body0.indexOf('(')
-          require(open > 0 && matchingParen(body0, open) == body0.length - 1,
-            s"evaluate pivot expects pivot(col[, agg[, groupCols…]]): $body0")
-          val args = splitTopLevel(body0.substring(open + 1, body0.length - 1), ',')
-            .map(_.trim).filter(_.nonEmpty)
-          require(args.nonEmpty, "pivot needs at least the pivot column")
-          val pivotCol = args.head
-          require(pivotCol.matches("[A-Za-z_][A-Za-z0-9_]*"),
-            s"pivot column must be a column name: $pivotCol")
-          val (aggCol, aggInput) =
-            if (args.length >= 2) {
-              val (_, c) = aggItem(args(1), scoped)
-              val AggIn = "(?s)^[A-Za-z_][A-Za-z0-9_]*\\s*\\(\\s*([A-Za-z_][A-Za-z0-9_]*)\\s*\\)$".r
-              (c, args(1) match { case AggIn(cn) => Some(cn); case _ => None })
-            } else (count(lit(1)), None)
-          val groupCols =
-            if (args.length >= 3) args.drop(2)
-            else df.columns.toSeq.filterNot(c => c == pivotCol || aggInput.contains(c))
-          require(groupCols.nonEmpty,
-            "pivot needs at least one remaining group column")
-          df = df.groupBy(groupCols.map(col): _*).pivot(pivotCol).agg(aggCol)
+          df = evaluateVerb(df, rest, tbls, scoped)
           serialOrder = None
-          }
         case "mv-apply" => df = mvApplyVerb(df, rest, scoped)
         case "mv-expand" => df = mvExpandVerb(df, rest, scoped)
         case "make-series" => df = makeSeriesVerb(df, rest, scoped)
@@ -1121,13 +987,9 @@ object KqlParser {
       case other => throw new IllegalArgumentException(
         s"make-series expects '<name> = <agg> on <ts> from <start> to <end> step <span> [by <keys>]': $other")
     }
-    val TimespanRe = "^(\\d+)(d|h|m|s)$".r
-    val stepSecs = stepS match {
-      case TimespanRe(n, u) => n.toLong * (u match {
-        case "d" => 86400L; case "h" => 3600L; case "m" => 60L; case "s" => 1L })
-      case other => throw new IllegalArgumentException(
-        s"make-series step must be a timespan literal (1d, 2h, 30m, 90s): $other")
-    }
+    val stepSecs = timespanSeconds(stepS, "make-series step").getOrElse(
+      throw new IllegalArgumentException(
+        s"make-series step must be a timespan literal (1d, 2h, 30m, 90s): $stepS"))
     // `default = <v>` rides between each aggregate and the next comma
     // (or `on`, already split off above); absent means 0, the ADX
     // default — each series carries its OWN fill.
@@ -1227,14 +1089,8 @@ object KqlParser {
         // spark.range's end is exclusive; ADX includes an on-step stop
         spark.range(f, if (st > 0) t + 1 else t - 1, st).select(col("id").as(name))
       case _ =>
-        val TimespanRe = "^(\\d+)(d|h|m|s)$".r
-        val stepSql = stepS match {
-          case TimespanRe(n, u) =>
-            val secs = n.toLong * (u match {
-              case "d" => 86400L; case "h" => 3600L; case "m" => 60L; case "s" => 1L })
-            s"make_interval(0, 0, 0, 0, 0, 0, $secs)"
-          case other => scalar(other, lets)
-        }
+        val stepSql = timespanSeconds(stepS, "range step")
+          .fold(scalar(stepS, lets))(secs => s"make_interval(0, 0, 0, 0, 0, 0, $secs)")
         val generated = spark.range(1).select(explode(expr(
           s"sequence(${scalar(fromS, lets)}, ${scalar(toS, lets)}, $stepSql)")).as(name))
         // Schema consistency with the literal path: integer operands that
@@ -2379,6 +2235,215 @@ object KqlParser {
     }(Encoders.row(outSchema))
   }
 
+  /** A bound `evaluate name(args)` call as its plugin sees it: the
+    * top-level arguments (trimmed, empty ones dropped, the count already
+    * inside the plugin's arity), the call text for error messages, and
+    * the stage context — the piped frame, the table scope (lookup
+    * operands) and the scoped lets. */
+  private[kql] final case class PluginCall(name: String, args: Seq[String], text: String,
+      df: DataFrame, tables: Map[String, DataFrame], lets: Map[String, String]) {
+    /** Each of `cs` must name a column of the piped frame. */
+    def requireColumns(cs: String*): Unit = cs.foreach(c => require(
+      c.matches("[A-Za-z_][A-Za-z0-9_]*") && df.columns.contains(c),
+      s"$name column '$c' not found (have: ${df.columns.mkString(", ")})"))
+    /** Argument `i` as a `datetime(...)` literal, in epoch seconds. */
+    def epochArg(i: Int): Long = dtLiteralEpoch(args(i), name)
+    /** Argument `i` as a timespan literal, in seconds. */
+    def spanArg(i: Int): Long = spanSecs(args(i), name)
+  }
+
+  /** An `evaluate` plugin: the call shape its binding errors quote, the
+    * argument counts it accepts, and its body. */
+  private[kql] final case class EvalPlugin(usage: String, minArgs: Int, maxArgs: Int,
+      run: PluginCall => DataFrame)
+
+  /** Every `evaluate` plugin, by exact lower-case name: the one
+    * dispatch table (the unknown-plugin error lists its keys). */
+  private[kql] val evalPlugins = scala.collection.immutable.ListMap[String, EvalPlugin](
+    "pivot" -> EvalPlugin("pivot(col[, agg[, groupCols…]])", 1, Int.MaxValue, pivotVerb),
+    "bag_unpack" -> EvalPlugin("bag_unpack(col[, 'prefix'])", 1, 2, bagUnpackVerb),
+    "autocluster" -> EvalPlugin("autocluster([minPct])", 0, 1, autoclusterVerb),
+    "basket" -> EvalPlugin("basket([Threshold])", 0, 1, basketVerb),
+    "diffpatterns" -> EvalPlugin(
+      "diffpatterns(splitCol, 'A', 'B'[, minDiffPct])", 3, 4, diffPatternsVerb),
+    "sliding_window_counts" -> EvalPlugin("sliding_window_counts(idCol, timeCol, " +
+      "start, end, lookback, bin)", 6, 6, slidingWindowCountsVerb),
+    "activity_engagement" -> EvalPlugin("activity_engagement(idCol, timeCol, " +
+      "start, end, innerWindow, outerWindow)", 6, 6, activityEngagementVerb),
+    "activity_counts_metrics" -> EvalPlugin("activity_counts_metrics(idCol, timeCol, " +
+      "start, end, bin)", 5, 5, activityCountsMetricsVerb),
+    "new_activity_metrics" -> EvalPlugin("new_activity_metrics(idCol, timeCol, " +
+      "start, end, bin)", 5, 5, newActivityMetricsVerb),
+    "rolling_percentile" -> EvalPlugin("rolling_percentile(valueCol, percentile, " +
+      "timeCol, start, end, lookback, bin)", 7, 7, rollingPercentileVerb),
+    "active_users_count" -> EvalPlugin("active_users_count(idCol, timeCol, start, " +
+      "end, lookback, period, activePeriods, bin)", 8, 8, activeUsersCountVerb),
+    "sequence_detect" -> EvalPlugin("sequence_detect(timeCol, stepWindow, " +
+      "spanWindow, expr1, expr2, ..., idCol)", 6, Int.MaxValue, sequenceDetectVerb),
+    "session_count" -> EvalPlugin("session_count(idCol, timeCol, start, end, " +
+      "bin, lookback)", 6, 6, sessionCountVerb),
+    "ipv4_lookup" -> EvalPlugin(
+      "ipv4_lookup(LookupTable, ipCol, networkCol)", 3, 3, ipv4LookupVerb),
+    "geo_polygon_lookup" -> EvalPlugin("geo_polygon_lookup(LookupTable, " +
+      "polygonCol, lonCol, latCol[, level])", 4, 5, geoPolygonLookupVerb),
+    "geo_line_lookup" -> EvalPlugin("geo_line_lookup(LookupTable, lineCol, " +
+      "lonCol, latCol, tolerance[, level])", 5, 6, geoLineLookupVerb),
+    "funnel_sequence" -> EvalPlugin("funnel_sequence(idCol, timeCol, start, end, " +
+      "maxStepWindow, stateCol, dynamic([...]))", 7, 7, funnelSequenceVerb),
+    "funnel_sequence_completion" -> EvalPlugin("funnel_sequence_completion(timeCol, " +
+      "stepWindow, start, end, bin, expr1, ..., idCol)", 7, Int.MaxValue,
+      funnelCompletionVerb),
+    "preview" -> EvalPlugin("preview(N)", 1, 1, previewVerb),
+    "narrow" -> EvalPlugin("narrow()", 0, 0, narrowVerb))
+
+  /** `evaluate name(args)`: the leading identifier, lower-cased, names
+    * the plugin exactly in [[evalPlugins]]; the rest must be ONE
+    * balanced parenthesized argument list, split once at top-level
+    * commas and checked against the plugin's arity before it runs. */
+  private def evaluateVerb(df: DataFrame, rest: String,
+                           tables: Map[String, DataFrame],
+                           lets: Map[String, String]): DataFrame = {
+    val text = rest.trim
+    val name = text.takeWhile(c => c.isLetterOrDigit || c == '_').toLowerCase
+    val plugin = evalPlugins.getOrElse(name, throw new IllegalArgumentException(
+      s"evaluate supports only the ${evalPlugins.keys.mkString(", ")} plugins: $text"))
+    def misbound(why: String) = new IllegalArgumentException(
+      s"evaluate $name expects ${plugin.usage}$why: $text")
+    val call = text.drop(name.length).trim
+    if (!call.startsWith("(") ||
+        !scala.util.Try(matchingParen(call, 0)).toOption.contains(call.length - 1))
+      throw misbound("")
+    val args = splitTopLevel(call.substring(1, call.length - 1), ',')
+      .map(_.trim).filter(_.nonEmpty)
+    if (args.length < plugin.minArgs || args.length > plugin.maxArgs)
+      throw misbound(s" (got ${args.length} arguments)")
+    plugin.run(PluginCall(name, args, text, df, tables, lets))
+  }
+
+  private val DatetimeLitRe = "(?is)^datetime\\s*\\((.*)\\)$".r
+  private val TimespanLitRe = "^(\\d+)(d|h|m|s)$".r
+
+  /** `datetime(...)` literal → epoch seconds (UTC; date-only means
+    * midnight) — the activity plugins' Start/End. Anything else, or an
+    * impossible date such as 2024-02-30, is an IllegalArgumentException
+    * naming `verb` and the argument. */
+  private def dtLiteralEpoch(a: String, verb: String): Long = a match {
+    case DatetimeLitRe(b0) =>
+      val b = b0.trim.stripPrefix("'").stripSuffix("'")
+        .stripPrefix("\"").stripSuffix("\"").trim
+      val iso = b.stripSuffix("Z").replace(' ', 'T')
+      val full = if (iso.contains("T")) iso else iso + "T00:00:00"
+      try java.time.LocalDateTime.parse(full).toEpochSecond(java.time.ZoneOffset.UTC)
+      catch {
+        case e: java.time.format.DateTimeParseException =>
+          throw new IllegalArgumentException(
+            s"$verb: invalid datetime literal $a (${e.getMessage})")
+      }
+    case other => throw new IllegalArgumentException(
+      s"$verb start/end must be datetime(...) literals: $other")
+  }
+
+  /** KQL timespan literal (1d, 2h, 30m, 90s) → seconds; None when `a`
+    * is not one, so a caller with a non-literal form (`range`'s step,
+    * `bin`'s numeric size) can fall back to it. A span whose seconds
+    * overflow a Long is an IllegalArgumentException naming `verb`. */
+  private def timespanSeconds(a: String, verb: String): Option[Long] = a match {
+    case TimespanLitRe(n, u) =>
+      val unit = u match { case "d" => 86400L; case "h" => 3600L; case "m" => 60L; case _ => 1L }
+      try Some(Math.multiplyExact(n.toLong, unit))
+      catch {
+        case _: ArithmeticException | _: NumberFormatException =>
+          throw new IllegalArgumentException(s"$verb: timespan literal out of range: $a")
+      }
+    case _ => None
+  }
+
+  /** [[timespanSeconds]] where only a literal will do (plugin windows). */
+  private def spanSecs(a: String, verb: String): Long =
+    timespanSeconds(a, verb).getOrElse(throw new IllegalArgumentException(
+      s"$verb windows must be timespan literals (3d, 1h): $a"))
+
+  /** `evaluate pivot(col[, agg[, groupCols…]])` — the one ADX plugin
+    * with a direct Spark-native equivalent
+    * (RelationalGroupedDataset.pivot). Pivot values are discovered from
+    * the data (one extra distinct scan, same as ADX's dynamic schema);
+    * absent (group, value) cells are null (Spark semantics — ADX also
+    * leaves them empty; oracles mirror with ELSE-less CASE sums).
+    * Default grouping: every column except the pivot column and the
+    * aggregate's input, ADX's rule. */
+  private def pivotVerb(c: PluginCall): DataFrame = {
+    val (df, args) = (c.df, c.args)
+    val pivotCol = args.head
+    require(pivotCol.matches("[A-Za-z_][A-Za-z0-9_]*"),
+      s"pivot column must be a column name: $pivotCol")
+    val (aggCol, aggInput) =
+      if (args.length >= 2) {
+        val (_, agg) = aggItem(args(1), c.lets)
+        val AggIn = "(?s)^[A-Za-z_][A-Za-z0-9_]*\\s*\\(\\s*([A-Za-z_][A-Za-z0-9_]*)\\s*\\)$".r
+        (agg, args(1) match { case AggIn(cn) => Some(cn); case _ => None })
+      } else (count(lit(1)), None)
+    val groupCols =
+      if (args.length >= 3) args.drop(2)
+      else df.columns.toSeq.filterNot(g => g == pivotCol || aggInput.contains(g))
+    require(groupCols.nonEmpty,
+      "pivot needs at least one remaining group column")
+    df.groupBy(groupCols.map(col): _*).pivot(pivotCol).agg(aggCol)
+  }
+
+  /** `evaluate preview(N)` — ADX returns TWO tables (an N-row sample +
+    * the total row count); a one-frame engine folds the count in as a
+    * constant `preview_total` column (broadcast one-row cross join, the
+    * repo's grand-total idiom — no window and no collect). DEVIATION
+    * (documented): ADX's sample is arbitrary; an arbitrary subset
+    * cannot cross an oracle, so the sample here is the
+    * first N rows in the TOTAL ordering of all columns — Spark plans
+    * the sort+limit as TakeOrderedAndProject (top-N per partition +
+    * merge, no global sort shuffle), so the determinism is free at
+    * scale. Columns must be orderable — VARIANT/map columns are
+    * rejected loudly (project them away first). Nulls sort LAST
+    * (asc_nulls_last) — DuckDB's ASC default, so the oracle compare
+    * holds on nullable columns too. */
+  private def previewVerb(c: PluginCall): DataFrame = {
+    val df = c.df
+    val nArg = c.args.head
+    val n = scala.util.Try(nArg.toInt).getOrElse(
+      throw new IllegalArgumentException(
+        s"evaluate preview expects an integer literal row count: $nArg"))
+    require(n > 0, s"evaluate preview row count must be positive: $n")
+    require(!df.columns.contains("preview_total"),
+      "evaluate preview: a 'preview_total' column already exists")
+    val unorderable = df.schema.fields.filter { f =>
+      !org.apache.spark.sql.catalyst.expressions.RowOrdering
+        .isOrderable(f.dataType)
+    }.map(_.name)
+    require(unorderable.isEmpty,
+      "evaluate preview orders by every column for a deterministic " +
+        s"sample; non-orderable columns (project them away first): " +
+        unorderable.mkString(", "))
+    val totals = df.agg(count(lit(1)).as("preview_total"))
+    df.orderBy(df.columns.toIndexedSeq
+        .map(c => col(s"`$c`").asc_nulls_last): _*)
+      .limit(n).crossJoin(broadcast(totals))
+  }
+
+  /** `evaluate narrow()` — ADX's transpose plugin: every value column
+    * becomes a (Column, Value) row pair, values cast to string (ADX's
+    * behavior — the output column is untyped text). DEVIATION
+    * (documented): ADX keys rows by an ordinal Row number, which has no
+    * deterministic meaning on a distributed frame; here the FIRST
+    * column is carried as the row key instead — project a unique key
+    * first. */
+  private def narrowVerb(c: PluginCall): DataFrame = {
+    val df = c.df
+    require(df.columns.length >= 2,
+      "narrow needs a key column plus at least one value column")
+    val key = df.columns.head
+    val values = df.columns.tail
+    val pairs = values.map(v => s"'$v', cast(`$v` as string)").mkString(", ")
+    df.selectExpr(s"`$key`",
+      s"stack(${values.length}, $pairs) as (Column, Value)")
+  }
+
   /** `evaluate autocluster([minPct])` — ADX's segment-mining plugin,
     * re-expressed deterministically: every attribute-pattern over the
     * CURRENT columns (a Spark-native `cube`, wildcards surfacing as
@@ -2397,14 +2462,9 @@ object KqlParser {
     * converted to double (the [[diffPatternsVerb]] convention) — a
     * round(n/total, 6) share is a small-denominator rational, the
     * cross-engine 6-dp half-tie class. */
-  private def autoclusterVerb(df: DataFrame, body: String): DataFrame = {
-    val open = body.indexOf('(')
-    require(open > 0 && matchingParen(body, open) == body.length - 1,
-      s"evaluate autocluster expects autocluster([minPct]): $body")
-    val args = splitTopLevel(body.substring(open + 1, body.length - 1), ',')
-      .map(_.trim).filter(_.nonEmpty)
-    require(args.length <= 1, s"autocluster takes at most one argument: $body")
-    val minPct = args.headOption.map { a =>
+  private def autoclusterVerb(c: PluginCall): DataFrame = {
+    val df = c.df
+    val minPct = c.args.headOption.map { a =>
       val v = scala.util.Try(BigDecimal(a)).getOrElse(throw new IllegalArgumentException(
         s"autocluster minPct must be a numeric literal: $a"))
       require(v > 0 && v <= 1, s"autocluster minPct must be in (0, 1]: $a")
@@ -2455,14 +2515,9 @@ object KqlParser {
     * [[autoclusterVerb]]/[[diffPatternsVerb]] convention — no
     * round(_, 6) half-tie surface). Results are cube-equivalent:
     * `KqlSpec` pins basket ≡ cube-threshold on a toy frame. */
-  private def basketVerb(df: DataFrame, body: String): DataFrame = {
-    val open = body.indexOf('(')
-    require(open > 0 && matchingParen(body, open) == body.length - 1,
-      s"evaluate basket expects basket([Threshold]): $body")
-    val args = splitTopLevel(body.substring(open + 1, body.length - 1), ',')
-      .map(_.trim).filter(_.nonEmpty)
-    require(args.length <= 1, s"basket takes at most one argument: $body")
-    val thr = args.headOption.map { a =>
+  private def basketVerb(c: PluginCall): DataFrame = {
+    val df = c.df
+    val thr = c.args.headOption.map { a =>
       val v = scala.util.Try(BigDecimal(a)).getOrElse(
         throw new IllegalArgumentException(
           s"basket Threshold must be a numeric literal: $a"))
@@ -2553,17 +2608,10 @@ object KqlParser {
     * percent_a − percent_b). Percents are exact integer micro-percents
     * (count·10⁸ DIV total) converted to double — no decimal rounding,
     * so no cross-engine half-way-tie hazard at any scale. */
-  private def diffPatternsVerb(df: DataFrame, body: String): DataFrame = {
-    val open = body.indexOf('(')
-    require(open > 0 && matchingParen(body, open) == body.length - 1,
-      s"evaluate diffpatterns expects diffpatterns(splitCol, 'A', 'B'[, minDiffPct]): $body")
-    val args = splitTopLevel(body.substring(open + 1, body.length - 1), ',')
-      .map(_.trim).filter(_.nonEmpty)
-    require(args.length == 3 || args.length == 4,
-      s"diffpatterns takes (splitCol, 'A', 'B'[, minDiffPct]): $body")
+  private def diffPatternsVerb(c: PluginCall): DataFrame = {
+    val (df, args) = (c.df, c.args)
     val splitCol = args.head
-    require(splitCol.matches("[A-Za-z_][A-Za-z0-9_]*") && df.columns.contains(splitCol),
-      s"diffpatterns split column '$splitCol' not found (have: ${df.columns.mkString(", ")})")
+    c.requireColumns(splitCol)
     def lit2(a: String): String = {
       require(a.length >= 2 && (a.head == '\'' || a.head == '"') && a.last == a.head,
         s"diffpatterns split values must be string literals: $a")
@@ -2635,33 +2683,12 @@ object KqlParser {
     * comparison is done in millis everywhere in this engine. Bins with
     * zero records are omitted (a group-by, not a zero-filled axis —
     * `make-series` is the zero-fill tool). */
-  private def slidingWindowCountsVerb(df: DataFrame, body: String): DataFrame = {
-    val open = body.indexOf('(')
-    require(open > 0 && matchingParen(body, open) == body.length - 1,
-      "evaluate sliding_window_counts expects (idCol, timeCol, start, end, " +
-        s"lookback, bin): $body")
-    val args = splitTopLevel(body.substring(open + 1, body.length - 1), ',')
-      .map(_.trim).filter(_.nonEmpty)
-    require(args.length == 6,
-      s"sliding_window_counts takes exactly 6 arguments: $body")
+  private def slidingWindowCountsVerb(c: PluginCall): DataFrame = {
+    val (df, args) = (c.df, c.args)
     val (idCol, tCol) = (args(0), args(1))
-    Seq(idCol, tCol).foreach(c => require(
-      c.matches("[A-Za-z_][A-Za-z0-9_]*") && df.columns.contains(c),
-      s"sliding_window_counts column '$c' not found (have: ${df.columns.mkString(", ")})"))
-    val DtRe = "(?is)^datetime\\s*\\((.*)\\)$".r
-    def dtEpoch(a: String): Long = a match {
-      case DtRe(b0) =>
-        val b = b0.trim.stripPrefix("'").stripSuffix("'")
-          .stripPrefix("\"").stripSuffix("\"").trim
-        val iso = b.stripSuffix("Z").replace(' ', 'T')
-        val full = if (iso.contains("T")) iso else iso + "T00:00:00"
-        java.time.LocalDateTime.parse(full).toEpochSecond(java.time.ZoneOffset.UTC)
-      case other => throw new IllegalArgumentException(
-        s"sliding_window_counts start/end must be datetime(...) literals: $other")
-    }
-    val (startS, endS) = (dtEpoch(args(2)), dtEpoch(args(3)))
-    val (lookS, binS) = (spanSecs(args(4), "sliding_window_counts"),
-      spanSecs(args(5), "sliding_window_counts"))
+    c.requireColumns(idCol, tCol)
+    val (startS, endS) = (c.epochArg(2), c.epochArg(3))
+    val (lookS, binS) = (c.spanArg(4), c.spanArg(5))
     require(binS > 0 && lookS >= binS && lookS % binS == 0,
       s"lookback must be a positive multiple of bin: ${args(4)} vs ${args(5)}")
     require(endS >= startS && (endS - startS) % binS == 0,
@@ -2669,22 +2696,6 @@ object KqlParser {
     slidingBinFanout(df, idCol, tCol, startS, endS, lookS, binS)
       .groupBy(expr(s"(${startS}L + __k * ${binS}L) * 1000").as("bin_ms"))
       .agg(count(lit(1)).as("Count"), countDistinct(col("__swc_id")).as("Dcount"))
-  }
-
-  /** `datetime(...)` literal → epoch seconds (UTC; date-only means
-    * midnight) — the activity plugins' shared Start/End parser. */
-  private def dtLiteralEpoch(a: String, verb: String): Long = {
-    val DtRe = "(?is)^datetime\\s*\\((.*)\\)$".r
-    a match {
-      case DtRe(b0) =>
-        val b = b0.trim.stripPrefix("'").stripSuffix("'")
-          .stripPrefix("\"").stripSuffix("\"").trim
-        val iso = b.stripSuffix("Z").replace(' ', 'T')
-        val full = if (iso.contains("T")) iso else iso + "T00:00:00"
-        java.time.LocalDateTime.parse(full).toEpochSecond(java.time.ZoneOffset.UTC)
-      case other => throw new IllegalArgumentException(
-        s"$verb start/end must be datetime(...) literals: $other")
-    }
   }
 
   /** `evaluate active_users_count(idCol, timeCol, Start, End,
@@ -2705,28 +2716,18 @@ object KqlParser {
     * explode of the raw corpus. Same documented deviations as
     * sliding_window_counts: second-resolution timeline, epoch-millis
     * `bin_ms` key, zero-user bins omitted. */
-  private def activeUsersCountVerb(df: DataFrame, body: String): DataFrame = {
-    val open = body.indexOf('(')
-    require(open > 0 && matchingParen(body, open) == body.length - 1,
-      "evaluate active_users_count expects (idCol, timeCol, start, end, " +
-        s"lookback, period, activePeriods, bin): $body")
-    val args = splitTopLevel(body.substring(open + 1, body.length - 1), ',')
-      .map(_.trim).filter(_.nonEmpty)
-    require(args.length == 8,
-      s"active_users_count takes exactly 8 arguments: $body")
+  private def activeUsersCountVerb(c: PluginCall): DataFrame = {
+    val (df, args) = (c.df, c.args)
     val (idCol, tCol) = (args(0), args(1))
-    Seq(idCol, tCol).foreach(c => require(
-      c.matches("[A-Za-z_][A-Za-z0-9_]*") && df.columns.contains(c),
-      s"active_users_count column '$c' not found (have: ${df.columns.mkString(", ")})"))
-    val (startS, endS) = (dtLiteralEpoch(args(2), "active_users_count"),
-      dtLiteralEpoch(args(3), "active_users_count"))
-    val lookS = spanSecs(args(4), "active_users_count")
-    val periodS = spanSecs(args(5), "active_users_count")
+    c.requireColumns(idCol, tCol)
+    val (startS, endS) = (c.epochArg(2), c.epochArg(3))
+    val lookS = c.spanArg(4)
+    val periodS = c.spanArg(5)
     val activeK = scala.util.Try(args(6).toInt).getOrElse(
       throw new IllegalArgumentException(
         s"active_users_count ActivePeriodsCount must be an integer literal: ${args(6)}"))
-    val binS = spanSecs(args(7), "active_users_count")
-    require(binS > 0 && activeK >= 1, s"bin must be positive, activePeriods >= 1: $body")
+    val binS = c.spanArg(7)
+    require(binS > 0 && activeK >= 1, s"bin must be positive, activePeriods >= 1: ${c.text}")
     require(lookS >= periodS && lookS % binS == 0,
       s"lookback must be >= period and a multiple of bin: ${args(4)} vs ${args(5)}/${args(7)}")
     require(endS >= startS && (endS - startS) % binS == 0,
@@ -2764,19 +2765,10 @@ object KqlParser {
     * never shuffles on anything but its own ip join-back key.
     * Ambiguous lookups (duplicate (prefix, network)) are rejected
     * loudly — LPM would otherwise be nondeterministic. */
-  private def ipv4LookupVerb(df: DataFrame, body: String,
-                             tables: Map[String, DataFrame],
-                             lets: Map[String, String]): DataFrame = {
-    val open = body.indexOf('(')
-    require(open > 0 && matchingParen(body, open) == body.length - 1,
-      s"evaluate ipv4_lookup expects (LookupTable, ipCol, networkCol): $body")
-    val args = splitTopLevel(body.substring(open + 1, body.length - 1), ',')
-      .map(_.trim).filter(_.nonEmpty)
-    require(args.length == 3,
-      s"ipv4_lookup takes exactly 3 arguments (LookupTable, ipCol, networkCol): $body")
-    val (dimExpr, ipCol, netCol) = (args(0), args(1), args(2))
-    require(ipCol.matches("[A-Za-z_][A-Za-z0-9_]*") && df.columns.contains(ipCol),
-      s"ipv4_lookup ip column '$ipCol' not found (have: ${df.columns.mkString(", ")})")
+  private def ipv4LookupVerb(c: PluginCall): DataFrame = {
+    val (df, tables, lets) = (c.df, c.tables, c.lets)
+    val (dimExpr, ipCol, netCol) = (c.args(0), c.args(1), c.args(2))
+    c.requireColumns(ipCol)
     val dim = if (tables.contains(dimExpr)) tables(dimExpr)
               else pipeline(dimExpr, tables, lets).df
     require(netCol.matches("[A-Za-z_][A-Za-z0-9_]*") && dim.columns.contains(netCol),
@@ -2822,17 +2814,8 @@ object KqlParser {
     * equi-join on the point's cell; the exact even-odd test verifies
     * candidates. The raw corpus never shuffles (the cover-join shape
     * of kql_geo_polygon_join, re-exposed as a verb). */
-  private def geoPolygonLookupVerb(df: DataFrame, body: String,
-                                   tables: Map[String, DataFrame],
-                                   lets: Map[String, String]): DataFrame = {
-    val open = body.indexOf('(')
-    require(open > 0 && matchingParen(body, open) == body.length - 1,
-      s"evaluate geo_polygon_lookup expects (LookupTable, polygonCol, " +
-        s"lonCol, latCol[, level]): $body")
-    val args = splitTopLevel(body.substring(open + 1, body.length - 1), ',')
-      .map(_.trim).filter(_.nonEmpty)
-    require(args.length == 4 || args.length == 5,
-      s"geo_polygon_lookup takes (LookupTable, polygonCol, lonCol, latCol[, level]): $body")
+  private def geoPolygonLookupVerb(c: PluginCall): DataFrame = {
+    val (df, args, tables, lets) = (c.df, c.args, c.tables, c.lets)
     val (dimExpr, polyCol, lonCol, latCol) = (args(0), args(1), args(2), args(3))
     val level = args.lift(4).map(a => scala.util.Try(a.trim.toInt).getOrElse(
       throw new IllegalArgumentException(
@@ -2843,9 +2826,7 @@ object KqlParser {
       else dimExpr
     val dim = if (tables.contains(dimRef)) tables(dimRef)
               else pipeline(dimRef, tables, lets).df
-    Seq(lonCol, latCol).foreach(c => require(
-      c.matches("[A-Za-z_][A-Za-z0-9_]*") && df.columns.contains(c),
-      s"geo_polygon_lookup point column '$c' not found (have: ${df.columns.mkString(", ")})"))
+    c.requireColumns(lonCol, latCol)
     require(polyCol.matches("[A-Za-z_][A-Za-z0-9_]*") && dim.columns.contains(polyCol),
       s"geo_polygon_lookup polygon column '$polyCol' not found in lookup " +
         s"(has: ${dim.columns.mkString(", ")})")
@@ -2875,17 +2856,8 @@ object KqlParser {
     * Shape (100 TB): dim-side cover + ring dilation, broadcast
     * equi-join on the point's cell, exact distance verify — the
     * corridor shape re-exposed as a verb; the corpus never shuffles. */
-  private def geoLineLookupVerb(df: DataFrame, body: String,
-                                tables: Map[String, DataFrame],
-                                lets: Map[String, String]): DataFrame = {
-    val open = body.indexOf('(')
-    require(open > 0 && matchingParen(body, open) == body.length - 1,
-      s"evaluate geo_line_lookup expects (LookupTable, lineCol, lonCol, " +
-        s"latCol, tolerance[, level]): $body")
-    val args = splitTopLevel(body.substring(open + 1, body.length - 1), ',')
-      .map(_.trim).filter(_.nonEmpty)
-    require(args.length == 5 || args.length == 6,
-      s"geo_line_lookup takes (LookupTable, lineCol, lonCol, latCol, tolerance[, level]): $body")
+  private def geoLineLookupVerb(c: PluginCall): DataFrame = {
+    val (df, args, tables, lets) = (c.df, c.args, c.tables, c.lets)
     val (dimExpr, lineCol, lonCol, latCol) = (args(0), args(1), args(2), args(3))
     val tol = scala.util.Try(args(4).trim.toDouble).getOrElse(
       throw new IllegalArgumentException(
@@ -2900,9 +2872,7 @@ object KqlParser {
       else dimExpr
     val dim = if (tables.contains(dimRef)) tables(dimRef)
               else pipeline(dimRef, tables, lets).df
-    Seq(lonCol, latCol).foreach(c => require(
-      c.matches("[A-Za-z_][A-Za-z0-9_]*") && df.columns.contains(c),
-      s"geo_line_lookup point column '$c' not found (have: ${df.columns.mkString(", ")})"))
+    c.requireColumns(lonCol, latCol)
     require(lineCol.matches("[A-Za-z_][A-Za-z0-9_]*") && dim.columns.contains(lineCol),
       s"geo_line_lookup line column '$lineCol' not found in lookup " +
         s"(has: ${dim.columns.mkString(", ")})")
@@ -2945,23 +2915,14 @@ object KqlParser {
     * plugins: second resolution, epoch-millis `bin_ms`, empty bins
     * omitted; End is inclusive (an event AT End starts the final
     * partial bin). */
-  private def sessionCountVerb(df: DataFrame, body: String): DataFrame = {
-    val open = body.indexOf('(')
-    require(open > 0 && matchingParen(body, open) == body.length - 1,
-      "evaluate session_count expects (idCol, timeCol, start, end, " +
-        s"bin, lookback): $body")
-    val args = splitTopLevel(body.substring(open + 1, body.length - 1), ',')
-      .map(_.trim).filter(_.nonEmpty)
-    require(args.length == 6, s"session_count takes exactly 6 arguments: $body")
+  private def sessionCountVerb(c: PluginCall): DataFrame = {
+    val (df, args) = (c.df, c.args)
     val (idCol, tCol) = (args(0), args(1))
-    Seq(idCol, tCol).foreach(c => require(
-      c.matches("[A-Za-z_][A-Za-z0-9_]*") && df.columns.contains(c),
-      s"session_count column '$c' not found (have: ${df.columns.mkString(", ")})"))
-    val (startS, endS) = (dtLiteralEpoch(args(2), "session_count"),
-      dtLiteralEpoch(args(3), "session_count"))
-    val binS = spanSecs(args(4), "session_count")
-    val lookS = spanSecs(args(5), "session_count")
-    require(binS > 0 && lookS > 0, s"bin and lookback must be positive: $body")
+    c.requireColumns(idCol, tCol)
+    val (startS, endS) = (c.epochArg(2), c.epochArg(3))
+    val binS = c.spanArg(4)
+    val lookS = c.spanArg(5)
+    require(binS > 0 && lookS > 0, s"bin and lookback must be positive: ${c.text}")
     require(endS >= startS, s"End must be >= Start: ${args(2)}..${args(3)}")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("__sc_id")).orderBy(col("__t"))
@@ -3012,25 +2973,14 @@ object KqlParser {
     * populations — each adds one filtered id-keyed aggregate + small
     * join, then one bin-keyed count; no extra corpus pass beyond
     * sequence_detect's own budget. */
-  private def funnelCompletionVerb(df: DataFrame, body: String,
-                                   lets: Map[String, String]): DataFrame = {
-    val open = body.indexOf('(')
-    require(open > 0 && matchingParen(body, open) == body.length - 1,
-      "evaluate funnel_sequence_completion expects (timeCol, stepWindow, " +
-        s"start, end, bin, expr1, ..., idCol): $body")
-    val args = splitTopLevel(body.substring(open + 1, body.length - 1), ',')
-      .map(_.trim).filter(_.nonEmpty)
-    require(args.length >= 7,
-      s"funnel_sequence_completion needs timeCol, stepWindow, start, end, bin, >= 1 step exprs, idCol: $body")
+  private def funnelCompletionVerb(c: PluginCall): DataFrame = {
+    val (df, args, lets) = (c.df, c.args, c.lets)
     val tCol = args(0)
     val idCol = args.last
-    Seq(tCol, idCol).foreach(c => require(
-      c.matches("[A-Za-z_][A-Za-z0-9_]*") && df.columns.contains(c),
-      s"funnel_sequence_completion column '$c' not found (have: ${df.columns.mkString(", ")})"))
-    val stepW = spanSecs(args(1), "funnel_sequence_completion")
-    val (startS, endS) = (dtLiteralEpoch(args(2), "funnel_sequence_completion"),
-      dtLiteralEpoch(args(3), "funnel_sequence_completion"))
-    val binS = spanSecs(args(4), "funnel_sequence_completion")
+    c.requireColumns(tCol, idCol)
+    val stepW = c.spanArg(1)
+    val (startS, endS) = (c.epochArg(2), c.epochArg(3))
+    val binS = c.spanArg(4)
     require(binS > 0 && endS >= startS && (endS - startS) % binS == 0,
       s"End - Start must be a non-negative multiple of bin: ${args(2)}..${args(3)}")
     val steps = args.drop(5).dropRight(1)
@@ -3079,23 +3029,13 @@ object KqlParser {
     * Shape (100 TB): step k is one filtered id-keyed aggregate joined
     * to the (id-unique, already-shrunk) chain frame — K−1 small
     * co-partitioned joins, no per-id window over the raw corpus. */
-  private def sequenceDetectVerb(df: DataFrame, body: String,
-                                 lets: Map[String, String]): DataFrame = {
-    val open = body.indexOf('(')
-    require(open > 0 && matchingParen(body, open) == body.length - 1,
-      "evaluate sequence_detect expects (timeCol, stepWindow, spanWindow, " +
-        s"expr1, ..., idCol): $body")
-    val args = splitTopLevel(body.substring(open + 1, body.length - 1), ',')
-      .map(_.trim).filter(_.nonEmpty)
-    require(args.length >= 6,
-      s"sequence_detect needs timeCol, two windows, >= 2 step exprs, idCol: $body")
+  private def sequenceDetectVerb(c: PluginCall): DataFrame = {
+    val (df, args, lets) = (c.df, c.args, c.lets)
     val tCol = args(0)
     val idCol = args.last
-    Seq(tCol, idCol).foreach(c => require(
-      c.matches("[A-Za-z_][A-Za-z0-9_]*") && df.columns.contains(c),
-      s"sequence_detect column '$c' not found (have: ${df.columns.mkString(", ")})"))
-    val stepW = spanSecs(args(1), "sequence_detect")
-    val spanW = spanSecs(args(2), "sequence_detect")
+    c.requireColumns(tCol, idCol)
+    val stepW = c.spanArg(1)
+    val spanW = c.spanArg(2)
     require(spanW >= stepW, s"span window must be >= step window: ${args(2)} vs ${args(1)}")
     val steps = args.drop(3).dropRight(1)
     val names = steps.zipWithIndex.map { case (e, i) =>
@@ -3129,21 +3069,11 @@ object KqlParser {
     val Hms = "^'(?:(\\d+)\\.)?(\\d{1,2}):(\\d{2}):(\\d{2})'$".r
     a match {
       case Hms(d, h, m, s) =>
-        (if (d == null) 0L else d.toLong) * 86400L +
-          h.toLong * 3600L + m.toLong * 60L + s.toLong
+        scala.util.Try(Math.addExact(Math.multiplyExact(Option(d).fold(0L)(_.toLong), 86400L),
+            h.toLong * 3600L + m.toLong * 60L + s.toLong))
+          .getOrElse(throw new IllegalArgumentException(
+            s"totimespan: timespan literal out of range: $a"))
       case _ => spanSecs(a, "totimespan")
-    }
-  }
-
-  /** KQL timespan literal → seconds (1d, 2h, 30m, 90s). */
-  private def spanSecs(a: String, verb: String): Long = {
-    val TimespanRe = "^(\\d+)(d|h|m|s)$".r
-    a match {
-      case TimespanRe(n, u) => n.toLong * (u match {
-        case "d" => 86400L; case "h" => 3600L; case "m" => 60L; case _ => 1L
-      })
-      case other => throw new IllegalArgumentException(
-        s"$verb windows must be timespan literals (3d, 1h): $other")
     }
   }
 
@@ -3177,33 +3107,12 @@ object KqlParser {
     * as sliding_window_counts (second-resolution timeline, epoch-millis
     * `bin_ms` key, bins with no OUTER activity omitted; inner-idle bins
     * report ratio 0). */
-  private def activityEngagementVerb(df: DataFrame, body: String): DataFrame = {
-    val open = body.indexOf('(')
-    require(open > 0 && matchingParen(body, open) == body.length - 1,
-      "evaluate activity_engagement expects (idCol, timeCol, start, end, " +
-        s"innerWindow, outerWindow): $body")
-    val args = splitTopLevel(body.substring(open + 1, body.length - 1), ',')
-      .map(_.trim).filter(_.nonEmpty)
-    require(args.length == 6,
-      s"activity_engagement takes exactly 6 arguments: $body")
+  private def activityEngagementVerb(c: PluginCall): DataFrame = {
+    val (df, args) = (c.df, c.args)
     val (idCol, tCol) = (args(0), args(1))
-    Seq(idCol, tCol).foreach(c => require(
-      c.matches("[A-Za-z_][A-Za-z0-9_]*") && df.columns.contains(c),
-      s"activity_engagement column '$c' not found (have: ${df.columns.mkString(", ")})"))
-    val DtRe = "(?is)^datetime\\s*\\((.*)\\)$".r
-    def dtEpoch(a: String): Long = a match {
-      case DtRe(b0) =>
-        val b = b0.trim.stripPrefix("'").stripSuffix("'")
-          .stripPrefix("\"").stripSuffix("\"").trim
-        val iso = b.stripSuffix("Z").replace(' ', 'T')
-        val full = if (iso.contains("T")) iso else iso + "T00:00:00"
-        java.time.LocalDateTime.parse(full).toEpochSecond(java.time.ZoneOffset.UTC)
-      case other => throw new IllegalArgumentException(
-        s"activity_engagement start/end must be datetime(...) literals: $other")
-    }
-    val (startS, endS) = (dtEpoch(args(2)), dtEpoch(args(3)))
-    val (innerS, outerS) = (spanSecs(args(4), "activity_engagement"),
-      spanSecs(args(5), "activity_engagement"))
+    c.requireColumns(idCol, tCol)
+    val (startS, endS) = (c.epochArg(2), c.epochArg(3))
+    val (innerS, outerS) = (c.spanArg(4), c.spanArg(5))
     require(innerS > 0 && outerS >= innerS && outerS % innerS == 0,
       s"outer window must be a positive multiple of inner: ${args(5)} vs ${args(4)}")
     require(endS >= startS && (endS - startS) % innerS == 0,
@@ -3241,35 +3150,15 @@ object KqlParser {
     * seconds (the sliding-window plugins' second-resolution timeline
     * deviation); ADX's extra `Step` timeline parameter is not
     * supported. */
-  private def funnelSequenceVerb(df: DataFrame, body: String): DataFrame = {
-    val open = body.indexOf('(')
-    require(open > 0 && matchingParen(body, open) == body.length - 1,
-      "evaluate funnel_sequence expects (idCol, timeCol, start, end, " +
-        s"maxStepWindow, stateCol, dynamic([...])): $body")
-    val args = splitTopLevel(body.substring(open + 1, body.length - 1), ',')
-      .map(_.trim).filter(_.nonEmpty)
-    require(args.length >= 7,
-      s"funnel_sequence takes 7 arguments (sequence states last): $body")
+  private def funnelSequenceVerb(c: PluginCall): DataFrame = {
+    val (df, args) = (c.df, c.args)
     val (idCol, tCol, stateCol) = (args(0), args(1), args(5))
-    Seq(idCol, tCol, stateCol).foreach(c => require(
-      c.matches("[A-Za-z_][A-Za-z0-9_]*") && df.columns.contains(c),
-      s"funnel_sequence column '$c' not found (have: ${df.columns.mkString(", ")})"))
-    val DtRe = "(?is)^datetime\\s*\\((.*)\\)$".r
-    def dtEpoch(a: String): Long = a match {
-      case DtRe(b0) =>
-        val b = b0.trim.stripPrefix("'").stripSuffix("'")
-          .stripPrefix("\"").stripSuffix("\"").trim
-        val iso = b.stripSuffix("Z").replace(' ', 'T')
-        val full = if (iso.contains("T")) iso else iso + "T00:00:00"
-        java.time.LocalDateTime.parse(full).toEpochSecond(java.time.ZoneOffset.UTC)
-      case other => throw new IllegalArgumentException(
-        s"funnel_sequence start/end must be datetime(...) literals: $other")
-    }
-    val (startS, endS) = (dtEpoch(args(2)), dtEpoch(args(3)))
-    require(endS >= startS, s"funnel_sequence end must be >= start: $body")
-    val winS = spanSecs(args(4), "funnel_sequence")
+    c.requireColumns(idCol, tCol, stateCol)
+    val (startS, endS) = (c.epochArg(2), c.epochArg(3))
+    require(endS >= startS, s"funnel_sequence end must be >= start: ${c.text}")
+    val winS = c.spanArg(4)
     // the sequence: dynamic(['a','b',...]) — quoted states in order
-    val seqTxt = args.drop(6).mkString(",")
+    val seqTxt = args(6)
     require(seqTxt.matches("(?is)^dynamic\\s*\\(\\s*\\[.*\\]\\s*\\)$"),
       s"funnel_sequence sequence must be dynamic(['s1', 's2', ...]): $seqTxt")
     val states = "'([^']*)'".r.findAllMatchIn(seqTxt).map(_.group(1)).toList
@@ -3308,21 +3197,6 @@ object KqlParser {
       .agg(countDistinct(col("__id")).as("dcount_users"))
   }
 
-  /** KQL `datetime(...)` literal argument → epoch seconds (UTC). */
-  private def dtLitEpoch(a: String, verb: String): Long = {
-    val DtRe = "(?is)^datetime\\s*\\((.*)\\)$".r
-    a match {
-      case DtRe(b0) =>
-        val b = b0.trim.stripPrefix("'").stripSuffix("'")
-          .stripPrefix("\"").stripSuffix("\"").trim
-        val iso = b.stripSuffix("Z").replace(' ', 'T')
-        val full = if (iso.contains("T")) iso else iso + "T00:00:00"
-        java.time.LocalDateTime.parse(full).toEpochSecond(java.time.ZoneOffset.UTC)
-      case other => throw new IllegalArgumentException(
-        s"$verb start/end must be datetime(...) literals: $other")
-    }
-  }
-
   /** `evaluate activity_counts_metrics(idCol, timeCol, Start, End,
     * Bin)` — ADX's new-vs-returning plugin: per timeline bin
     * ([b, b+bin) floor binning), the row count, distinct-id count,
@@ -3336,23 +3210,14 @@ object KqlParser {
     * the sibling plugins (second-resolution timeline, epoch-millis
     * `bin_ms` key, record-free bins omitted — the cumulative column is
     * unaffected because empty bins add zero). */
-  private def activityCountsMetricsVerb(df: DataFrame, body: String): DataFrame = {
-    val open = body.indexOf('(')
-    require(open > 0 && matchingParen(body, open) == body.length - 1,
-      s"evaluate activity_counts_metrics expects (idCol, timeCol, start, end, bin): $body")
-    val args = splitTopLevel(body.substring(open + 1, body.length - 1), ',')
-      .map(_.trim).filter(_.nonEmpty)
-    require(args.length == 5,
-      s"activity_counts_metrics takes exactly 5 arguments: $body")
+  private def activityCountsMetricsVerb(c: PluginCall): DataFrame = {
+    val (df, args) = (c.df, c.args)
     val (idCol, tCol) = (args(0), args(1))
-    Seq(idCol, tCol).foreach(c => require(
-      c.matches("[A-Za-z_][A-Za-z0-9_]*") && df.columns.contains(c),
-      s"activity_counts_metrics column '$c' not found (have: ${df.columns.mkString(", ")})"))
-    val (startS, endS) = (dtLitEpoch(args(2), "activity_counts_metrics"),
-      dtLitEpoch(args(3), "activity_counts_metrics"))
-    val binS = spanSecs(args(4), "activity_counts_metrics")
+    c.requireColumns(idCol, tCol)
+    val (startS, endS) = (c.epochArg(2), c.epochArg(3))
+    val binS = c.spanArg(4)
     require(binS > 0 && endS >= startS,
-      s"activity_counts_metrics needs a positive bin and end >= start: $body")
+      s"activity_counts_metrics needs a positive bin and end >= start: ${c.text}")
     val ev = df
       .select(col(idCol).as("__id"), unix_timestamp(col(tCol)).as("__t"))
       .filter(col("__t") >= startS && col("__t") <= endS)
@@ -3384,23 +3249,14 @@ object KqlParser {
     * first-seen cohort per id (one id-keyed aggregate), then one
     * (cohort, bin)-keyed count — the output is cohort²-bounded, never
     * corpus-sized; the ratio is one exact-BIGINT double division. */
-  private def newActivityMetricsVerb(df: DataFrame, body: String): DataFrame = {
-    val open = body.indexOf('(')
-    require(open > 0 && matchingParen(body, open) == body.length - 1,
-      s"evaluate new_activity_metrics expects (idCol, timeCol, start, end, bin): $body")
-    val args = splitTopLevel(body.substring(open + 1, body.length - 1), ',')
-      .map(_.trim).filter(_.nonEmpty)
-    require(args.length == 5,
-      s"new_activity_metrics takes exactly 5 arguments: $body")
+  private def newActivityMetricsVerb(c: PluginCall): DataFrame = {
+    val (df, args) = (c.df, c.args)
     val (idCol, tCol) = (args(0), args(1))
-    Seq(idCol, tCol).foreach(c => require(
-      c.matches("[A-Za-z_][A-Za-z0-9_]*") && df.columns.contains(c),
-      s"new_activity_metrics column '$c' not found (have: ${df.columns.mkString(", ")})"))
-    val (startS, endS) = (dtLitEpoch(args(2), "new_activity_metrics"),
-      dtLitEpoch(args(3), "new_activity_metrics"))
-    val binS = spanSecs(args(4), "new_activity_metrics")
+    c.requireColumns(idCol, tCol)
+    val (startS, endS) = (c.epochArg(2), c.epochArg(3))
+    val binS = c.spanArg(4)
     require(binS > 0 && endS >= startS,
-      s"new_activity_metrics needs a positive bin and end >= start: $body")
+      s"new_activity_metrics needs a positive bin and end >= start: ${c.text}")
     val act = df
       .select(col(idCol).as("__id"), unix_timestamp(col(tCol)).as("__t"))
       .filter(col("__t") >= startS && col("__t") <= endS)
@@ -3428,27 +3284,16 @@ object KqlParser {
     * ADX's T-digest estimate as the `percentile()` aggregate. Sibling
     * deviations (second-resolution timeline, epoch-millis `bin_ms`,
     * empty bins omitted) apply. */
-  private def rollingPercentileVerb(df: DataFrame, body: String): DataFrame = {
-    val open = body.indexOf('(')
-    require(open > 0 && matchingParen(body, open) == body.length - 1,
-      "evaluate rolling_percentile expects (valueCol, percentile, timeCol, " +
-        s"start, end, lookback, bin): $body")
-    val args = splitTopLevel(body.substring(open + 1, body.length - 1), ',')
-      .map(_.trim).filter(_.nonEmpty)
-    require(args.length == 7,
-      s"rolling_percentile takes exactly 7 arguments: $body")
+  private def rollingPercentileVerb(c: PluginCall): DataFrame = {
+    val (df, args) = (c.df, c.args)
     val (valCol, tCol) = (args(0), args(2))
-    Seq(valCol, tCol).foreach(c => require(
-      c.matches("[A-Za-z_][A-Za-z0-9_]*") && df.columns.contains(c),
-      s"rolling_percentile column '$c' not found (have: ${df.columns.mkString(", ")})"))
+    c.requireColumns(valCol, tCol)
     val p = scala.util.Try(BigDecimal(args(1))).getOrElse(
       throw new IllegalArgumentException(
         s"rolling_percentile percentile must be a numeric literal: ${args(1)}"))
     require(p >= 0 && p <= 100, s"percentile must be in [0, 100]: $p")
-    val (startS, endS) = (dtLitEpoch(args(3), "rolling_percentile"),
-      dtLitEpoch(args(4), "rolling_percentile"))
-    val (lookS, binS) = (spanSecs(args(5), "rolling_percentile"),
-      spanSecs(args(6), "rolling_percentile"))
+    val (startS, endS) = (c.epochArg(3), c.epochArg(4))
+    val (lookS, binS) = (c.spanArg(5), c.spanArg(6))
     require(binS > 0 && lookS >= binS && lookS % binS == 0,
       s"lookback must be a positive multiple of bin: ${args(5)} vs ${args(6)}")
     require(endS >= startS && (endS - startS) % binS == 0,
@@ -3459,13 +3304,8 @@ object KqlParser {
         .as("rolling_percentile"))
   }
 
-  private def bagUnpackVerb(df: DataFrame, body: String): DataFrame = {
-    val open = body.indexOf('(')
-    require(open > 0 && matchingParen(body, open) == body.length - 1,
-      s"evaluate bag_unpack expects bag_unpack(col[, 'prefix']): $body")
-    val args = splitTopLevel(body.substring(open + 1, body.length - 1), ',')
-      .map(_.trim).filter(_.nonEmpty)
-    require(args.nonEmpty, "bag_unpack needs the bag column")
+  private def bagUnpackVerb(c: PluginCall): DataFrame = {
+    val (df, args) = (c.df, c.args)
     val bagCol = args.head
     require(bagCol.matches("[A-Za-z_][A-Za-z0-9_]*"),
       s"bag_unpack column must be a column name: $bagCol")
@@ -4398,6 +4238,19 @@ object KqlParser {
     case _: RowNumberHelper => Nil
   }
 
+  /** The helpers `sql` reads, directly or through another helper's
+    * inputs. */
+  private def usedHelpers(sql: String, helpers: Seq[SerialHelper]): Seq[SerialHelper] = {
+    var used = helpers.filter(h => refersTo(sql, h.name))
+    var more = used
+    while (more.nonEmpty) {
+      more = helpers.filter(h => !used.contains(h) &&
+        more.exists(u => helperInputs(u).exists(refersTo(_, h.name))))
+      used = used ++ more
+    }
+    used
+  }
+
   /** One stats pass for a batch of independent offset-1 shifts,
     * running sums and row numbers: a single per-block aggregate
     * (boundary values via min_by/max_by for the shifts, sum/count for
@@ -4517,9 +4370,10 @@ object KqlParser {
     * tdigest uses ([[globalRanked]]) — so no stage moves the corpus to
     * one partition. Windows that PARTITION BY a helper column (the
     * restart-group cumsum, the run-rank min) stay inline SQL: they are
-    * already distributed. A `prev`/`next` with a NON-LITERAL offset
-    * keeps the legacy single-partition window (the offset must be known
-    * to shift the dense sequence; no registered query uses one).
+    * already distributed. A `prev`/`next` with a NON-LITERAL offset is
+    * refused with an IllegalArgumentException: the dense-sequence shift
+    * needs a known constant, and the only other plan is a corpus-sized
+    * single-partition window.
     *
     * `row_cumsum`'s restart argument still needs the two-pass shape
     * (SQL forbids a window function inside another window's PARTITION
@@ -4886,12 +4740,8 @@ object KqlParser {
             val rawArgs = splitTopLevel(s.substring(open + 1, close), ',').map(_.trim)
             require(rawArgs.length == 3,
               s"bin_at expects bin_at(value, size, fixedPoint): ${s.substring(i, close + 1)}")
-            val TimespanAtRe = "^(\\d+)(d|h|m|s)$".r
-            rawArgs(1) match {
-              case TimespanAtRe(num, unit) =>
-                val secs = num.toLong * (unit match {
-                  case "d" => 86400L; case "h" => 3600L; case "m" => 60L; case "s" => 1L
-                })
+            timespanSeconds(rawArgs(1), "bin_at()") match {
+              case Some(secs) =>
                 require(secs > 0, s"bin_at() timespan must be positive: ${rawArgs(1)}")
                 val v = scalar(rawArgs(0), lets)
                 val a = scalar(rawArgs(2), lets)
@@ -4939,12 +4789,8 @@ object KqlParser {
             // binning — floor the epoch-second value to the span
             // multiple. Kept in integer seconds end to end, so both
             // engines compute the identical bucket.
-            val TimespanRe = "^(\\d+)(d|h|m|s)$".r
-            rawArgs(1) match {
-              case TimespanRe(num, unit) =>
-                val secs = num.toLong * (unit match {
-                  case "d" => 86400L; case "h" => 3600L; case "m" => 60L; case "s" => 1L
-                })
+            timespanSeconds(rawArgs(1), "bin()") match {
+              case Some(secs) =>
                 require(secs > 0, s"bin() timespan must be positive: ${rawArgs(1)}")
                 val v = scalar(rawArgs(0), lets)
                 out.append(s"timestamp_seconds((unix_timestamp($v)) - " +
@@ -4993,13 +4839,9 @@ object KqlParser {
             val inner = s.substring(open + 1, close).trim
             w.toLowerCase match {
               case "ago" =>
-                val TimespanRe = "^(\\d+)(d|h|m|s)$".r
-                val secs = inner match {
-                  case TimespanRe(n, u) => n.toLong * (u match {
-                    case "d" => 86400L; case "h" => 3600L; case "m" => 60L; case "s" => 1L })
-                  case other => throw new IllegalArgumentException(
-                    s"ago expects a timespan literal (1d, 2h, 30m, 90s): $other")
-                }
+                val secs = timespanSeconds(inner, "ago").getOrElse(
+                  throw new IllegalArgumentException(
+                    s"ago expects a timespan literal (1d, 2h, 30m, 90s): $inner"))
                 out.append(s"(current_timestamp() - make_interval(0, 0, 0, 0, 0, 0, $secs))")
               case "startofday" | "startofmonth" | "startofyear" =>
                 val unit = w.toLowerCase match {

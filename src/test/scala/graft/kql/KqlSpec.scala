@@ -905,6 +905,25 @@ class KqlSpec extends SparkSpec {
     assert(out(0).isNullAt(2) && out(1).getInt(2) == 2 && out(2).getInt(2) == 4)
   }
 
+  test("parser: extend applies its items in runs split where a row function reads an earlier item") {
+    // `p = prev(w)` reads `W`, assigned earlier in the same extend, so
+    // it opens a second run; `q = prev(v)` joins that run
+    val reg = Map("T" -> Seq(3, 1, 2).toDF("v"))
+    val out = KqlParser.run(
+      "T | sort by v asc | extend W = v * 2, p = prev(w), q = prev(v) | project v, W, p, q",
+      reg).collect()
+    assert(out.map(_.getInt(0)).toSeq == Seq(1, 2, 3))
+    assert(out.map(r => Option(r.get(2))).toSeq == Seq(None, Some(2), Some(4)))
+    assert(out.map(r => Option(r.get(3))).toSeq == Seq(None, Some(1), Some(2)))
+    // the second prev(W) reads the W the first item assigned, so it may
+    // not reuse the first item's helper over the original W
+    val w = Map("T" -> Seq((1, 10), (2, 20), (3, 30)).toDF("v", "W"))
+    val re = KqlParser.run(
+      "T | sort by v asc | extend W = prev(W), q = prev(W) | project v, W, q", w).collect()
+    assert(re.map(r => Option(r.get(1))).toSeq == Seq(None, Some(10), Some(20)))
+    assert(re.map(r => Option(r.get(2))).toSeq == Seq(None, None, Some(10)))
+  }
+
   test("parser: prev/next refuse a non-literal offset loudly") {
     // r20 (r19 verdict #9): the legacy fallback planned a corpus-sized
     // single-partition window for a non-literal offset — a user query
@@ -2243,6 +2262,58 @@ class KqlSpec extends SparkSpec {
       KqlParser.run("T | evaluate schema_merge()", reg)
     }
     assert(e.getMessage.contains("pivot") && e.getMessage.contains("bag_unpack"))
+  }
+
+  test("parser: evaluate binds the exact plugin name, never a prefix of it") {
+    val reg = Map("T" -> Seq((1L, "x", 10)).toDF("id", "k", "v"))
+    Seq("basketball(0.1)", "pivoted(k)", "previewx(3)").foreach { call =>
+      val e = intercept[IllegalArgumentException](KqlParser.run(s"T | evaluate $call", reg))
+      assert(e.getMessage.contains("supports only"), s"$call: ${e.getMessage}")
+    }
+  }
+
+  test("parser: every evaluate plugin rejects a malformed call by name") {
+    // no parentheses, unbalanced ones, and one argument too many (too
+    // few for the variadic plugins) are binding errors that name the
+    // plugin, before any plugin reads an argument
+    val reg = Map("T" -> Seq((1L, "x")).toDF("id", "k"))
+    assert(KqlParser.evalPlugins.size == 20)
+    KqlParser.evalPlugins.foreach { case (name, p) =>
+      val n = if (p.maxArgs < Int.MaxValue) p.maxArgs + 1 else p.minArgs - 1
+      Seq(name, s"$name(x", s"$name(x))", s"$name(${Seq.fill(n)("x").mkString(", ")})")
+        .foreach { call =>
+          val e = intercept[IllegalArgumentException](KqlParser.run(s"T | evaluate $call", reg))
+          assert(e.getMessage.contains(s"evaluate $name "), s"$call: ${e.getMessage}")
+        }
+    }
+  }
+
+  test("parser: an impossible datetime literal is an IllegalArgumentException naming the plugin") {
+    val reg = Map("E" -> Seq(("u1", java.sql.Timestamp.valueOf("2024-01-01 05:00:00")))
+      .toDF("uid", "t"))
+    val e = intercept[IllegalArgumentException](KqlParser.run(
+      "E | evaluate session_count(uid, t, datetime(2024-02-30), datetime(2024-03-02), 1d, 1d)",
+      reg))
+    assert(e.getMessage.contains("session_count") && e.getMessage.contains("2024-02-30"))
+  }
+
+  test("parser: a timespan literal past a Long of seconds is an IllegalArgumentException") {
+    // 213503982334602d is 2^64 + 61184 seconds: wrapped, it is a 17-hour step
+    val reg = Map("E" -> Seq(("u1", java.sql.Timestamp.valueOf("2024-01-01 05:00:00")))
+      .toDF("uid", "t"))
+    val step = intercept[IllegalArgumentException](KqlParser.run(
+      "E | make-series n = count() on t from datetime(2024-01-01) to datetime(2024-01-03) " +
+        "step 213503982334602d", reg))
+    assert(step.getMessage.contains("make-series") &&
+      step.getMessage.contains("213503982334602d"))
+    val ago = intercept[IllegalArgumentException](
+      KqlParser.run("print x = ago(106751991167301d)", Map.empty))
+    assert(ago.getMessage.contains("ago") && ago.getMessage.contains("106751991167301d"))
+    val window = intercept[IllegalArgumentException](KqlParser.run(
+      "E | evaluate session_count(uid, t, datetime(2024-01-01), datetime(2024-01-03), 1d, " +
+        "106751991167301d)", reg))
+    assert(window.getMessage.contains("session_count") &&
+      window.getMessage.contains("106751991167301d"))
   }
 
   test("parser: row_rank_min/dense rank over RUNS in serialized order, not by value") {
