@@ -990,6 +990,7 @@ object KqlParser {
     val stepSecs = timespanSeconds(stepS, "make-series step").getOrElse(
       throw new IllegalArgumentException(
         s"make-series step must be a timespan literal (1d, 2h, 30m, 90s): $stepS"))
+    require(stepSecs > 0, s"make-series step must be positive: $stepS")
     // `default = <v>` rides between each aggregate and the next comma
     // (or `on`, already split off above); absent means 0, the ADX
     // default — each series carries its OWN fill.
@@ -4493,8 +4494,12 @@ object KqlParser {
               require(args.length == 3 || args.length == 4,
                 "row_window_session expects (expr, maxWindowSize, idleTimeout[, restart])")
               val tUs = s"unix_micros(CAST((${args(0)}) AS TIMESTAMP))"
-              val maxUs = spanSecs(args(1), "row_window_session") * 1000000L
-              val idleUs = spanSecs(args(2), "row_window_session") * 1000000L
+              def micros(a: String): Long =
+                try Math.multiplyExact(spanSecs(a, "row_window_session"), 1000000L)
+                catch { case _: ArithmeticException => throw new IllegalArgumentException(
+                  s"row_window_session window overflows a Long of microseconds: $a") }
+              val maxUs = micros(args(1))
+              val idleUs = micros(args(2))
               val restart = args.lift(3).map(r => s" OR ($r)").getOrElse("")
               val prevT = reqShift(tUs, 1, None, isLead = false)
               val grp = reqRunningSum("__rws_grp_",

@@ -27,6 +27,7 @@ package graft
   * The one rule that exists answers from data Catalyst cannot know
   * about, so it lives beside that data: [[graft.streaming.SummaryScan]]
   * replaces the dashboard's aggregate over an upsert table's latest
-  * version with the summary the sink wrote for that version.
+  * version with the summary the sink wrote for that version, and folds
+  * the operators the read stacks on those rows on the driver.
   */
 package object plans

@@ -1,15 +1,22 @@
 package graft.streaming
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Complete, Count, Sum}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LocalRelation, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Complete, Count,
+  DeclarativeAggregate, Sum}
+import org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation
+import org.apache.spark.sql.catalyst.planning.PhysicalAggregation
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, GlobalLimit, LocalLimit, LocalRelation,
+  LogicalPlan, Project, Sort, UnaryNode}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreePattern.AGGREGATE
+import org.apache.spark.sql.catalyst.util.UnsafeRowUtils
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types._
@@ -36,14 +43,90 @@ import graft.functions.GroupSummaryAgg
   * integral column adds in double, which is exact while every partial
   * sum stays below 2^53 — guaranteed for at most 2^22 int values per
   * group — so `avg` is answered only under that bound, as
-  * `sum.toDouble / nonNull`, bit-identical to the scan. */
+  * `sum.toDouble / nonNull`, bit-identical to the scan.
+  *
+  * Fold: in the same bottom-up pass, every deterministic operator
+  * stacked on a relation this rule served is evaluated on the driver
+  * into one `LocalRelation`, so the whole read — a tile's `sort by`, a
+  * checksum aggregate over it — plans to a `LocalTableScanExec` and
+  * starts no Spark job. It folds `Project` and `Filter` (through
+  * `ConvertToLocalRelation`), a `LocalLimit`/`GlobalLimit` of a literal,
+  * a global `Sort` (`InterpretedOrdering`, stable) and an `Aggregate`
+  * whose functions, normalized by `PhysicalAggregation`, are all
+  * `Complete`, non-distinct, unfiltered `DeclarativeAggregate`s over
+  * non-floating, binary-stable group keys (interpreted initial, update
+  * and evaluate projections; a global aggregate over no rows gives its
+  * one row). The fold stops, keeping the plan above the served
+  * relation, at any other operator, a nondeterministic expression, a
+  * subquery, an `ImperativeAggregate` (`percentile`, `make_list`,
+  * [[GroupSummaryAgg]]), a distinct or filtered aggregate, or an
+  * expression that throws while folding (its error surfaces at
+  * execution, as without the rule).
+  *
+  * Scope: only relations served in this pass are folded, tracked by
+  * identity — never a `LocalRelation` the query brought (a
+  * `createDataFrame` or `datatable` frame has no size bound, and keeps
+  * its jobs). */
 case class SummaryScan(spark: SparkSession) extends Rule[LogicalPlan] {
   import SummaryScan._
 
-  override def apply(plan: LogicalPlan): LogicalPlan =
+  override def apply(plan: LogicalPlan): LogicalPlan = {
+    val served = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[LogicalPlan, java.lang.Boolean])
+    def serve(r: Option[LocalRelation], or: LogicalPlan): LogicalPlan =
+      r.map { l => served.add(l); l }.getOrElse(or)
     plan.transformUpWithPruning(_.containsPattern(AGGREGATE)) {
-      case a: Aggregate => answer(a).getOrElse(a)
+      case p: UnaryNode if served.contains(p.child) => serve(fold(p, p.child.asInstanceOf[LocalRelation]), p)
+      case a: Aggregate => serve(answer(a), a)
     }
+  }
+
+  /** `p` evaluated over the served rows of `r`, or None to keep `p`. */
+  private def fold(p: UnaryNode, r: LocalRelation): Option[LocalRelation] =
+    if (!p.expressions.forall(e => e.deterministic && !SubqueryExpression.hasSubquery(e))) None
+    else try p match {
+      case _: Project | _: Filter => Some(ConvertToLocalRelation(p)).collect { case l: LocalRelation => l }
+      case GlobalLimit(IntegerLiteral(n), _) => Some(r.copy(data = r.data.take(n)))
+      case LocalLimit(IntegerLiteral(n), _) => Some(r.copy(data = r.data.take(n)))
+      case Sort(order, true, _, _) => Some(r.copy(data = r.data.sorted(new InterpretedOrdering(order, r.output))))
+      case a: Aggregate => aggregate(a, r)
+      case _ => None
+    } catch { case NonFatal(_) => None }
+
+  private def aggregate(a: Aggregate, r: LocalRelation): Option[LocalRelation] = a match {
+    case PhysicalAggregation(keys, aggs, results, _) if keys.forall(k => bytesAreEquality(k.dataType)) &&
+        aggs.forall(e => e.mode == Complete && !e.isDistinct && e.filter.isEmpty &&
+          e.aggregateFunction.isInstanceOf[DeclarativeAggregate]) =>
+      val fns = aggs.map(_.aggregateFunction.asInstanceOf[DeclarativeAggregate])
+      val buffer = fns.flatMap(_.aggBufferAttributes)
+      val init = new InterpretedMutableProjection(fns.flatMap(_.initialValues))
+      val update = new InterpretedMutableProjection(fns.flatMap(_.updateExpressions), buffer ++ r.output)
+      val evaluate = new InterpretedMutableProjection(fns.map(_.evaluateExpression), buffer)
+      val result = new InterpretedMutableProjection(results, keys.map(_.toAttribute) ++ aggs.map(_.resultAttribute))
+      val key = InterpretedUnsafeProjection.createProjection(BindReferences.bindReferences(keys, r.output))
+      val groups = mutable.LinkedHashMap.empty[UnsafeRow, InternalRow]
+      def group(k: UnsafeRow): InternalRow = groups.getOrElse(k, {
+        val b = new GenericInternalRow(buffer.size)
+        init.target(b)(InternalRow.empty)
+        groups(k.copy()) = b
+        b
+      })
+      if (keys.isEmpty) group(key(InternalRow.empty))
+      r.data.foreach { row => val b = group(key(row)); update.target(b)(new JoinedRow(b, row)) }
+      Some(LocalRelation(a.output, groups.iterator.map { case (k, b) =>
+        result(new JoinedRow(k, evaluate(b))).copy() }.toSeq))
+    case _ => None
+  }
+
+  /** A grouping key type whose `UnsafeRow` bytes are its equality: no
+    * floating point (Spark normalizes those in a later batch) and no
+    * non-binary collation. */
+  private def bytesAreEquality(t: DataType): Boolean = UnsafeRowUtils.isBinaryStable(t) && (t match {
+    case FloatType | DoubleType => false
+    case ArrayType(e, _) => bytesAreEquality(e)
+    case s: StructType => s.fields.forall(f => bytesAreEquality(f.dataType))
+    case _ => true
+  })
 
   private def item(g: Attribute, e: NamedExpression): Option[Item] = e match {
     case a: Attribute if a.semanticEquals(g) => Some(GroupKey)

@@ -2316,6 +2316,25 @@ class KqlSpec extends SparkSpec {
       window.getMessage.contains("106751991167301d"))
   }
 
+  test("parser: a row_window_session window past a Long of microseconds is an IllegalArgumentException") {
+    // 106751991167d fits a Long in seconds but not in microseconds:
+    // wrapped, the max window goes negative and every row opens a session
+    val reg = Map("T" -> Seq((1, "2024-01-01 00:00:00"), (2, "2024-01-01 03:00:00"),
+      (3, "2024-01-02 00:00:00")).toDF("i", "s"))
+    val e = intercept[IllegalArgumentException](KqlParser.run(
+      "T | extend ts = todatetime(s) | sort by i asc " +
+        "| extend sb = row_window_session(ts, 106751991167d, 5h)", reg))
+    assert(e.getMessage.contains("row_window_session") && e.getMessage.contains("106751991167d"))
+  }
+
+  test("parser: a make-series step of zero is an IllegalArgumentException at translation") {
+    val reg = Map("E" -> Seq(("u1", java.sql.Timestamp.valueOf("2024-01-01 05:00:00")))
+      .toDF("uid", "t"))
+    val e = intercept[IllegalArgumentException](KqlParser.run(
+      "E | make-series n = count() on t from datetime(2024-01-01) to datetime(2024-01-03) step 0d", reg))
+    assert(e.getMessage.contains("make-series step") && e.getMessage.contains("0d"))
+  }
+
   test("parser: row_rank_min/dense rank over RUNS in serialized order, not by value") {
     // term 5 reappears after 9: ADX starts a NEW run (SQL rank-by-term
     // would give it rank 1 again — the difference under test)

@@ -2,9 +2,6 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -133,32 +130,6 @@ class SinksSpec extends SparkSpec {
     Sinks.upsertByKey(spark, Seq((3, 1L, false, 9)).toDF("orderid", "lsn", "deleted", "amount"),
       table, newVersion = 1)
     assert(amounts(spark.read.parquet(s"$table/v=1")) == Seq((3, 9)))
-  }
-
-  /** Spark jobs started by `body`. The listener bus delivers events in
-    * order, so once a marker job submitted after `body` has arrived,
-    * every job of `body` has been seen. */
-  private def jobsStartedBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
-    }
-    def inGroup(g: String)(f: => Unit): Unit = {
-      sc.setJobGroup(g, g)
-      try f finally sc.clearJobGroup()
-    }
-    sc.addSparkListener(listener)
-    try {
-      inGroup("probe")(body)
-      inGroup("marker")(sc.parallelize(Seq(1), 1).count(): Unit)
-      val deadline = System.currentTimeMillis() + 30000
-      while (!groups.contains("marker") && System.currentTimeMillis() < deadline)
-        Thread.sleep(10)
-      assert(groups.contains("marker"), "marker job never reached the listener")
-      groups.asScala.count(_ == "probe")
-    } finally sc.removeSparkListener(listener)
   }
 
   test("readLatest starts no Spark job and reads the version's own schema") {
