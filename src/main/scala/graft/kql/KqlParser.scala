@@ -78,10 +78,13 @@ import org.apache.spark.sql.functions._
   * rather than ADX's T-digest approximation — documented deviation),
   * stdev, variance, sumif/avgif/minif/maxif. Scalar
   * expressions pass through Spark SQL after translating the KQL
-  * operator spellings (`==`, `!=`, `=~`, `contains`, `startswith`,
-  * `endswith`, `has` — whole-term case-insensitive match — their `!`
-  * negations, `has_any`/`has_all` literal lists, `in`/`!in` list
-  * membership, `between (lo .. hi)`/`!between`, `case()` multi-branch
+  * operator spellings; a scalar call `name(args)` binds through
+  * [[scalarFns]] (exact lower-case name → usage, arity, emitter — the
+  * scalar twin of [[evalPlugins]]), and a name not there passes
+  * through unchanged. Covered: the operator spellings (`==`, `!=`,
+  * `=~`, `contains`, `startswith`, `endswith`, `has` — whole-term
+  * case-insensitive match — their `!` negations, `has_any`/`has_all`
+  * literal lists, `in`/`!in` list membership, `between (lo .. hi)`/`!between`, `case()` multi-branch
   * conditionals, string functions `extract`/`extract_all` (ADX
   * regex-first arg order), `split` (literal delimiter),
   * `countof`, `isempty`/`isnotempty`, `strcat`/`strcat_delim`,
@@ -290,9 +293,8 @@ object KqlParser {
     while (i < s.length) {
       val c = s.charAt(i)
       if (c == '"' || c == '\'') { // copy string literal verbatim
-        out.append(c); i += 1
-        while (i < s.length && s.charAt(i) != c) { out.append(s.charAt(i)); i += 1 }
-        if (i < s.length) { out.append(c); i += 1 }
+        val end = literalEnd(s, i)
+        out.append(s.substring(i, end)); i = end
       } else if (c.isLetter || c == '_') {
         val w = "^[A-Za-z_][A-Za-z0-9_]*".r.findFirstIn(s.substring(i)).get
         if (lets.contains(w) && !lets(w).startsWith(LambdaMarker))
@@ -622,44 +624,8 @@ object KqlParser {
           }
         case "parse" => df = parseVerb(df, rest, scoped)
         case "partition" =>
-          // `partition by <col> ( subquery )` — ADX runs the subquery
-          // once per partition value. Desugared per supported form
-          // rather than executed as a driver loop (the wrong shape on a
-          // distributed frame): `top N by x [asc|desc]` → row_number
-          // window partitioned by the column (the canonical per-group
-          // top-k, KQL desc default preserved); `summarize …` → the
-          // same aggregates with the partition column appended to the
-          // group keys. Other sub-pipelines are rejected loudly.
-          val PartRe = "(?is)^by\\s+([A-Za-z_][A-Za-z0-9_]*)\\s*\\((.*)\\)$".r
-          rest.trim match {
-            case PartRe(pcol, sub0) =>
-              val sub = sub0.trim
-              val TopRe = "(?is)^top\\s+(\\d+)\\s+by\\s+(.+)$".r
-              sub match {
-                case TopRe(n, by) =>
-                  val items = sortItems(by, scoped)
-                  val w = org.apache.spark.sql.expressions.Window
-                    .partitionBy(col(pcol))
-                    .orderBy(items.map { case (e, asc) =>
-                      if (asc) expr(e).asc else expr(e).desc }: _*)
-                  df = df.withColumn("__graft_prk", row_number().over(w))
-                    .filter(col("__graft_prk") <= n.toInt)
-                    .drop("__graft_prk")
-                case _ if sub.toLowerCase.startsWith("summarize") &&
-                    sub.length > 9 && sub.charAt(9).isWhitespace =>
-                  val body = sub.drop(10).trim
-                  val (aggPart, byPart) = splitOnTopLevelBy(body)
-                  df = summarize(df,
-                    aggPart + " by " + byPart.map(_ + ", ").getOrElse("") + pcol,
-                    scoped)
-                case other => throw new IllegalArgumentException(
-                  "partition subquery must be 'top N by <expr>' or 'summarize …' " +
-                    s"(got: ${other.take(40)})")
-              }
-              serialOrder = None
-            case _ => throw new IllegalArgumentException(
-              s"partition expects 'partition by <col> ( <subquery> )': $rest")
-          }
+          df = partitionVerb(df, rest, scoped)
+          serialOrder = None
         case "parse-where" =>
           df = parseVerb(df, rest, scoped, dropNonMatching = true)
         case "parse-kv" => df = parseKvVerb(df, rest)
@@ -684,32 +650,8 @@ object KqlParser {
           serialOrder = None
         case "top-nested" => df = topNestedVerb(df, rest, scoped)
         case "top-hitters" =>
-          // `top-hitters N of key [by sumExpr]` — ADX's heavy-hitters
-          // verb, EXACT here rather than ADX's sampled approximation
-          // (documented deviation — Spark's partial aggregation makes
-          // the exact count one shrinking shuffle, so approximation
-          // buys nothing at this layer; the engine's count-min sketch
-          // lives in graft.ext.Sketches for sub-aggregate budgets).
-          // ADX column naming kept: approximate_count_<key> /
-          // approximate_sum_<byCol>. Plans as aggregate →
-          // TakeOrderedAndProject; ties break by key asc (documented).
-          val HitRe = "(?is)^(\\d+)\\s+of\\s+([A-Za-z_][A-Za-z0-9_]*)(?:\\s+by\\s+(.+))?$".r
-          rest.trim match {
-            case HitRe(n, key, byExpr) =>
-              val (aggCol, aggName) = Option(byExpr) match {
-                case Some(b) =>
-                  val body = b.trim
-                  val nm = if (body.matches("[A-Za-z_][A-Za-z0-9_]*")) body else "expr"
-                  (sum(expr(scalar(body, scoped))), s"approximate_sum_$nm")
-                case None => (count(lit(1)), s"approximate_count_$key")
-              }
-              df = df.groupBy(col(key)).agg(aggCol.as(aggName))
-                .orderBy(col(aggName).desc, col(key).asc)
-                .limit(n.toInt)
-              serialOrder = None
-            case other => throw new IllegalArgumentException(
-              s"top-hitters expects 'N of key [by expr]': $other")
-          }
+          df = topHittersVerb(df, rest, scoped)
+          serialOrder = None
         case "evaluate" =>
           df = evaluateVerb(df, rest, tbls, scoped)
           serialOrder = None
@@ -751,32 +693,7 @@ object KqlParser {
           }
           serialOrder = None
         case "reduce" =>
-          // `reduce by Col` — ADX's log-pattern clustering verb: group
-          // rows whose string values differ only in numeric fragments,
-          // reporting each pattern's count and a representative value.
-          // DEVIATION (documented): ADX's similarity-threshold pattern
-          // mining is replaced by a DETERMINISTIC normalization —
-          // maximal digit runs become `*` — so the same corpus always
-          // yields the same patterns (and the oracle can replay them);
-          // the `with threshold=`/`characters=` knobs of the
-          // similarity algorithm are rejected loudly. Representative =
-          // MIN(value) (ADX picks an arbitrary member). Map-side
-          // normalize + one pattern-keyed aggregate — scan-speed at
-          // any corpus size.
-          val RedRe = "(?is)^by\\s+([A-Za-z_][A-Za-z0-9_]*)$".r
-          rest.trim match {
-            case RedRe(c) =>
-              require(df.columns.contains(c),
-                s"reduce by column '$c' not found (have: ${df.columns.mkString(", ")})")
-              df = df
-                .groupBy(regexp_replace(col(c).cast("string"), "[0-9]+", "*")
-                  .as("Pattern"))
-                .agg(count(lit(1)).as("Count"),
-                  min(col(c).cast("string")).as("Representative"))
-            case other => throw new IllegalArgumentException(
-              "reduce supports 'reduce by <column>' only (the similarity-" +
-                s"threshold knobs are not supported): $other")
-          }
+          df = reduceVerb(df, rest)
           serialOrder = None
         case "count" => df = df.kqlCount
         case "consume" =>
@@ -860,6 +777,105 @@ object KqlParser {
         serialOrder = None
     }
     Parsed(df, render)
+  }
+
+  /** `partition by <col> ( subquery )` — ADX runs the subquery
+    * once per partition value. Desugared per supported form
+    * rather than executed as a driver loop (the wrong shape on a
+    * distributed frame): `top N by x [asc|desc]` → row_number
+    * window partitioned by the column (the canonical per-group
+    * top-k, KQL desc default preserved); `summarize …` → the
+    * same aggregates with the partition column appended to the
+    * group keys. Other sub-pipelines are rejected loudly. */
+  private def partitionVerb(df: DataFrame, rest: String,
+                            scoped: Map[String, String]): DataFrame = {
+    val PartRe = "(?is)^by\\s+([A-Za-z_][A-Za-z0-9_]*)\\s*\\((.*)\\)$".r
+    rest.trim match {
+      case PartRe(pcol, sub0) =>
+        val sub = sub0.trim
+        val TopRe = "(?is)^top\\s+(\\d+)\\s+by\\s+(.+)$".r
+        sub match {
+          case TopRe(n, by) =>
+            val items = sortItems(by, scoped)
+            val w = org.apache.spark.sql.expressions.Window
+              .partitionBy(col(pcol))
+              .orderBy(items.map { case (e, asc) =>
+                if (asc) expr(e).asc else expr(e).desc }: _*)
+            df.withColumn("__graft_prk", row_number().over(w))
+              .filter(col("__graft_prk") <= n.toInt)
+              .drop("__graft_prk")
+          case _ if sub.toLowerCase.startsWith("summarize") &&
+              sub.length > 9 && sub.charAt(9).isWhitespace =>
+            val body = sub.drop(10).trim
+            val (aggPart, byPart) = splitOnTopLevelBy(body)
+            summarize(df,
+              aggPart + " by " + byPart.map(_ + ", ").getOrElse("") + pcol,
+              scoped)
+          case other => throw new IllegalArgumentException(
+            "partition subquery must be 'top N by <expr>' or 'summarize …' " +
+              s"(got: ${other.take(40)})")
+        }
+      case _ => throw new IllegalArgumentException(
+        s"partition expects 'partition by <col> ( <subquery> )': $rest")
+    }
+  }
+
+  /** `top-hitters N of key [by sumExpr]` — ADX's heavy-hitters
+    * verb, EXACT here rather than ADX's sampled approximation
+    * (documented deviation — Spark's partial aggregation makes
+    * the exact count one shrinking shuffle, so approximation
+    * buys nothing at this layer; the engine's count-min sketch
+    * lives in graft.ext.Sketches for sub-aggregate budgets).
+    * ADX column naming kept: approximate_count_<key> /
+    * approximate_sum_<byCol>. Plans as aggregate →
+    * TakeOrderedAndProject; ties break by key asc (documented). */
+  private def topHittersVerb(df: DataFrame, rest: String,
+                             scoped: Map[String, String]): DataFrame = {
+    val HitRe = "(?is)^(\\d+)\\s+of\\s+([A-Za-z_][A-Za-z0-9_]*)(?:\\s+by\\s+(.+))?$".r
+    rest.trim match {
+      case HitRe(n, key, byExpr) =>
+        val (aggCol, aggName) = Option(byExpr) match {
+          case Some(b) =>
+            val body = b.trim
+            val nm = if (body.matches("[A-Za-z_][A-Za-z0-9_]*")) body else "expr"
+            (sum(expr(scalar(body, scoped))), s"approximate_sum_$nm")
+          case None => (count(lit(1)), s"approximate_count_$key")
+        }
+        df.groupBy(col(key)).agg(aggCol.as(aggName))
+          .orderBy(col(aggName).desc, col(key).asc)
+          .limit(n.toInt)
+      case other => throw new IllegalArgumentException(
+        s"top-hitters expects 'N of key [by expr]': $other")
+    }
+  }
+
+  /** `reduce by Col` — ADX's log-pattern clustering verb: group
+    * rows whose string values differ only in numeric fragments,
+    * reporting each pattern's count and a representative value.
+    * DEVIATION (documented): ADX's similarity-threshold pattern
+    * mining is replaced by a DETERMINISTIC normalization —
+    * maximal digit runs become `*` — so the same corpus always
+    * yields the same patterns (and the oracle can replay them);
+    * the `with threshold=`/`characters=` knobs of the
+    * similarity algorithm are rejected loudly. Representative =
+    * MIN(value) (ADX picks an arbitrary member). Map-side
+    * normalize + one pattern-keyed aggregate — scan-speed at
+    * any corpus size. */
+  private def reduceVerb(df: DataFrame, rest: String): DataFrame = {
+    val RedRe = "(?is)^by\\s+([A-Za-z_][A-Za-z0-9_]*)$".r
+    rest.trim match {
+      case RedRe(c) =>
+        require(df.columns.contains(c),
+          s"reduce by column '$c' not found (have: ${df.columns.mkString(", ")})")
+        df
+          .groupBy(regexp_replace(col(c).cast("string"), "[0-9]+", "*")
+            .as("Pattern"))
+          .agg(count(lit(1)).as("Count"),
+            min(col(c).cast("string")).as("Representative"))
+      case other => throw new IllegalArgumentException(
+        "reduce supports 'reduce by <column>' only (the similarity-" +
+          s"threshold knobs are not supported): $other")
+    }
   }
 
   /** `join [kind=<kind>] (<right sub-query or table>) on <keys>` —
@@ -4428,9 +4444,8 @@ object KqlParser {
     while (i < sql.length) {
       val c = sql.charAt(i)
       if (c == '"' || c == '\'') { // copy string literal verbatim
-        out.append(c); i += 1
-        while (i < sql.length && sql.charAt(i) != c) { out.append(sql.charAt(i)); i += 1 }
-        if (i < sql.length) { out.append(c); i += 1 }
+        val end = literalEnd(sql, i)
+        out.append(sql.substring(i, end)); i = end
       } else if (c.isLetter || c == '_') {
         val w = "^[A-Za-z_][A-Za-z0-9_]*".r.findFirstIn(sql.substring(i)).get
         var j = i + w.length
@@ -4672,3425 +4687,3111 @@ object KqlParser {
 
   // ---- scalar expression translation --------------------------------------
 
+  /** Index just past the string literal that opens at `open` (a `'` or
+    * `"`). Inside it a backslash escapes the next character, the rule
+    * every quote scanner in this file follows (the dialect's literals
+    * reach Spark SQL, whose parser reads C-style escapes: 'it\'s' is
+    * one literal). An unterminated literal runs to the end of `s`. */
+  private def literalEnd(s: String, open: Int): Int = {
+    val quote = s.charAt(open)
+    var i = open + 1
+    while (i < s.length && s.charAt(i) != quote) i += (if (s.charAt(i) == '\\') 2 else 1)
+    math.min(i + 1, s.length)
+  }
+
+  /** The identifier `[A-Za-z_][A-Za-z0-9_]*` that starts at `i`, or "". */
+  private def wordAt(s: String, i: Int): String = {
+    def start(ch: Char) = (ch >= 'a' && ch <= 'z') || (ch >= 'A' && ch <= 'Z') || ch == '_'
+    if (i >= s.length || !start(s.charAt(i))) return ""
+    var j = i + 1
+    while (j < s.length && (start(s.charAt(j)) || (s.charAt(j) >= '0' && s.charAt(j) <= '9')))
+      j += 1
+    s.substring(i, j)
+  }
+
+  /** KQL negated operators: `!has`, `!contains`, `!startswith`,
+    * `!endswith` (and their case-sensitive `_cs` forms) become negated
+    * infix markers; `!in` is SQL NOT IN. (`!between` is handled apart:
+    * it emits NOT and lets the between call consume the range.) */
+  private val NegatedOps = Map(
+    "in" -> "NOT IN", "has" -> "ilike_nhas", "contains" -> "ilike_ncontains",
+    "startswith" -> "ilike_nstarts", "endswith" -> "ilike_nends",
+    "has_cs" -> "cslike_nhas", "contains_cs" -> "cslike_ncontains",
+    "startswith_cs" -> "cslike_nstarts", "endswith_cs" -> "cslike_nends")
+
+  /** Words rewritten in place, whatever follows them: the infix
+    * operators become markers that [[infixPostPass]] turns into
+    * function form, and the ADX names with an exact Spark equivalent
+    * are pure name swaps (arguments unchanged). */
+  private val WordSwaps = Map(
+    "contains" -> "ilike_contains", "startswith" -> "ilike_starts",
+    "endswith" -> "ilike_ends",
+    "has" -> "ilike_has", // whole-term ci match
+    "has_any" -> "ilike_hasany", // OR of has terms
+    "has_all" -> "ilike_hasall", // AND of has terms
+    // case-SENSITIVE operator family (ADX `_cs` forms)
+    "contains_cs" -> "cslike_contains", "startswith_cs" -> "cslike_starts",
+    "endswith_cs" -> "cslike_ends", "has_cs" -> "cslike_has",
+    "and" -> "and", "or" -> "or", "not" -> "not",
+    "strlen" -> "length", "toupper" -> "upper", "tolower" -> "lower",
+    // ADX dynamic-array functions with exact Spark equivalents — same
+    // arity and order
+    "array_length" -> "size", "array_sort_asc" -> "sort_array",
+    "array_reverse" -> "reverse", "array_concat" -> "concat",
+    "tostring" -> "string",
+    // tolong/toint/todouble/toreal/tobool/todatetime are calls in
+    // [[scalarFns]] (try_cast — ADX null-on-malformed semantics)
+    "pack_array" -> "array", "iif" -> "if", "iff" -> "if",
+    "todynamic" -> "parse_json", // dynamic = VARIANT
+    "now" -> "current_timestamp",
+    // ADX datetime-part extractors (all return int parts; ADX
+    // week_of_year is ISO 8601, as is Spark's weekofyear)
+    "getmonth" -> "month", "monthofyear" -> "month", "getyear" -> "year",
+    "hourofday" -> "hour", "dayofmonth" -> "day", "week_of_year" -> "weekofyear",
+    "tohex" -> "hex", "bitset_count_ones" -> "bit_count",
+    // HLL sketch estimate (pairs with the hll()/hll_merge() aggregates —
+    // Spark DataSketches)
+    "dcount_hll" -> "hll_sketch_estimate")
+
   /** Rewrite KQL operator spellings into Spark SQL; everything else
     * (identifiers, literals, arithmetic, shared function names) passes
     * through to `expr` untouched. String-literal contents are never
     * rewritten. Scalar `let` bindings substitute at the word level
     * (parenthesized, recursively — a let body may reference earlier
-    * lets; the sequential binding rule in [[parse]] prevents cycles). */
+    * lets; the sequential binding rule in [[parse]] prevents cycles).
+    * A word followed by `(` that names a [[scalarFns]] entry is a call:
+    * its top-level arguments are split once, counted against the
+    * entry's arity, and handed to its `emit`. */
   private[kql] def scalar(s: String, lets: Map[String, String] = Map.empty): String = {
     val out = new StringBuilder
+    // a negated operator written flush against its left operand
+    // (`x!has 'a'`) still needs the space the infix post-pass matches
+    def infixOp(op: String): Unit = {
+      if (out.nonEmpty && !out.last.isWhitespace) out.append(' ')
+      out.append(op)
+    }
     var i = 0
     while (i < s.length) {
       val c = s.charAt(i)
+      val negated = if (c == '!') wordAt(s, i + 1).toLowerCase else ""
+      val w = wordAt(s, i)
       if (c == '"' || c == '\'') { // copy string literal verbatim
-        val quote = c
-        out.append(quote); i += 1
-        while (i < s.length && s.charAt(i) != quote) {
-          out.append(s.charAt(i)); i += 1
-        }
-        if (i < s.length) { out.append(quote); i += 1 }
-      } else if (s.startsWith("=~", i)) { out.append("ILIKE"); i += 2 } // ci equals → handled below
+        val end = literalEnd(s, i)
+        out.append(s.substring(i, end)); i = end
+      } else if (s.startsWith("=~", i)) { out.append("ILIKE"); i += 2 } // ci equals → post-pass
       else if (s.startsWith("==", i)) { out.append("="); i += 2 }
       else if (s.startsWith("!=", i)) { out.append("<>"); i += 2 }
-      else if (s.startsWith("!in~", i)) { out.append("ilike_nin"); i += 4 } // ci NOT IN
-      else if (c == '!' && i + 1 < s.length &&
-               "^[A-Za-z_][A-Za-z0-9_]*".r.findFirstIn(s.substring(i + 1)).exists(w =>
-                 Set("has", "contains", "startswith", "endswith", "in",
-                     "between", "has_cs", "contains_cs", "startswith_cs",
-                     "endswith_cs")(w.toLowerCase))) {
-        // KQL negated operators: `!has`, `!contains`, `!startswith`,
-        // `!endswith` (and their case-sensitive `_cs` forms) become
-        // negated infix markers; `!in` is SQL NOT IN; `!between` emits
-        // NOT and lets the between case consume the range on the next
-        // iteration.
-        val w = "^[A-Za-z_][A-Za-z0-9_]*".r.findFirstIn(s.substring(i + 1)).get
-        w.toLowerCase match {
-          case "in"         => out.append("NOT IN"); i += 1 + w.length
-          case "between"    => out.append("NOT "); i += 1
-          case "has"        => out.append("ilike_nhas"); i += 1 + w.length
-          case "contains"   => out.append("ilike_ncontains"); i += 1 + w.length
-          case "startswith" => out.append("ilike_nstarts"); i += 1 + w.length
-          case "endswith"   => out.append("ilike_nends"); i += 1 + w.length
-          case "has_cs"        => out.append("cslike_nhas"); i += 1 + w.length
-          case "contains_cs"   => out.append("cslike_ncontains"); i += 1 + w.length
-          case "startswith_cs" => out.append("cslike_nstarts"); i += 1 + w.length
-          case "endswith_cs"   => out.append("cslike_nends"); i += 1 + w.length
-        }
-      }
-      else {
-        // word-level rewrites: contains/startswith/endswith (KQL is
-        // case-insensitive; Spark's like/startswith is not — wrap lower())
-        val word = "^[A-Za-z_][A-Za-z0-9_!]*".r.findFirstIn(s.substring(i))
-        word match {
-          case Some(w) if lets.contains(w) && !lets(w).startsWith(LambdaMarker) =>
-            // recurse with w out of scope: guards termination if a
-            // rebinding made a body mention its own name (function lets
-            // are skipped — they substitute only through `invoke`)
-            out.append("(").append(scalar(lets(w), lets - w)).append(")"); i += w.length
-          case Some(w) if w.toLowerCase == "bin_at" && {
-              var j = i + w.length
-              while (j < s.length && s.charAt(j).isWhitespace) j += 1
-              j < s.length && s.charAt(j) == '('
-            } =>
-            // KQL bin_at(value, size, fixedPoint) — binning anchored at
-            // an arbitrary point (week-aligned days, fiscal offsets):
-            // fixedPoint + bin(value - fixedPoint, size), in the same
-            // exact arithmetic as bin(). Timespan sizes stay in integer
-            // epoch seconds; numeric sizes must be positive literals
-            // (the per-row guard of bin() is omitted here — an anchored
-            // bin with a data-driven size has no dashboard use).
-            val open = s.indexOf('(', i + w.length)
-            val close = matchingParen(s, open)
-            val rawArgs = splitTopLevel(s.substring(open + 1, close), ',').map(_.trim)
-            require(rawArgs.length == 3,
-              s"bin_at expects bin_at(value, size, fixedPoint): ${s.substring(i, close + 1)}")
-            timespanSeconds(rawArgs(1), "bin_at()") match {
-              case Some(secs) =>
-                require(secs > 0, s"bin_at() timespan must be positive: ${rawArgs(1)}")
-                val v = scalar(rawArgs(0), lets)
-                val a = scalar(rawArgs(2), lets)
-                val d = s"(unix_timestamp($v) - unix_timestamp($a))"
-                out.append(s"timestamp_seconds(unix_timestamp($a) + " +
-                  s"($d - (($d % $secs + $secs) % $secs)))")
-              case _ =>
-                val v = scalar(rawArgs(0), lets)
-                val sz = scalar(rawArgs(1), lets)
-                val a = scalar(rawArgs(2), lets)
-                val n = scala.util.Try(BigDecimal(sz.trim)).getOrElse(
-                  throw new IllegalArgumentException(
-                    s"bin_at() size must be a literal: $sz"))
-                require(n > 0, s"bin_at() size must be positive, got $sz")
-                val d = s"(($v) - ($a))"
-                out.append(s"(($a) + ($d - (($d % ($sz) + ($sz)) % ($sz))))")
-            }
-            i = close + 1
-          case Some(w) if (w.toLowerCase == "bin" ||
-              w.toLowerCase == "floor") && {
-              var j = i + w.length
-              while (j < s.length && s.charAt(j).isWhitespace) j += 1
-              j < s.length && s.charAt(j) == '('
-            } =>
-            // KQL bin(value, size) = floor-to-multiple; ADX `floor` is
-            // an ALIAS of bin (2-arg). Spark SQL's own `bin` renders a
-            // binary STRING and its 2-arg `floor(expr, scale)` rounds
-            // to decimal DIGITS — both pass-throughs would be silently
-            // wrong — so translate to arithmetic, recursing into
-            // both arguments (they may reference lets or nested calls).
-            // Emitted as floor-mod subtraction, value - mod(value, size)
-            // with mod folded into [0, size): stays in INTEGER arithmetic
-            // for integral operands (exact past 2^53, where the old
-            // floor(v/s)*s double division lost ulps) and computes the
-            // same floor bucket for fractional ones, including negative
-            // values. A literal size must be positive at translation
-            // time; a non-literal size gets a per-row guard that raises
-            // rather than silently emitting wrong buckets.
-            val open = s.indexOf('(', i + w.length)
-            val close = matchingParen(s, open)
-            val rawArgs = splitTopLevel(s.substring(open + 1, close), ',').map(_.trim)
-            require(rawArgs.length == 2,
-              s"bin expects bin(value, size): ${s.substring(i, close + 1)}")
-            // KQL timespan literal size (1h, 30m, 7d, 90s): datetime
-            // binning — floor the epoch-second value to the span
-            // multiple. Kept in integer seconds end to end, so both
-            // engines compute the identical bucket.
-            timespanSeconds(rawArgs(1), "bin()") match {
-              case Some(secs) =>
-                require(secs > 0, s"bin() timespan must be positive: ${rawArgs(1)}")
-                val v = scalar(rawArgs(0), lets)
-                out.append(s"timestamp_seconds((unix_timestamp($v)) - " +
-                  s"(((unix_timestamp($v)) % $secs + $secs) % $secs))")
-              case _ =>
-                val args = rawArgs.map(a => scalar(a, lets))
-                val (v, sz) = (args(0), args(1))
-                val arith = s"(($v) - ((($v) % ($sz) + ($sz)) % ($sz)))"
-                val sizeLit = scala.util.Try(BigDecimal(sz.trim)).toOption
-                sizeLit match {
-                  case Some(n) =>
-                    require(n > 0, s"bin() size must be positive, got $sz")
-                    out.append(arith)
-                  case None =>
-                    out.append(s"(CASE WHEN ($sz) > 0 THEN $arith ELSE " +
-                      s"raise_error(concat('bin() size must be positive, got ', " +
-                      s"CAST(($sz) AS STRING))) END)")
-                }
-            }
-            i = close + 1
-          case Some(w) if Set("startofday", "startofmonth", "startofyear",
-              "startofweek", "endofday", "endofweek", "endofmonth",
-              "endofyear", "dayofweek", "ago")(w.toLowerCase) && {
-              var j = i + w.length
-              while (j < s.length && s.charAt(j).isWhitespace) j += 1
-              j < s.length && s.charAt(j) == '('
-            } =>
-            // Date helpers: startof*(x) → date_trunc; ago(<timespan>) →
-            // now minus the span (nondeterministic — dashboard-filter
-            // use only, never in an oracle-checked query).
-            // ADX week boundaries are SUNDAY-based (Spark's
-            // date_trunc('week') is Monday-based, so startofweek is
-            // day-truncate minus days-since-Sunday). endof*(x) is the
-            // last representable instant of the period — DEVIATION:
-            // Spark timestamps are µs-precision, so endof* lands on
-            // .999999 rather than ADX's .9999999 (100 ns ticks).
-            // dayofweek(x) — DEVIATION: returns an INTEGER count of
-            // days since Sunday (0..6) rather than ADX's timespan (the
-            // engine has no timespan type; `1d`-literal comparisons
-            // against it are not supported). The argument expression is
-            // inlined more than once for week/endof forms — fine for
-            // column refs and pure scalars, which is all the verb
-            // surface feeds here.
-            val open = s.indexOf('(', i + w.length)
-            val close = matchingParen(s, open)
-            val inner = s.substring(open + 1, close).trim
-            w.toLowerCase match {
-              case "ago" =>
-                val secs = timespanSeconds(inner, "ago").getOrElse(
-                  throw new IllegalArgumentException(
-                    s"ago expects a timespan literal (1d, 2h, 30m, 90s): $inner"))
-                out.append(s"(current_timestamp() - make_interval(0, 0, 0, 0, 0, 0, $secs))")
-              case "startofday" | "startofmonth" | "startofyear" =>
-                val unit = w.toLowerCase match {
-                  case "startofday" => "DAY"; case "startofmonth" => "MONTH"
-                  case _ => "YEAR"
-                }
-                out.append(s"date_trunc('$unit', ${scalar(inner, lets)})")
-              case "startofweek" =>
-                val x = scalar(inner, lets)
-                out.append(s"timestampadd(DAY, -(dayofweek($x) - 1), date_trunc('DAY', $x))")
-              case "dayofweek" =>
-                out.append(s"(dayofweek(${scalar(inner, lets)}) - 1)")
-              case "endofweek" =>
-                val x = scalar(inner, lets)
-                out.append("timestampadd(MICROSECOND, -1, " +
-                  s"timestampadd(DAY, 8 - dayofweek($x), date_trunc('DAY', $x)))")
-              case eof =>
-                val unit = eof match {
-                  case "endofday" => "DAY"; case "endofmonth" => "MONTH"
-                  case _ => "YEAR"
-                }
-                val x = scalar(inner, lets)
-                out.append("timestampadd(MICROSECOND, -1, " +
-                  s"timestampadd($unit, 1, date_trunc('$unit', $x)))")
-            }
-            i = close + 1
-          case Some(w) if w.toLowerCase == "case" && {
-              var j = i + w.length
-              while (j < s.length && s.charAt(j).isWhitespace) j += 1
-              j < s.length && s.charAt(j) == '('
-            } =>
-            // KQL case(cond1, val1, cond2, val2, …, default) — ADX's
-            // multi-branch conditional, rewritten to CASE WHEN. (SQL's
-            // own CASE keyword is never followed by '(' so the guard
-            // cannot misfire on pass-through SQL.)
-            val open = s.indexOf('(', i + w.length)
-            val close = matchingParen(s, open)
-            val args = splitTopLevel(s.substring(open + 1, close), ',')
-              .map(a => scalar(a.trim, lets))
-            require(args.length >= 3 && args.length % 2 == 1,
-              s"case expects (cond1, val1, …, default): ${s.substring(i, close + 1)}")
-            val whens = args.init.grouped(2)
-              .map { p => s"WHEN (${p(0)}) THEN (${p(1)})" }.mkString(" ")
-            out.append(s"(CASE $whens ELSE (${args.last}) END)")
-            i = close + 1
-          case Some(w) if w.toLowerCase == "between" && {
-              var j = i + w.length
-              while (j < s.length && s.charAt(j).isWhitespace) j += 1
-              j < s.length && s.charAt(j) == '('
-            } =>
-            // ADX range filter: `x between (lo .. hi)` (inclusive both
-            // ends, same as SQL BETWEEN). The parenthesized `lo .. hi`
-            // body splits on the first top-level `..`.
-            val open = s.indexOf('(', i + w.length)
-            val close = matchingParen(s, open)
-            val inner = s.substring(open + 1, close)
-            var dot = -1
-            var depth = 0
-            var q: Char = 0
-            var j = 0
-            while (j < inner.length - 1 && dot < 0) {
-              val ch = inner.charAt(j)
-              if (q != 0) { if (ch == q) q = 0 }
-              else ch match {
-                case '"' | '\'' => q = ch
-                case '(' | '[' => depth += 1
-                case ')' | ']' => depth -= 1
-                case '.' if depth == 0 && inner.charAt(j + 1) == '.' => dot = j
-                case _ =>
-              }
-              j += 1
-            }
-            require(dot > 0, s"between expects (lo .. hi): ${s.substring(i, close + 1)}")
-            val lo = scalar(inner.substring(0, dot).trim, lets)
-            val hi = scalar(inner.substring(dot + 2).trim, lets)
-            out.append(s"BETWEEN ($lo) AND ($hi)")
-            i = close + 1
-          case Some(w) if (Set("extract", "extract_all", "split",
-              "isempty", "isnotempty", "countof",
-              "substring", "indexof", "strrep",
-              "base64_encode_tostring", "base64_decode_tostring", "hash",
-              "array_index_of", "array_sum",
-              "parse_ipv4", "parse_ipv4_mask", "format_ipv4",
-              "format_ipv4_mask", "base64_decode_toarray",
-              "ipv4_is_private", "ipv4_is_in_range", "ipv4_compare",
-              "ipv4_is_match",
-              "ipv4_netmask_suffix", "ipv4_is_in_any_range",
-              "has_ipv4", "has_any_ipv4", "has_ipv4_prefix",
-              "has_any_ipv4_prefix",
-              "parse_ipv6", "parse_ipv6_mask", "ipv6_compare", "ipv6_is_match",
-              "ipv6_is_in_range", "ipv6_is_in_any_range",
-              "strcmp", "regex_quote", "jaccard_index", "bag_zip",
-              "base64_encode_fromarray", "array_sort_desc",
-              "isascii", "toguid", "todecimal",
-              "base64_encode_fromguid", "base64_decode_toguid",
-              "parse_url", "parse_urlquery", "parse_path",
-              "parse_version", "parse_xml", "parse_user_agent",
-              "geo_distance_2points", "geo_point_in_circle",
-              "geo_azimuth", "geo_distance_point_to_polygon",
-              "geo_angle", "geo_s2cell_to_polygon",
-              "geo_closest_point_on_polygon",
-              "geo_intersects_2polygons", "geo_intersects_line_with_polygon",
-              "geo_line_locate_point", "geo_line_interpolate_point",
-              "geo_point_to_geohash", "geo_geohash_to_central_point",
-              "geo_geohash_neighbors", "geo_geohash_to_polygon",
-              "geo_line_densify", "geo_polygon_densify",
-              "geo_point_in_polygon",
-              "geo_polygon_area", "geo_polygon_perimeter",
-              "geo_polygon_centroid", "geo_line_length",
-              "geo_line_centroid", "geo_intersects_2lines",
-              "geo_point_to_s2cell", "geo_s2cell_to_central_point",
-              "geo_s2cell_neighbors", "geo_polygon_to_s2cells",
-              "geo_line_to_s2cells", "geo_distance_point_to_line",
-              "geo_closest_point_on_line",
-              "geo_point_to_h3cell", "geo_h3cell_to_central_point",
-              "geo_h3cell_to_polygon",
-              "geo_h3cell_neighbors", "geo_h3cell_rings",
-              "geo_h3cell_level", "geo_h3cell_parent", "geo_h3cell_children",
-              "geo_h3cell_childcount", "geo_polygon_to_h3cells",
-              "geo_line_to_h3cells",
-              "geo_h3cell_compact", "geo_h3cell_uncompact",
-              "geo_intersection_2lines", "ipv4_range_to_cidr_list",
-              "geo_point_buffer", "geo_line_buffer", "geo_polygon_buffer",
-              "geo_line_simplify", "geo_polygon_simplify",
-              "geo_simplify_polygons_array",
-              "geo_intersection_2polygons", "geo_intersection_line_with_polygon",
-              "geo_union_polygons", "geo_union_lines",
-              "totimespan", "make_timespan", "format_timespan",
-              "datetime_part", "make_datetime",
-              "datetime_utc_to_local", "datetime_local_to_utc",
-              "unixtime_seconds_todatetime", "unixtime_milliseconds_todatetime",
-              "unixtime_microseconds_todatetime",
-              "unixtime_nanoseconds_todatetime",
-              "isutf8", "new_guid", "dynamic_to_json",
-              "percentile_tdigest", "rank_tdigest",
-              "binary_and", "binary_or", "binary_xor", "binary_not",
-              "binary_shift_left", "binary_shift_right",
-              "replace_string", "replace_regex", "replace_strings",
-              "indexof_regex", "string_size",
-              "dcount_intersect",
-              "bag_keys", "bag_has_key", "bag_merge",
-              "bag_remove_keys", "bag_set_key",
-              "format_bytes",
-              "zip", "repeat", "gettype",
-              "translate", "max_of", "min_of", "exp2", "exp10",
-              "around", "array_split", "has_any_index",
-              "convert_length", "convert_mass", "convert_speed",
-              "convert_angle", "convert_energy", "convert_volume",
-              "convert_force", "convert_temperature",
-              "hash_md5", "hash_sha1", "hash_sha256",
-              "hash_xxhash64", "hash_many", "hash_combine",
-              "bag_pack_columns",
-              "gamma", "loggamma", "beta_cdf", "beta_pdf", "welch_test",
-              "erf", "erfc", "beta_inv",
-              "unicode_codepoints_from_string", "unicode_codepoints_to_string",
-              "punycode_from_string", "punycode_to_string",
-              "punycode_domain_from_string", "punycode_domain_to_string",
-              "gzip_compress_to_base64_string", "gzip_decompress_from_base64_string",
-              "zlib_compress_to_base64_string", "zlib_decompress_from_base64_string",
-              "url_encode", "url_encode_component", "url_decode", "parse_csv",
-              "extractjson", "extract_json", "parse_command_line",
-              "strcat_array", "isinf", "isfinite",
-              "set_union", "set_intersect", "set_difference", "set_has_element",
-              "array_rotate_left", "array_rotate_right",
-              "array_shift_left", "array_shift_right",
-              "array_slice", "array_iff", "array_iif",
-              "todouble", "toreal", "tolong", "toint", "tobool",
-              "toboolean", "todatetime")(w.toLowerCase) ||
-              w.toLowerCase.startsWith("series_")) && {
-              var j = i + w.length
-              while (j < s.length && s.charAt(j).isWhitespace) j += 1
-              j < s.length && s.charAt(j) == '('
-            } =>
-            // ADX string functions whose Spark equivalent needs more
-            // than a name swap: extract/extract_all put the regex FIRST
-            // and the source LAST (Spark regexp_extract* is the
-            // reverse); ADX split takes a LITERAL delimiter where Spark
-            // split takes a regex (metacharacters escaped here, at
-            // parse time — a non-literal delimiter is rejected loudly);
-            // isempty/isnotempty fold the ADX null-or-'' test into one
-            // coalesce.
-            val open = s.indexOf('(', i + w.length)
-            val close = matchingParen(s, open)
-            val args = splitTopLevel(s.substring(open + 1, close), ',')
-              .map(a => scalar(a.trim, lets))
-            w.toLowerCase match {
-              case conv @ ("todouble" | "toreal" | "tolong" | "toint" |
-                           "tobool" | "toboolean" | "todatetime") =>
-                // ADX to*() conversions return null on malformed input
-                // (todouble('x') = real(null)), while the former bare
-                // name-swap to an ANSI cast THREW at runtime. try_cast
-                // restores ADX semantics; valid inputs cast
-                // identically, so every oracle mirror (plain CAST over
-                // clean columns) is unaffected.
-                require(args.length == 1, s"$conv expects (value)")
-                val sqlType = conv match {
-                  case "todouble" | "toreal" => "DOUBLE"
-                  case "tolong" => "BIGINT"
-                  case "toint" => "INT"
-                  case "tobool" | "toboolean" => "BOOLEAN"
-                  case _ => "TIMESTAMP"
-                }
-                out.append(s"try_cast((${args(0)}) AS $sqlType)")
-              case "extract" =>
-                require(args.length == 3,
-                  s"extract expects (regex, captureGroup, source): ${s.substring(i, close + 1)}")
-                // Spark regexp_extract yields '' on no match; ADX yields
-                // null — nullif restores that (same convention as the
-                // parse verb's no-match slots)
-                out.append(s"nullif(regexp_extract(${args(2)}, ${args(0)}, ${args(1)}), '')")
-              case "extract_all" =>
-                // ADX requires ≥1 capture group; group 1 is the match list
-                require(args.length == 2,
-                  s"extract_all expects (regex, source): ${s.substring(i, close + 1)}")
-                out.append(s"regexp_extract_all(${args(1)}, ${args(0)}, 1)")
-              case "split" =>
-                require(args.length == 2,
-                  s"split expects (source, delimiter) — the requestedIndex form is not supported: ${s.substring(i, close + 1)}")
-                val d = args(1).trim
-                require(d.length >= 2 && (d.head == '\'' || d.head == '"') && d.last == d.head,
-                  s"split delimiter must be a string literal: $d")
-                val escaped = d.substring(1, d.length - 1)
-                  .flatMap(c => if ("\\.[]{}()*+?^$|".contains(c)) s"\\\\$c" else c.toString)
-                out.append(s"split(${args(0)}, '${escaped.replace("'", "''")}')")
-              case sfn if sfn.startsWith("series_") =>
-                // ADX series pointwise math over make-series arrays —
-                // pure higher-order functions, no explode round trip:
-                // binary ops zip_with, reductions fold. Interpreted
-                // lambdas, but over dashboard-sized arrays (bounded by
-                // the make-series step count) — same tradeoff as
-                // mv-apply, documented there. The analysis tier
-                // (fit_line / stats / outliers / decompose*) inlines its
-                // shared sub-expressions rather than binding them (Spark
-                // SQL expressions have no let) — the emitted SQL is
-                // multi-KB but evaluates over step-count-sized arrays.
-                sfn match {
-                  case "series_add" | "series_subtract" | "series_multiply" | "series_divide" =>
-                    require(args.length == 2, s"$sfn expects (series, series|number)")
-                    val op = sfn match {
-                      case "series_add" => "+"; case "series_subtract" => "-"
-                      case "series_multiply" => "*"; case _ => "/"
-                    }
-                    // ADX broadcasts numeric scalars over the series
-                    // side. A scalar is only statically recognizable as
-                    // a numeric LITERAL (the compiled SQL for one is the
-                    // literal itself) — anything else is treated as a
-                    // series, matching the pre-r13 behavior.
-                    def numLit(a: String): Boolean =
-                      a.matches("-?[0-9]+(\\.[0-9]+)?([eE][+-]?[0-9]+)?")
-                    out.append(
-                      if (numLit(args(1)))
-                        s"transform(${args(0)}, x -> x $op ${args(1)})"
-                      else if (numLit(args(0)))
-                        s"transform(${args(1)}, y -> ${args(0)} $op y)"
-                      else s"zip_with(${args(0)}, ${args(1)}, (x, y) -> x $op y)")
-                  case "series_abs" | "series_exp" | "series_log" | "series_sign" |
-                       "series_floor" | "series_ceiling" | "series_round" |
-                       "series_sin" | "series_cos" | "series_tan" |
-                       "series_asin" | "series_acos" | "series_atan" =>
-                    // r13: the elementwise unary tier. Conventions:
-                    // null elements map to null (every lambda below is
-                    // null-strict), empty series stay empty. Types stay
-                    // DOUBLE (floor/ceiling/round re-cast Spark's BIGINT
-                    // result) so unary ops compose with the binary tier.
-                    // series_log is the natural log (ADX's convention).
-                    // Deviation (documented): series_round rounds half
-                    // AWAY FROM ZERO via an explicit floor chain —
-                    // x+0.5/floor are single correctly-rounded IEEE ops,
-                    // so the oracle mirrors it bit-for-bit, where an
-                    // engine-native round() would hinge on each engine's
-                    // tie rule.
-                    require(args.length == 1, s"$sfn expects (series)")
-                    val lam = sfn match {
-                      case "series_abs" => "x -> abs(x)"
-                      case "series_exp" => "x -> exp(x)"
-                      case "series_log" => "x -> ln(x)"
-                      case "series_sign" =>
-                        // CASE with no ELSE: null in, null out
-                        "x -> CAST(CASE WHEN x > 0 THEN 1 WHEN x < 0 THEN -1 " +
-                          "WHEN x = 0 THEN 0 END AS DOUBLE)"
-                      case "series_floor" => "x -> CAST(floor(x) AS DOUBLE)"
-                      case "series_ceiling" => "x -> CAST(ceiling(x) AS DOUBLE)"
-                      // r15: the elementwise trig tier (ADX series_sin
-                      // et al.) — IEEE libm calls, identical in Spark
-                      // and DuckDB for the correctly-rounded cases; the
-                      // oracle compare floors to micro-units as with
-                      // every double surface. asin/acos outside [-1,1]
-                      // yield NaN in both engines → surfaced as NULL
-                      // (nanvl), the loud in-band convention.
-                      case "series_sin" => "x -> sin(x)"
-                      case "series_cos" => "x -> cos(x)"
-                      case "series_tan" => "x -> tan(x)"
-                      case "series_asin" =>
-                        "x -> IF(abs(x) <= 1.0D, asin(x), CAST(NULL AS DOUBLE))"
-                      case "series_acos" =>
-                        "x -> IF(abs(x) <= 1.0D, acos(x), CAST(NULL AS DOUBLE))"
-                      case "series_atan" => "x -> atan(x)"
-                      case _ => // series_round
-                        "x -> IF(x >= 0D, CAST(floor(x + 0.5D) AS DOUBLE), " +
-                          "CAST(-floor(-x + 0.5D) AS DOUBLE))"
-                    }
-                    out.append(s"transform(${args(0)}, $lam)")
-                  case "series_pow" =>
-                    // elementwise x^y of two equal-length series, with
-                    // the same numeric-literal broadcast as the binary
-                    // arithmetic tier (a constant exponent/base is the
-                    // common dashboard form)
-                    require(args.length == 2, "series_pow expects (series, series|number)")
-                    def powLit(a: String): Boolean =
-                      a.matches("-?[0-9]+(\\.[0-9]+)?([eE][+-]?[0-9]+)?")
-                    out.append(
-                      if (powLit(args(1)))
-                        s"transform(${args(0)}, x -> power(x, ${args(1)}))"
-                      else if (powLit(args(0)))
-                        s"transform(${args(1)}, y -> power(${args(0)}, y))"
-                      else s"zip_with(${args(0)}, ${args(1)}, (x, y) -> power(x, y))")
-                  case "series_greater" | "series_greater_equals" | "series_less" |
-                       "series_less_equals" | "series_equals" | "series_not_equals" =>
-                    // r13: the elementwise comparison tier — boolean
-                    // arrays, null elements compare to null (SQL
-                    // three-valued logic through zip_with).
-                    require(args.length == 2, s"$sfn expects (series, series)")
-                    val cmp = sfn match {
-                      case "series_greater" => ">"
-                      case "series_greater_equals" => ">="
-                      case "series_less" => "<"
-                      case "series_less_equals" => "<="
-                      case "series_equals" => "="
-                      case _ => "<>"
-                    }
-                    out.append(s"zip_with(${args(0)}, ${args(1)}, (x, y) -> x $cmp y)")
-                  case "series_sum" =>
-                    require(args.length == 1, "series_sum expects (series)")
-                    out.append(seriesSum(args(0)))
-                  case "series_avg" =>
-                    require(args.length == 1, "series_avg expects (series)")
-                    out.append(s"(${seriesSum(args(0))} / size(${args(0)}))")
-                  case "series_fit_line" =>
-                    // ADX returns a 6-tuple into multiple columns; the
-                    // tuple-assign extend form isn't supported here —
-                    // deviation: the single-value form yields line_fit
-                    // (the fitted array); the scalar components come
-                    // from series_fit_line_dynamic's bag, mirroring
-                    // ADX's own _dynamic variant.
-                    require(args.length == 1, "series_fit_line expects (series)")
-                    out.append(seriesLineFit(args(0)))
-                  case "series_fit_line_dynamic" =>
-                    require(args.length == 1, "series_fit_line_dynamic expects (series)")
-                    out.append(seriesFitLineDynamic(args(0)))
-                  case "series_stats_dynamic" =>
-                    require(args.length == 1, "series_stats_dynamic expects (series)")
-                    out.append(seriesStatsDynamic(args(0)))
-                  case "series_stats" =>
-                    // ADX's multi-column tuple-assign form is not
-                    // supported (the series_fit_line convention) —
-                    // the single-value form yields the SAME bag as
-                    // series_stats_dynamic, ADX's own _dynamic twin.
-                    require(args.length == 1, "series_stats expects (series)")
-                    out.append(seriesStatsDynamic(args(0)))
-                  case "series_outliers" =>
-                    // Deviation (documented): ADX scores by Tukey fences
-                    // (quartile-based); this engine emits the z-score
-                    // (x - mean) / population-stdev per point — the same
-                    // monotone "how anomalous" axis, deterministic and
-                    // oracle-expressible without interpolated quantiles.
-                    require(args.length == 1, "series_outliers expects (series)")
-                    out.append(seriesZScores(args(0)))
-                  case "series_decompose" =>
-                    // Deviation (documented): ADX fits an STL-style
-                    // seasonal component with auto period detection;
-                    // this engine is deterministic-by-construction —
-                    // trend = 7-point centered moving average (edge
-                    // windows clamp), seasonal = 0 (no season model),
-                    // baseline = trend, residual = series - baseline.
-                    // r11: the optional 2nd argument gives the season
-                    // PERIOD — seasonal = series_seasonal(series, p),
-                    // trend stays the raw-series moving average, and
-                    // the components ADD (independent additive
-                    // estimation, NOT sequential detrending —
-                    // documented deviation from STL; the zero-sum
-                    // season keeps the baseline unbiased, and every
-                    // element stays a single-rounded chain over exact
-                    // integer sums, so the decomposition is
-                    // cross-engine exact for counting series).
-                    require(args.length == 1 || args.length == 2,
-                      "series_decompose expects (series [, period])")
-                    val t = seriesTrend(args(0))
-                    if (args.length == 1)
-                      out.append(
-                        s"named_struct('baseline', $t, 'seasonal', transform(${args(0)}, x -> CAST(0 AS DOUBLE)), " +
-                        s"'trend', $t, 'residual', ${seriesResidual(args(0))})")
-                    else {
-                      val per = scala.util.Try(args(1).trim.toInt).getOrElse(
-                        throw new IllegalArgumentException(
-                          s"series_decompose period must be an integer literal: ${args(1)}"))
-                      require(per >= 2, s"series_decompose period must be >= 2: $per")
-                      val seas = seriesSeasonalSql(args(0), per)
-                      val baseline = s"zip_with($t, $seas, (ba, bb) -> ba + bb)"
-                      out.append(
-                        s"named_struct('baseline', $baseline, 'seasonal', $seas, " +
-                        s"'trend', $t, " +
-                        s"'residual', zip_with(${args(0)}, $baseline, (ra, rb) -> ra - rb))")
-                    }
-                  case "series_decompose_anomalies" =>
-                    // Deviation (documented): anomaly flags are k-sigma
-                    // on the residual against the same moving-average
-                    // trend as series_decompose (ADX: seasonal
-                    // decomposition + Tukey on residual). Returns ADX's
-                    // three outputs as one bag: ad_flag (+1/-1/0),
-                    // ad_score (residual / population-stdev of
-                    // residuals), baseline (the trend). Default
-                    // threshold 1.5 matches ADX.
-                    require(args.nonEmpty && args.length <= 2,
-                      "series_decompose_anomalies expects (series [, threshold])")
-                    val k = if (args.length == 2) args(1) else "1.5"
-                    out.append(seriesAnomalies(args(0), k))
-                  case "series_decompose_forecast" =>
-                    // ADX series_decompose_forecast(series, points):
-                    // the last `points` entries are the horizon to
-                    // forecast; the model fits the PREFIX and returns a
-                    // prediction for the WHOLE axis (training points
-                    // included), ADX's output convention. Deviation
-                    // (documented, consistent with series_decompose's
-                    // zero seasonal component): the forecast is the
-                    // least-squares trend of the prefix projected over
-                    // all indices — trend + (empty) seasonality, the
-                    // deterministic sibling of ADX's STL forecast.
-                    require(args.length == 2,
-                      "series_decompose_forecast expects (series, points)")
-                    val pts = scala.util.Try(args(1).trim.toInt).getOrElse(
-                      throw new IllegalArgumentException(
-                        "series_decompose_forecast points must be an integer literal: " + args(1)))
-                    require(pts > 0,
-                      s"series_decompose_forecast points must be positive: $pts")
-                    // points >= size(series) leaves an empty training
-                    // prefix and points = size-1 a single point — in
-                    // both the slope/intercept sums divide 0/0 into
-                    // silent NaN forecasts. The series length is
-                    // per-row data (a literal require is impossible),
-                    // so the guard is a generated CASE: a prefix
-                    // shorter than the 2 points a line fit needs
-                    // yields NULL, the loud in-band signal, never NaN.
-                    val prefix = s"slice(${args(0)}, 1, size(${args(0)}) - $pts)"
-                    out.append(s"(CASE WHEN size(${args(0)}) > ${pts + 1} THEN " +
-                      s"transform(${args(0)}, (x, i) -> " +
-                      s"${seriesIntercept(prefix)} + ${seriesSlope(prefix)} * i) " +
-                      s"ELSE NULL END)")
-                  case "series_fft" =>
-                    // returns the {re, im} bag (ADX's tuple-assign
-                    // extend form isn't supported here — the fit_line
-                    // convention); complex INPUT (the 2-arg form) is
-                    // rejected loudly.
-                    require(args.length == 1,
-                      "series_fft expects (series) — complex input is unsupported")
-                    out.append(seriesFftStruct(args(0)))
-                  case "series_ifft" =>
-                    require(args.length == 2,
-                      "series_ifft expects (re_series, im_series)")
-                    out.append(seriesIfftStruct(args(0), args(1)))
-                  case "series_fit_poly" | "series_fit_poly_dynamic" =>
-                    // degree is the 2nd argument (integer literal
-                    // 1..3; default 1). ADX's (y, x, degree) custom-x
-                    // form is rejected loudly — see
-                    // seriesFitPolyDynamic's deviation notes.
-                    require(args.length == 1 || args.length == 2,
-                      s"$sfn expects (series [, degree])")
-                    val deg = args.lift(1).map { a =>
-                      scala.util.Try(a.trim.toInt).getOrElse(
-                        throw new IllegalArgumentException(
-                          s"$sfn degree must be an integer literal 1..3 " +
-                            s"(a custom x axis is unsupported): ${a.trim}"))
-                    }.getOrElse(1)
-                    require(deg >= 1 && deg <= 3,
-                      s"$sfn degree must be in 1..3: $deg")
-                    if (sfn == "series_fit_poly_dynamic")
-                      out.append(seriesFitPolyDynamic(args(0), deg))
-                    else
-                      out.append(s"element_at(transform(array(" +
-                        s"${seriesFitPolyDynamic(args(0), deg)}), pfr -> pfr.poly_fit), 1)")
-                  case "series_fit_2lines" =>
-                    // the non-dynamic form yields line_fit (the fitted
-                    // array), the series_fit_line convention here; the
-                    // scalar components come from the _dynamic bag.
-                    require(args.length == 1, "series_fit_2lines expects (series)")
-                    out.append(s"element_at(transform(array(" +
-                      s"${seriesFit2LinesDynamic(args(0))}), f2r -> f2r.line_fit), 1)")
-                  case "series_fit_2lines_dynamic" =>
-                    require(args.length == 1,
-                      "series_fit_2lines_dynamic expects (series)")
-                    out.append(seriesFit2LinesDynamic(args(0)))
-                  case "series_seasonal" =>
-                    // ADX series_seasonal(series, period) — the
-                    // seasonal component for a GIVEN period (ADX's
-                    // no-period auto-detect form is series_periods_
-                    // detect territory; rejected here, documented).
-                    // DEVIATION (documented): seasonal[i] = mean of
-                    // the values at phase i mod p, minus the SERIES
-                    // mean (zero-sum when the axis holds whole
-                    // periods) — ADX's median-based estimator is
-                    // replaced by the mean for cross-engine
-                    // determinism. Exact for integer series: phase
-                    // sums are exact, two mirrored divisions.
-                    require(args.length == 2,
-                      "series_seasonal expects (series, period) — use series_periods_detect to find the period")
-                    val per = scala.util.Try(args(1).trim.toInt).getOrElse(
-                      throw new IllegalArgumentException(
-                        s"series_seasonal period must be an integer literal: ${args(1)}"))
-                    require(per >= 2, s"series_seasonal period must be >= 2: $per")
-                    out.append(seriesSeasonalSql(args(0), per))
-                  case "series_periods_detect" =>
-                    // Deviation (documented): ADX scores periods by
-                    // normalized autocorrelation percentages; this
-                    // engine scores each candidate lag L by the RAW
-                    // overlap dot product Σ x[i]·x[i+L] — the same
-                    // argmax axis, and EXACT (integer arithmetic for
-                    // count series, fixed left-to-right fold otherwise)
-                    // so both engines pick identical periods. Returns a
-                    // bag {periods, scores}: the top-N lags in
-                    // [minP, maxP] by score desc (smaller lag wins
-                    // ties), as doubles like ADX.
-                    require(args.length == 4,
-                      "series_periods_detect expects (series, minPeriod, maxPeriod, numPeriods)")
-                    val Seq(minP, maxP, nP) = args.drop(1).map(a =>
-                      scala.util.Try(a.trim.toInt).getOrElse(
-                        throw new IllegalArgumentException(
-                          s"series_periods_detect bounds must be integer literals: $a")))
-                    require(minP >= 1 && maxP >= minP && nP >= 1,
-                      s"series_periods_detect needs 1 <= minPeriod <= maxPeriod, numPeriods >= 1: $minP..$maxP/$nP")
-                    val sArg = args(0)
-                    val score = s"(CASE WHEN size($sArg) > L THEN " +
-                      s"aggregate(sequence(1, size($sArg) - L), CAST(0 AS DOUBLE), " +
-                      s"(acc, i) -> acc + element_at($sArg, i) * element_at($sArg, i + L)) " +
-                      "ELSE CAST(0 AS DOUBLE) END)"
-                    val sorted = s"slice(array_sort(transform(sequence($minP, $maxP), " +
-                      s"L -> named_struct('s', -$score, 'l', L))), 1, $nP)"
-                    out.append(
-                      s"named_struct('periods', transform($sorted, x -> CAST(x.l AS DOUBLE)), " +
-                      s"'scores', transform($sorted, x -> -x.s))")
-                  case "series_periods_validate" =>
-                    // ADX series_periods_validate(series, period1, ...):
-                    // scores the GIVEN candidate periods with the same
-                    // overlap-dot-product kernel as
-                    // series_periods_detect (same documented deviation
-                    // from ADX's normalized autocorrelation — the same
-                    // monotone "how periodic" axis), returning the
-                    // {periods, scores} bag in ARGUMENT order, ADX's
-                    // output convention for the validate form.
-                    require(args.length >= 2,
-                      "series_periods_validate expects (series, period1, ...)")
-                    val vPers = args.drop(1).map(a =>
-                      scala.util.Try(a.trim.toInt).getOrElse(
-                        throw new IllegalArgumentException(
-                          s"series_periods_validate periods must be integer literals: $a")))
-                    require(vPers.forall(_ >= 1),
-                      s"series_periods_validate periods must be >= 1: ${vPers.mkString(",")}")
-                    val vArg = args(0)
-                    def vScore(l: Int) = s"(CASE WHEN size($vArg) > $l THEN " +
-                      s"aggregate(sequence(1, size($vArg) - $l), CAST(0 AS DOUBLE), " +
-                      s"(acc, i) -> acc + element_at($vArg, i) * element_at($vArg, i + $l)) " +
-                      "ELSE CAST(0 AS DOUBLE) END)"
-                    out.append(
-                      s"named_struct('periods', array(${vPers.map(p => s"CAST($p AS DOUBLE)").mkString(", ")}), " +
-                      s"'scores', array(${vPers.map(vScore).mkString(", ")}))")
-                  case "series_dot_product" =>
-                    require(args.length == 2, "series_dot_product expects (series, series)")
-                    out.append(seriesDot(args(0), args(1)))
-                  case "series_magnitude" =>
-                    require(args.length == 1, "series_magnitude expects (series)")
-                    out.append(s"sqrt(${seriesDot(args(0), args(0))})")
-                  case "series_cosine_similarity" =>
-                    // 2-arg form only; ADX's optional precomputed-
-                    // magnitude args are not supported (rejected by the
-                    // arity check — recompute is one fold over a
-                    // step-count-sized array).
-                    require(args.length == 2,
-                      "series_cosine_similarity expects (series, series)")
-                    out.append(s"(${seriesDot(args(0), args(1))} / " +
-                      s"(sqrt(${seriesDot(args(0), args(0))}) * sqrt(${seriesDot(args(1), args(1))})))")
-                  case "series_pearson_correlation" =>
-                    // r = (nΣxy − ΣxΣy) / (√(nΣx²−(Σx)²)·√(nΣy²−(Σy)²))
-                    // — every Σ is a left-to-right fold, so count-valued
-                    // series reproduce bit-for-bit in an index-ordered
-                    // oracle (same determinism note as the header).
-                    require(args.length == 2,
-                      "series_pearson_correlation expects (series, series)")
-                    val (a, b) = (args(0), args(1))
-                    val n = seriesN(a)
-                    out.append(
-                      s"(($n * ${seriesDot(a, b)} - ${seriesSum(a)} * ${seriesSum(b)}) / " +
-                      s"(sqrt($n * ${seriesDot(a, a)} - ${seriesSum(a)} * ${seriesSum(a)}) * " +
-                      s"sqrt($n * ${seriesDot(b, b)} - ${seriesSum(b)} * ${seriesSum(b)})))")
-                  case "series_fir" =>
-                    // ADX series_fir(x, filter[, normalize[, center]]):
-                    // causal finite-impulse-response convolution,
-                    // y[i] = Σ_j f[j]·x[i−j] with partial sums at the
-                    // left edge. Deviations (documented): normalize
-                    // DEFAULTS FALSE (ADX: true when all coeffs
-                    // positive) and divides the OUTPUT by Σf (one
-                    // division per point — distributing it into the
-                    // filter would change IEEE results); center=true is
-                    // not supported (rejected by the arity check).
-                    require(args.length == 2 || args.length == 3,
-                      "series_fir expects (series, filter [, normalize])")
-                    val (x, f) = (args(0), args(1))
-                    val norm = args.lift(2).map(_.trim.toLowerCase)
-                    require(norm.forall(n => n == "true" || n == "false"),
-                      s"series_fir normalize must be a true/false literal: ${args.lift(2)}")
-                    val core = s"transform($x, (v, i) -> " +
-                      s"aggregate(sequence(0, size($f) - 1), CAST(0 AS DOUBLE), " +
-                      s"(acc2, j) -> acc2 + IF(i - j >= 0, " +
-                      s"CAST(element_at($f, j + 1) AS DOUBLE) * element_at($x, i - j + 1), " +
-                      s"CAST(0 AS DOUBLE))))"
-                    val fsum = s"aggregate($f, CAST(0 AS DOUBLE), (a2, b2) -> a2 + b2)"
-                    out.append(if (norm.contains("true"))
-                      s"transform($core, y -> y / $fsum)" else core)
-                  case "series_iir" =>
-                    // ADX series_iir(x, b, a): infinite-impulse-response
-                    // recurrence y[i] = (Σ_j b[j]·x[i−j] −
-                    // Σ_{j≥1} a[j]·y[i−j]) / a[0] — inherently
-                    // sequential, evaluated as ONE left-to-right fold
-                    // that carries the output-so-far array (bounded by
-                    // the make-series step count like every series
-                    // function; O(n·(|a|+|b|)) per row).
-                    require(args.length == 3, "series_iir expects (series, b, a)")
-                    val (x, b, a) = (args(0), args(1), args(2))
-                    val bsum = s"aggregate(sequence(0, size($b) - 1), CAST(0 AS DOUBLE), " +
-                      s"(s2, j) -> s2 + IF(acc.i - j >= 0, " +
-                      s"CAST(element_at($b, j + 1) AS DOUBLE) * element_at($x, acc.i - j + 1), " +
-                      s"CAST(0 AS DOUBLE)))"
-                    val asum = s"IF(size($a) > 1, " +
-                      s"aggregate(sequence(1, size($a) - 1), CAST(0 AS DOUBLE), " +
-                      s"(s3, j) -> s3 + IF(acc.i - j >= 0, " +
-                      s"CAST(element_at($a, j + 1) AS DOUBLE) * element_at(acc.ys, acc.i - j + 1), " +
-                      s"CAST(0 AS DOUBLE))), CAST(0 AS DOUBLE))"
-                    out.append(s"aggregate($x, " +
-                      s"named_struct('i', 0, 'ys', CAST(array() AS ARRAY<DOUBLE>)), " +
-                      s"(acc, v) -> named_struct('i', acc.i + 1, 'ys', " +
-                      s"concat(acc.ys, array((($bsum) - ($asum)) / CAST(element_at($a, 1) AS DOUBLE)))), " +
-                      s"acc -> acc.ys)")
-                  case "series_fill_const" =>
-                    // ADX null-fill for make-series arrays (the default
-                    // fill when an aggregate yields null buckets)
-                    require(args.length == 2,
-                      "series_fill_const expects (series, constValue)")
-                    out.append(s"transform(${args(0)}, x -> coalesce(x, ${args(1)}))")
-                  case "series_fill_forward" =>
-                    // each null takes the NEAREST PRECEDING non-null;
-                    // leading nulls stay null (ADX). The per-point
-                    // nearest-known scan is O(n²) bounded by the series
-                    // length — the series tier's interpreted-HOF budget.
-                    require(args.length == 1,
-                      "series_fill_forward expects (series)")
-                    out.append(seriesFillDirSql(args(0), forward = true))
-                  case "series_fill_backwards" | "series_fill_backward" =>
-                    // ADX spells it series_fill_backwards; the singular
-                    // alias is accepted. Trailing nulls stay null.
-                    require(args.length == 1,
-                      s"$w expects (series)")
-                    out.append(seriesFillDirSql(args(0), forward = false))
-                  case "series_fill_linear" =>
-                    // linear interpolation between the nearest known
-                    // neighbors; edge gaps take the nearest known value
-                    // (constant extrapolation, ADX's edge convention);
-                    // an all-null series stays all-null. The single
-                    // interpolation division is mirrored op-for-op in
-                    // the oracle.
-                    require(args.length == 1,
-                      "series_fill_linear expects (series)")
-                    out.append(seriesFillLinearSql(args(0)))
-                  case other => throw new IllegalArgumentException(
-                    s"unsupported series function '$other' (supported: series_add/subtract/" +
-                    "multiply/divide/pow/sum/avg/abs/exp/log/sign/floor/ceiling/round/" +
-                    "greater/greater_equals/less/less_equals/equals/not_equals/" +
-                    "fill_const/fill_forward/fill_backwards/" +
-                    "fill_linear/fit_line/fit_line_dynamic/fit_2lines/fit_2lines_dynamic/" +
-                    "stats_dynamic/outliers/decompose/decompose_anomalies/decompose_forecast/" +
-                    "periods_detect/dot_product/" +
-                    "magnitude/cosine_similarity/pearson_correlation/fir/iir)")
-                }
-              case "array_index_of" =>
-                // ADX: 0-based index, -1 when absent. Spark
-                // array_position is 1-based with 0-absent — shifting by
-                // one maps both conventions at once. r15: the optional
-                // (start, length, occurrence) arms land via a filtered
-                // index scan (negative start counts from the end,
-                // length -1 = unbounded, occurrence 1-based — ADX's
-                // documented contract; out-of-range occurrence → -1).
-                require(args.length >= 2 && args.length <= 5,
-                  s"array_index_of expects (array, value[, start[, length[, occurrence]]]): ${s.substring(i, close + 1)}")
-                if (args.length == 2)
-                  out.append(s"(array_position(${args(0)}, ${args(1)}) - 1)")
-                else {
-                  val sIx = args.lift(2).getOrElse("0")
-                  val lIx = args.lift(3).getOrElse("-1")
-                  val oIx = args.lift(4).getOrElse("1")
-                  out.append(s"element_at(transform(array(named_struct(" +
-                    s"'a', ${args(0)}, 'v', ${args(1)}, " +
-                    s"'s', CAST(($sIx) AS INT), 'l', CAST(($lIx) AS INT), " +
-                    s"'o', CAST(($oIx) AS INT))), aio -> " +
-                    // st = normalized 0-based start; hits = matching
-                    // indices within [st, st+len); answer = hits[o]
-                    s"element_at(transform(array(CASE WHEN aio.s < 0 " +
-                    s"THEN greatest(0, size(aio.a) + aio.s) ELSE aio.s END), aist -> " +
-                    // empty array → sequence(0, -1) would DESCEND;
-                    // occurrence < 1 → element_at(_, 0) would error
-                    s"CASE WHEN aio.a IS NULL THEN CAST(NULL AS INT) " +
-                    s"WHEN size(aio.a) = 0 OR aio.o < 1 THEN -1 ELSE " +
-                    // try_element_at: an occurrence past the match
-                    // count must yield -1, not an ANSI index error
-                    s"coalesce(try_element_at(filter(sequence(0, size(aio.a) - 1), aii -> " +
-                    s"aii >= aist AND (aio.l < 0 OR aii < aist + aio.l) " +
-                    s"AND element_at(aio.a, aii + 1) = aio.v), aio.o), -1) END), 1)), 1)")
-                }
-              case "array_sum" =>
-                require(args.length == 1, "array_sum expects (array)")
-                out.append(s"aggregate(${args(0)}, CAST(0 AS DOUBLE), (acc, x) -> acc + x)")
-              case "parse_ipv6" =>
-                // ADX IPv6 tier via native codegen expressions (see
-                // graft.functions.Ipv6 for conventions: canonical
-                // 8×4-hex rendering, plain-IPv4 → ::ffff:a.b.c.d, and
-                // the same prefix-suffixed-input deviation as
-                // parse_ipv4 — use parse_ipv6_mask / the 3-arg
-                // compare forms for prefixes).
-                require(args.length == 1, "parse_ipv6 expects (ip)")
-                out.append(s"graft_ipv6_canon(${args(0)})")
-              case "parse_ipv6_mask" =>
-                require(args.length == 2,
-                  "parse_ipv6_mask expects (ip, prefix)")
-                out.append(s"graft_ipv6_mask(${args(0)}, CAST((${args(1)}) AS INT))")
-              case "ipv6_compare" =>
-                require(args.length == 2 || args.length == 3,
-                  "ipv6_compare expects (ip1, ip2 [, prefix])")
-                val p6 = if (args.length == 3) args(2) else "128"
-                out.append(s"CAST(graft_ipv6_cmp(${args(0)}, ${args(1)}, " +
-                  s"CAST(($p6) AS INT)) AS BIGINT)")
-              case "ipv6_is_match" =>
-                require(args.length == 2 || args.length == 3,
-                  "ipv6_is_match expects (ip1, ip2 [, prefix])")
-                val pm6 = if (args.length == 3) args(2) else "128"
-                out.append(s"(graft_ipv6_cmp(${args(0)}, ${args(1)}, " +
-                  s"CAST(($pm6) AS INT)) = 0)")
-              case "parse_ipv4" =>
-                // ADX IPv4 tier: pure integer/string arithmetic, all
-                // map-side codegen-able expressions, null on any
-                // malformed input (try_cast + octet range check). The
-                // "a.b.c.d/p" prefix-suffixed INPUT form parse_ipv4
-                // also accepts in ADX is NOT supported here (use
-                // parse_ipv4_mask) — documented deviation.
-                require(args.length == 1, "parse_ipv4 expects (ip)")
-                out.append(ipv4Long(args(0)))
-              case "parse_ipv4_mask" =>
-                require(args.length == 2, "parse_ipv4_mask expects (ip, prefix)")
-                val sh = s"(32 - CAST(${args(1)} AS INT))"
-                out.append(s"shiftleft(shiftright(${ipv4Long(args(0))}, $sh), $sh)")
-              case "format_ipv4" =>
-                // long → dotted quad; out-of-range input nulls out
-                // rather than wrapping (ADX masks to 32 bits —
-                // deviation chosen for loudness, documented here).
-                require(args.length == 1, "format_ipv4 expects (long)")
-                val x = s"CAST(${args(0)} AS BIGINT)"
-                out.append(s"(CASE WHEN $x BETWEEN 0 AND 4294967295 THEN concat(" +
-                  s"CAST(shiftright($x, 24) & 255 AS STRING), '.', " +
-                  s"CAST(shiftright($x, 16) & 255 AS STRING), '.', " +
-                  s"CAST(shiftright($x, 8) & 255 AS STRING), '.', " +
-                  s"CAST($x & 255 AS STRING)) ELSE CAST(NULL AS STRING) END)")
-              case "format_ipv4_mask" =>
-                // ADX format_ipv4_mask(ip, prefix) → "a.b.c.d/p" with
-                // the host bits zeroed. Same string-ip contract as
-                // parse_ipv4_mask; prefix outside 0..32 or a malformed
-                // ip → null.
-                require(args.length == 2,
-                  "format_ipv4_mask expects (ip, prefix)")
-                val fp = s"CAST(${args(1)} AS INT)"
-                val fsh = s"(32 - $fp)"
-                val fmasked = s"shiftleft(shiftright(${ipv4Long(args(0))}, $fsh), $fsh)"
-                out.append(s"element_at(transform(array(named_struct(" +
-                  s"'m', $fmasked, 'p', $fp)), fim -> " +
-                  s"CASE WHEN fim.m IS NULL OR fim.p IS NULL OR fim.p < 0 " +
-                  s"OR fim.p > 32 THEN CAST(NULL AS STRING) ELSE concat(" +
-                  s"CAST(shiftright(fim.m, 24) & 255 AS STRING), '.', " +
-                  s"CAST(shiftright(fim.m, 16) & 255 AS STRING), '.', " +
-                  s"CAST(shiftright(fim.m, 8) & 255 AS STRING), '.', " +
-                  s"CAST(fim.m & 255 AS STRING), '/', " +
-                  s"CAST(fim.p AS STRING)) END), 1)")
-              case "base64_decode_toarray" =>
-                // ADX base64_decode_toarray(s) → dynamic array of the
-                // decoded BYTES (ints 0..255). The hex-pair route
-                // keeps arbitrary binary exact (a binary→string cast
-                // would mangle non-UTF-8 bytes). DEVIATION: Spark's
-                // unbase64 is lenient about padding/garbage where ADX
-                // returns empty — malformed input may decode here.
-                require(args.length == 1,
-                  "base64_decode_toarray expects (string)")
-                out.append(s"element_at(transform(array(hex(unbase64(${args(0)}))), b64h -> " +
-                  s"CASE WHEN b64h IS NULL THEN CAST(NULL AS ARRAY<INT>) " +
-                  s"WHEN length(b64h) = 0 THEN CAST(array() AS ARRAY<INT>) ELSE " +
-                  s"transform(sequence(1, length(b64h) DIV 2), b64i -> " +
-                  s"CAST(conv(substring(b64h, b64i * 2 - 1, 2), 16, 10) AS INT)) END), 1)")
-              case "ipv4_is_private" =>
-                // RFC1918: 10.0.0.0/8, 172.16.0.0/12, 192.168.0.0/16
-                require(args.length == 1, "ipv4_is_private expects (ip)")
-                val l = ipv4Long(args(0))
-                out.append(s"(($l BETWEEN 167772160 AND 184549375) OR " +
-                  s"($l BETWEEN 2886729728 AND 2887778303) OR " +
-                  s"($l BETWEEN 3232235520 AND 3232301055))")
-              case "ipv4_is_in_range" =>
-                // range is "a.b.c.d/p" (plain IP = /32): compare the
-                // two addresses' top p bits. Null-propagates on
-                // malformed either side, like ADX.
-                require(args.length == 2, "ipv4_is_in_range expects (ip, range)")
-                val sh = s"(32 - ${cidrPrefix(args(1))})"
-                out.append(s"(shiftright(${ipv4Long(args(0))}, $sh) = " +
-                  s"shiftright(${ipv4Long(cidrBase(args(1)))}, $sh))")
-              case "ipv4_compare" =>
-                // sign-normalized (-1/0/1) comparison of the top p bits
-                // (default full 32); ADX only contracts the sign.
-                require(args.length == 2 || args.length == 3,
-                  "ipv4_compare expects (ip1, ip2[, prefix])")
-                val sh = if (args.length == 3) s"(32 - CAST(${args(2)} AS INT))" else "0"
-                out.append(s"CAST(sign(shiftright(${ipv4Long(args(0))}, $sh) - " +
-                  s"shiftright(${ipv4Long(args(1))}, $sh)) AS INT)")
-              case "ipv4_is_match" =>
-                // ADX ipv4_is_match(ip1, ip2[, prefix]): equality of the
-                // two addresses under the EFFECTIVE prefix — the minimum
-                // of each argument's own "/p" suffix (32 when absent)
-                // and the optional prefix argument. Malformed input
-                // nulls out through the ipv4Long/try_cast chain, ADX's
-                // null-on-invalid shape.
-                require(args.length == 2 || args.length == 3,
-                  "ipv4_is_match expects (ip1, ip2[, prefix])")
-                // r17 ADVICE: propagate NULL from a malformed '/p'
-                // suffix (least() would silently skip it) and null out
-                // prefixes outside 0..32 (shiftright's Java mod-64
-                // count would return a silently-wrong boolean)
-                val effParts = Seq(cidrPrefix(args(0)), cidrPrefix(args(1))) ++
-                  args.lift(2).map(p => s"try_cast(($p) AS INT)")
-                val eff = s"(CASE WHEN ${effParts.map(p => s"($p) IS NULL")
-                  .mkString(" OR ")} THEN CAST(NULL AS INT) " +
-                  s"ELSE least(${effParts.mkString(", ")}) END)"
-                val shm = s"(32 - $eff)"
-                out.append(s"(CASE WHEN $eff BETWEEN 0 AND 32 THEN " +
-                  s"(shiftright(${ipv4Long(cidrBase(args(0)))}, $shm) = " +
-                  s"shiftright(${ipv4Long(cidrBase(args(1)))}, $shm)) " +
-                  "ELSE CAST(NULL AS BOOLEAN) END)")
-              case "ipv4_netmask_suffix" =>
-                require(args.length == 1, "ipv4_netmask_suffix expects (range)")
-                out.append(cidrPrefix(args(0)))
-              case "ipv4_is_in_any_range" =>
-                // r15: OR over the ipv4_is_in_range test per range
-                // argument (SQL three-valued OR — null only when no
-                // range matches and some side was malformed, ADX's
-                // null-on-invalid shape). The ip expression repeats
-                // per range; all arms are map-side codegen arithmetic.
-                require(args.length >= 2,
-                  "ipv4_is_in_any_range expects (ip, range, ...)")
-                val anyTests = args.tail.map { r =>
-                  val sh = s"(32 - ${cidrPrefix(r)})"
-                  s"(shiftright(${ipv4Long(args(0))}, $sh) = " +
-                    s"shiftright(${ipv4Long(cidrBase(r))}, $sh))"
-                }
-                out.append(anyTests.mkString("(", " OR ", ")"))
-              case "ipv4_range_to_cidr_list" =>
-                // ADX ipv4_range_to_cidr_list(startIp, endIp) → the
-                // canonical minimal CIDR cover of [start, end] as a
-                // dynamic array of "a.b.c.d/p" strings: the textbook
-                // greedy — from the low end, emit the largest block
-                // both ALIGNED at cur and FITTING in the remainder,
-                // advance past it. ≤ 62 blocks cover any 32-bit
-                // range. A NATIVE codegen kernel
-                // ([[graft.functions.Ipv4.rangeToCidrs]] — first
-                // shipped as a 64-step SQL aggregate fold, whose
-                // lambda evaluates interpreted per row); all
-                // power-of-two arithmetic is integer (cur & -cur
-                // alignment, highest-bit fill, bit_count prefix
-                // width — no log2, whose rounding differs across
-                // libms), so the DuckDB oracle replays the same
-                // greedy exactly as a recursive CTE. Malformed
-                // endpoints or start > end → null, ADX's shape.
-                require(args.length == 2,
-                  "ipv4_range_to_cidr_list expects (startIp, endIp)")
-                graft.functions.GraftFunctions.register(
-                  org.apache.spark.sql.SparkSession.active)
-                out.append(s"graft_ipv4_cidrs(${ipv4Long(args(0))}, " +
-                  s"${ipv4Long(args(1))})")
-              case "ipv6_is_in_range" | "ipv6_is_in_any_range" =>
-                // r15: range is "addr/p" (plain address = /128);
-                // equality of the top p bits via the native prefix
-                // comparator (graft_ipv6_cmp — the ipv6_is_match
-                // kernel). _in_any_range ORs the per-range tests.
-                require(args.length >= 2,
-                  s"${w.toLowerCase} expects (ip, range, ...)")
-                def cidr6Prefix(e: String): String =
-                  s"(CASE WHEN instr($e, '/') > 0 THEN " +
-                    s"try_cast(substring($e, instr($e, '/') + 1, 2147483647) AS INT) " +
-                    s"ELSE 128 END)"
-                require(w.toLowerCase == "ipv6_is_in_any_range" || args.length == 2,
-                  "ipv6_is_in_range expects (ip, range)")
-                val v6Tests = args.tail.map { r =>
-                  s"(graft_ipv6_cmp(${args(0)}, ${cidrBase(r)}, ${cidr6Prefix(r)}) = 0)"
-                }
-                out.append(v6Tests.mkString("(", " OR ", ")"))
-              case "has_ipv4" | "has_any_ipv4" | "has_ipv4_prefix" |
-                   "has_any_ipv4_prefix" =>
-                // r15: ADX textual-IPv4 detection — true when the text
-                // contains a VALID dotted-quad as a whole term (term
-                // boundaries are non-alphanumeric excluding '.', so a
-                // 5-octet token never half-matches). One candidate
-                // extraction regex (strict octets, no leading zeros,
-                // no lookbehind — DuckDB's RE2 has none; the oracle
-                // mirrors it verbatim) + an exists() test per variant.
-                // Prefix args are enforced at OCTET boundaries: a
-                // prefix not ending in '.' matches only a full-octet
-                // cut ('127.0' matches 127.0.x.x, never 127.01.x.x).
-                // IP/prefix arguments must be string literals (the
-                // has_any_index convention — they compile into the
-                // plan).
-                require(args.length >= 1, s"${w.toLowerCase} expects (source, ...)")
-                // Tokenize on the term-boundary class FIRST (a
-                // boundary-consuming match regex would miss adjacent
-                // IPs, and RE2 — the oracle's engine — has no
-                // lookaround), then full-match each dotted token.
-                val oct = "(25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9][0-9]|[0-9])"
-                val cands = s"filter(split(${args(0)}, '[^0-9A-Za-z.]+'), " +
-                  s"hip -> hip RLIKE '^($oct[.]){3}$oct$$')"
-                def litArg(a: String): String = {
-                  val t = a.trim
-                  require(t.length >= 2 &&
-                      (t.head == '\'' || t.head == '"') && t.last == t.head,
-                    s"${w.toLowerCase}: IP/prefix arguments must be string literals: $a")
-                  t.substring(1, t.length - 1)
-                }
-                w.toLowerCase match {
-                  case "has_ipv4" =>
-                    require(args.length == 1, "has_ipv4 expects (source)")
-                    out.append(s"(size($cands) > 0)")
-                  case "has_any_ipv4" =>
-                    require(args.length >= 2, "has_any_ipv4 expects (source, ip, ...)")
-                    val ips = args.tail.map(litArg)
-                      .map(ip => "'" + ip.replace("'", "''") + "'")
-                      .mkString(", ")
-                    out.append(s"exists($cands, hip -> hip IN ($ips))")
-                  case _ => // has_ipv4_prefix | has_any_ipv4_prefix
-                    require(args.length >= 2,
-                      s"${w.toLowerCase} expects (source, prefix, ...)")
-                    if (w.toLowerCase == "has_ipv4_prefix")
-                      require(args.length == 2, "has_ipv4_prefix expects (source, prefix)")
-                    val tests = args.tail.map(litArg).map { p0 =>
-                      val p = if (p0.endsWith(".")) p0 else p0 + "."
-                      val lit = "'" + p.replace("'", "''") + "'"
-                      // full-prefix tokens ('1.2.3.4' vs prefix
-                      // '1.2.3.4') can never match a longer IP, so
-                      // also accept candidate == prefix — but ONLY
-                      // when the user's prefix did not itself end with
-                      // '.': ADX treats an explicit trailing dot as
-                      // requiring a longer token ('10.1.2.3' does not
-                      // start with '10.1.2.3.')
-                      if (p0.endsWith(".")) s"startswith(hip, $lit)"
-                      else s"(startswith(hip, $lit) OR hip = '" +
-                        p0.replace("'", "''") + "')"
-                    }
-                    out.append(s"exists($cands, hip -> ${tests.mkString("(", " OR ", ")")})")
-                }
-              case "zip" =>
-                // ADX zip(a, b) → array of 2-element pairs. Emitted as
-                // pair ARRAYS via zip_with, so both inputs must share
-                // an element type (ADX's heterogeneous dynamic pairs
-                // have no Spark ARRAY equivalent — documented
-                // restriction; arrays_zip's structs would change the
-                // element access syntax).
-                require(args.length == 2, "zip expects (arr1, arr2)")
-                out.append(s"zip_with(${args(0)}, ${args(1)}, (__a, __b) -> array(__a, __b))")
-              case "repeat" =>
-                // ADX repeat(value, count) builds an ARRAY (Spark's own
-                // `repeat` is string repetition — silently wrong).
-                require(args.length == 2, "repeat expects (value, count)")
-                out.append(s"array_repeat(${args(0)}, CAST(${args(1)} AS INT))")
-              case "gettype" =>
-                // Spark type names, not ADX's (typeof('x') says
-                // 'string' in both, but long → 'bigint') — documented
-                // deviation; the function exists for dispatch-style
-                // queries where the NAME is compared to itself.
-                require(args.length == 1, "gettype expects (value)")
-                out.append(s"typeof(${args(0)})")
-              case "translate" =>
-                // ADX translate(searchList, replacementList, source);
-                // Spark puts the SOURCE FIRST — a pass-through would
-                // silently translate the wrong argument.
-                require(args.length == 3,
-                  "translate expects (searchList, replacementList, source)")
-                out.append(s"translate(${args(2)}, ${args(0)}, ${args(1)})")
-              case "max_of" =>
-                require(args.length >= 2, "max_of expects (a, b, ...)")
-                out.append(s"greatest(${args.mkString(", ")})")
-              case "min_of" =>
-                require(args.length >= 2, "min_of expects (a, b, ...)")
-                out.append(s"least(${args.mkString(", ")})")
-              case "exp2" =>
-                require(args.length == 1, "exp2 expects (x)")
-                out.append(s"power(CAST(2 AS DOUBLE), ${args(0)})")
-              case "exp10" =>
-                require(args.length == 1, "exp10 expects (x)")
-                out.append(s"power(CAST(10 AS DOUBLE), ${args(0)})")
-              case "strcat_array" =>
-                require(args.length == 2, "strcat_array expects (array, delimiter)")
-                out.append(s"array_join(transform(${args(0)}, __x -> CAST(__x AS STRING)), ${args(1)})")
-              case "isinf" =>
-                require(args.length == 1, "isinf expects (x)")
-                out.append(s"(abs(CAST(${args(0)} AS DOUBLE)) = CAST('Infinity' AS DOUBLE))")
-              case "isfinite" =>
-                require(args.length == 1, "isfinite expects (x)")
-                out.append(s"(NOT isnan(CAST(${args(0)} AS DOUBLE)) AND " +
-                  s"abs(CAST(${args(0)} AS DOUBLE)) <> CAST('Infinity' AS DOUBLE))")
-              case "totimespan" =>
-                // ADX totimespan('[d.]hh:mm:ss') / totimespan(1h).
-                // DEVIATION (documented, the bin() convention):
-                // timespan VALUES surface as BIGINT SECONDS, not
-                // 100 ns ticks — every consumer in this dialect
-                // (bin, ago, datetime_add) speaks seconds. Literal
-                // arguments only (the value is compiled into the
-                // plan); sub-second fractions and columns reject
-                // loudly rather than truncate silently.
-                require(args.length == 1, "totimespan expects (timespan literal)")
-                out.append(s"CAST(${parseTimespanLiteral(args(0).trim)} AS BIGINT)")
-              case "make_timespan" =>
-                // make_timespan(h, m, s) | make_timespan(d, h, m, s)
-                // → BIGINT seconds (same convention as totimespan).
-                require(args.length == 3 || args.length == 4,
-                  "make_timespan expects (hour, minute, second) or (day, hour, minute, second)")
-                val (d, h, m, sec) =
-                  if (args.length == 4) (args(0), args(1), args(2), args(3))
-                  else ("0", args(0), args(1), args(2))
-                out.append(s"CAST(((((${d}) * 24 + (${h})) * 60 + (${m})) * 60 + (${sec})) AS BIGINT)")
-              case "format_timespan" =>
-                // format_timespan(ts, fmt) over BIGINT-second spans.
-                // Supported formats: 'd.hh:mm:ss' and 'hh:mm:ss' (the
-                // hh field absorbs days in the second form) — others
-                // reject loudly. Pure integer render, negative → null.
-                require(args.length == 2, "format_timespan expects (timespan, format)")
-                val fmt = args(1).trim
-                val t = s"CAST((${args(0)}) AS BIGINT)"
-                def p2(x: String) = s"lpad(CAST($x AS STRING), 2, '0')"
-                val body = fmt match {
-                  case "'d.hh:mm:ss'" =>
-                    s"concat(CAST($t DIV 86400 AS STRING), '.', ${p2(s"$t % 86400 DIV 3600")}, " +
-                    s"':', ${p2(s"$t % 3600 DIV 60")}, ':', ${p2(s"$t % 60")})"
-                  case "'hh:mm:ss'" =>
-                    s"concat(${p2(s"$t DIV 3600")}, ':', ${p2(s"$t % 3600 DIV 60")}, " +
-                    s"':', ${p2(s"$t % 60")})"
-                  case other => throw new IllegalArgumentException(
-                    s"format_timespan format not supported: $other ('d.hh:mm:ss', 'hh:mm:ss')")
-                }
-                out.append(s"(CASE WHEN ($t) < 0 THEN CAST(NULL AS STRING) ELSE $body END)")
-              case dtz @ ("datetime_utc_to_local" | "datetime_local_to_utc") =>
-                // r15: timezone conversion through the JVM tzdb
-                // (from_utc_timestamp / to_utc_timestamp); the zone
-                // must be a string LITERAL (compiled into the plan).
-                // IANA names resolve via the JVM (DST-correct,
-                // spec-pinned on boundary vectors); the ORACLE path
-                // uses fixed-offset zones ('+HH:MM'), the only form
-                // the DuckDB harness can replay without an ICU tzdb.
-                require(args.length == 2, s"$dtz expects (datetime, timezone)")
-                val tzl = args(1).trim
-                require(tzl.length >= 2 &&
-                    (tzl.head == '\'' || tzl.head == '"') && tzl.last == tzl.head,
-                  s"$dtz timezone must be a string literal: ${args(1)}")
-                out.append(
-                  if (dtz == "datetime_utc_to_local")
-                    s"from_utc_timestamp(${args(0)}, $tzl)"
-                  else s"to_utc_timestamp(${args(0)}, $tzl)")
-              case "datetime_part" =>
-                // datetime_part('part', dt) → BIGINT (ADX returns long).
-                require(args.length == 2, "datetime_part expects (part, datetime)")
-                val part = args(0).trim.toLowerCase.stripPrefix("'").stripSuffix("'")
-                val ex = part match {
-                  case "year" => s"year(${args(1)})"
-                  case "quarter" => s"quarter(${args(1)})"
-                  case "month" => s"month(${args(1)})"
-                  case "week_of_year" => s"weekofyear(${args(1)})"
-                  case "day" => s"day(${args(1)})"
-                  case "dayofyear" => s"dayofyear(${args(1)})"
-                  case "hour" => s"hour(${args(1)})"
-                  case "minute" => s"minute(${args(1)})"
-                  case "second" => s"second(${args(1)})"
-                  case other => throw new IllegalArgumentException(
-                    s"datetime_part part not supported: $other")
-                }
-                out.append(s"CAST($ex AS BIGINT)")
-              case "make_datetime" =>
-                // make_datetime(y, mo, d [, h, mi, s]) → timestamp.
-                require(args.length == 3 || args.length == 6,
-                  "make_datetime expects (year, month, day[, hour, minute, second])")
-                val tail = if (args.length == 6) args.drop(3).mkString(", ")
-                           else "0, 0, 0"
-                out.append(s"make_timestamp(${args(0)}, ${args(1)}, ${args(2)}, $tail)")
-              case "unixtime_seconds_todatetime" =>
-                require(args.length == 1, "unixtime_seconds_todatetime expects (seconds)")
-                out.append(s"timestamp_seconds(${args(0)})")
-              case "unixtime_milliseconds_todatetime" =>
-                require(args.length == 1, "unixtime_milliseconds_todatetime expects (millis)")
-                out.append(s"timestamp_millis(CAST(${args(0)} AS BIGINT))")
-              case "unixtime_microseconds_todatetime" =>
-                require(args.length == 1, "unixtime_microseconds_todatetime expects (micros)")
-                out.append(s"timestamp_micros(CAST(${args(0)} AS BIGINT))")
-              case "unixtime_nanoseconds_todatetime" =>
-                // Spark timestamps carry microseconds — nanos TRUNCATE
-                // to micros (integer DIV, documented; ADX ticks are
-                // 100 ns so it truncates sub-tick too).
-                require(args.length == 1, "unixtime_nanoseconds_todatetime expects (nanos)")
-                out.append(s"timestamp_micros(CAST(${args(0)} AS BIGINT) DIV 1000)")
-              case "isutf8" =>
-                // Spark strings are valid UTF-8 by construction (binary
-                // that fails decode never becomes a STRING value), so
-                // any non-null string IS valid — trivially-true
-                // deviation, documented; null → null like ADX.
-                require(args.length == 1, "isutf8 expects (value)")
-                out.append(s"(CASE WHEN CAST((${args(0)}) AS STRING) IS NULL " +
-                  "THEN CAST(NULL AS BOOLEAN) ELSE TRUE END)")
-              case "new_guid" =>
-                // Nondeterministic by contract (like rand()) — maps to
-                // Spark's uuid(); pinned by format/uniqueness in
-                // KqlSpec, never by the cross-engine oracle.
-                // splitTopLevel of an empty arg list yields one blank
-                // entry — accept only blanks.
-                require(args.forall(_.trim.isEmpty), "new_guid expects no arguments")
-                out.append("uuid()")
-              case "dynamic_to_json" =>
-                // ADX dynamic_to_json(d): the CANONICAL JSON form with
-                // object keys sorted. The engine's VARIANT round-trip
-                // already normalizes key order to sorted, so this is
-                // exactly to_json over the variant.
-                require(args.length == 1, "dynamic_to_json expects (dynamic)")
-                out.append(s"to_json(${args(0)})")
-              case "percentile_tdigest" =>
-                // Reads the equi-depth digest the `tdigest` aggregate
-                // builds (deviation documented there). The optional
-                // third typeof() arg ADX takes is unnecessary here
-                // (the result is always the centroid-mean DOUBLE).
-                require(args.length == 2,
-                  "percentile_tdigest expects (digest, percentile)")
-                out.append(percentileTdigestSql(args(0), args(1)))
-              case "rank_tdigest" =>
-                require(args.length == 2, "rank_tdigest expects (digest, value)")
-                out.append(rankTdigestSql(args(0), args(1)))
-              case "binary_and" | "binary_or" | "binary_xor" =>
-                // ADX binary_* names for the infix bit operators,
-                // widened to BIGINT (ADX operates on long).
-                require(args.length == 2, s"${w.toLowerCase} expects (a, b)")
-                val op = w.toLowerCase match {
-                  case "binary_and" => "&"; case "binary_or" => "|"; case _ => "^"
-                }
-                out.append(s"(CAST(${args(0)} AS BIGINT) $op CAST(${args(1)} AS BIGINT))")
-              case "binary_not" =>
-                require(args.length == 1, "binary_not expects (a)")
-                out.append(s"(~CAST(${args(0)} AS BIGINT))")
-              case "binary_shift_left" | "binary_shift_right" =>
-                require(args.length == 2, s"${w.toLowerCase} expects (a, n)")
-                val fn = if (w.toLowerCase.endsWith("left")) "shiftleft" else "shiftright"
-                out.append(s"$fn(CAST(${args(0)} AS BIGINT), CAST(${args(1)} AS INT))")
-              case "format_bytes" =>
-                // ADX format_bytes(size [, precision]) → '1.5 GB'.
-                // 1024-based units; precision 0..2 (the BIGINT-exact
-                // range). DEVIATION (documented): the fraction
-                // TRUNCATES instead of rounding — pure integer
-                // arithmetic on both engines, no decimal-rounding
-                // half-tie surface. Negative or null input → null.
-                require(args.length == 1 || args.length == 2,
-                  "format_bytes expects (size [, precision])")
-                val prec = args.lift(1).map { a =>
-                  val v = scala.util.Try(a.trim.toInt).getOrElse(
-                    throw new IllegalArgumentException(
-                      s"format_bytes precision must be an integer literal 0..2: $a"))
-                  require(v >= 0 && v <= 2,
-                    s"format_bytes precision must be in 0..2: $a")
-                  v
-                }.getOrElse(0)
-                val v = s"CAST((${args(0)}) AS BIGINT)"
-                val units = Seq("Bytes", "KB", "MB", "GB", "TB", "PB", "EB")
-                val m = math.round(math.pow(10, prec))
-                def branch(k: Int): String = {
-                  val d = 1L << (10 * k)
-                  val ip = s"CAST($v DIV ${d}L AS STRING)"
-                  // EB tier: (v % 2^60) * 100 would overflow BIGINT —
-                  // pre-reduce both sides by 1024 (exact: 2^60/1024 =
-                  // 2^50); mirrored in the oracle branch-for-branch
-                  val frac =
-                    if (k == 6) s"((($v % ${d}L) DIV 1024L) * ${m}L) DIV ${d / 1024}L"
-                    else s"(($v % ${d}L) * ${m}L) DIV ${d}L"
-                  val whole =
-                    if (prec == 0) ip
-                    else s"concat($ip, '.', lpad(CAST($frac AS STRING), $prec, '0'))"
-                  s"concat($whole, ' ', '${units(k)}')"
-                }
-                val tiers = (6 to 1 by -1).map { k =>
-                  s"WHEN $v >= ${1L << (10 * k)}L THEN ${branch(k)}"
-                }.mkString(" ")
-                out.append(s"(CASE WHEN $v IS NULL OR $v < 0 THEN CAST(NULL AS STRING) " +
-                  s"$tiers ELSE ${branch(0)} END)")
-              case "bag_keys" =>
-                // ADX bag_keys(bag) → dynamic array of the bag's
-                // TOP-LEVEL keys. ADX leaves the order unspecified;
-                // this engine SORTS them (documented determinism
-                // choice — unspecified order cannot cross an oracle).
-                // Non-object input (arrays, scalars, null) → null,
-                // ADX's convention.
-                require(args.length == 1, "bag_keys expects (bag)")
-                // CAST(variant AS STRING) serializes objects/arrays as
-                // their JSON text (scalars as bare values — excluded by
-                // the '{' guard), sidestepping to_json's input-type
-                // surface
-                out.append(s"(CASE WHEN startswith(CAST((${args(0)}) AS STRING), '{') " +
-                  s"THEN sort_array(json_object_keys(CAST((${args(0)}) AS STRING))) " +
-                  s"ELSE CAST(NULL AS ARRAY<STRING>) END)")
-              case "bag_has_key" =>
-                // top-level key membership (ADX also accepts a JSON
-                // path — unsupported here, documented; path inputs are
-                // rejected loudly rather than silently mismatching)
-                require(args.length == 2, "bag_has_key expects (bag, key)")
-                val keyLit = args(1).trim
-                require(!(keyLit.startsWith("'$") || keyLit.startsWith("\"$")),
-                  s"bag_has_key supports top-level keys only (JSON paths unsupported): $keyLit")
-                out.append(s"(CASE WHEN startswith(CAST((${args(0)}) AS STRING), '{') " +
-                  s"THEN coalesce(array_contains(json_object_keys(CAST((${args(0)}) AS STRING)), ${args(1)}), false) " +
-                  s"ELSE CAST(NULL AS BOOLEAN) END)")
-              case "bag_merge" =>
-                // ADX bag_merge(bag1, bag2): union of top-level
-                // properties, FIRST argument wins on key conflicts.
-                // Both bags cast to MAP<STRING, VARIANT>; the second
-                // filters out keys the first already holds, so
-                // map_concat never sees a duplicate (no dependence on
-                // spark.sql.mapKeyDedupPolicy). Non-object input →
-                // null.
-                require(args.length == 2, "bag_merge expects (bag1, bag2)")
-                val (m1, m2) = (s"try_cast(${args(0)} AS MAP<STRING, VARIANT>)",
-                  s"try_cast(${args(1)} AS MAP<STRING, VARIANT>)")
-                out.append(s"element_at(transform(array(named_struct('a', $m1, 'b', $m2)), bm -> " +
-                  s"CASE WHEN bm.a IS NULL OR bm.b IS NULL THEN CAST(NULL AS VARIANT) " +
-                  s"ELSE parse_json(to_json(map_concat(bm.a, " +
-                  s"map_filter(bm.b, (bk, bv) -> NOT array_contains(map_keys(bm.a), bk))))) END), 1)")
-              case "bag_remove_keys" =>
-                // ADX bag_remove_keys(bag, keys): drops the listed
-                // TOP-LEVEL keys (ADX also accepts '$.'-prefixed JSON
-                // paths in the list — unsupported here, documented:
-                // list entries are treated as literal top-level keys,
-                // matching ADX for non-path entries). Survivors render
-                // in canonical sorted-key order (the VARIANT round
-                // trip re-canonicalizes). Non-object bag or null key
-                // list → null, the bag_merge convention.
-                require(args.length == 2, "bag_remove_keys expects (bag, keys)")
-                val (bm, bks) = (s"try_cast(${args(0)} AS MAP<STRING, VARIANT>)",
-                  s"try_cast(${args(1)} AS ARRAY<STRING>)")
-                out.append(s"element_at(transform(array(named_struct('m', $bm, 'ks', $bks)), brt -> " +
-                  s"CASE WHEN brt.m IS NULL OR brt.ks IS NULL THEN CAST(NULL AS VARIANT) " +
-                  s"ELSE parse_json(to_json(map_filter(brt.m, (brk, brv) -> " +
-                  s"NOT array_contains(brt.ks, brk)))) END), 1)")
-              case "bag_set_key" =>
-                // ADX bag_set_key(bag, key, value): upsert one
-                // TOP-LEVEL property ('$'-prefixed JSON paths rejected
-                // loudly, the bag_has_key convention). ADX leaves
-                // result key order unspecified; here the VARIANT
-                // round trip canonicalizes to sorted-key order
-                // (deterministic, the engine-wide bag convention).
-                // Any value type goes through one
-                // cast-to-VARIANT (scalars, arrays, bags, null — a
-                // null value sets the key to JSON null, matching ADX).
-                // Non-object bag or null key → null.
-                require(args.length == 3, "bag_set_key expects (bag, key, value)")
-                val keyArg = args(1).trim
-                require(!(keyArg.startsWith("'$") || keyArg.startsWith("\"$")),
-                  s"bag_set_key supports top-level keys only (JSON paths unsupported): $keyArg")
-                // The guard above only sees LITERAL key arguments; a
-                // computed key that evaluates to a '$'-prefixed path
-                // (strcat('$', '.a')) would otherwise be treated
-                // silently as a literal top-level key, diverging from
-                // ADX's path semantics without the documented error —
-                // so the same reject is enforced at runtime too.
-                val bsm = s"try_cast(${args(0)} AS MAP<STRING, VARIANT>)"
-                out.append(s"element_at(transform(array(named_struct('m', $bsm, " +
-                  s"'k', CAST((${args(1)}) AS STRING), 'v', cast((${args(2)}) AS VARIANT))), bst -> " +
-                  s"CASE WHEN bst.m IS NULL OR bst.k IS NULL THEN CAST(NULL AS VARIANT) " +
-                  s"WHEN startswith(bst.k, '$$') THEN cast(raise_error(concat(" +
-                  s"'bag_set_key supports top-level keys only (JSON paths unsupported): ', bst.k)) AS VARIANT) " +
-                  s"ELSE parse_json(to_json(CASE WHEN array_contains(map_keys(bst.m), bst.k) " +
-                  s"THEN transform_values(bst.m, (bsk, bsv) -> IF(bsk = bst.k, bst.v, bsv)) " +
-                  s"ELSE map_concat(bst.m, map(bst.k, bst.v)) END)) END), 1)")
-              case "dcount_intersect" =>
-                // ADX dcount_intersect over two hll() sketches:
-                // inclusion–exclusion on DataSketches estimates —
-                // |A∩B| ≈ est(A) + est(B) − est(A∪B). Two-sketch form
-                // only (ADX takes up to three — rejected by the arity
-                // check); can go slightly negative on tiny overlaps,
-                // clamped at 0 like ADX.
-                require(args.length == 2, "dcount_intersect expects (hll1, hll2)")
-                val (h1, h2) = (args(0), args(1))
-                out.append(s"greatest(0L, hll_sketch_estimate($h1) + " +
-                  s"hll_sketch_estimate($h2) - hll_sketch_estimate(hll_union($h1, $h2)))")
-              case cf @ ("convert_length" | "convert_mass" | "convert_speed" |
-                         "convert_angle" | "convert_energy" | "convert_volume" |
-                         "convert_force") =>
-                // ADX convert_*(value, from, to) → value in `to` units.
-                // Units must be string LITERALS (the factor compiles
-                // into the plan; UnitsNet enum names, documented subset
-                // below — unknown units reject loudly listing the
-                // supported set). value · f_from / f_to with exact
-                // published factors (international yard/pound etc.),
-                // the same literal arithmetic the oracle replays.
-                require(args.length == 3, s"$cf expects (value, from, to)")
-                def unitLit(a: String): String = {
-                  val t = a.trim
-                  require(t.length >= 2 &&
-                      (t.head == '\'' || t.head == '"') && t.last == t.head,
-                    s"$cf units must be string literals: $a")
-                  t.substring(1, t.length - 1)
-                }
-                val table: Map[String, String] = cf match {
-                  case "convert_length" => Map(
-                    "Meter" -> "1.0", "Kilometer" -> "1000.0",
-                    "Centimeter" -> "0.01", "Millimeter" -> "0.001",
-                    "Micrometer" -> "0.000001", "Nanometer" -> "1.0E-9",
-                    "Mile" -> "1609.344", "Yard" -> "0.9144",
-                    "Foot" -> "0.3048", "Inch" -> "0.0254",
-                    "NauticalMile" -> "1852.0")
-                  case "convert_mass" => Map(
-                    "Kilogram" -> "1.0", "Gram" -> "0.001",
-                    "Milligram" -> "0.000001", "Tonne" -> "1000.0",
-                    "Pound" -> "0.45359237", "Ounce" -> "0.028349523125",
-                    "Stone" -> "6.35029318")
-                  case "convert_speed" => Map(
-                    "MeterPerSecond" -> "1.0",
-                    "KilometerPerHour" -> "0.2777777777777778",
-                    "MilePerHour" -> "0.44704",
-                    "Knot" -> "0.5144444444444445",
-                    "FootPerSecond" -> "0.3048")
-                  case "convert_angle" => Map(
-                    "Radian" -> "1.0",
-                    "Degree" -> "0.017453292519943295",
-                    "Gradian" -> "0.015707963267948967",
-                    "Arcminute" -> "2.908882086657216E-4",
-                    "Arcsecond" -> "4.84813681109536E-6",
-                    "Revolution" -> "6.283185307179586")
-                  case "convert_energy" => Map(
-                    "Joule" -> "1.0", "Kilojoule" -> "1000.0",
-                    "Calorie" -> "4.184", "Kilocalorie" -> "4184.0",
-                    "WattHour" -> "3600.0", "KilowattHour" -> "3600000.0",
-                    "BritishThermalUnit" -> "1055.05585262",
-                    "ElectronVolt" -> "1.602176634E-19")
-                  case "convert_volume" => Map(
-                    "CubicMeter" -> "1.0", "Liter" -> "0.001",
-                    "Milliliter" -> "0.000001",
-                    "CubicFoot" -> "0.028316846592",
-                    "CubicInch" -> "0.000016387064",
-                    "UsGallon" -> "0.003785411784",
-                    "ImperialGallon" -> "0.00454609")
-                  case _ => Map( // convert_force
-                    "Newton" -> "1.0", "Kilonewton" -> "1000.0",
-                    "PoundForce" -> "4.4482216152605",
-                    "KilogramForce" -> "9.80665", "Dyn" -> "0.00001")
-                }
-                val (fu, tu) = (unitLit(args(1)), unitLit(args(2)))
-                for (u <- Seq(fu, tu)) require(table.contains(u),
-                  s"$cf: unsupported unit '$u' — supported: ${table.keys.toSeq.sorted.mkString(", ")}")
-                out.append(s"(CAST((${args(0)}) AS DOUBLE) * ${table(fu)} / ${table(tu)})")
-              case "convert_temperature" =>
-                // Affine (not a pure factor): via Kelvin. Supported:
-                // Kelvin, DegreeCelsius, DegreeFahrenheit (literal
-                // units, same rules as the factor family).
-                require(args.length == 3,
-                  "convert_temperature expects (value, from, to)")
-                def tUnit(a: String): String = {
-                  val t = a.trim
-                  require(t.length >= 2 &&
-                      (t.head == '\'' || t.head == '"') && t.last == t.head,
-                    s"convert_temperature units must be string literals: $a")
-                  t.substring(1, t.length - 1)
-                }
-                val supported = Set("Kelvin", "DegreeCelsius", "DegreeFahrenheit")
-                val (fu, tu) = (tUnit(args(1)), tUnit(args(2)))
-                for (u <- Seq(fu, tu)) require(supported(u),
-                  s"convert_temperature: unsupported unit '$u' — supported: ${supported.toSeq.sorted.mkString(", ")}")
-                // ×5 then ÷9 on the DOUBLE value (never a bare literal
-                // `5.0 / 9.0` subexpression — Spark types that DECIMAL
-                // and rounds the quotient to 6 digits)
-                val k = fu match {
-                  case "Kelvin" => s"(CAST((${args(0)}) AS DOUBLE))"
-                  case "DegreeCelsius" => s"(CAST((${args(0)}) AS DOUBLE) + 273.15)"
-                  case _ => s"((CAST((${args(0)}) AS DOUBLE) + 459.67) * 5.0 / 9.0)"
-                }
-                out.append(tu match {
-                  case "Kelvin" => k
-                  case "DegreeCelsius" => s"($k - 273.15)"
-                  case _ => s"($k * 1.8 - 459.67)"
-                })
-              case "around" =>
-                // ADX around(value, center, delta) → value within
-                // [center-delta, center+delta] inclusive.
-                require(args.length == 3,
-                  "around expects (value, center, delta)")
-                out.append(s"((${args(0)}) BETWEEN ((${args(1)}) - (${args(2)})) " +
-                  s"AND ((${args(1)}) + (${args(2)})))")
-              case "base64_encode_fromguid" =>
-                // r15: GUID → base64 of its 16 bytes in the .NET
-                // Guid.ToByteArray order ADX uses: the first three
-                // groups little-endian (4+2+2 bytes reversed
-                // pairwise), the last 8 bytes big-endian. Pure hex
-                // slicing, mirrored verbatim; non-GUID input → null.
-                require(args.length == 1, "base64_encode_fromguid expects (guid)")
-                val hx = "[0-9a-f]"
-                out.append(s"element_at(transform(array(" +
-                  s"replace(lower(CAST((${args(0)}) AS STRING)), '-', '')), bgh -> " +
-                  s"CASE WHEN lower(CAST((${args(0)}) AS STRING)) RLIKE " +
-                  s"'^$hx{8}-$hx{4}-$hx{4}-$hx{4}-$hx{12}$$' THEN " +
-                  s"base64(unhex(concat(" +
-                  s"substr(bgh, 7, 2), substr(bgh, 5, 2), substr(bgh, 3, 2), substr(bgh, 1, 2), " +
-                  s"substr(bgh, 11, 2), substr(bgh, 9, 2), " +
-                  s"substr(bgh, 15, 2), substr(bgh, 13, 2), " +
-                  s"substr(bgh, 17, 16)))) END), 1)")
-              case "base64_decode_toguid" =>
-                // r15: inverse — base64 → 16 bytes → canonical
-                // lowercase GUID (the .NET byte order undone); wrong
-                // payload size or bad base64 → null.
-                require(args.length == 1, "base64_decode_toguid expects (base64)")
-                out.append(s"element_at(transform(array(" +
-                  s"lower(hex(unbase64(CAST((${args(0)}) AS STRING))))), bdh -> " +
-                  s"CASE WHEN bdh RLIKE '^[0-9a-f]{32}$$' THEN concat(" +
-                  s"substr(bdh, 7, 2), substr(bdh, 5, 2), substr(bdh, 3, 2), substr(bdh, 1, 2), '-', " +
-                  s"substr(bdh, 11, 2), substr(bdh, 9, 2), '-', " +
-                  s"substr(bdh, 15, 2), substr(bdh, 13, 2), '-', " +
-                  s"substr(bdh, 17, 4), '-', substr(bdh, 21, 12)) END), 1)")
-              case "isascii" =>
-                // r15: ADX isascii(s) — every codepoint ≤ 127. One
-                // anchored RE2/Java-common class test; null → null
-                // (rlike's null propagation).
-                require(args.length == 1, "isascii expects (string)")
-                out.append(s"((${args(0)}) RLIKE '^[\\\\x00-\\\\x7f]*$$')")
-              case "toguid" =>
-                // r15: ADX toguid(s) — canonical 8-4-4-4-12 GUID
-                // (lowercased) or null. The guid type surfaces as its
-                // canonical STRING here (the timespan-as-seconds
-                // convention class).
-                require(args.length == 1, "toguid expects (string)")
-                val hx = "[0-9a-f]"
-                out.append(s"(CASE WHEN lower(CAST((${args(0)}) AS STRING)) RLIKE " +
-                  s"'^$hx{8}-$hx{4}-$hx{4}-$hx{4}-$hx{12}$$' " +
-                  s"THEN lower(CAST((${args(0)}) AS STRING)) END)")
-              case "todecimal" =>
-                // r15: ADX todecimal(v) — 128-bit decimal. Surfaces as
-                // DECIMAL(38, 10) (documented precision bound; ADX's
-                // dynamic scale has no Spark/DuckDB analogue);
-                // unparseable → null via try_cast.
-                require(args.length == 1, "todecimal expects (value)")
-                out.append(s"try_cast((${args(0)}) AS DECIMAL(38, 10))")
-              case "strcmp" =>
-                // r15: ordinal 3-way compare. Both engines order
-                // strings by raw bytes (Spark UTF8String, DuckDB
-                // memcmp) so the sign agrees on any UTF-8 input;
-                // null in → null out (no-ELSE CASE).
-                require(args.length == 2, "strcmp expects (s1, s2)")
-                out.append(s"(CASE WHEN (${args(0)}) < (${args(1)}) THEN -1 " +
-                  s"WHEN (${args(0)}) = (${args(1)}) THEN 0 " +
-                  s"WHEN (${args(0)}) > (${args(1)}) THEN 1 END)")
-              case "regex_quote" =>
-                // r15: escape the RE2/Java-common metacharacters with
-                // a backslash — one regexp_replace with a character
-                // class, global in Spark by default (the oracle adds
-                // DuckDB's 'g' flag). \Q..\E would be Java-only.
-                require(args.length == 1, "regex_quote expects (string)")
-                out.append(s"regexp_replace(${args(0)}, " +
-                  "'([.^$*+?()\\\\[\\\\]{}|\\\\\\\\])', '\\\\\\\\$1')")
-              case "array_sort_desc" =>
-                // r15: descending sibling of the array_sort_asc rename
-                // (sort_array's second arg). Nulls sort LAST both ways
-                // here (Spark's desc convention; asc's nulls-first is
-                // documented at the rename) — the multi-array form is
-                // not supported, matching array_sort_asc.
-                require(args.length == 1,
-                  "array_sort_desc expects (array) — the multi-array form is not supported")
-                out.append(s"sort_array(${args(0)}, false)")
-              case "jaccard_index" =>
-                // r15: |A∩B| / |A∪B| over the DISTINCT elements (ADX
-                // treats the inputs as sets); both-empty → null (0/0
-                // via nullif), ADX's real-division convention.
-                require(args.length == 2, "jaccard_index expects (set1, set2)")
-                out.append(s"(CAST(size(array_intersect(${args(0)}, ${args(1)})) AS DOUBLE) " +
-                  s"/ nullif(size(array_union(${args(0)}, ${args(1)})), 0))")
-              case "bag_zip" =>
-                // r15: ADX bag_zip(keys, values) → property bag. Keys
-                // cast to string; length mismatch or null side → null
-                // (ADX contract); null keys drop; duplicate keys keep
-                // the FIRST occurrence (deterministic — ADX leaves it
-                // unspecified; the make_bag first-wins convention);
-                // the VARIANT round trip canonicalizes to sorted-key
-                // order (engine-wide bag convention).
-                require(args.length == 2, "bag_zip expects (keys, values)")
-                out.append(s"element_at(transform(array(named_struct(" +
-                  s"'k', try_cast(${args(0)} AS ARRAY<STRING>), " +
-                  s"'v', try_cast(${args(1)} AS ARRAY<VARIANT>))), bzt -> " +
-                  s"CASE WHEN bzt.k IS NULL OR bzt.v IS NULL " +
-                  s"OR size(bzt.k) <> size(bzt.v) THEN CAST(NULL AS VARIANT) " +
-                  s"ELSE parse_json(to_json(map_from_arrays(" +
-                  s"transform(filter(sequence(1, size(bzt.k)), bzi -> " +
-                  s"element_at(bzt.k, bzi) IS NOT NULL AND " +
-                  s"array_position(bzt.k, element_at(bzt.k, bzi)) = bzi), " +
-                  s"bzi -> element_at(bzt.k, bzi)), " +
-                  s"transform(filter(sequence(1, size(bzt.k)), bzi -> " +
-                  s"element_at(bzt.k, bzi) IS NOT NULL AND " +
-                  s"array_position(bzt.k, element_at(bzt.k, bzi)) = bzi), " +
-                  s"bzi -> element_at(bzt.v, bzi))))) END), 1)")
-              case "base64_encode_fromarray" =>
-                // r15: bytes array → base64 (the decode_toarray
-                // inverse). Elements are taken mod 256 (signed bytes
-                // accepted); the fold renders each byte as 2 hex
-                // digits and unhex()es once — a per-element string
-                // fold, fine at the bounded array sizes this surface
-                // carries (same tradeoff as strcat_array).
-                require(args.length == 1,
-                  "base64_encode_fromarray expects (bytes array)")
-                out.append(s"base64(unhex(aggregate(" +
-                  s"try_cast(${args(0)} AS ARRAY<INT>), '', " +
-                  s"(b64acc, b64x) -> concat(b64acc, " +
-                  s"lpad(hex((b64x % 256 + 256) % 256), 2, '0')))))")
-              case "array_split" =>
-                // ADX array_split(arr, index|indices) → array of
-                // subarrays split BEFORE each zero-based index
-                // (negative indices count from the end; out-of-range
-                // clamps, so pieces can be empty). The split points
-                // may be one int or a dynamic array of ints; indices
-                // are assumed ascending (ADX's contract). Null arr or
-                // null indices → null.
-                require(args.length == 2,
-                  "array_split expects (arr, index or indices)")
-                val asArr = s"try_cast(${args(0)} AS ARRAY<VARIANT>)"
-                // The indices arg is either one int or an array of
-                // ints; the two shapes need DIFFERENT casts and an
-                // int→array cast is an analysis-time error, so the
-                // shape is decided at parse time: dynamic([...]) (raw —
-                // scalar() leaves it untouched), array(...) (the
-                // pack_array rename), or parse_json(...) are array
-                // forms; anything else is a scalar index expression.
-                val ixRaw = args(1).trim
-                val ixLower = ixRaw.toLowerCase
-                val asIx =
-                  if (ixLower.startsWith("dynamic(")) {
-                    val inner = ixRaw.substring(ixRaw.indexOf('(') + 1,
-                      ixRaw.length - 1).trim
-                    require(inner.startsWith("[") && inner.endsWith("]"),
-                      s"array_split indices must be dynamic([...]): $ixRaw")
-                    s"try_cast(array(${inner.substring(1, inner.length - 1)}) AS ARRAY<INT>)"
-                  } else if (ixLower.startsWith("array(") ||
-                             ixLower.startsWith("parse_json("))
-                    s"try_cast($ixRaw AS ARRAY<INT>)"
-                  else s"array(CAST(($ixRaw) AS INT))"
-                out.append(s"element_at(transform(array(named_struct(" +
-                  s"'a', $asArr, 'ix', $asIx)), asp -> " +
-                  s"CASE WHEN asp.a IS NULL OR exists(asp.ix, asv -> asv IS NULL) " +
-                  s"THEN CAST(NULL AS ARRAY<ARRAY<VARIANT>>) ELSE " +
-                  // bounds = [0] ++ clamp(ix) ++ [size]; piece j =
-                  // slice(a, bounds[j]+1, bounds[j+1]-bounds[j])
-                  s"transform(sequence(1, size(asp.ix) + 1), asj -> " +
-                  s"element_at(transform(array(concat(array(0), " +
-                  s"transform(asp.ix, asv -> CASE WHEN asv < 0 " +
-                  s"THEN greatest(0, size(asp.a) + asv) " +
-                  s"ELSE least(asv, size(asp.a)) END), " +
-                  s"array(size(asp.a)))), asb -> " +
-                  s"slice(asp.a, element_at(asb, asj) + 1, " +
-                  s"greatest(0, element_at(asb, asj + 1) - element_at(asb, asj)))), 1)) " +
-                  s"END), 1)")
-              case "has_any_index" =>
-                // ADX has_any_index(source, values) → the zero-based
-                // index IN `values` of the first value the source
-                // `has` (case-insensitive whole-term match, the same
-                // semantics as the has operator); -1 when none match.
-                // `values` must be a parse-time literal list
-                // (dynamic([...]) or pack_array(...)) of string
-                // literals — the term regexes compile into the plan.
-                require(args.length == 2,
-                  "has_any_index expects (source, values)")
-                val rawList = args(1).trim
-                val lowerList = rawList.toLowerCase
-                // dynamic([...]) passes through scalar() untouched;
-                // pack_array(...) arrives renamed to array(...);
-                // todynamic('[..]') arrives as parse_json('[..]').
-                val innerList =
-                  if (lowerList.startsWith("dynamic(") ||
-                      lowerList.startsWith("array(") ||
-                      lowerList.startsWith("parse_json("))
-                    rawList.substring(rawList.indexOf('(') + 1, rawList.length - 1)
-                  else throw new IllegalArgumentException(
-                    s"has_any_index values must be a literal dynamic([...]) or pack_array(...): $rawList")
-                val stripped0 = innerList.trim
-                // parse_json's payload is itself a quoted JSON literal
-                val stripped1 =
-                  if (stripped0.length >= 2 && stripped0.head == '\'' &&
-                      stripped0.last == '\'')
-                    stripped0.substring(1, stripped0.length - 1).trim
-                  else stripped0
-                val inner2 = stripped1.stripPrefix("[").stripSuffix("]")
-                val terms = splitTopLevel(inner2, ',').map(_.trim).filter(_.nonEmpty)
-                require(terms.nonEmpty && terms.forall(t =>
-                    t.length >= 2 && (t.head == '\'' || t.head == '"') && t.last == t.head),
-                  s"has_any_index expects a literal list of strings: $rawList")
-                val whens = terms.zipWithIndex.map { case (t, ti) =>
-                  s"WHEN ${hasTermSql(args(0), t.substring(1, t.length - 1))} THEN $ti"
-                }.mkString(" ")
-                out.append(s"(CASE $whens ELSE -1 END)")
-              case "hash_md5" =>
-                // ADX hash_md5(source) → lowercase hex digest of the
-                // string form (casted, matching ADX's string coercion).
-                require(args.length == 1, "hash_md5 expects (source)")
-                out.append(s"md5(CAST((${args(0)}) AS STRING))")
-              case "hash_sha1" =>
-                require(args.length == 1, "hash_sha1 expects (source)")
-                out.append(s"sha1(CAST((${args(0)}) AS STRING))")
-              case "hash_sha256" =>
-                require(args.length == 1, "hash_sha256 expects (source)")
-                out.append(s"sha2(CAST((${args(0)}) AS STRING), 256)")
-              case "gamma" =>
-                // ADX gamma(x) → Γ(x). exp of the loggamma chain —
-                // see loggammaSql for the Lanczos construction and
-                // the positive-domain deviation.
-                require(args.length == 1, "gamma expects (x)")
-                out.append(s"exp(${loggammaSql(args(0))})")
-              case "loggamma" =>
-                // ADX loggamma(x) → ln|Γ(x)|. DEVIATION (documented at
-                // loggammaSql): x > 0 only (negative non-integers via
-                // reflection unsupported; x ≤ 0 → null).
-                require(args.length == 1, "loggamma expects (x)")
-                out.append(loggammaSql(args(0)))
-              case "beta_cdf" =>
-                // ADX beta_cdf(x, alpha, beta) → the regularized
-                // incomplete beta I_x(α, β). Native codegen kernel
-                // (graft.functions.SpecialMath.ibeta — fixed
-                // 200-iteration Lentz fraction): the former SQL
-                // higher-order fold evaluated interpreted and cost
-                // seconds of analysis + eval per query (r15 verdict
-                // #3); the kernel runs the identical IEEE op sequence,
-                // so the oracle's recursive-CTE replay (same shared
-                // builders) still matches bit-for-bit.
-                require(args.length == 3, "beta_cdf expects (x, alpha, beta)")
-                out.append(s"graft_ibeta(CAST((${args(1)}) AS DOUBLE), " +
-                  s"CAST((${args(2)}) AS DOUBLE), CAST((${args(0)}) AS DOUBLE))")
-              case "beta_pdf" =>
-                // ADX beta_pdf(x, alpha, beta) = x^(α−1)(1−x)^(β−1)/B(α,β)
-                // via the Lanczos lnΓ chains; outside (0,1) → 0,
-                // non-positive shape → null.
-                require(args.length == 3, "beta_pdf expects (x, alpha, beta)")
-                out.append(s"element_at(transform(array(named_struct(" +
-                  s"'x', CAST((${args(0)}) AS DOUBLE), " +
-                  s"'a', CAST((${args(1)}) AS DOUBLE), " +
-                  s"'b', CAST((${args(2)}) AS DOUBLE))), bpq -> " +
-                  s"CASE WHEN bpq.a <= 0.0 OR bpq.b <= 0.0 THEN CAST(NULL AS DOUBLE) " +
-                  s"WHEN bpq.x <= 0.0 OR bpq.x >= 1.0 THEN 0.0 " +
-                  s"ELSE exp((bpq.a - 1.0) * ln(bpq.x) + (bpq.b - 1.0) * ln(1.0 - bpq.x) " +
-                  s"+ ${loggammaSql("bpq.a + bpq.b")} - ${loggammaSql("bpq.a")} " +
-                  s"- ${loggammaSql("bpq.b")}) END), 1)")
-              case "erf" =>
-                // ADX erf(x) — native codegen kernel (SpecialMath.erf:
-                // fixed 160-term confluent series, ±1 saturation past
-                // |x| = 6; oracle replays the same series as a
-                // recursive CTE from the shared erfFoldStep builder).
-                require(args.length == 1, "erf expects (x)")
-                out.append(s"graft_erf(CAST((${args(0)}) AS DOUBLE))")
-              case "erfc" =>
-                // ADX erfc(x) = 1 − erf(x). DEVIATION (documented):
-                // computed BY that subtraction, so relative accuracy
-                // degrades in the far tail (absolute error stays
-                // ~1 ulp of 1 — invisible at the micro-unit
-                // surfaces); a dedicated continued fraction would not
-                // mirror into the oracle any better.
-                require(args.length == 1, "erfc expects (x)")
-                out.append(s"(1.0 - graft_erf(CAST((${args(0)}) AS DOUBLE)))")
-              case "beta_inv" =>
-                // ADX beta_inv(p, alpha, beta) — native codegen kernel
-                // (SpecialMath.betaInv: 24-iteration bisection-
-                // safeguarded Newton over the 200-step Lentz fraction,
-                // identical IEEE op order to the oracle's flattened
-                // recursion).
-                require(args.length == 3, "beta_inv expects (p, alpha, beta)")
-                out.append(s"graft_beta_inv(CAST((${args(0)}) AS DOUBLE), " +
-                  s"CAST((${args(1)}) AS DOUBLE), CAST((${args(2)}) AS DOUBLE))")
-              case "welch_test" =>
-                // ADX welch_test(mean1, var1, count1, mean2, var2,
-                // count2) → two-sided p-value of Welch's unequal-
-                // variance t-test: t = (m1−m2)/√(v1/n1 + v2/n2),
-                // Welch–Satterthwaite df, p = I_{df/(df+t²)}(df/2, ½)
-                // (the t-CDF tail via one ibeta call — same fixed-
-                // iteration fraction as beta_cdf, fully mirrored by
-                // the oracle). counts must be ≥ 2 and variances ≥ 0
-                // with a positive pooled SE → else null.
-                require(args.length == 6,
-                  "welch_test expects (mean1, var1, count1, mean2, var2, count2)")
-                val binder = s"named_struct(" +
-                  s"'m1', CAST((${args(0)}) AS DOUBLE), 'v1', CAST((${args(1)}) AS DOUBLE), " +
-                  s"'n1', CAST((${args(2)}) AS DOUBLE), 'm2', CAST((${args(3)}) AS DOUBLE), " +
-                  s"'v2', CAST((${args(4)}) AS DOUBLE), 'n2', CAST((${args(5)}) AS DOUBLE))"
-                val se2 = "(wtq.v1 / wtq.n1 + wtq.v2 / wtq.n2)"
-                val df = s"($se2 * $se2 / " +
-                  s"((wtq.v1 / wtq.n1) * (wtq.v1 / wtq.n1) / (wtq.n1 - 1.0) " +
-                  s"+ (wtq.v2 / wtq.n2) * (wtq.v2 / wtq.n2) / (wtq.n2 - 1.0)))"
-                val t2 = s"((wtq.m1 - wtq.m2) * (wtq.m1 - wtq.m2) / $se2)"
-                out.append(s"element_at(transform(array($binder), wtq -> " +
-                  s"CASE WHEN wtq.n1 < 2.0 OR wtq.n2 < 2.0 OR wtq.v1 < 0.0 " +
-                  s"OR wtq.v2 < 0.0 OR $se2 <= 0.0 THEN CAST(NULL AS DOUBLE) " +
-                  s"ELSE graft_ibeta(CAST(($df / 2.0) AS DOUBLE), " +
-                  s"CAST(0.5 AS DOUBLE), CAST(($df / ($df + $t2)) AS DOUBLE)) " +
-                  s"END), 1)")
-              case "unicode_codepoints_from_string" =>
-                // ADX unicode_codepoints_from_string(s) → dynamic
-                // array of codepoints. Native expression
-                // (graft.functions.Unicode): Spark-side SQL routes
-                // fail outside Latin-1 (chr is mod-256) and per-index
-                // substring probing is O(n²); pure integer transcode,
-                // astral-safe, mirrored bit-exactly by the oracle.
-                require(args.length == 1,
-                  "unicode_codepoints_from_string expects (string)")
-                graft.functions.GraftFunctions.register(
-                  org.apache.spark.sql.SparkSession.active)
-                out.append(s"graft_codepoints(CAST((${args(0)}) AS STRING))")
-              case "unicode_codepoints_to_string" =>
-                // Inverse: null on any invalid codepoint.
-                require(args.length == 1,
-                  "unicode_codepoints_to_string expects (array)")
-                graft.functions.GraftFunctions.register(
-                  org.apache.spark.sql.SparkSession.active)
-                out.append(s"graft_from_codepoints(" +
-                  s"try_cast(${args(0)} AS ARRAY<INT>))")
-              case ue @ ("url_encode" | "url_encode_component") =>
-                // r15: percent-encoding as a pure hex-pair fold over
-                // the UTF-8 bytes (hex(encode(s))), so multi-byte
-                // characters percent-encode byte-by-byte exactly as
-                // RFC 3986 prescribes and the oracle replays the
-                // identical walk. Unreserved set = ALPHA / DIGIT /
-                // "-" / "." / "_" / "~" (RFC 3986 §2.3); url_encode
-                // additionally renders space as '+' (the ADX form
-                // variant). Hex digits LOWERCASE (ADX's rendering).
-                // DEVIATION (documented): ADX/.NET leaves !*() bare;
-                // here they percent-encode (the RFC-strict set).
-                require(args.length == 1, s"$ue expects (string)")
-                val uh = s"hex(encode(CAST((${args(0)}) AS STRING), 'UTF-8'))"
-                val pair = s"substr(ueq.h, 2 * uei - 1, 2)"
-                val byte = s"CAST(conv($pair, 16, 10) AS INT)"
-                val spaceArm =
-                  if (ue == "url_encode") s"WHEN $byte = 32 THEN '+' " else ""
-                // empty-h guard: sequence(1, 0) DESCENDS in Spark
-                out.append(s"element_at(transform(array(named_struct('h', $uh)), ueq -> " +
-                  s"CASE WHEN ueq.h IS NULL THEN CAST(NULL AS STRING) " +
-                  s"WHEN length(ueq.h) = 0 THEN '' " +
-                  s"ELSE aggregate(sequence(1, length(ueq.h) DIV 2), '', (ueacc, uei) -> " +
-                  s"ueacc || CASE WHEN ($byte BETWEEN 48 AND 57) " +
-                  s"OR ($byte BETWEEN 65 AND 90) OR ($byte BETWEEN 97 AND 122) " +
-                  s"OR $byte IN (45, 46, 95, 126) THEN char($byte) " +
-                  spaceArm +
-                  s"ELSE '%' || lower($pair) END) END), 1)")
-              case "url_decode" =>
-                // r15: inverse percent-decoding — '+' → space first
-                // (the ADX form variant), then split on '%': every
-                // later piece must LEAD with two hex digits (else
-                // null, the loud-malformed convention); the byte
-                // stream is reassembled as hex (literal runs through
-                // hex(encode(..)), pairs verbatim) and decoded once,
-                // so split multi-byte sequences reassemble exactly.
-                require(args.length == 1, "url_decode expects (string)")
-                val parts = s"split(replace(CAST((${args(0)}) AS STRING), '+', ' '), '%', -1)"
-                out.append(s"element_at(transform(array($parts), udp -> " +
-                  s"CASE WHEN exists(slice(udp, 2, size(udp)), udx -> " +
-                  s"NOT (length(udx) >= 2 AND upper(substr(udx, 1, 2)) RLIKE '^[0-9A-F]{2}$$')) " +
-                  s"THEN CAST(NULL AS STRING) " +
-                  s"ELSE decode(unhex(aggregate(slice(udp, 2, size(udp)), " +
-                  s"hex(encode(element_at(udp, 1), 'UTF-8')), (udacc, udx) -> " +
-                  s"udacc || upper(substr(udx, 1, 2)) " +
-                  s"|| hex(encode(substr(udx, 3, 2147483647), 'UTF-8')))), 'UTF-8') END), 1)")
-              case "extractjson" | "extract_json" =>
-                // r15: ADX extractjson(jsonPath, dataSource[, typeof])
-                // — JSON-text extraction by a LITERAL '$'-path
-                // (compiled into the plan as variant_get's path; keys
-                // containing a quote reject, the variant-path
-                // convention). Optional third arg `typeof(t)` casts
-                // the extracted VARIANT.
-                require(args.length == 2 || args.length == 3,
-                  s"${w.toLowerCase} expects (jsonPath, dataSource[, typeof(t)])")
-                val pRaw = args(0).trim
-                require(pRaw.length >= 2 &&
-                    (pRaw.head == '\'' || pRaw.head == '"') && pRaw.last == pRaw.head,
-                  s"${w.toLowerCase} path must be a string literal: $pRaw")
-                val pIn = pRaw.substring(1, pRaw.length - 1)
-                require(pIn.startsWith("$"),
-                  s"${w.toLowerCase} path must start with '$$': $pIn")
-                require(!pIn.contains('\''),
-                  s"${w.toLowerCase} path cannot contain a single quote " +
-                    s"(cannot ride variant_get's single-quoted path): $pIn")
-                val ejBase = s"variant_get(parse_json(${args(1)}), '$pIn')"
-                if (args.length == 3) {
-                  val tRaw = args(2).trim
-                  val TypeofEj = "(?i)^typeof\\s*\\(\\s*([A-Za-z_][A-Za-z0-9_]*)\\s*\\)$".r
-                  tRaw match {
-                    case TypeofEj(t) =>
-                      out.append(s"try_cast($ejBase AS ${kqlTypeToSpark(t)})")
-                    case other => throw new IllegalArgumentException(
-                      s"${w.toLowerCase} third argument must be typeof(type): $other")
-                  }
-                } else out.append(ejBase)
-              case "parse_command_line" =>
-                // r15: Windows CommandLineToArgvW splitting
-                // (graft.functions.CommandLine — the published MSDN
-                // backslash/quote rules need a character state
-                // machine). Only the 'windows' parser type exists (as
-                // in ADX); anything else rejects loudly.
-                require(args.length == 2,
-                  "parse_command_line expects (command, 'windows')")
-                val ty = args(1).trim.toLowerCase
-                require(ty == "'windows'" || ty == "\"windows\"",
-                  s"parse_command_line: only the 'windows' parser type is supported: ${args(1)}")
-                graft.functions.GraftFunctions.register(
-                  org.apache.spark.sql.SparkSession.active)
-                out.append(s"graft_parse_cmdline(CAST((${args(0)}) AS STRING))")
-              case "parse_csv" =>
-                // r15: one CSV record → array of fields
-                // (graft.functions.CsvParse — a native expression:
-                // RFC 4180 quoting with "" escapes needs a character
-                // state machine no SQL split expresses). Embedded
-                // newlines survive inside quotes; a dangling quote →
-                // null (loud-malformed convention; ADX best-effort
-                // differs, documented at the expression).
-                require(args.length == 1, "parse_csv expects (string)")
-                graft.functions.GraftFunctions.register(
-                  org.apache.spark.sql.SparkSession.active)
-                out.append(s"graft_parse_csv(CAST((${args(0)}) AS STRING))")
-              case cz @ ("gzip_compress_to_base64_string" |
-                         "gzip_decompress_from_base64_string" |
-                         "zlib_compress_to_base64_string" |
-                         "zlib_decompress_from_base64_string") =>
-                // r15: ADX compression codecs — native expressions
-                // over java.util.zip (RFC 1952/1950 framing, UTF-8
-                // text, standard base64). Compressed BYTES are a
-                // zlib-implementation detail (ADX's encoder differs
-                // from the JDK's), so the oracle contract is the
-                // round-trip identity + spec-pinned header bytes — see
-                // graft.functions.Codecs. Malformed decompress input →
-                // null (documented deviation from ADX's empty string).
-                require(args.length == 1, s"$cz expects (string)")
-                graft.functions.GraftFunctions.register(
-                  org.apache.spark.sql.SparkSession.active)
-                val czFn = cz match {
-                  case "gzip_compress_to_base64_string" => "graft_gzip_compress"
-                  case "gzip_decompress_from_base64_string" => "graft_gzip_decompress"
-                  case "zlib_compress_to_base64_string" => "graft_zlib_compress"
-                  case _ => "graft_zlib_decompress"
-                }
-                out.append(s"$czFn(CAST((${args(0)}) AS STRING))")
-              case "punycode_from_string" =>
-                // ADX punycode_from_string(s) → RFC 3492 punycode of
-                // one label (no xn-- prefix; ADX's raw-label form).
-                // Native expression; no DuckDB oracle exists for
-                // punycode, so the contract is pinned in KqlSpec with
-                // RFC 3492 §7.1 test vectors instead.
-                require(args.length == 1,
-                  "punycode_from_string expects (string)")
-                graft.functions.GraftFunctions.register(
-                  org.apache.spark.sql.SparkSession.active)
-                out.append(s"graft_punycode_encode(CAST((${args(0)}) AS STRING))")
-              case "punycode_to_string" =>
-                // Inverse; malformed punycode → null (ADX returns
-                // empty — documented deviation, the engine's malformed
-                // convention is null).
-                require(args.length == 1,
-                  "punycode_to_string expects (string)")
-                graft.functions.GraftFunctions.register(
-                  org.apache.spark.sql.SparkSession.active)
-                out.append(s"graft_punycode_decode(CAST((${args(0)}) AS STRING))")
-              case "set_union" =>
-                // ADX set_* are SET-semantics array ops (results
-                // deduped); element order is unspecified in ADX, and
-                // here it is Spark's first-seen order — sort in the
-                // query when comparing.
-                require(args.length >= 2, "set_union expects (arr1, arr2, ...)")
-                out.append(args.reduce((x, y) => s"array_union($x, $y)"))
-              case "set_intersect" =>
-                require(args.length >= 2, "set_intersect expects (arr1, arr2, ...)")
-                out.append(args.reduce((x, y) => s"array_intersect($x, $y)"))
-              case "set_difference" =>
-                // elements of arr1 in none of the others
-                require(args.length >= 2, "set_difference expects (arr1, arr2, ...)")
-                out.append(args.reduce((x, y) => s"array_except($x, $y)"))
-              case "set_has_element" =>
-                require(args.length == 2, "set_has_element expects (arr, value)")
-                out.append(s"array_contains(${args(0)}, ${args(1)})")
-              case "array_rotate_left" | "array_rotate_right" =>
-                require(args.length == 2, s"$w expects (arr, n)")
-                val a = args(0)
-                val n0 = if (w.toLowerCase.endsWith("right")) s"-(${args(1)})" else args(1)
-                // pmod guards the negative direction; the size-0 guard
-                // keeps ANSI's pmod-by-zero error out of empty arrays
-                val r = s"pmod($n0, size($a))"
-                out.append(s"(CASE WHEN size($a) <= 1 THEN $a ELSE " +
-                  s"concat(slice($a, $r + 1, size($a) - $r), slice($a, 1, $r)) END)")
-              case "array_shift_left" | "array_shift_right" =>
-                // VACATED slots take `fill` (null when omitted); a
-                // negative n shifts the other way — both directions are
-                // one index-shifted transform. The fill gates on the
-                // shifted index being OUT OF RANGE, not on the looked-up
-                // value being null — ADX fills only vacated positions,
-                // and a coalesce would also overwrite genuine null
-                // ELEMENTS carried from the source array.
-                require(args.length == 2 || args.length == 3,
-                  s"$w expects (arr, n [, fill])")
-                val a = args(0)
-                val n0 = if (w.toLowerCase.endsWith("right")) s"-(${args(1)})" else args(1)
-                // index 0 is a hard error even for try_element_at
-                // (Spark's 1-based contract) — guard the sub-1 range
-                val inRange = s"(i + 1 + ($n0) BETWEEN 1 AND size($a))"
-                out.append(args.lift(2) match {
-                  case Some(fill) =>
-                    s"transform($a, (x, i) -> CASE WHEN $inRange THEN " +
-                      s"try_element_at($a, i + 1 + ($n0)) ELSE ($fill) END)"
-                  case None =>
-                    s"transform($a, (x, i) -> CASE WHEN $inRange THEN " +
-                      s"try_element_at($a, i + 1 + ($n0)) ELSE NULL END)"
-                })
-              case "array_slice" =>
-                // ADX: 0-based INCLUSIVE bounds, negatives wrap from
-                // the end
-                require(args.length == 3, "array_slice expects (arr, start, end)")
-                val a = args(0)
-                def idx(e: String) = s"(CASE WHEN ($e) < 0 THEN size($a) + ($e) ELSE ($e) END)"
-                val (st, en) = (idx(args(1)), idx(args(2)))
-                out.append(s"(CASE WHEN $en < $st THEN slice($a, 1, 0) " +
-                  s"ELSE slice($a, $st + 1, $en - $st + 1) END)")
-              case "array_iff" | "array_iif" =>
-                // element-wise conditional; a null condition yields a
-                // null element (ADX), and a shorter value array yields
-                // null for the missing slots
-                require(args.length == 3, s"$w expects (condArr, ifTrue, ifFalse)")
-                val (c, t, f) = (args(0), args(1), args(2))
-                out.append(s"transform($c, (cc, i) -> CASE WHEN cc IS NULL THEN NULL " +
-                  s"WHEN cc THEN try_element_at($t, i + 1) " +
-                  s"ELSE try_element_at($f, i + 1) END)")
-              case "parse_url" =>
-                // ADX parse_url → bag of URL components. Emitted as a
-                // typed struct over Spark's codegen'd parse_url parts;
-                // deviations (documented): the query-parameter field is
-                // named QueryParameters (no space — ADX uses "Query
-                // Parameters", unreachable through this parser's
-                // identifier paths), and absent components are '' (as
-                // in ADX) via coalesce. Port comes from the authority
-                // (Spark's parse_url has no PORT part).
-                require(args.length == 1, "parse_url expects (url)")
-                val u = args(0)
-                def part(p: String) = s"coalesce(parse_url($u, '$p'), '')"
-                out.append("named_struct(" +
-                  s"'Scheme', ${part("PROTOCOL")}, " +
-                  s"'Host', ${part("HOST")}, " +
-                  s"'Port', regexp_extract(${part("AUTHORITY")}, ':([0-9]+)" + "$', 1), " +
-                  s"'Path', ${part("PATH")}, " +
-                  s"'Username', regexp_extract(${part("USERINFO")}, '^([^:]*)', 1), " +
-                  s"'Password', regexp_extract(${part("USERINFO")}, ':(.*)" + "$', 1), " +
-                  s"'QueryParameters', str_to_map(${part("QUERY")}, '&', '='), " +
-                  s"'Fragment', ${part("REF")})")
-              case "parse_urlquery" =>
-                // ADX wraps the result in {"Query Parameters": {...}};
-                // this engine returns the parameter MAP directly
-                // (documented deviation — same reachability reason as
-                // parse_url's field naming).
-                require(args.length == 1, "parse_urlquery expects (query)")
-                out.append(s"str_to_map(coalesce(${args(0)}, ''), '&', '=')")
-              case "parse_path" =>
-                // ADX parse_path → path-component bag. Subset
-                // implemented: RootPath ('/' or drive letter),
-                // DirectoryPath (no trailing separator), DirectoryName,
-                // Filename, Extension (no dot); both '/' and '\'
-                // separate. AlternateDataStreamName and Scheme are not
-                // emitted (documented deviation).
-                require(args.length == 1, "parse_path expects (path)")
-                val p = args(0)
-                val dirPath = s"regexp_extract($p, " + """'^(.*)[/\\\\][^/\\\\]*$'""" + ", 1)"
-                out.append("named_struct(" +
-                  s"'RootPath', regexp_extract($p, " + """'^([A-Za-z]:|/)'""" + ", 1), " +
-                  s"'DirectoryPath', $dirPath, " +
-                  s"'DirectoryName', regexp_extract($dirPath, " + """'([^/\\\\]*)$'""" + ", 1), " +
-                  s"'Filename', regexp_extract($p, " + """'([^/\\\\]*)$'""" + ", 1), " +
-                  s"'Extension', regexp_extract($p, " + """'\\.([^./\\\\]*)$'""" + ", 1))")
-              case "parse_version" =>
-                // ADX parse_version: 1-4 dot-separated numeric parts,
-                // each ≤ 8 digits, packed base-10^8 into a DECIMAL so
-                // versions order correctly; anything else → null.
-                require(args.length == 1, "parse_version expects (version)")
-                val v = args(0)
-                out.append(s"(CASE WHEN regexp_like($v, " +
-                  """'^[0-9]{1,8}(\\.[0-9]{1,8}){0,3}$')""" +
-                  s" THEN aggregate(transform(sequence(1, 4), " +
-                  s"i -> coalesce(try_cast(try_element_at(split($v, " + """'\\.'""" + "), i) AS BIGINT), CAST(0 AS BIGINT))), " +
-                  s"CAST(0 AS DECIMAL(38,0)), " +
-                  s"(acc, x) -> CAST(acc * 100000000 + x AS DECIMAL(38,0))) " +
-                  s"ELSE CAST(NULL AS DECIMAL(38,0)) END)")
-              case "parse_xml" =>
-                // ADX parse_xml → dynamic bag. Subset implemented
-                // (documented deviation): the ROOT element plus its
-                // LEAF elements (<tag>text</tag> at any depth, matched
-                // with a backreferenced closing tag) become
-                // {root: {leaf: text, …}} — attributes, nesting
-                // structure, CDATA and repeated leaf tags are not
-                // modeled (repeated tags raise Spark's duplicate-map-key
-                // error rather than silently picking one). The bag is a
-                // VARIANT via to_json∘map, so dotted access and
-                // bag_unpack consume it exactly like parse_json's.
-                require(args.length == 1, "parse_xml expects (xml)")
-                val x = args(0)
-                val rootRe = """'^\\s*<([A-Za-z_][A-Za-z0-9_.-]*)[ >]'"""
-                val pairRe = """'<([A-Za-z_][A-Za-z0-9_.-]*)>([^<]*)</\\1>'"""
-                val root = s"regexp_extract($x, $rootRe, 1)"
-                out.append(s"(CASE WHEN $root = '' THEN CAST(NULL AS VARIANT) ELSE " +
-                  s"parse_json(to_json(map($root, map_from_arrays(" +
-                  s"regexp_extract_all($x, $pairRe, 1), " +
-                  s"regexp_extract_all($x, $pairRe, 2))))) END)")
-              case "parse_user_agent" =>
-                // ADX parse_user_agent(ua, looking_for) → dynamic bag.
-                // Subset (documented deviation): looking_for must be
-                // the literal 'browser' or 'os' (ADX also accepts
-                // 'device' and arrays); detection is a deterministic
-                // ordered regex cascade over the major engine families
-                // (Edge before Chrome before Safari — UA strings embed
-                // their ancestors' tokens), not ADX's uap-core
-                // database. Versions are strings; absent components are
-                // null (nullif(…, '') pins the no-match rendering on
-                // BOTH engines — the r10 cross-engine hazard class).
-                require(args.length == 2,
-                  "parse_user_agent expects (ua, 'browser'|'os')")
-                val target = args(1).trim.toLowerCase.stripPrefix("'").stripSuffix("'")
-                require(target == "browser" || target == "os",
-                  s"parse_user_agent looking_for must be 'browser' or 'os': ${args(1)}")
-                out.append(parseUserAgentSql(args(0), target))
-              case "geo_point_in_polygon" =>
-                // ADX geo_point_in_polygon(lon, lat, polygon) — even-odd
-                // ray casting over the OUTER ring of a GeoJSON Polygon
-                // dynamic (holes unsupported — documented deviation;
-                // points exactly on an edge are undefined, as in ADX).
-                // The ring binds once via the array-lambda trick; the
-                // crossing test's single division is mirrored op-for-op
-                // in the oracle. Invalid coordinates or a ring with
-                // fewer than 4 GeoJSON entries → null.
-                require(args.length == 3,
-                  "geo_point_in_polygon expects (lon, lat, polygon)")
-                out.append(geoPointInPolygonSql(args(0), args(1), args(2)))
-              case "geo_polygon_to_s2cells" =>
-                // ADX geo_polygon_to_s2cells(polygon[, level]) → the
-                // cell-cover token array of the OUTER ring (holes
-                // unsupported, same planar even-odd convention as
-                // geo_point_in_polygon so cover and verify agree; see
-                // S2.polygonCover for the completeness construction).
-                // ADX's default level heuristic is replaced by a fixed
-                // default 11 (geo_point_to_s2cell's default here).
-                require(args.length == 1 || args.length == 2,
-                  "geo_polygon_to_s2cells expects (polygon [, level])")
-                val lvl = if (args.length == 2) args(1) else "11"
-                out.append(s"graft_s2_polygon_cover(try_cast(variant_get(" +
-                  s"${args(0)}, '$$.coordinates[0]') AS ARRAY<ARRAY<DOUBLE>>), " +
-                  s"CAST(($lvl) AS INT))")
-              case "geo_line_to_s2cells" =>
-                // ADX geo_line_to_s2cells(line[, level]) — the cell
-                // cover of a GeoJSON LineString (the route/corridor
-                // side of the cell join); same planar conventions,
-                // sampling construction, and default level 11 as the
-                // polygon cover (see S2.lineCover).
-                require(args.length == 1 || args.length == 2,
-                  "geo_line_to_s2cells expects (line [, level])")
-                val llvl = if (args.length == 2) args(1) else "11"
-                out.append(s"graft_s2_line_cover(try_cast(variant_get(" +
-                  s"${args(0)}, '$$.coordinates') AS ARRAY<ARRAY<DOUBLE>>), " +
-                  s"CAST(($llvl) AS INT))")
-              case "geo_distance_point_to_line" =>
-                // ADX geo_distance_point_to_line(lon, lat, line) → m.
-                // DEVIATION (documented): equirectangular-projected
-                // planar point-to-segment minimum — vertices and the
-                // point scale to meters at the LINE's mean latitude
-                // (the geo_polygon_area convention), each segment gets
-                // the clamped projection parameter, min over segments.
-                // Within ~0.5 % of the geodesic for routes spanning a
-                // few degrees. Emitted as the NATIVE codegen expression
-                // graft_geo_dist_line (a first SQL-HOF formulation
-                // evaluated interpreted per candidate and dominated the
-                // corridor join's cost); its op order — left-to-right
-                // mean-latitude fold, (x2-x1)*kx products, clamped t,
-                // per-segment min — is mirrored exactly by the oracle,
-                // so results are bit-equal. Invalid point / <2-vertex
-                // line → null.
-                require(args.length == 3,
-                  "geo_distance_point_to_line expects (lon, lat, line)")
-                out.append(s"graft_geo_dist_line(CAST((${args(0)}) AS DOUBLE), " +
-                  s"CAST((${args(1)}) AS DOUBLE), try_cast(variant_get(" +
-                  s"${args(2)}, '$$.coordinates') AS ARRAY<ARRAY<DOUBLE>>))")
-              case "geo_line_locate_point" =>
-                // ADX geo_line_locate_point(line, lng, lat) → meters
-                // from the line's start to the closest point on it
-                // (kernel + deviations at geoLineLocateSql).
-                require(args.length == 3,
-                  "geo_line_locate_point expects (line, lng, lat)")
-                out.append(geoLineLocateSql(args(0), args(1), args(2)))
-              case "geo_line_interpolate_point" =>
-                // ADX geo_line_interpolate_point(line, distance) → the
-                // Point `distance` meters along the line (clamping
-                // deviation documented at geoLineInterpolateSql).
-                require(args.length == 2,
-                  "geo_line_interpolate_point expects (line, distanceMeters)")
-                out.append(geoLineInterpolateSql(args(0), args(1)))
-              case "geo_closest_point_on_line" =>
-                // r15: ADX geo_closest_point_on_line(lon, lat, line)
-                // → GeoJSON Point of the argmin foot — the
-                // geo_distance_point_to_line kernel tracking the foot
-                // (first strictly-better segment wins ties, so shared
-                // vertices resolve to the lower index; degrees
-                // recovered by the inverse scale divisions —
-                // graft.functions.GeoDistPointToLine.closest).
-                require(args.length == 3,
-                  "geo_closest_point_on_line expects (lon, lat, line)")
-                graft.functions.GraftFunctions.register(
-                  org.apache.spark.sql.SparkSession.active)
-                out.append(s"element_at(transform(array(graft_geo_closest_line(" +
-                  s"CAST((${args(0)}) AS DOUBLE), CAST((${args(1)}) AS DOUBLE), " +
-                  s"try_cast(variant_get(${args(2)}, '$$.coordinates') " +
-                  s"AS ARRAY<ARRAY<DOUBLE>>))), gcl -> " +
-                  "CASE WHEN gcl IS NULL THEN NULL ELSE " +
-                  "named_struct('type', 'Point', 'coordinates', gcl) END), 1)")
-              case "geo_polygon_area" =>
-                // ADX geo_polygon_area(polygon) → m². DEVIATION
-                // (documented): equirectangular-projected planar
-                // shoelace instead of ADX's spheroidal area — vertices
-                // scale to meters at the ring's MEAN latitude
-                // (lon·111320·cos(latc), lat·110574), then |shoelace|/2.
-                // Within ~0.3 % of the spherical area for rings
-                // spanning a few degrees; the left-to-right edge fold
-                // is mirrored op-for-op by the oracle's frame-ordered
-                // running sum. Holes unsupported (outer ring only);
-                // degenerate ring (< 4 GeoJSON entries) → null.
-                require(args.length == 1, "geo_polygon_area expects (polygon)")
-                out.append(geoPolygonAreaSql(args(0)))
-              case "geo_polygon_perimeter" =>
-                // ADX geo_polygon_perimeter(polygon) → meters. Same
-                // equirectangular deviation as geo_polygon_area (local
-                // meter scales at the ring's mean latitude instead of
-                // WGS84 geodesics) — see geoPolygonPerimeterSql.
-                require(args.length == 1,
-                  "geo_polygon_perimeter expects (polygon)")
-                out.append(geoPolygonPerimeterSql(args(0)))
-              case "geo_line_length" =>
-                // ADX geo_line_length(line) → meters (equirectangular
-                // per-edge hypot, the perimeter convention — see
-                // geoLineLengthSql).
-                require(args.length == 1, "geo_line_length expects (line)")
-                out.append(geoLineLengthSql(args(0)))
-              case "geo_line_centroid" =>
-                // ADX geo_line_centroid(line) → GeoJSON Point: length-
-                // weighted edge-midpoint average — see
-                // geoLineCentroidSql.
-                require(args.length == 1, "geo_line_centroid expects (line)")
-                out.append(geoLineCentroidSql(args(0)))
-              case "geo_intersects_2lines" =>
-                // ADX geo_intersects_2lines(l1, l2) → do the two
-                // LineStrings intersect (planar deviation documented
-                // at geoIntersects2LinesSql).
-                require(args.length == 2,
-                  "geo_intersects_2lines expects (line1, line2)")
-                out.append(geoIntersects2LinesSql(args(0), args(1)))
-              case "geo_intersection_2lines" =>
-                // ADX geo_intersection_2lines(l1, l2) → the
-                // intersection geometry (Point / MultiPoint / empty
-                // GeometryCollection — deviations documented at
-                // geoIntersection2LinesSql; same kernel as the
-                // boolean predicate above).
-                require(args.length == 2,
-                  "geo_intersection_2lines expects (line1, line2)")
-                out.append(geoIntersection2LinesSql(args(0), args(1)))
-              case gb @ ("geo_point_buffer" | "geo_line_buffer" |
-                         "geo_polygon_buffer" | "geo_line_simplify" |
-                         "geo_polygon_simplify" | "geo_simplify_polygons_array" |
-                         "geo_intersection_2polygons" |
-                         "geo_intersection_line_with_polygon" |
-                         "geo_union_polygons" | "geo_union_lines") =>
-                // ADX buffer / simplify / boolean-operation tier —
-                // native [[graft.functions.Geom]] kernels (planar
-                // equirectangular meters, simple outer rings, holes
-                // discarded, canonical deterministic output; full
-                // deviation contract documented at the object).
-                // geo_point_buffer(lon, lat, radiusM);
-                // geo_line_buffer(line, radiusM) / geo_polygon_buffer:
-                // union of segment rectangles + vertex 16-gons (+ the
-                // ring itself); geo_*_simplify: Douglas–Peucker at
-                // meter tolerance (polygon default 10 m, ADX's);
-                // geo_intersection_2polygons / geo_union_polygons:
-                // Greiner–Hormann even-odd boolean;
-                // geo_intersection_line_with_polygon: inside-run clip;
-                // geo_union_lines: MultiLineString collection (no
-                // collinear dissolve — documented deviation).
-                graft.functions.GraftFunctions.register(
-                  org.apache.spark.sql.SparkSession.active)
-                def lineC(e: String) =
-                  s"try_cast(variant_get($e, '$$.coordinates') AS ARRAY<ARRAY<DOUBLE>>)"
-                def ringC(e: String) =
-                  s"try_cast(variant_get($e, '$$.coordinates[0]') AS ARRAY<ARRAY<DOUBLE>>)"
-                def dbl(e: String) = s"CAST(($e) AS DOUBLE)"
-                gb match {
-                  case "geo_point_buffer" =>
-                    require(args.length == 3,
-                      "geo_point_buffer expects (lon, lat, radiusMeters)")
-                    out.append(s"parse_json(graft_geo_point_buffer(" +
-                      s"${dbl(args(0))}, ${dbl(args(1))}, ${dbl(args(2))}))")
-                  case "geo_line_buffer" =>
-                    require(args.length == 2,
-                      "geo_line_buffer expects (line, radiusMeters)")
-                    out.append(s"parse_json(graft_geo_line_buffer(" +
-                      s"${lineC(args(0))}, ${dbl(args(1))}))")
-                  case "geo_polygon_buffer" =>
-                    require(args.length == 2,
-                      "geo_polygon_buffer expects (polygon, radiusMeters)")
-                    out.append(s"parse_json(graft_geo_polygon_buffer(" +
-                      s"${ringC(args(0))}, ${dbl(args(1))}))")
-                  case "geo_line_simplify" =>
-                    require(args.length == 2,
-                      "geo_line_simplify expects (line, toleranceMeters)")
-                    out.append(s"parse_json(graft_geo_simplify_line(" +
-                      s"${lineC(args(0))}, ${dbl(args(1))}))")
-                  case "geo_polygon_simplify" =>
-                    require(args.length == 1 || args.length == 2,
-                      "geo_polygon_simplify expects (polygon[, toleranceMeters])")
-                    val tol = args.lift(1).map(dbl).getOrElse("CAST(10.0 AS DOUBLE)")
-                    out.append(s"parse_json(graft_geo_simplify_polygon(" +
-                      s"${ringC(args(0))}, $tol))")
-                  case "geo_simplify_polygons_array" =>
-                    require(args.length == 1 || args.length == 2,
-                      "geo_simplify_polygons_array expects (polygons[, toleranceMeters])")
-                    val tol = args.lift(1).map(dbl).getOrElse("CAST(10.0 AS DOUBLE)")
-                    out.append(s"transform(try_cast((${args(0)}) AS ARRAY<VARIANT>), " +
-                      s"gsp -> parse_json(graft_geo_simplify_polygon(" +
-                      s"${ringC("gsp")}, $tol)))")
-                  case "geo_intersection_2polygons" =>
-                    require(args.length == 2,
-                      "geo_intersection_2polygons expects (polygon1, polygon2)")
-                    out.append(s"parse_json(graft_geo_poly_bool(" +
-                      s"${ringC(args(0))}, ${ringC(args(1))}, 'i'))")
-                  case "geo_intersection_line_with_polygon" =>
-                    require(args.length == 2,
-                      "geo_intersection_line_with_polygon expects (line, polygon)")
-                    out.append(s"parse_json(graft_geo_clip_line(" +
-                      s"${lineC(args(0))}, ${ringC(args(1))}))")
-                  case "geo_union_polygons" =>
-                    require(args.length == 1,
-                      "geo_union_polygons expects (polygons)")
-                    out.append(s"parse_json(graft_geo_union_polys(" +
-                      s"transform(try_cast((${args(0)}) AS ARRAY<VARIANT>), " +
-                      s"gup -> ${ringC("gup")})))")
-                  case "geo_union_lines" =>
-                    require(args.length == 1,
-                      "geo_union_lines expects (lines)")
-                    out.append(s"parse_json(graft_geo_union_lines(" +
-                      s"transform(try_cast((${args(0)}) AS ARRAY<VARIANT>), " +
-                      s"gul -> ${lineC("gul")})))")
-                }
-              case "geo_intersects_2polygons" =>
-                // ADX geo_intersects_2polygons(p1, p2): for SIMPLE
-                // outer rings (holes unsupported — the polygon tier's
-                // convention), the polygons intersect iff any boundary
-                // segment pair intersects OR one contains the other —
-                // tested as ring1's first vertex inside p2 / ring2's
-                // first vertex inside p1 (interior overlap without
-                // boundary crossing implies containment for simple
-                // rings). Same planar deviation as the 2lines kernel.
-                require(args.length == 2,
-                  "geo_intersects_2polygons expects (polygon1, polygon2)")
-                def ringOf(p: String) =
-                  s"try_cast(variant_get($p, '$$.coordinates[0]') AS ARRAY<ARRAY<DOUBLE>>)"
-                def v0(p: String, c: Int) =
-                  s"element_at(element_at(${ringOf(p)}, 1), $c)"
-                out.append(s"((${geoSegsIntersectSql(ringOf(args(0)), ringOf(args(1)))}) OR " +
-                  s"(${geoPointInPolygonSql(v0(args(0), 1), v0(args(0), 2), args(1))}) OR " +
-                  s"(${geoPointInPolygonSql(v0(args(1), 1), v0(args(1), 2), args(0))}))")
-              case "geo_intersects_line_with_polygon" =>
-                // ADX geo_intersects_line_with_polygon(line, polygon):
-                // any line segment crosses the outer ring, OR the line
-                // lies wholly inside (first line vertex inside the
-                // polygon). Same simple-ring/planar conventions.
-                require(args.length == 2,
-                  "geo_intersects_line_with_polygon expects (line, polygon)")
-                val lineC =
-                  s"try_cast(variant_get(${args(0)}, '$$.coordinates') AS ARRAY<ARRAY<DOUBLE>>)"
-                val ringC =
-                  s"try_cast(variant_get(${args(1)}, '$$.coordinates[0]') AS ARRAY<ARRAY<DOUBLE>>)"
-                val lv0 = (c: Int) => s"element_at(element_at($lineC, 1), $c)"
-                out.append(s"((${geoSegsIntersectSql(lineC, ringC)}) OR " +
-                  s"(${geoPointInPolygonSql(lv0(1), lv0(2), args(1))}))")
-              case "geo_polygon_centroid" =>
-                // ADX geo_polygon_centroid(polygon) → GeoJSON Point.
-                // Planar shoelace centroid in degree coordinates (the
-                // centroid commutes with the equirectangular axis
-                // scaling, so no trig is needed at all) — see
-                // geoPolygonCentroidSql; zero-area ring → null.
-                require(args.length == 1,
-                  "geo_polygon_centroid expects (polygon)")
-                out.append(geoPolygonCentroidSql(args(0)))
-              case "geo_distance_2points" =>
-                // ADX geo_distance_2points(lon1, lat1, lon2, lat2) →
-                // meters. DEVIATION (documented): haversine great-circle
-                // on the mean sphere R = 6 371 000 m instead of ADX's
-                // WGS84 geodesic — deterministic, oracle-expressible,
-                // and within 0.5 % of the ellipsoid everywhere. Invalid
-                // coordinates (|lat| > 90, |lon| > 180) → null, ADX's
-                // convention. The asin operand clamps to 1.0 so
-                // antipodal rounding cannot produce NaN.
-                require(args.length == 4,
-                  "geo_distance_2points expects (lon1, lat1, lon2, lat2)")
-                out.append(geoDistanceSql(args(0), args(1), args(2), args(3)))
-              case "geo_point_in_circle" =>
-                // ADX geo_point_in_circle(lon, lat, c_lon, c_lat, r) —
-                // membership via the same haversine distance; null on
-                // invalid coordinates or negative radius.
-                require(args.length == 5,
-                  "geo_point_in_circle expects (lon, lat, centerLon, centerLat, radiusMeters)")
-                val d = geoDistanceSql(args(0), args(1), args(2), args(3))
-                out.append(s"(CASE WHEN (${args(4)}) < 0 THEN CAST(NULL AS BOOLEAN) " +
-                  s"ELSE $d <= (${args(4)}) END)")
-              case "geo_azimuth" =>
-                // ADX geo_azimuth(lon1, lat1, lon2, lat2) → the initial
-                // bearing from p1 to p2, clockwise from true north, in
-                // radians [0, 2π). DEVIATION (documented): spherical
-                // initial bearing (atan2 form) instead of ADX's WGS84
-                // geodesic azimuth — within ~0.2° everywhere off the
-                // poles, deterministic and oracle-expressible. Identical
-                // points yield 0 (atan2(0, 0)); invalid coordinates
-                // null, the geo_distance_2points convention.
-                require(args.length == 4,
-                  "geo_azimuth expects (lon1, lat1, lon2, lat2)")
-                out.append(geoAzimuthSql(args(0), args(1), args(2), args(3)))
-              case "geo_distance_point_to_polygon" =>
-                // ADX geo_distance_point_to_polygon(lon, lat, polygon)
-                // → meters; 0 when the point is inside. Composition of
-                // the two existing kernels: even-odd containment
-                // (geo_point_in_polygon — outer ring only, holes
-                // unsupported) gates a point-to-ring distance, where
-                // the CLOSED outer ring fed to the point-to-line kernel
-                // covers exactly the polygon's boundary segments (same
-                // equirectangular deviation as geo_distance_point_to_
-                // line). Invalid point or degenerate ring → null.
-                require(args.length == 3,
-                  "geo_distance_point_to_polygon expects (lon, lat, polygon)")
-                val inP = geoPointInPolygonSql(args(0), args(1), args(2))
-                val ringDist = s"graft_geo_dist_line(CAST((${args(0)}) AS DOUBLE), " +
-                  s"CAST((${args(1)}) AS DOUBLE), try_cast(variant_get(" +
-                  s"${args(2)}, '$$.coordinates[0]') AS ARRAY<ARRAY<DOUBLE>>))"
-                out.append(s"(CASE WHEN $inP THEN CAST(0.0 AS DOUBLE) " +
-                  s"ELSE $ringDist END)")
-              case "geo_closest_point_on_polygon" =>
-                // ADX geo_closest_point_on_polygon(lon, lat, polygon) →
-                // GeoJSON Point: the point ITSELF when inside (ADX's
-                // convention), else the closest point on the outer ring
-                // (the geo_closest_point_on_line kernel over the CLOSED
-                // ring — same planar deviations, same lower-index tie
-                // rule). Invalid point / degenerate ring → null.
-                require(args.length == 3,
-                  "geo_closest_point_on_polygon expects (lon, lat, polygon)")
-                graft.functions.GraftFunctions.register(
-                  org.apache.spark.sql.SparkSession.active)
-                val inCp = geoPointInPolygonSql(args(0), args(1), args(2))
-                out.append(s"(CASE WHEN $inCp THEN " +
-                  s"parse_json(to_json(named_struct('type', 'Point', 'coordinates', " +
-                  s"array(CAST((${args(0)}) AS DOUBLE), CAST((${args(1)}) AS DOUBLE))))) " +
-                  s"ELSE element_at(transform(array(graft_geo_closest_line(" +
-                  s"CAST((${args(0)}) AS DOUBLE), CAST((${args(1)}) AS DOUBLE), " +
-                  s"try_cast(variant_get(${args(2)}, '$$.coordinates[0]') " +
-                  s"AS ARRAY<ARRAY<DOUBLE>>))), gcp -> " +
-                  "CASE WHEN gcp IS NULL THEN NULL ELSE " +
-                  "parse_json(to_json(named_struct('type', 'Point', 'coordinates', gcp))) END), 1) END)")
-              case "geo_angle" =>
-                // ADX geo_angle(p1_lng, p1_lat, p2_lng, p2_lat, p3_lng,
-                // p3_lat) → the clockwise angle in radians at the SHARED
-                // vertex p2, from the ray toward p1 to the ray toward
-                // p3, in [0, 2π) — normalize(azimuth(p2→p3) −
-                // azimuth(p2→p1)). DEVIATION (documented): built from
-                // the spherical-bearing azimuth rather than ADX's WGS84
-                // geodesic, same class as geo_azimuth's. Invalid
-                // coordinates null out through the azimuth chain.
-                require(args.length == 6,
-                  "geo_angle expects (p1_lng, p1_lat, p2_lng, p2_lat, p3_lng, p3_lat)")
-                val azTo1 = geoAzimuthSql(args(2), args(3), args(0), args(1))
-                val azTo3 = geoAzimuthSql(args(2), args(3), args(4), args(5))
-                out.append(s"((((($azTo3) - ($azTo1)) % (2.0 * pi())) + 2.0 * pi()) % (2.0 * pi()))")
-              case "geo_s2cell_to_polygon" =>
-                // ADX geo_s2cell_to_polygon(token) → the cell rectangle
-                // as a GeoJSON Polygon VARIANT (closed 5-vertex ring,
-                // exact ST cell-bound corners; face-frame winding —
-                // deviation documented at S2.polygonOf). Malformed
-                // token → null.
-                require(args.length == 1,
-                  "geo_s2cell_to_polygon expects (token)")
-                graft.functions.GraftFunctions.register(
-                  org.apache.spark.sql.SparkSession.active)
-                out.append(s"element_at(transform(array(graft_s2_cell_polygon(" +
-                  s"CAST((${args(0)}) AS STRING))), s2r -> " +
-                  "CASE WHEN s2r IS NULL THEN NULL ELSE " +
-                  "parse_json(to_json(named_struct('type', 'Polygon', 'coordinates', array(s2r)))) END), 1)")
-              case "geo_point_to_s2cell" =>
-                // ADX geo_point_to_s2cell(lon, lat[, level]) → the
-                // S2 cell TOKEN (level 0..28, ADX default 11) — the
-                // second cell system over the same integer-exact
-                // cell-join backbone as geohash. Native codegen
-                // Expression ([[graft.functions.S2]]): the SQL-text
-                // route would repeat the face/uv CASE tree per Morton
-                // bit; deviations (Morton order, compact token,
-                // cross-face neighbor wrap as of r13) documented there.
-                require(args.length == 2 || args.length == 3,
-                  "geo_point_to_s2cell expects (lon, lat[, level])")
-                val lvl = args.lift(2).map { a =>
-                  val v = scala.util.Try(a.trim.toInt).getOrElse(
-                    throw new IllegalArgumentException(
-                      s"geo_point_to_s2cell level must be an integer literal 0..${graft.functions.S2.MaxLevel}: $a"))
-                  require(v >= 0 && v <= graft.functions.S2.MaxLevel,
-                    s"geo_point_to_s2cell level must be in 0..${graft.functions.S2.MaxLevel}: $a")
-                  v
-                }.getOrElse(11)
-                graft.functions.GraftFunctions.register(
-                  org.apache.spark.sql.SparkSession.active)
-                out.append(s"graft_s2_cell(CAST((${args(0)}) AS DOUBLE), " +
-                  s"CAST((${args(1)}) AS DOUBLE), $lvl)")
-              case "geo_s2cell_to_central_point" =>
-                // GeoJSON Point of the cell center (the
-                // geo_geohash_to_central_point shape); malformed
-                // tokens → null, ADX's convention.
-                require(args.length == 1,
-                  "geo_s2cell_to_central_point expects (token)")
-                graft.functions.GraftFunctions.register(
-                  org.apache.spark.sql.SparkSession.active)
-                out.append(s"element_at(transform(array(graft_s2_center(${args(0)})), " +
-                  "s2c -> CASE WHEN s2c IS NULL THEN NULL ELSE " +
-                  "named_struct('type', 'Point', 'coordinates', s2c) END), 1)")
-              case "geo_s2cell_neighbors" =>
-                // Same-face 8-neighborhood (off-face steps drop —
-                // documented deviation; order mirrors
-                // geo_geohash_neighbors: W→E within S→N).
-                require(args.length == 1,
-                  "geo_s2cell_neighbors expects (token)")
-                graft.functions.GraftFunctions.register(
-                  org.apache.spark.sql.SparkSession.active)
-                out.append(s"graft_s2_neighbors(${args(0)})")
-              case "geo_point_to_h3cell" =>
-                // ADX geo_point_to_h3cell(lon, lat[, resolution]) →
-                // the H3-style cell TOKEN (res 0..12, default 6) —
-                // the THIRD cell system over the integer-exact
-                // cell-join backbone: icosahedral hexes (lowest shape
-                // distortion, 6-fold neighbor symmetry). Native
-                // codegen Expression ([[graft.functions.H3]]);
-                // deviations (direct (face, q, r) token, no
-                // inter-resolution rotation, clipped edge cells
-                // instead of pentagons) documented there.
-                require(args.length == 2 || args.length == 3,
-                  "geo_point_to_h3cell expects (lon, lat[, resolution])")
-                val res = args.lift(2).map { a =>
-                  val v = scala.util.Try(a.trim.toInt).getOrElse(
-                    throw new IllegalArgumentException(
-                      s"geo_point_to_h3cell resolution must be an integer literal 0..${graft.functions.H3.MaxRes}: $a"))
-                  require(v >= 0 && v <= graft.functions.H3.MaxRes,
-                    s"geo_point_to_h3cell resolution must be in 0..${graft.functions.H3.MaxRes}: $a")
-                  v
-                }.getOrElse(graft.functions.H3.DefaultRes)
-                graft.functions.GraftFunctions.register(
-                  org.apache.spark.sql.SparkSession.active)
-                out.append(s"graft_h3_cell(CAST((${args(0)}) AS DOUBLE), " +
-                  s"CAST((${args(1)}) AS DOUBLE), $res)")
-              case "geo_h3cell_to_polygon" =>
-                // r15: the hex boundary as GeoJSON Polygon VARIANT
-                // (graft.functions.H3.boundaryOf — 6 planar corners
-                // through the same inverse-gnomonic atan2 chain as the
-                // center, closing vertex repeated; composes with
-                // geo_point_in_polygon). Malformed → null.
-                require(args.length == 1,
-                  "geo_h3cell_to_polygon expects (token)")
-                graft.functions.GraftFunctions.register(
-                  org.apache.spark.sql.SparkSession.active)
-                out.append(s"element_at(transform(array(graft_h3_boundary(${args(0)})), " +
-                  "h3b -> CASE WHEN h3b IS NULL THEN CAST(NULL AS VARIANT) ELSE " +
-                  "parse_json(to_json(named_struct('type', 'Polygon', " +
-                  "'coordinates', array(h3b)))) END), 1)")
-              case "geo_h3cell_to_central_point" =>
-                // GeoJSON Point of the cell center (the
-                // geo_s2cell_to_central_point shape); malformed
-                // tokens → null, ADX's convention.
-                require(args.length == 1,
-                  "geo_h3cell_to_central_point expects (token)")
-                graft.functions.GraftFunctions.register(
-                  org.apache.spark.sql.SparkSession.active)
-                out.append(s"element_at(transform(array(graft_h3_center(${args(0)})), " +
-                  "h3c -> CASE WHEN h3c IS NULL THEN NULL ELSE " +
-                  "named_struct('type', 'Point', 'coordinates', h3c) END), 1)")
-              case "geo_h3cell_neighbors" =>
-                // 6-neighborhood, cross-face wrapped; fewer near face
-                // edges/vertices (the pentagon-analog convention —
-                // see graft.functions.H3.neighborsOf).
-                require(args.length == 1,
-                  "geo_h3cell_neighbors expects (token)")
-                graft.functions.GraftFunctions.register(
-                  org.apache.spark.sql.SparkSession.active)
-                out.append(s"graft_h3_neighbors(${args(0)})")
-              case "geo_polygon_to_h3cells" =>
-                // ADX geo_polygon_to_h3cells(polygon[, resolution]) →
-                // the hex cell-cover token array of the OUTER ring
-                // (holes unsupported, planar even-odd convention
-                // matching geo_point_in_polygon so cover and verify
-                // agree; see H3.polygonCover for completeness and the
-                // cross-face caveat). ADX's default-resolution
-                // heuristic is replaced by the fixed point default 6.
-                require(args.length == 1 || args.length == 2,
-                  "geo_polygon_to_h3cells expects (polygon [, resolution])")
-                val pres = if (args.length == 2) args(1)
-                  else graft.functions.H3.DefaultRes.toString
-                graft.functions.GraftFunctions.register(
-                  org.apache.spark.sql.SparkSession.active)
-                out.append(s"graft_h3_polygon_cover(try_cast(variant_get(" +
-                  s"${args(0)}, '$$.coordinates[0]') AS ARRAY<ARRAY<DOUBLE>>), " +
-                  s"CAST(($pres) AS INT))")
-              case "geo_line_to_h3cells" =>
-                // ADX geo_line_to_h3cells(line[, resolution]) — the
-                // hex cell cover of a GeoJSON LineString (the
-                // route/corridor side of the cell join); same planar
-                // conventions, sampling construction, and default
-                // resolution 6 as the polygon cover (H3.lineCover).
-                require(args.length == 1 || args.length == 2,
-                  "geo_line_to_h3cells expects (line [, resolution])")
-                val lres = if (args.length == 2) args(1)
-                  else graft.functions.H3.DefaultRes.toString
-                graft.functions.GraftFunctions.register(
-                  org.apache.spark.sql.SparkSession.active)
-                out.append(s"graft_h3_line_cover(try_cast(variant_get(" +
-                  s"${args(0)}, '$$.coordinates') AS ARRAY<ARRAY<DOUBLE>>), " +
-                  s"CAST(($lres) AS INT))")
-              case "geo_h3cell_level" =>
-                // resolution of a cell token; null on malformed input.
-                require(args.length == 1, "geo_h3cell_level expects (token)")
-                graft.functions.GraftFunctions.register(
-                  org.apache.spark.sql.SparkSession.active)
-                out.append(s"graft_h3_level(${args(0)})")
-              case "geo_h3cell_parent" =>
-                // ADX geo_h3cell_parent(cell[, resolution]) → the
-                // containing cell at a coarser resolution (default:
-                // one level up). DEVIATION (graft.functions.H3): the
-                // direct token has no aperture-7 digit hierarchy, so
-                // the parent is the cell containing THIS CELL'S CENTER
-                // at the coarser resolution; geo_h3cell_children is
-                // the exact inverse (enumeration + parent check).
-                // An explicit resolution must be an integer literal —
-                // coarser-than-cell validation happens per row (null
-                // on violation, ADX's convention).
-                require(args.length == 1 || args.length == 2,
-                  "geo_h3cell_parent expects (token[, resolution])")
-                graft.functions.GraftFunctions.register(
-                  org.apache.spark.sql.SparkSession.active)
-                args.lift(1) match {
-                  case None =>
-                    out.append(s"graft_h3_parent(${args(0)}, " +
-                      s"graft_h3_level(${args(0)}) - 1)")
-                  case Some(a) =>
-                    val v = scala.util.Try(a.trim.toInt).getOrElse(
-                      throw new IllegalArgumentException(
-                        s"geo_h3cell_parent resolution must be an integer literal: $a"))
-                    require(v >= 0 && v <= graft.functions.H3.MaxRes,
-                      s"geo_h3cell_parent resolution must be in 0..${graft.functions.H3.MaxRes}: $v")
-                    out.append(s"graft_h3_parent(${args(0)}, $v)")
-                }
-              case fname @ ("geo_h3cell_children" | "geo_h3cell_childcount") =>
-                // ADX geo_h3cell_children(cell[, resolution]) → the
-                // finer-resolution cells whose parent is this cell
-                // (default: one level down); geo_h3cell_childcount is
-                // its count. DEVIATION (graft.functions.H3.childrenOf,
-                // the inverse of the parent deviation): no aperture-7
-                // digit hierarchy, so children come from candidate
-                // enumeration + a per-candidate parent re-encode —
-                // parent(child) == cell holds for every emitted child
-                // by construction. Resolution must be an integer
-                // literal; finer-than-cell validation happens per row
-                // (null on violation, the parent convention), and a
-                // resolution gap > 4 rejects loudly at runtime.
-                require(args.length == 1 || args.length == 2,
-                  s"$fname expects (token[, resolution])")
-                graft.functions.GraftFunctions.register(
-                  org.apache.spark.sql.SparkSession.active)
-                val childExpr = args.lift(1) match {
-                  case None =>
-                    s"graft_h3_children(${args(0)}, " +
-                      s"graft_h3_level(${args(0)}) + 1)"
-                  case Some(a) =>
-                    val v = scala.util.Try(a.trim.toInt).getOrElse(
-                      throw new IllegalArgumentException(
-                        s"$fname resolution must be an integer literal: $a"))
-                    require(v >= 0 && v <= graft.functions.H3.MaxRes,
-                      s"$fname resolution must be in 0..${graft.functions.H3.MaxRes}: $v")
-                    s"graft_h3_children(${args(0)}, $v)"
-                }
-                out.append(if (fname == "geo_h3cell_childcount")
-                  s"size($childExpr)" else childExpr)
-              case "geo_h3cell_compact" =>
-                // ADX geo_h3cell_compact(cells) → the minimal mixed-
-                // resolution cover: complete sibling sets collapse to
-                // their parent, repeatedly (graft.functions.H3
-                // .compactCells — completeness against the ACTUAL
-                // child set of this token system's center-containment
-                // hierarchy, so clipped edge parents compact too).
-                // Sorted + deduped output; null on invalid, ADX's
-                // shape. Dynamic arrays cast through ARRAY<STRING>.
-                require(args.length == 1, "geo_h3cell_compact expects (cells)")
-                graft.functions.GraftFunctions.register(
-                  org.apache.spark.sql.SparkSession.active)
-                out.append(s"graft_h3_compact(" +
-                  s"try_cast((${args(0)}) AS ARRAY<STRING>))")
-              case "geo_h3cell_uncompact" =>
-                // ADX geo_h3cell_uncompact(cells, resolution) → every
-                // cell expanded to its descendant set at `resolution`
-                // (graft.functions.H3.uncompactCells — the children
-                // machinery folded over the array; gap ≤ 4 per cell,
-                // larger gaps reject loudly like geo_h3cell_children).
-                // Resolution must be an integer literal.
-                require(args.length == 2,
-                  "geo_h3cell_uncompact expects (cells, resolution)")
-                val ures = scala.util.Try(args(1).trim.toInt).getOrElse(
-                  throw new IllegalArgumentException(
-                    "geo_h3cell_uncompact resolution must be an integer " +
-                      s"literal: ${args(1)}"))
-                require(ures >= 0 && ures <= graft.functions.H3.MaxRes,
-                  s"geo_h3cell_uncompact resolution must be in " +
-                    s"0..${graft.functions.H3.MaxRes}: $ures")
-                graft.functions.GraftFunctions.register(
-                  org.apache.spark.sql.SparkSession.active)
-                out.append(s"graft_h3_uncompact(" +
-                  s"try_cast((${args(0)}) AS ARRAY<STRING>), $ures)")
-              case "geo_h3cell_rings" =>
-                // ADX geo_h3cell_rings(cell, N) → rings 0..N by hex
-                // distance (cross-face wrapped; inner rings win wrap
-                // collisions — graft.functions.H3.ringsOf). N must be
-                // an integer literal 0..16 (ADX's bound).
-                require(args.length == 2,
-                  "geo_h3cell_rings expects (token, n)")
-                val nRings = scala.util.Try(args(1).trim.toInt).getOrElse(
-                  throw new IllegalArgumentException(
-                    s"geo_h3cell_rings n must be an integer literal 0..16: ${args(1)}"))
-                require(nRings >= 0 && nRings <= 16,
-                  s"geo_h3cell_rings n must be in 0..16: $nRings")
-                graft.functions.GraftFunctions.register(
-                  org.apache.spark.sql.SparkSession.active)
-                out.append(s"graft_h3_rings(${args(0)}, $nRings)")
-              case "geo_point_to_geohash" =>
-                // ADX geo_point_to_geohash(lon, lat[, accuracy]) →
-                // base32 geohash string (accuracy 1..12 characters,
-                // ADX default 5) — the cell-binning primitive whose
-                // equal-prefix cells are the spatial-join key. Pure
-                // integer bit-interleave (Morton spread) after ONE
-                // float quantization per axis — no trig, every op
-                // single-rounded and mirrored in the oracle, so cells
-                // are bit-identical cross-engine. Accuracy must be a
-                // literal (the bit layout is compiled into the plan).
-                require(args.length == 2 || args.length == 3,
-                  "geo_point_to_geohash expects (lon, lat[, accuracy])")
-                val acc = args.lift(2).map { a =>
-                  val v = scala.util.Try(a.trim.toInt).getOrElse(
-                    throw new IllegalArgumentException(
-                      s"geo_point_to_geohash accuracy must be an integer literal 1..12: $a"))
-                  require(v >= 1 && v <= 12,
-                    s"geo_point_to_geohash accuracy must be in 1..12: $a")
-                  v
-                }.getOrElse(5)
-                out.append(geohashSql(args(0), args(1), acc))
-              case "geo_geohash_to_central_point" =>
-                // ADX geo_geohash_to_central_point(gh) → GeoJSON
-                // dynamic {type: Point, coordinates: [lon, lat]} of the
-                // cell center. Decode is the exact inverse of
-                // geo_point_to_geohash's integer interleave; the center
-                // is the dyadic midpoint (ix + 0.5) / 2^bits scaled to
-                // the axis — one multiply per axis, identical
-                // cross-engine. Malformed input (bad alphabet, empty,
-                // > 12 chars) → null, ADX's convention.
-                require(args.length == 1,
-                  "geo_geohash_to_central_point expects (geohash)")
-                out.append(geohashCentralPointSql(args(0)))
-              case gd @ ("geo_line_densify" | "geo_polygon_densify") =>
-                // r15: equal-parts edge subdivision — see geoDensifySql
-                // (planar-chord deviation + the 4096-segment loud cap
-                // documented there).
-                require(args.length == 2, s"$gd expects (geometry, tolerance_m)")
-                out.append(geoDensifySql(args(0), args(1),
-                  polygon = gd == "geo_polygon_densify"))
-              case "geo_geohash_to_polygon" =>
-                // r15: the geohash cell rectangle as GeoJSON — see
-                // geohashPolygonSql (VARIANT output so it composes
-                // with the polygon predicates).
-                require(args.length == 1,
-                  "geo_geohash_to_polygon expects (geohash)")
-                out.append(geohashPolygonSql(args(0)))
-              case "geo_geohash_neighbors" =>
-                // ADX geo_geohash_neighbors(gh) → the (up to) 8
-                // surrounding cells at the same accuracy, longitude
-                // wrapping across the antimeridian, polar off-grid
-                // cells dropped (a pole cell has 5 neighbors).
-                // Deterministic order: W→E within S→N (dx fastest).
-                // This is the candidate-cell generator of the
-                // cell-keyed spatial join (`kql_geo_join`): point cells
-                // equi-join site cell ∪ neighbors, which COVERS every
-                // within-R pair whenever R ≤ the minimum cell span —
-                // the bounded fan-out (≤ 9×) that replaces an all-pairs
-                // distance join at 100 TB.
-                require(args.length == 1,
-                  "geo_geohash_neighbors expects (geohash)")
-                // Composition fast path: neighbors OF A POINT'S CELL —
-                // `geo_geohash_neighbors(geo_point_to_geohash(lon, lat
-                // [, acc]))`, the spatial-join idiom — skips the
-                // string decode entirely and unrolls all 8 encodes
-                // into plain integer/concat arithmetic (no HOFs), so
-                // the whole stage stays in codegen and the expression
-                // tree stays small. Detected on the RAW text (args are
-                // already translated); any other argument takes the
-                // general decode path.
-                val rawNb = splitTopLevel(s.substring(open + 1, close), ',')
-                  .map(_.trim)
-                val composed = rawNb.length == 1 && {
-                  val t = rawNb.head
-                  val po = t.indexOf('(')
-                  t.toLowerCase.startsWith("geo_point_to_geohash") &&
-                    po > 0 && t.substring(0, po).trim.equalsIgnoreCase("geo_point_to_geohash") &&
-                    matchingParen(t, po) == t.length - 1
-                }
-                if (composed) {
-                  val t = rawNb.head
-                  val po = t.indexOf('(')
-                  val inner = splitTopLevel(t.substring(po + 1, t.length - 1), ',')
-                    .map(a => scalar(a.trim, lets))
-                  require(inner.length == 2 || inner.length == 3,
-                    "geo_point_to_geohash expects (lon, lat[, accuracy])")
-                  val acc2 = inner.lift(2).map { a =>
-                    val v = scala.util.Try(a.trim.toInt).getOrElse(
-                      throw new IllegalArgumentException(
-                        s"geo_point_to_geohash accuracy must be an integer literal 1..12: $a"))
-                    require(v >= 1 && v <= 12,
-                      s"geo_point_to_geohash accuracy must be in 1..12: $a")
-                    v
-                  }.getOrElse(5)
-                  out.append(geohashNeighborsUnrolledSql(inner(0), inner(1), acc2))
-                } else out.append(geohashNeighborsSql(args(0)))
-              case "replace_string" =>
-                // ADX replace_string(text, lookup, rewrite) — literal
-                // replace, Spark's replace with the same arg order.
-                require(args.length == 3,
-                  "replace_string expects (text, lookup, rewrite)")
-                out.append(s"replace(${args(0)}, ${args(1)}, ${args(2)})")
-              case "replace_regex" =>
-                require(args.length == 3,
-                  "replace_regex expects (text, regex, rewrite)")
-                out.append(s"regexp_replace(${args(0)}, ${args(1)}, ${args(2)})")
-              case "indexof_regex" =>
-                // ADX: 0-based first-match position, -1 when absent —
-                // Spark regexp_instr is 1-based with 0 for absent, so
-                // the -1 shift lands BOTH conventions at once.
-                require(args.length == 2, "indexof_regex expects (source, regex)")
-                out.append(s"CAST(regexp_instr(${args(0)}, ${args(1)}) - 1 AS BIGINT)")
-              case "string_size" =>
-                // ADX string_size = SIZE IN BYTES (UTF-8), not chars.
-                require(args.length == 1, "string_size expects (source)")
-                out.append(s"CAST(octet_length(${args(0)}) AS BIGINT)")
-              case "countof" =>
-                // ADX counts OVERLAPPING occurrences (countof('aaa',
-                // 'aa') = 2), so a delete-replace length delta is not
-                // enough when the needle can border itself. Two paths:
-                // a LITERAL needle with no proper border (no prefix
-                // that is also a suffix — the KMP failure condition)
-                // cannot self-overlap, so the codegen'd replace-based
-                // count is provably equal and stays on the hot path;
-                // bordered or non-literal needles take the position
-                // scan — an interpreted HOF bounded by the string
-                // length (mv-apply's budget class), with empty or
-                // too-long needles counting 0 rather than generating a
-                // DESCENDING sequence. The 3-arg form's 'regex' kind is
-                // a non-overlapping regexp match count (ADX semantics
-                // for that kind); kind 'normal' falls back to 2-arg.
-                require(args.length == 2 || args.length == 3,
-                  s"countof expects (source, search[, kind]): ${s.substring(i, close + 1)}")
-                val regexKind = args.length == 3 && {
-                  val kind = args(2).trim
-                  require(kind == "'regex'" || kind == "'normal'",
-                    s"countof kind must be 'normal' or 'regex': $kind")
-                  kind == "'regex'"
-                }
-                val (src, pat) = (args(0), args(1))
-                if (regexKind) {
-                  out.append(s"CAST(size(regexp_extract_all($src, $pat, 0)) AS INT)")
-                } else {
-                val litNeedle = pat.trim match {
-                  case p if p.length >= 3 && (p.head == '\'' || p.head == '"') &&
-                      p.last == p.head && !p.substring(1, p.length - 1).contains(p.head) =>
-                    Some(p.substring(1, p.length - 1))
-                  case _ => None
-                }
-                val borderless = litNeedle.exists(nd =>
-                  (1 until nd.length).forall(k => !(nd.take(k) == nd.takeRight(k))))
-                if (borderless)
-                  out.append(s"CAST((length($src) - length(replace($src, $pat, ''))) " +
-                    s"DIV length($pat) AS INT)")
-                else
-                  out.append(
-                    s"IF(length($pat) = 0 OR length($src) < length($pat), 0, " +
-                    s"aggregate(sequence(1, length($src) - length($pat) + 1), 0, " +
-                    s"(acc, p) -> acc + IF(substring($src, p, length($pat)) = $pat, 1, 0)))")
-                }
-              case "substring" =>
-                // ADX substring(source, startIdx[, length]) is 0-BASED
-                // (Spark's is 1-based — a pass-through would silently
-                // shift every result). Negative start clamps to 0, as
-                // ADX does; omitted length runs to end of string.
-                require(args.length == 2 || args.length == 3,
-                  s"substring expects (source, startIdx[, length]): ${s.substring(i, close + 1)}")
-                val start = s"(greatest(CAST(${args(1)} AS INT), 0) + 1)"
-                val len = if (args.length == 3) s"CAST(${args(2)} AS INT)"
-                          else "2147483647"
-                out.append(s"substring(${args(0)}, $start, $len)")
-              case "indexof" =>
-                // ADX indexof(source, lookup[, start]): 0-based result,
-                // -1 when absent (Spark instr/locate are 1-based,
-                // 0-absent — the single shift maps both conventions).
-                require(args.length == 2 || args.length == 3,
-                  s"indexof expects (source, lookup[, start]): ${s.substring(i, close + 1)}")
-                if (args.length == 2)
-                  out.append(s"(instr(${args(0)}, ${args(1)}) - 1)")
-                else
-                  out.append(s"(locate(${args(1)}, ${args(0)}, " +
-                    s"greatest(CAST(${args(2)} AS INT), 0) + 1) - 1)")
-              case "strrep" =>
-                // ADX strrep(value, multiplier[, delimiter]) — Spark
-                // repeat covers the plain form; the delimited form
-                // builds the repetition as an array join.
-                require(args.length == 2 || args.length == 3,
-                  s"strrep expects (value, multiplier[, delimiter]): ${s.substring(i, close + 1)}")
-                if (args.length == 2)
-                  out.append(s"repeat(${args(0)}, CAST(${args(1)} AS INT))")
-                else
-                  out.append(s"array_join(array_repeat(${args(0)}, " +
-                    s"CAST(${args(1)} AS INT)), ${args(2)})")
-              case "base64_encode_tostring" =>
-                require(args.length == 1, "base64_encode_tostring expects (string)")
-                out.append(s"base64(encode(${args.head}, 'UTF-8'))")
-              case "base64_decode_tostring" =>
-                require(args.length == 1, "base64_decode_tostring expects (string)")
-                out.append(s"decode(unbase64(${args.head}), 'UTF-8')")
-              case "hash" =>
-                // ADX hash(source[, mod]) is xxhash64-based — Spark's
-                // xxhash64 is the same family. DEVIATION: bit-level
-                // values differ from the ADX service (seed/finalization
-                // differ), and a bare Spark pass-through would have
-                // been Murmur3-32 — materially worse for the mod-shard
-                // use this function exists for. mod applies
-                // non-negatively (pmod), matching ADX's range.
-                require(args.length == 1 || args.length == 2,
-                  s"hash expects (source[, mod]): ${s.substring(i, close + 1)}")
-                if (args.length == 1) out.append(s"xxhash64(${args.head})")
-                else out.append(s"pmod(xxhash64(${args(0)}), CAST(${args(1)} AS BIGINT))")
-              case "hash_xxhash64" =>
-                // ADX hash_xxhash64(source[, mod]) — the explicitly-
-                // named sibling of hash() (this engine's hash() is
-                // already xxhash64-backed; same documented bit-level
-                // deviation from the ADX service, same pmod range).
-                require(args.length == 1 || args.length == 2,
-                  s"hash_xxhash64 expects (source[, mod]): ${s.substring(i, close + 1)}")
-                if (args.length == 1) out.append(s"xxhash64(${args.head})")
-                else out.append(s"pmod(xxhash64(${args(0)}), CAST(${args(1)} AS BIGINT))")
-              case "hash_many" =>
-                // ADX hash_many(v1, v2, ...) — one hash over all
-                // arguments; Spark's xxhash64 is natively variadic, so
-                // this is the direct emission. Bit values are engine-
-                // specific (the hash() deviation); cross-engine checks
-                // assert determinism/injectivity, KqlSpec pins values.
-                require(args.nonEmpty,
-                  s"hash_many expects (value, ...): ${s.substring(i, close + 1)}")
-                out.append(s"xxhash64(${args.mkString(", ")})")
-              case "hash_combine" =>
-                // ADX hash_combine(h1, h2, ...) — combines already-
-                // computed hash VALUES. DEVIATION (documented): ADX
-                // does not publish its mixer; this engine re-keys the
-                // operand hashes through the same xxhash64 family, so
-                // combined values keep full 64-bit dispersion and the
-                // function stays order-sensitive like ADX's.
-                require(args.length >= 2,
-                  s"hash_combine expects (h1, h2, ...): ${s.substring(i, close + 1)}")
-                out.append(
-                  s"xxhash64(${args.map(a => s"CAST(($a) AS BIGINT)").mkString(", ")})")
-              case "bag_pack_columns" =>
-                // ADX bag_pack_columns(col1, ..., colN) → a bag keyed
-                // by the COLUMN NAMES. Arguments must be bare column
-                // identifiers (computed expressions are rejected loudly
-                // — the bag_pack computed-key convention). Null-valued
-                // fields are omitted from the bag (the to_json path's
-                // convention, shared with bag_pack), and the VARIANT
-                // round-trip normalizes key order to SORTED.
-                val rawCols = splitTopLevel(s.substring(open + 1, close), ',')
-                  .map(_.trim)
-                require(rawCols.nonEmpty &&
-                    rawCols.forall(_.matches("[A-Za-z_][A-Za-z0-9_]*")),
-                  s"bag_pack_columns expects bare column names: ${s.substring(i, close + 1)}")
-                val kvs = rawCols.map(n => s"'$n', ${scalar(n, lets)}").mkString(", ")
-                out.append(s"parse_json(to_json(named_struct($kvs)))")
-              case "replace_strings" =>
-                // ADX replace_strings(text, lookups, rewrites):
-                // replace each lookup with its rewrite, applied
-                // SEQUENTIALLY left-to-right (ADX's order — later pairs
-                // see earlier pairs' output) via one fold over the
-                // zipped pair arrays. Length mismatch → null (ADX
-                // errors; null is this engine's in-band convention).
-                require(args.length == 3,
-                  "replace_strings expects (text, lookups, rewrites)")
-                // dynamic([...]) passes through scalar() untouched (the
-                // array_split/has_any_index convention) — unwrap it to
-                // array(...); computed array expressions cast through.
-                def rsArr(raw0: String): String = {
-                  val raw = raw0.trim
-                  if (raw.toLowerCase.startsWith("dynamic(")) {
-                    val inner = raw.substring(raw.indexOf('(') + 1,
-                      raw.length - 1).trim
-                    require(inner.startsWith("[") && inner.endsWith("]"),
-                      s"replace_strings lists must be dynamic([...]): $raw")
-                    s"try_cast(array(${inner.substring(1, inner.length - 1)}) AS ARRAY<STRING>)"
-                  } else s"try_cast(($raw) AS ARRAY<STRING>)"
-                }
-                val lk = rsArr(args(1))
-                val rw = rsArr(args(2))
-                val pairs = s"zip_with($lk, $rw, (sx, rx) -> named_struct('s', sx, 'r', rx))"
-                out.append(s"(CASE WHEN size($lk) = size($rw) THEN " +
-                  s"aggregate($pairs, CAST((${args(0)}) AS STRING), " +
-                  "(acc, p) -> replace(acc, p.s, p.r)) " +
-                  "ELSE CAST(NULL AS STRING) END)")
-              case "punycode_domain_from_string" =>
-                // ADX punycode_domain_from_string(domain): the IDNA ACE
-                // form — each dot-separated label containing any
-                // non-ASCII character becomes 'xn--' + punycode(label);
-                // pure-ASCII labels pass through. An unencodable label
-                // nulls the whole result (ADX returns empty; null is
-                // the engine's in-band convention, same as
-                // punycode_from_string).
-                require(args.length == 1,
-                  "punycode_domain_from_string expects (string)")
-                val encLabels = s"transform(split(CAST((${args(0)}) AS STRING), '\\\\.'), " +
-                  "pl -> CASE WHEN pl RLIKE '[^\\\\x00-\\\\x7F]' " +
-                  "THEN concat('xn--', graft_punycode_encode(pl)) ELSE pl END)"
-                out.append(s"element_at(transform(array($encLabels), pls -> " +
-                  "CASE WHEN exists(pls, px -> px IS NULL) THEN CAST(NULL AS STRING) " +
-                  "ELSE array_join(pls, '.') END), 1)")
-              case "punycode_domain_to_string" =>
-                // Inverse: labels with the 'xn--' ACE prefix decode,
-                // others pass through; a malformed ACE label nulls the
-                // whole result (array_join would silently DROP null
-                // labels, hence the explicit exists() guard — shared
-                // with the encode direction). The ACE prefix match is
-                // CASE-INSENSITIVE and the payload case-folds before
-                // decoding (r17 ADVICE: domains are case-insensitive
-                // per IDNA, so 'XN--BCHER-KVA.example' must decode —
-                // and IDNA ToUnicode lowercases, so it decodes to the
-                // same 'bücher' as the lowercase form).
-                require(args.length == 1,
-                  "punycode_domain_to_string expects (string)")
-                val decLabels = s"transform(split(CAST((${args(0)}) AS STRING), '\\\\.'), " +
-                  "pl -> CASE WHEN lower(substring(pl, 1, 4)) = 'xn--' " +
-                  "THEN graft_punycode_decode(lower(substring(pl, 5, 2147483647))) ELSE pl END)"
-                out.append(s"element_at(transform(array($decLabels), pls -> " +
-                  "CASE WHEN exists(pls, px -> px IS NULL) THEN CAST(NULL AS STRING) " +
-                  "ELSE array_join(pls, '.') END), 1)")
-              case empt =>
-                require(args.length == 1,
-                  s"$empt expects one argument: ${s.substring(i, close + 1)}")
-                val test = s"(coalesce(cast(${args.head} AS string), '') = '')"
-                out.append(if (empt == "isempty") test else s"(NOT $test)")
-            }
-            i = close + 1
-          case Some(w) if Set("bag_pack", "pack")(w.toLowerCase) && {
-              var j = i + w.length
-              while (j < s.length && s.charAt(j).isWhitespace) j += 1
-              j < s.length && s.charAt(j) == '('
-            } =>
-            // ADX bag_pack('k1', v1, 'k2', v2, …) — a dynamic property
-            // bag. VARIANT has no direct constructor expression, so the
-            // bag goes named_struct → to_json → parse_json; keys must
-            // be string literals (ADX allows computed keys — rejected
-            // loudly here, a documented deviation).
-            val open = s.indexOf('(', i + w.length)
-            val close = matchingParen(s, open)
-            val args = splitTopLevel(s.substring(open + 1, close), ',')
-              .map(a => scalar(a.trim, lets))
-            require(args.nonEmpty && args.length % 2 == 0,
-              s"${w.toLowerCase} expects ('key1', v1, 'key2', v2, …): ${s.substring(i, close + 1)}")
-            args.grouped(2).foreach { kv =>
-              val k = kv.head.trim
-              require(k.length >= 2 && (k.head == '\'' || k.head == '"') && k.last == k.head,
-                s"${w.toLowerCase} keys must be string literals (computed keys unsupported): $k")
-            }
-            out.append(s"parse_json(to_json(named_struct(${args.mkString(", ")})))")
-            i = close + 1
-          case Some(w) if Set("trim", "trim_start", "trim_end")(w.toLowerCase) && {
-              var j = i + w.length
-              while (j < s.length && s.charAt(j).isWhitespace) j += 1
-              j < s.length && s.charAt(j) == '('
-            } =>
-            // ADX trim/trim_start/trim_end take a REGEX first and the
-            // source second, repeatedly stripping anchored matches —
-            // not Spark's whitespace/charset trim. Desugars to one
-            // anchored regexp_replace; the pattern concat keeps
-            // non-literal regex arguments working. (Spark replaces ALL
-            // matches, so the two-anchor alternation trims both ends in
-            // one pass — DuckDB oracles need the 'g' flag for parity.)
-            val open = s.indexOf('(', i + w.length)
-            val close = matchingParen(s, open)
-            val args = splitTopLevel(s.substring(open + 1, close), ',')
-              .map(a => scalar(a.trim, lets))
-            require(args.length == 2,
-              s"${w.toLowerCase} expects (regex, source): ${s.substring(i, close + 1)}")
-            val r = args(0)
-            val pat = w.toLowerCase match {
-              case "trim"       => s"concat('^(?:', $r, ')+|(?:', $r, ')+$$')"
-              case "trim_start" => s"concat('^(?:', $r, ')+')"
-              case _            => s"concat('(?:', $r, ')+$$')"
-            }
-            out.append(s"regexp_replace(${args(1)}, $pat, '')")
-            i = close + 1
-          case Some(w) if Set("strcat", "strcat_delim")(w.toLowerCase) && {
-              var j = i + w.length
-              while (j < s.length && s.charAt(j).isWhitespace) j += 1
-              j < s.length && s.charAt(j) == '('
-            } =>
-            // ADX strcat/strcat_delim treat NULL arguments as empty
-            // strings and stringify non-string ones; Spark's concat
-            // nulls out on ANY null argument and concat_ws SKIPS null
-            // args (dropping their delimiter) — a pure name swap would
-            // be a silent semantic deviation either way. Rewrite each
-            // argument as coalesce(cast(arg AS string), '') so nulls
-            // become empties and every delimiter slot survives.
-            val open = s.indexOf('(', i + w.length)
-            val close = matchingParen(s, open)
-            val args = splitTopLevel(s.substring(open + 1, close), ',')
-              .map(a => scalar(a.trim, lets))
-            def pad(a: String) = s"coalesce(cast(($a) as string), '')"
-            if (w.equalsIgnoreCase("strcat")) {
-              require(args.nonEmpty, "strcat expects at least one argument")
-              out.append(args.map(pad).mkString("concat(", ", ", ")"))
-            } else {
-              require(args.length >= 2,
-                "strcat_delim expects (delimiter, arg1, ...)")
-              out.append((pad(args.head) +: args.tail.map(pad))
-                .mkString("concat_ws(", ", ", ")"))
-            }
-            i = close + 1
-          case Some(w) if Set("datetime_add", "datetime_diff")(w.toLowerCase) && {
-              var j = i + w.length
-              while (j < s.length && s.charAt(j).isWhitespace) j += 1
-              j < s.length && s.charAt(j) == '('
-            } =>
-            // ADX datetime arithmetic: datetime_add(period, n, dt) and
-            // datetime_diff(period, dt1, dt2) = dt1 - dt2. Mapped to
-            // Spark timestampadd/timestampdiff with the period literal
-            // lifted into the unit keyword. DEVIATION: Spark counts
-            // whole elapsed units; ADX counts period BOUNDARIES crossed
-            // (ADX datetime_diff('year', jan1, dec31) = 1, here 0).
-            val open = s.indexOf('(', i + w.length)
-            val close = matchingParen(s, open)
-            val args = splitTopLevel(s.substring(open + 1, close), ',')
-              .map(a => scalar(a.trim, lets))
-            require(args.length == 3,
-              s"${w.toLowerCase} expects (period, …, …): ${s.substring(i, close + 1)}")
-            val p = args.head.trim
-            require(p.length >= 2 && (p.head == '\'' || p.head == '"') && p.last == p.head,
-              s"${w.toLowerCase} period must be a string literal: $p")
-            val unit = p.substring(1, p.length - 1).toUpperCase
-            require(Set("YEAR", "QUARTER", "MONTH", "WEEK", "DAY",
-                "HOUR", "MINUTE", "SECOND")(unit),
-              s"unsupported period '$unit'")
-            if (w.equalsIgnoreCase("datetime_add"))
-              out.append(s"timestampadd($unit, ${args(1)}, ${args(2)})")
-            else // ADX order: dt1 - dt2; Spark diff is (start, end)
-              out.append(s"timestampdiff($unit, ${args(2)}, ${args(1)})")
-            i = close + 1
-          case Some(w) if w.toLowerCase == "format_datetime" && {
-              var j = i + w.length
-              while (j < s.length && s.charAt(j).isWhitespace) j += 1
-              j < s.length && s.charAt(j) == '('
-            } =>
-            // ADX format_datetime(dt, 'yyyy-MM-dd HH:mm:ss') — the ADX
-            // specifier alphabet maps 1:1 onto Spark's datetime pattern
-            // except fractional seconds ('f' → 'S'). The format must be
-            // a literal (it becomes part of the plan), and only the ADX
-            // specifiers + plain separators are accepted — anything else
-            // would silently render wrong through Java pattern letters.
-            val open = s.indexOf('(', i + w.length)
-            val close = matchingParen(s, open)
-            val args = splitTopLevel(s.substring(open + 1, close), ',')
-              .map(a => scalar(a.trim, lets))
-            require(args.length == 2,
-              s"format_datetime expects (datetime, format): ${s.substring(i, close + 1)}")
-            val f = args(1).trim
-            require(f.length >= 2 && (f.head == '\'' || f.head == '"') && f.last == f.head,
-              s"format_datetime format must be a string literal: $f")
-            val fmt = f.substring(1, f.length - 1)
-            require(fmt.matches("[yMdHhmsf \\-:/.,_]*"),
-              s"unsupported format_datetime specifier in '$fmt' " +
-                "(supported: y M d H h m s f and separators - : / . , _ space)")
-            out.append(s"date_format(${args(0)}, '${fmt.replace('f', 'S')}')")
-            i = close + 1
-          case Some(w) if w.toLowerCase == "datetime" && {
-              var j = i + w.length
-              while (j < s.length && s.charAt(j).isWhitespace) j += 1
-              j < s.length && s.charAt(j) == '('
-            } =>
-            // KQL datetime(2024-03-01 10:30:00) literal — the body is an
-            // UNQUOTED ISO datetime (date-only = midnight; T/Z accepted),
-            // which Spark SQL can't parse as an expression. Emit a
-            // TIMESTAMP literal. A trailing Z marks a UTC instant (ADX
-            // datetimes are UTC) — keep the zone suffix in the literal
-            // so a non-UTC session timezone cannot silently reinterpret
-            // the wall-clock; zone-less bodies stay session-local.
-            val open = s.indexOf('(', i + w.length)
-            val close = matchingParen(s, open)
-            val raw = s.substring(open + 1, close).trim
-              .stripPrefix("\"").stripSuffix("\"")
-              .stripPrefix("'").stripSuffix("'").trim
-            val hadZ = raw.endsWith("Z")
-            val iso = raw.stripSuffix("Z").replace('T', ' ').trim
-            val full = if (iso.contains(" ")) iso else s"$iso 00:00:00"
-            out.append(s"TIMESTAMP '$full${if (hadZ) "Z" else ""}'")
-            i = close + 1
-          case Some(w) =>
-            if (w.toLowerCase == "in" && i + w.length < s.length &&
-                s.charAt(i + w.length) == '~') {
-              // `x in~ ('a', 'b')` — ADX case-insensitive IN
-              out.append("ilike_in"); i += w.length + 1
-            } else if (w.toLowerCase == "matches" && {
-                var j = i + w.length
-                while (j < s.length && s.charAt(j).isWhitespace) j += 1
-                s.regionMatches(true, j, "regex", 0, 5)
-              }) {
-              // ADX `matches regex '<re>'` → RLIKE. Documented
-              // deviation: Java regex flavor, not ADX's RE2 (the
-              // common subset — classes, anchors, quantifiers,
-              // alternation — behaves identically).
-              var j = i + w.length
-              while (j < s.length && s.charAt(j).isWhitespace) j += 1
-              out.append("RLIKE"); i = j + 5
-            } else {
-            val repl = w.toLowerCase match {
-              case "contains"   => Some("ilike_contains") // marker, fixed up next
-              case "startswith" => Some("ilike_starts")
-              case "endswith"   => Some("ilike_ends")
-              case "has"        => Some("ilike_has") // whole-term ci match
-              case "has_any"    => Some("ilike_hasany") // OR of has terms
-              case "has_all"    => Some("ilike_hasall") // AND of has terms
-              // case-SENSITIVE operator family (ADX `_cs` forms)
-              case "contains_cs"   => Some("cslike_contains")
-              case "startswith_cs" => Some("cslike_starts")
-              case "endswith_cs"   => Some("cslike_ends")
-              case "has_cs"        => Some("cslike_has")
-              case "and" | "or" | "not" => Some(w.toLowerCase)
-              // ADX scalar-function spellings with exact Spark
-              // equivalents — pure name swaps, arguments unchanged.
-              case "strlen"   => Some("length")
-              case "toupper"  => Some("upper")
-              case "tolower"  => Some("lower")
-              // ADX dynamic-array functions with exact Spark
-              // equivalents — name swaps, same arity and order
-              case "array_length"   => Some("size")
-              case "array_sort_asc" => Some("sort_array")
-              case "array_reverse"  => Some("reverse")
-              case "array_concat"   => Some("concat")
-              case "tostring" => Some("string")
-              // tolong/toint/todouble/toreal/tobool/todatetime are
-              // handled in the args-aware tier above (try_cast — ADX
-              // null-on-malformed semantics)
-              case "pack_array" => Some("array")
-              case "iif" | "iff" => Some("if")
-              case "todynamic" => Some("parse_json") // dynamic = VARIANT
-              case "now" => Some("current_timestamp")
-              // ADX datetime-part extractors with exact Spark
-              // equivalents — name swaps (all return int parts; ADX
-              // week_of_year is ISO 8601, as is Spark's weekofyear)
-              case "getmonth" | "monthofyear" => Some("month")
-              case "getyear" => Some("year")
-              case "hourofday" => Some("hour")
-              case "dayofmonth" => Some("day")
-              case "week_of_year" => Some("weekofyear")
-              case "tohex" => Some("hex")
-              case "bitset_count_ones" => Some("bit_count")
-              // HLL sketch estimate (pairs with the hll()/hll_merge()
-              // aggregates — Spark DataSketches)
-              case "dcount_hll" => Some("hll_sketch_estimate")
-              case _ => None
-            }
-            out.append(repl.getOrElse(w)); i += w.length
-            }
-          case None => out.append(c); i += 1
-        }
+      else if (s.startsWith("!in~", i)) { infixOp("ilike_nin"); i += 4 } // ci NOT IN
+      else if (negated == "between") { infixOp("NOT "); i += 1 }
+      else if (NegatedOps.contains(negated)) {
+        infixOp(NegatedOps(negated)); i += 1 + negated.length
+      } else if (w.isEmpty) { out.append(c); i += 1 }
+      else if (lets.contains(w) && !lets(w).startsWith(LambdaMarker)) {
+        // recurse with w out of scope: guards termination if a
+        // rebinding made a body mention its own name (function lets
+        // are skipped — they substitute only through `invoke`)
+        out.append("(").append(scalar(lets(w), lets - w)).append(")"); i += w.length
+      } else {
+        val name = w.toLowerCase
+        var j = i + w.length
+        while (j < s.length && s.charAt(j).isWhitespace) j += 1
+        if (j < s.length && s.charAt(j) == '(' &&
+            (scalarFns.contains(name) || name.startsWith("series_"))) {
+          val close = matchingParen(s, j)
+          out.append(callScalarFn(name, s.substring(j + 1, close), s.substring(i, close + 1), lets))
+          i = close + 1
+        } else if (name == "in" && s.startsWith("~", i + w.length)) {
+          // `x in~ ('a', 'b')` — ADX case-insensitive IN
+          out.append("ilike_in"); i += w.length + 1
+        } else if (name == "matches" && s.regionMatches(true, j, "regex", 0, 5)) {
+          // ADX `matches regex '<re>'` → RLIKE. Documented deviation:
+          // Java regex flavor, not ADX's RE2 (the common subset —
+          // classes, anchors, quantifiers, alternation — behaves
+          // identically).
+          out.append("RLIKE"); i = j + 5
+        } else { out.append(WordSwaps.getOrElse(name, w)); i += w.length }
       }
     }
-    // infix markers → function form: `a ilike_contains "x"` is not valid
-    // SQL, so rewrite `<lhs> marker <rhs-literal>` patterns
-    var r = out.toString
-    val Infix = "([A-Za-z_][A-Za-z0-9_.]*)\\s+(i|cs)like_(n?)(contains|starts|ends|has)\\s+('[^']*'|\"[^\"]*\")".r
-    r = Infix.replaceAllIn(r, m => {
+    infixPostPass(out.toString)
+  }
+
+  /** One bound call: `name`'s top-level arguments (`inner`, the text
+    * between the parentheses), checked against its entry's arity. */
+  private def callScalarFn(name: String, inner: String, text: String,
+                           lets: Map[String, String]): String = {
+    val fn = scalarFns.getOrElse(name, throw new IllegalArgumentException(
+      s"unsupported series function '$name' (supported: " +
+        scalarFns.keys.filter(_.startsWith("series_")).toSeq.sorted.mkString(", ") + ")"))
+    val raw = if (inner.trim.isEmpty) Vector.empty
+              else splitTopLevel(inner, ',').map(_.trim).toVector
+    if (raw.length < fn.minArgs || raw.length > fn.maxArgs)
+      throw new IllegalArgumentException(
+        s"$name expects ${fn.usage} (got ${raw.length} arguments): $text")
+    fn.emit(ScalarCall(name, raw, text, lets))
+  }
+
+  /** One scalar call as [[scalarFns]] binds it: the lower-case name, the
+    * raw top-level arguments (trimmed; their count already inside the
+    * entry's arity), the call text for error messages, and the lets in
+    * scope. */
+  private[kql] final case class ScalarCall(name: String, raw: IndexedSeq[String], text: String,
+      lets: Map[String, String]) {
+    /** The arguments translated to Spark SQL, on first use. */
+    lazy val args: IndexedSeq[String] = raw.map(scalar(_, lets))
+  }
+
+  /** A scalar function: the argument list its arity error quotes, the
+    * argument counts it accepts, and the SQL it emits. */
+  private[kql] final case class ScalarFn(usage: String, minArgs: Int, maxArgs: Int,
+      emit: ScalarCall => String)
+
+  /** Every KQL scalar function whose Spark SQL needs more than a name
+    * swap ([[WordSwaps]]), by exact lower-case name: the one dispatch
+    * table for `name(args)` in [[scalar]]. A name not here passes
+    * through to Spark SQL unchanged (`sqrt`, `abs`, …); an unknown
+    * `series_*` name is rejected, listing the keys that are here. */
+  private[kql] val scalarFns: Map[String, ScalarFn] = Map(
+    "bin_at" -> ScalarFn("(value, size, fixedPoint)", 3, 3, { c =>
+      // KQL bin_at(value, size, fixedPoint) — binning anchored at an
+      // arbitrary point (week-aligned days, fiscal offsets):
+      // fixedPoint + bin(value - fixedPoint, size), in the same exact
+      // arithmetic as bin(). Timespan sizes stay in integer epoch
+      // seconds; numeric sizes must be positive literals (the per-row
+      // guard of bin() is omitted here — an anchored bin with a
+      // data-driven size has no dashboard use).
+      timespanSeconds(c.raw(1), "bin_at()") match {
+        case Some(secs) =>
+          require(secs > 0, s"bin_at() timespan must be positive: ${c.raw(1)}")
+          val v = c.args(0)
+          val a = c.args(2)
+          val d = s"(unix_timestamp($v) - unix_timestamp($a))"
+          s"timestamp_seconds(unix_timestamp($a) + " +
+            s"($d - (($d % $secs + $secs) % $secs)))"
+        case _ =>
+          val v = c.args(0)
+          val sz = c.args(1)
+          val a = c.args(2)
+          val n = scala.util.Try(BigDecimal(sz.trim)).getOrElse(
+            throw new IllegalArgumentException(
+              s"bin_at() size must be a literal: $sz"))
+          require(n > 0, s"bin_at() size must be positive, got $sz")
+          val d = s"(($v) - ($a))"
+          s"(($a) + ($d - (($d % ($sz) + ($sz)) % ($sz))))"
+      }
+    }),
+    // KQL bin(value, size) = floor-to-multiple; ADX `floor` is an ALIAS
+    // of bin (2-arg).
+    "bin" -> ScalarFn("(value, size)", 2, 2, binSql),
+    "floor" -> ScalarFn("(value, size)", 2, 2, binSql),
+    // Date helpers: startof*(x) → date_trunc; ago(<timespan>) → now
+    // minus the span (nondeterministic — dashboard-filter use only,
+    // never in an oracle-checked query). ADX week boundaries are
+    // SUNDAY-based (Spark's date_trunc('week') is Monday-based, so
+    // startofweek is day-truncate minus days-since-Sunday). endof*(x)
+    // is the last representable instant of the period — DEVIATION:
+    // Spark timestamps are µs-precision, so endof* lands on .999999
+    // rather than ADX's .9999999 (100 ns ticks). dayofweek(x) —
+    // DEVIATION: returns an INTEGER count of days since Sunday (0..6)
+    // rather than ADX's timespan (the engine has no timespan type;
+    // `1d`-literal comparisons against it are not supported). The
+    // argument expression is inlined more than once for week/endof
+    // forms — fine for column refs and pure scalars, which is all the
+    // verb surface feeds here.
+    "ago" -> ScalarFn("(timespan)", 1, 1, { c =>
+      val secs = timespanSeconds(c.raw(0), "ago").getOrElse(
+        throw new IllegalArgumentException(
+          s"ago expects a timespan literal (1d, 2h, 30m, 90s): ${c.raw(0)}"))
+      s"(current_timestamp() - make_interval(0, 0, 0, 0, 0, 0, $secs))"
+    }),
+    "startofday" -> ScalarFn("(date)", 1, 1, c => s"date_trunc('DAY', ${c.args(0)})"),
+    "startofmonth" -> ScalarFn("(date)", 1, 1, c => s"date_trunc('MONTH', ${c.args(0)})"),
+    "startofyear" -> ScalarFn("(date)", 1, 1, c => s"date_trunc('YEAR', ${c.args(0)})"),
+    "startofweek" -> ScalarFn("(date)", 1, 1, { c =>
+      val x = c.args(0)
+      s"timestampadd(DAY, -(dayofweek($x) - 1), date_trunc('DAY', $x))"
+    }),
+    "dayofweek" -> ScalarFn("(date)", 1, 1, c => s"(dayofweek(${c.args(0)}) - 1)"),
+    "endofweek" -> ScalarFn("(date)", 1, 1, { c =>
+      val x = c.args(0)
+      "timestampadd(MICROSECOND, -1, " +
+        s"timestampadd(DAY, 8 - dayofweek($x), date_trunc('DAY', $x)))"
+    }),
+    "endofday" -> ScalarFn("(date)", 1, 1, c => endOfSql("DAY", c.args(0))),
+    "endofmonth" -> ScalarFn("(date)", 1, 1, c => endOfSql("MONTH", c.args(0))),
+    "endofyear" -> ScalarFn("(date)", 1, 1, c => endOfSql("YEAR", c.args(0))),
+    "case" -> ScalarFn("(cond1, val1, …, default)", 3, Int.MaxValue, { c =>
+      // KQL case(cond1, val1, cond2, val2, …, default) — ADX's
+      // multi-branch conditional, rewritten to CASE WHEN. (SQL's own
+      // CASE keyword is never followed by '(' so the call form cannot
+      // misfire on pass-through SQL.)
+      require(c.raw.length % 2 == 1,
+        s"case expects (cond1, val1, …, default): ${c.text}")
+      val whens = c.args.init.grouped(2)
+        .map { p => s"WHEN (${p(0)}) THEN (${p(1)})" }.mkString(" ")
+      s"(CASE $whens ELSE (${c.args.last}) END)"
+    }),
+    "between" -> ScalarFn("(lo .. hi)", 1, 1, { c =>
+      // ADX range filter: `x between (lo .. hi)` (inclusive both ends,
+      // same as SQL BETWEEN). The parenthesized `lo .. hi` body splits
+      // on the first top-level `..`.
+      val inner = c.raw(0)
+      var dot = -1
+      var depth = 0
+      var j = 0
+      while (j < inner.length - 1 && dot < 0) {
+        inner.charAt(j) match {
+          case '"' | '\'' => j = literalEnd(inner, j) - 1
+          case '(' | '[' => depth += 1
+          case ')' | ']' => depth -= 1
+          case '.' if depth == 0 && inner.charAt(j + 1) == '.' => dot = j
+          case _ =>
+        }
+        j += 1
+      }
+      require(dot > 0, s"between expects (lo .. hi): ${c.text}")
+      val lo = scalar(inner.substring(0, dot).trim, c.lets)
+      val hi = scalar(inner.substring(dot + 2).trim, c.lets)
+      s"BETWEEN ($lo) AND ($hi)"
+    }),
+    "todouble" -> ScalarFn("(value)", 1, 1, tryCastSql),
+    "toreal" -> ScalarFn("(value)", 1, 1, tryCastSql),
+    "tolong" -> ScalarFn("(value)", 1, 1, tryCastSql),
+    "toint" -> ScalarFn("(value)", 1, 1, tryCastSql),
+    "tobool" -> ScalarFn("(value)", 1, 1, tryCastSql),
+    "toboolean" -> ScalarFn("(value)", 1, 1, tryCastSql),
+    "todatetime" -> ScalarFn("(value)", 1, 1, tryCastSql),
+    // ADX string functions whose Spark equivalent needs more than a
+    // name swap: extract/extract_all put the regex FIRST and the source
+    // LAST (Spark regexp_extract* is the reverse); ADX split takes a
+    // LITERAL delimiter where Spark split takes a regex (metacharacters
+    // escaped here, at parse time — a non-literal delimiter is rejected
+    // loudly).
+    "extract" -> ScalarFn("(regex, captureGroup, source)", 3, 3, c =>
+      // Spark regexp_extract yields '' on no match; ADX yields
+      // null — nullif restores that (same convention as the
+      // parse verb's no-match slots)
+      s"nullif(regexp_extract(${c.args(2)}, ${c.args(0)}, ${c.args(1)}), '')"),
+    "extract_all" -> ScalarFn("(regex, source)", 2, 2, c =>
+      // ADX requires ≥1 capture group; group 1 is the match list
+      s"regexp_extract_all(${c.args(1)}, ${c.args(0)}, 1)"),
+    "split" -> ScalarFn("(source, delimiter) — the requestedIndex form is not supported", 2, 2, { c =>
+      val d = c.args(1).trim
+      require(d.length >= 2 && (d.head == '\'' || d.head == '"') && d.last == d.head,
+        s"split delimiter must be a string literal: $d")
+      val escaped = d.substring(1, d.length - 1)
+        .flatMap(ch => if ("\\.[]{}()*+?^$|".contains(ch)) s"\\\\$ch" else ch.toString)
+      s"split(${c.args(0)}, '${escaped.replace("'", "''")}')"
+    }),
+    // ADX series pointwise math over make-series arrays — pure
+    // higher-order functions, no explode round trip: binary ops
+    // zip_with, reductions fold. Interpreted lambdas, but over
+    // dashboard-sized arrays (bounded by the make-series step count) —
+    // same tradeoff as mv-apply, documented there. The analysis tier
+    // (fit_line / stats / outliers / decompose*) inlines its shared
+    // sub-expressions rather than binding them (Spark SQL expressions
+    // have no let) — the emitted SQL is multi-KB but evaluates over
+    // step-count-sized arrays.
+    "series_add" -> ScalarFn("(series, series|number)", 2, 2, seriesArithSql),
+    "series_subtract" -> ScalarFn("(series, series|number)", 2, 2, seriesArithSql),
+    "series_multiply" -> ScalarFn("(series, series|number)", 2, 2, seriesArithSql),
+    "series_divide" -> ScalarFn("(series, series|number)", 2, 2, seriesArithSql),
+    "series_abs" -> ScalarFn("(series)", 1, 1, seriesUnarySql),
+    "series_exp" -> ScalarFn("(series)", 1, 1, seriesUnarySql),
+    "series_log" -> ScalarFn("(series)", 1, 1, seriesUnarySql),
+    "series_sign" -> ScalarFn("(series)", 1, 1, seriesUnarySql),
+    "series_floor" -> ScalarFn("(series)", 1, 1, seriesUnarySql),
+    "series_ceiling" -> ScalarFn("(series)", 1, 1, seriesUnarySql),
+    "series_round" -> ScalarFn("(series)", 1, 1, seriesUnarySql),
+    "series_sin" -> ScalarFn("(series)", 1, 1, seriesUnarySql),
+    "series_cos" -> ScalarFn("(series)", 1, 1, seriesUnarySql),
+    "series_tan" -> ScalarFn("(series)", 1, 1, seriesUnarySql),
+    "series_asin" -> ScalarFn("(series)", 1, 1, seriesUnarySql),
+    "series_acos" -> ScalarFn("(series)", 1, 1, seriesUnarySql),
+    "series_atan" -> ScalarFn("(series)", 1, 1, seriesUnarySql),
+    "series_pow" -> ScalarFn("(series, series|number)", 2, 2, { c =>
+      // elementwise x^y of two equal-length series, with
+      // the same numeric-literal broadcast as the binary
+      // arithmetic tier (a constant exponent/base is the
+      // common dashboard form)
+      def powLit(a: String): Boolean =
+        a.matches("-?[0-9]+(\\.[0-9]+)?([eE][+-]?[0-9]+)?")
+      if (powLit(c.args(1)))
+        s"transform(${c.args(0)}, x -> power(x, ${c.args(1)}))"
+      else if (powLit(c.args(0)))
+        s"transform(${c.args(1)}, y -> power(${c.args(0)}, y))"
+      else s"zip_with(${c.args(0)}, ${c.args(1)}, (x, y) -> power(x, y))"
+    }),
+    "series_greater" -> ScalarFn("(series, series)", 2, 2, seriesCompareSql),
+    "series_greater_equals" -> ScalarFn("(series, series)", 2, 2, seriesCompareSql),
+    "series_less" -> ScalarFn("(series, series)", 2, 2, seriesCompareSql),
+    "series_less_equals" -> ScalarFn("(series, series)", 2, 2, seriesCompareSql),
+    "series_equals" -> ScalarFn("(series, series)", 2, 2, seriesCompareSql),
+    "series_not_equals" -> ScalarFn("(series, series)", 2, 2, seriesCompareSql),
+    "series_sum" -> ScalarFn("(series)", 1, 1, c =>
+      seriesSum(c.args(0))),
+    "series_avg" -> ScalarFn("(series)", 1, 1, c =>
+      s"(${seriesSum(c.args(0))} / size(${c.args(0)}))"),
+    "series_fit_line" -> ScalarFn("(series)", 1, 1, c =>
+      // ADX returns a 6-tuple into multiple columns; the
+      // tuple-assign extend form isn't supported here —
+      // deviation: the single-value form yields line_fit
+      // (the fitted array); the scalar components come
+      // from series_fit_line_dynamic's bag, mirroring
+      // ADX's own _dynamic variant.
+      seriesLineFit(c.args(0))),
+    "series_fit_line_dynamic" -> ScalarFn("(series)", 1, 1, c =>
+      seriesFitLineDynamic(c.args(0))),
+    "series_stats_dynamic" -> ScalarFn("(series)", 1, 1, c =>
+      seriesStatsDynamic(c.args(0))),
+    "series_stats" -> ScalarFn("(series)", 1, 1, c =>
+      // ADX's multi-column tuple-assign form is not
+      // supported (the series_fit_line convention) —
+      // the single-value form yields the SAME bag as
+      // series_stats_dynamic, ADX's own _dynamic twin.
+      seriesStatsDynamic(c.args(0))),
+    "series_outliers" -> ScalarFn("(series)", 1, 1, c =>
+      // Deviation (documented): ADX scores by Tukey fences
+      // (quartile-based); this engine emits the z-score
+      // (x - mean) / population-stdev per point — the same
+      // monotone "how anomalous" axis, deterministic and
+      // oracle-expressible without interpolated quantiles.
+      seriesZScores(c.args(0))),
+    "series_decompose" -> ScalarFn("(series [, period])", 1, 2, { c =>
+      // Deviation (documented): ADX fits an STL-style
+      // seasonal component with auto period detection;
+      // this engine is deterministic-by-construction —
+      // trend = 7-point centered moving average (edge
+      // windows clamp), seasonal = 0 (no season model),
+      // baseline = trend, residual = series - baseline.
+      // r11: the optional 2nd argument gives the season
+      // PERIOD — seasonal = series_seasonal(series, p),
+      // trend stays the raw-series moving average, and
+      // the components ADD (independent additive
+      // estimation, NOT sequential detrending —
+      // documented deviation from STL; the zero-sum
+      // season keeps the baseline unbiased, and every
+      // element stays a single-rounded chain over exact
+      // integer sums, so the decomposition is
+      // cross-engine exact for counting series).
+      val t = seriesTrend(c.args(0))
+      if (c.args.length == 1)
+        s"named_struct('baseline', $t, 'seasonal', transform(${c.args(0)}, x -> CAST(0 AS DOUBLE)), " +
+          s"'trend', $t, 'residual', ${seriesResidual(c.args(0))})"
+      else {
+        val per = scala.util.Try(c.args(1).trim.toInt).getOrElse(
+          throw new IllegalArgumentException(
+            s"series_decompose period must be an integer literal: ${c.args(1)}"))
+        require(per >= 2, s"series_decompose period must be >= 2: $per")
+        val seas = seriesSeasonalSql(c.args(0), per)
+        val baseline = s"zip_with($t, $seas, (ba, bb) -> ba + bb)"
+        s"named_struct('baseline', $baseline, 'seasonal', $seas, " +
+          s"'trend', $t, " +
+          s"'residual', zip_with(${c.args(0)}, $baseline, (ra, rb) -> ra - rb))"
+      }
+    }),
+    "series_decompose_anomalies" -> ScalarFn("(series [, threshold])", 1, 2, { c =>
+      // Deviation (documented): anomaly flags are k-sigma
+      // on the residual against the same moving-average
+      // trend as series_decompose (ADX: seasonal
+      // decomposition + Tukey on residual). Returns ADX's
+      // three outputs as one bag: ad_flag (+1/-1/0),
+      // ad_score (residual / population-stdev of
+      // residuals), baseline (the trend). Default
+      // threshold 1.5 matches ADX.
+      val k = if (c.args.length == 2) c.args(1) else "1.5"
+      seriesAnomalies(c.args(0), k)
+    }),
+    "series_decompose_forecast" -> ScalarFn("(series, points)", 2, 2, { c =>
+      // ADX series_decompose_forecast(series, points):
+      // the last `points` entries are the horizon to
+      // forecast; the model fits the PREFIX and returns a
+      // prediction for the WHOLE axis (training points
+      // included), ADX's output convention. Deviation
+      // (documented, consistent with series_decompose's
+      // zero seasonal component): the forecast is the
+      // least-squares trend of the prefix projected over
+      // all indices — trend + (empty) seasonality, the
+      // deterministic sibling of ADX's STL forecast.
+      val pts = scala.util.Try(c.args(1).trim.toInt).getOrElse(
+        throw new IllegalArgumentException(
+          "series_decompose_forecast points must be an integer literal: " + c.args(1)))
+      require(pts > 0,
+        s"series_decompose_forecast points must be positive: $pts")
+      // points >= size(series) leaves an empty training
+      // prefix and points = size-1 a single point — in
+      // both the slope/intercept sums divide 0/0 into
+      // silent NaN forecasts. The series length is
+      // per-row data (a literal require is impossible),
+      // so the guard is a generated CASE: a prefix
+      // shorter than the 2 points a line fit needs
+      // yields NULL, the loud in-band signal, never NaN.
+      val prefix = s"slice(${c.args(0)}, 1, size(${c.args(0)}) - $pts)"
+      s"(CASE WHEN size(${c.args(0)}) > ${pts + 1} THEN " +
+        s"transform(${c.args(0)}, (x, i) -> " +
+        s"${seriesIntercept(prefix)} + ${seriesSlope(prefix)} * i) " +
+        s"ELSE NULL END)"
+    }),
+    "series_fft" -> ScalarFn("(series) — complex input is unsupported", 1, 1, c =>
+      // returns the {re, im} bag (ADX's tuple-assign
+      // extend form isn't supported here — the fit_line
+      // convention); complex INPUT (the 2-arg form) is
+      // rejected loudly.
+      seriesFftStruct(c.args(0))),
+    "series_ifft" -> ScalarFn("(re_series, im_series)", 2, 2, c =>
+      seriesIfftStruct(c.args(0), c.args(1))),
+    "series_fit_poly" -> ScalarFn("(series [, degree])", 1, 2, seriesFitPolySql),
+    "series_fit_poly_dynamic" -> ScalarFn("(series [, degree])", 1, 2, seriesFitPolySql),
+    "series_fit_2lines" -> ScalarFn("(series)", 1, 1, c =>
+      // the non-dynamic form yields line_fit (the fitted
+      // array), the series_fit_line convention here; the
+      // scalar components come from the _dynamic bag.
+      s"element_at(transform(array(" +
+        s"${seriesFit2LinesDynamic(c.args(0))}), f2r -> f2r.line_fit), 1)"),
+    "series_fit_2lines_dynamic" -> ScalarFn("(series)", 1, 1, c =>
+      seriesFit2LinesDynamic(c.args(0))),
+    "series_seasonal" -> ScalarFn("(series, period) — use series_periods_detect to find the period", 2, 2, { c =>
+      // ADX series_seasonal(series, period) — the
+      // seasonal component for a GIVEN period (ADX's
+      // no-period auto-detect form is series_periods_
+      // detect territory; rejected here, documented).
+      // DEVIATION (documented): seasonal[i] = mean of
+      // the values at phase i mod p, minus the SERIES
+      // mean (zero-sum when the axis holds whole
+      // periods) — ADX's median-based estimator is
+      // replaced by the mean for cross-engine
+      // determinism. Exact for integer series: phase
+      // sums are exact, two mirrored divisions.
+      val per = scala.util.Try(c.args(1).trim.toInt).getOrElse(
+        throw new IllegalArgumentException(
+          s"series_seasonal period must be an integer literal: ${c.args(1)}"))
+      require(per >= 2, s"series_seasonal period must be >= 2: $per")
+      seriesSeasonalSql(c.args(0), per)
+    }),
+    "series_periods_detect" -> ScalarFn("(series, minPeriod, maxPeriod, numPeriods)", 4, 4, { c =>
+      // Deviation (documented): ADX scores periods by
+      // normalized autocorrelation percentages; this
+      // engine scores each candidate lag L by the RAW
+      // overlap dot product Σ x[i]·x[i+L] — the same
+      // argmax axis, and EXACT (integer arithmetic for
+      // count series, fixed left-to-right fold otherwise)
+      // so both engines pick identical periods. Returns a
+      // bag {periods, scores}: the top-N lags in
+      // [minP, maxP] by score desc (smaller lag wins
+      // ties), as doubles like ADX.
+      val Seq(minP, maxP, nP) = c.args.drop(1).map(a =>
+        scala.util.Try(a.trim.toInt).getOrElse(
+          throw new IllegalArgumentException(
+            s"series_periods_detect bounds must be integer literals: $a")))
+      require(minP >= 1 && maxP >= minP && nP >= 1,
+        s"series_periods_detect needs 1 <= minPeriod <= maxPeriod, numPeriods >= 1: $minP..$maxP/$nP")
+      val sArg = c.args(0)
+      val score = s"(CASE WHEN size($sArg) > L THEN " +
+        s"aggregate(sequence(1, size($sArg) - L), CAST(0 AS DOUBLE), " +
+        s"(acc, i) -> acc + element_at($sArg, i) * element_at($sArg, i + L)) " +
+        "ELSE CAST(0 AS DOUBLE) END)"
+      val sorted = s"slice(array_sort(transform(sequence($minP, $maxP), " +
+        s"L -> named_struct('s', -$score, 'l', L))), 1, $nP)"
+      s"named_struct('periods', transform($sorted, x -> CAST(x.l AS DOUBLE)), " +
+        s"'scores', transform($sorted, x -> -x.s))"
+    }),
+    "series_periods_validate" -> ScalarFn("(series, period1, ...)", 2, Int.MaxValue, { c =>
+      // ADX series_periods_validate(series, period1, ...):
+      // scores the GIVEN candidate periods with the same
+      // overlap-dot-product kernel as
+      // series_periods_detect (same documented deviation
+      // from ADX's normalized autocorrelation — the same
+      // monotone "how periodic" axis), returning the
+      // {periods, scores} bag in ARGUMENT order, ADX's
+      // output convention for the validate form.
+      val vPers = c.args.drop(1).map(a =>
+        scala.util.Try(a.trim.toInt).getOrElse(
+          throw new IllegalArgumentException(
+            s"series_periods_validate periods must be integer literals: $a")))
+      require(vPers.forall(_ >= 1),
+        s"series_periods_validate periods must be >= 1: ${vPers.mkString(",")}")
+      val vArg = c.args(0)
+      def vScore(l: Int) = s"(CASE WHEN size($vArg) > $l THEN " +
+        s"aggregate(sequence(1, size($vArg) - $l), CAST(0 AS DOUBLE), " +
+        s"(acc, i) -> acc + element_at($vArg, i) * element_at($vArg, i + $l)) " +
+        "ELSE CAST(0 AS DOUBLE) END)"
+      s"named_struct('periods', array(${vPers.map(p => s"CAST($p AS DOUBLE)").mkString(", ")}), " +
+        s"'scores', array(${vPers.map(vScore).mkString(", ")}))"
+    }),
+    "series_dot_product" -> ScalarFn("(series, series)", 2, 2, c =>
+      seriesDot(c.args(0), c.args(1))),
+    "series_magnitude" -> ScalarFn("(series)", 1, 1, c =>
+      s"sqrt(${seriesDot(c.args(0), c.args(0))})"),
+    "series_cosine_similarity" -> ScalarFn("(series, series)", 2, 2, c =>
+      // 2-arg form only; ADX's optional precomputed-
+      // magnitude args are not supported (rejected by the
+      // arity check — recompute is one fold over a
+      // step-count-sized array).
+      s"(${seriesDot(c.args(0), c.args(1))} / " +
+        s"(sqrt(${seriesDot(c.args(0), c.args(0))}) * sqrt(${seriesDot(c.args(1), c.args(1))})))"),
+    "series_pearson_correlation" -> ScalarFn("(series, series)", 2, 2, { c =>
+      // r = (nΣxy − ΣxΣy) / (√(nΣx²−(Σx)²)·√(nΣy²−(Σy)²))
+      // — every Σ is a left-to-right fold, so count-valued
+      // series reproduce bit-for-bit in an index-ordered
+      // oracle (same determinism note as the header).
+      val (a, b) = (c.args(0), c.args(1))
+      val n = seriesN(a)
+      s"(($n * ${seriesDot(a, b)} - ${seriesSum(a)} * ${seriesSum(b)}) / " +
+        s"(sqrt($n * ${seriesDot(a, a)} - ${seriesSum(a)} * ${seriesSum(a)}) * " +
+        s"sqrt($n * ${seriesDot(b, b)} - ${seriesSum(b)} * ${seriesSum(b)})))"
+    }),
+    "series_fir" -> ScalarFn("(series, filter [, normalize])", 2, 3, { c =>
+      // ADX series_fir(x, filter[, normalize[, center]]):
+      // causal finite-impulse-response convolution,
+      // y[i] = Σ_j f[j]·x[i−j] with partial sums at the
+      // left edge. Deviations (documented): normalize
+      // DEFAULTS FALSE (ADX: true when all coeffs
+      // positive) and divides the OUTPUT by Σf (one
+      // division per point — distributing it into the
+      // filter would change IEEE results); center=true is
+      // not supported (rejected by the arity check).
+      val (x, f) = (c.args(0), c.args(1))
+      val norm = c.args.lift(2).map(_.trim.toLowerCase)
+      require(norm.forall(n => n == "true" || n == "false"),
+        s"series_fir normalize must be a true/false literal: ${c.args.lift(2)}")
+      val core = s"transform($x, (v, i) -> " +
+        s"aggregate(sequence(0, size($f) - 1), CAST(0 AS DOUBLE), " +
+        s"(acc2, j) -> acc2 + IF(i - j >= 0, " +
+        s"CAST(element_at($f, j + 1) AS DOUBLE) * element_at($x, i - j + 1), " +
+        s"CAST(0 AS DOUBLE))))"
+      val fsum = s"aggregate($f, CAST(0 AS DOUBLE), (a2, b2) -> a2 + b2)"
+      if (norm.contains("true"))
+        s"transform($core, y -> y / $fsum)" else core
+    }),
+    "series_iir" -> ScalarFn("(series, b, a)", 3, 3, { c =>
+      // ADX series_iir(x, b, a): infinite-impulse-response
+      // recurrence y[i] = (Σ_j b[j]·x[i−j] −
+      // Σ_{j≥1} a[j]·y[i−j]) / a[0] — inherently
+      // sequential, evaluated as ONE left-to-right fold
+      // that carries the output-so-far array (bounded by
+      // the make-series step count like every series
+      // function; O(n·(|a|+|b|)) per row).
+      val (x, b, a) = (c.args(0), c.args(1), c.args(2))
+      val bsum = s"aggregate(sequence(0, size($b) - 1), CAST(0 AS DOUBLE), " +
+        s"(s2, j) -> s2 + IF(acc.i - j >= 0, " +
+        s"CAST(element_at($b, j + 1) AS DOUBLE) * element_at($x, acc.i - j + 1), " +
+        s"CAST(0 AS DOUBLE)))"
+      val asum = s"IF(size($a) > 1, " +
+        s"aggregate(sequence(1, size($a) - 1), CAST(0 AS DOUBLE), " +
+        s"(s3, j) -> s3 + IF(acc.i - j >= 0, " +
+        s"CAST(element_at($a, j + 1) AS DOUBLE) * element_at(acc.ys, acc.i - j + 1), " +
+        s"CAST(0 AS DOUBLE))), CAST(0 AS DOUBLE))"
+      s"aggregate($x, " +
+        s"named_struct('i', 0, 'ys', CAST(array() AS ARRAY<DOUBLE>)), " +
+        s"(acc, v) -> named_struct('i', acc.i + 1, 'ys', " +
+        s"concat(acc.ys, array((($bsum) - ($asum)) / CAST(element_at($a, 1) AS DOUBLE)))), " +
+        s"acc -> acc.ys)"
+    }),
+    "series_fill_const" -> ScalarFn("(series, constValue)", 2, 2, c =>
+      // ADX null-fill for make-series arrays (the default
+      // fill when an aggregate yields null buckets)
+      s"transform(${c.args(0)}, x -> coalesce(x, ${c.args(1)}))"),
+    "series_fill_forward" -> ScalarFn("(series)", 1, 1, c =>
+      // each null takes the NEAREST PRECEDING non-null;
+      // leading nulls stay null (ADX). The per-point
+      // nearest-known scan is O(n²) bounded by the series
+      // length — the series tier's interpreted-HOF budget.
+      seriesFillDirSql(c.args(0), forward = true)),
+    "series_fill_backwards" -> ScalarFn("(series)", 1, 1, seriesFillBackwardsSql),
+    "series_fill_backward" -> ScalarFn("(series)", 1, 1, seriesFillBackwardsSql),
+    "series_fill_linear" -> ScalarFn("(series)", 1, 1, c =>
+      // linear interpolation between the nearest known
+      // neighbors; edge gaps take the nearest known value
+      // (constant extrapolation, ADX's edge convention);
+      // an all-null series stays all-null. The single
+      // interpolation division is mirrored op-for-op in
+      // the oracle.
+      seriesFillLinearSql(c.args(0))),
+    "array_index_of" -> ScalarFn("(array, value[, start[, length[, occurrence]]])", 2, 5, { c =>
+      // ADX: 0-based index, -1 when absent. Spark
+      // array_position is 1-based with 0-absent — shifting by
+      // one maps both conventions at once. r15: the optional
+      // (start, length, occurrence) arms land via a filtered
+      // index scan (negative start counts from the end,
+      // length -1 = unbounded, occurrence 1-based — ADX's
+      // documented contract; out-of-range occurrence → -1).
+      if (c.args.length == 2)
+        s"(array_position(${c.args(0)}, ${c.args(1)}) - 1)"
+      else {
+        val sIx = c.args.lift(2).getOrElse("0")
+        val lIx = c.args.lift(3).getOrElse("-1")
+        val oIx = c.args.lift(4).getOrElse("1")
+        s"element_at(transform(array(named_struct(" +
+          s"'a', ${c.args(0)}, 'v', ${c.args(1)}, " +
+          s"'s', CAST(($sIx) AS INT), 'l', CAST(($lIx) AS INT), " +
+          s"'o', CAST(($oIx) AS INT))), aio -> " +
+          // st = normalized 0-based start; hits = matching
+          // indices within [st, st+len); answer = hits[o]
+          s"element_at(transform(array(CASE WHEN aio.s < 0 " +
+          s"THEN greatest(0, size(aio.a) + aio.s) ELSE aio.s END), aist -> " +
+          // empty array → sequence(0, -1) would DESCEND;
+          // occurrence < 1 → element_at(_, 0) would error
+          s"CASE WHEN aio.a IS NULL THEN CAST(NULL AS INT) " +
+          s"WHEN size(aio.a) = 0 OR aio.o < 1 THEN -1 ELSE " +
+          // try_element_at: an occurrence past the match
+          // count must yield -1, not an ANSI index error
+          s"coalesce(try_element_at(filter(sequence(0, size(aio.a) - 1), aii -> " +
+          s"aii >= aist AND (aio.l < 0 OR aii < aist + aio.l) " +
+          s"AND element_at(aio.a, aii + 1) = aio.v), aio.o), -1) END), 1)), 1)"
+      }
+    }),
+    "array_sum" -> ScalarFn("(array)", 1, 1, c =>
+      s"aggregate(${c.args(0)}, CAST(0 AS DOUBLE), (acc, x) -> acc + x)"),
+    "parse_ipv6" -> ScalarFn("(ip)", 1, 1, c =>
+      // ADX IPv6 tier via native codegen expressions (see
+      // graft.functions.Ipv6 for conventions: canonical
+      // 8×4-hex rendering, plain-IPv4 → ::ffff:a.b.c.d, and
+      // the same prefix-suffixed-input deviation as
+      // parse_ipv4 — use parse_ipv6_mask / the 3-arg
+      // compare forms for prefixes).
+      s"graft_ipv6_canon(${c.args(0)})"),
+    "parse_ipv6_mask" -> ScalarFn("(ip, prefix)", 2, 2, c =>
+      s"graft_ipv6_mask(${c.args(0)}, CAST((${c.args(1)}) AS INT))"),
+    "ipv6_compare" -> ScalarFn("(ip1, ip2 [, prefix])", 2, 3, { c =>
+      val p6 = if (c.args.length == 3) c.args(2) else "128"
+      s"CAST(graft_ipv6_cmp(${c.args(0)}, ${c.args(1)}, " +
+        s"CAST(($p6) AS INT)) AS BIGINT)"
+    }),
+    "ipv6_is_match" -> ScalarFn("(ip1, ip2 [, prefix])", 2, 3, { c =>
+      val pm6 = if (c.args.length == 3) c.args(2) else "128"
+      s"(graft_ipv6_cmp(${c.args(0)}, ${c.args(1)}, " +
+        s"CAST(($pm6) AS INT)) = 0)"
+    }),
+    "parse_ipv4" -> ScalarFn("(ip)", 1, 1, c =>
+      // ADX IPv4 tier: pure integer/string arithmetic, all
+      // map-side codegen-able expressions, null on any
+      // malformed input (try_cast + octet range check). The
+      // "a.b.c.d/p" prefix-suffixed INPUT form parse_ipv4
+      // also accepts in ADX is NOT supported here (use
+      // parse_ipv4_mask) — documented deviation.
+      ipv4Long(c.args(0))),
+    "parse_ipv4_mask" -> ScalarFn("(ip, prefix)", 2, 2, { c =>
+      val sh = s"(32 - CAST(${c.args(1)} AS INT))"
+      s"shiftleft(shiftright(${ipv4Long(c.args(0))}, $sh), $sh)"
+    }),
+    "format_ipv4" -> ScalarFn("(long)", 1, 1, { c =>
+      // long → dotted quad; out-of-range input nulls out
+      // rather than wrapping (ADX masks to 32 bits —
+      // deviation chosen for loudness, documented here).
+      val x = s"CAST(${c.args(0)} AS BIGINT)"
+      s"(CASE WHEN $x BETWEEN 0 AND 4294967295 THEN concat(" +
+        s"CAST(shiftright($x, 24) & 255 AS STRING), '.', " +
+        s"CAST(shiftright($x, 16) & 255 AS STRING), '.', " +
+        s"CAST(shiftright($x, 8) & 255 AS STRING), '.', " +
+        s"CAST($x & 255 AS STRING)) ELSE CAST(NULL AS STRING) END)"
+    }),
+    "format_ipv4_mask" -> ScalarFn("(ip, prefix)", 2, 2, { c =>
+      // ADX format_ipv4_mask(ip, prefix) → "a.b.c.d/p" with
+      // the host bits zeroed. Same string-ip contract as
+      // parse_ipv4_mask; prefix outside 0..32 or a malformed
+      // ip → null.
+      val fp = s"CAST(${c.args(1)} AS INT)"
+      val fsh = s"(32 - $fp)"
+      val fmasked = s"shiftleft(shiftright(${ipv4Long(c.args(0))}, $fsh), $fsh)"
+      s"element_at(transform(array(named_struct(" +
+        s"'m', $fmasked, 'p', $fp)), fim -> " +
+        s"CASE WHEN fim.m IS NULL OR fim.p IS NULL OR fim.p < 0 " +
+        s"OR fim.p > 32 THEN CAST(NULL AS STRING) ELSE concat(" +
+        s"CAST(shiftright(fim.m, 24) & 255 AS STRING), '.', " +
+        s"CAST(shiftright(fim.m, 16) & 255 AS STRING), '.', " +
+        s"CAST(shiftright(fim.m, 8) & 255 AS STRING), '.', " +
+        s"CAST(fim.m & 255 AS STRING), '/', " +
+        s"CAST(fim.p AS STRING)) END), 1)"
+    }),
+    "base64_decode_toarray" -> ScalarFn("(string)", 1, 1, c =>
+      // ADX base64_decode_toarray(s) → dynamic array of the
+      // decoded BYTES (ints 0..255). The hex-pair route
+      // keeps arbitrary binary exact (a binary→string cast
+      // would mangle non-UTF-8 bytes). DEVIATION: Spark's
+      // unbase64 is lenient about padding/garbage where ADX
+      // returns empty — malformed input may decode here.
+      s"element_at(transform(array(hex(unbase64(${c.args(0)}))), b64h -> " +
+        s"CASE WHEN b64h IS NULL THEN CAST(NULL AS ARRAY<INT>) " +
+        s"WHEN length(b64h) = 0 THEN CAST(array() AS ARRAY<INT>) ELSE " +
+        s"transform(sequence(1, length(b64h) DIV 2), b64i -> " +
+        s"CAST(conv(substring(b64h, b64i * 2 - 1, 2), 16, 10) AS INT)) END), 1)"),
+    "ipv4_is_private" -> ScalarFn("(ip)", 1, 1, { c =>
+      // RFC1918: 10.0.0.0/8, 172.16.0.0/12, 192.168.0.0/16
+      val l = ipv4Long(c.args(0))
+      s"(($l BETWEEN 167772160 AND 184549375) OR " +
+        s"($l BETWEEN 2886729728 AND 2887778303) OR " +
+        s"($l BETWEEN 3232235520 AND 3232301055))"
+    }),
+    "ipv4_is_in_range" -> ScalarFn("(ip, range)", 2, 2, { c =>
+      // range is "a.b.c.d/p" (plain IP = /32): compare the
+      // two addresses' top p bits. Null-propagates on
+      // malformed either side, like ADX.
+      val sh = s"(32 - ${cidrPrefix(c.args(1))})"
+      s"(shiftright(${ipv4Long(c.args(0))}, $sh) = " +
+        s"shiftright(${ipv4Long(cidrBase(c.args(1)))}, $sh))"
+    }),
+    "ipv4_compare" -> ScalarFn("(ip1, ip2[, prefix])", 2, 3, { c =>
+      // sign-normalized (-1/0/1) comparison of the top p bits
+      // (default full 32); ADX only contracts the sign.
+      val sh = if (c.args.length == 3) s"(32 - CAST(${c.args(2)} AS INT))" else "0"
+      s"CAST(sign(shiftright(${ipv4Long(c.args(0))}, $sh) - " +
+        s"shiftright(${ipv4Long(c.args(1))}, $sh)) AS INT)"
+    }),
+    "ipv4_is_match" -> ScalarFn("(ip1, ip2[, prefix])", 2, 3, { c =>
+      // ADX ipv4_is_match(ip1, ip2[, prefix]): equality of the
+      // two addresses under the EFFECTIVE prefix — the minimum
+      // of each argument's own "/p" suffix (32 when absent)
+      // and the optional prefix argument. Malformed input
+      // nulls out through the ipv4Long/try_cast chain, ADX's
+      // null-on-invalid shape.
+      // r17 ADVICE: propagate NULL from a malformed '/p'
+      // suffix (least() would silently skip it) and null out
+      // prefixes outside 0..32 (shiftright's Java mod-64
+      // count would return a silently-wrong boolean)
+      val effParts = Seq(cidrPrefix(c.args(0)), cidrPrefix(c.args(1))) ++
+        c.args.lift(2).map(p => s"try_cast(($p) AS INT)")
+      val eff = s"(CASE WHEN ${effParts.map(p => s"($p) IS NULL")
+        .mkString(" OR ")} THEN CAST(NULL AS INT) " +
+          s"ELSE least(${effParts.mkString(", ")}) END)"
+      val shm = s"(32 - $eff)"
+      s"(CASE WHEN $eff BETWEEN 0 AND 32 THEN " +
+        s"(shiftright(${ipv4Long(cidrBase(c.args(0)))}, $shm) = " +
+        s"shiftright(${ipv4Long(cidrBase(c.args(1)))}, $shm)) " +
+        "ELSE CAST(NULL AS BOOLEAN) END)"
+    }),
+    "ipv4_netmask_suffix" -> ScalarFn("(range)", 1, 1, c =>
+      cidrPrefix(c.args(0))),
+    "ipv4_is_in_any_range" -> ScalarFn("(ip, range, ...)", 2, Int.MaxValue, { c =>
+      // r15: OR over the ipv4_is_in_range test per range
+      // argument (SQL three-valued OR — null only when no
+      // range matches and some side was malformed, ADX's
+      // null-on-invalid shape). The ip expression repeats
+      // per range; all arms are map-side codegen arithmetic.
+      val anyTests = c.args.tail.map { r =>
+        val sh = s"(32 - ${cidrPrefix(r)})"
+        s"(shiftright(${ipv4Long(c.args(0))}, $sh) = " +
+          s"shiftright(${ipv4Long(cidrBase(r))}, $sh))"
+      }
+      anyTests.mkString("(", " OR ", ")")
+    }),
+    "ipv4_range_to_cidr_list" -> ScalarFn("(startIp, endIp)", 2, 2, { c =>
+      // ADX ipv4_range_to_cidr_list(startIp, endIp) → the
+      // canonical minimal CIDR cover of [start, end] as a
+      // dynamic array of "a.b.c.d/p" strings: the textbook
+      // greedy — from the low end, emit the largest block
+      // both ALIGNED at cur and FITTING in the remainder,
+      // advance past it. ≤ 62 blocks cover any 32-bit
+      // range. A NATIVE codegen kernel
+      // ([[graft.functions.Ipv4.rangeToCidrs]] — first
+      // shipped as a 64-step SQL aggregate fold, whose
+      // lambda evaluates interpreted per row); all
+      // power-of-two arithmetic is integer (cur & -cur
+      // alignment, highest-bit fill, bit_count prefix
+      // width — no log2, whose rounding differs across
+      // libms), so the DuckDB oracle replays the same
+      // greedy exactly as a recursive CTE. Malformed
+      // endpoints or start > end → null, ADX's shape.
+      graft.functions.GraftFunctions.register(
+        org.apache.spark.sql.SparkSession.active)
+      s"graft_ipv4_cidrs(${ipv4Long(c.args(0))}, " +
+        s"${ipv4Long(c.args(1))})"
+    }),
+    "ipv6_is_in_range" -> ScalarFn("(ip, range)", 2, 2, ipv6IsInRangeSql),
+    "ipv6_is_in_any_range" -> ScalarFn("(ip, range, ...)", 2, Int.MaxValue, ipv6IsInRangeSql),
+    // r15: ADX textual-IPv4 detection — true when the text contains a
+    // VALID dotted-quad as a whole term (term boundaries are
+    // non-alphanumeric excluding '.', so a 5-octet token never
+    // half-matches). One candidate extraction regex (strict octets, no
+    // leading zeros, no lookbehind — DuckDB's RE2 has none; the oracle
+    // mirrors it verbatim) + an exists() test per variant. Prefix
+    // arguments are enforced at OCTET boundaries: a prefix not ending
+    // in '.' matches only a full-octet cut ('127.0' matches 127.0.x.x,
+    // never 127.01.x.x). IP/prefix arguments must be string literals
+    // (the has_any_index convention — they compile into the plan).
+    "has_ipv4" -> ScalarFn("(source)", 1, 1, c =>
+      s"(size(${ipv4Candidates(c.args(0))}) > 0)"),
+    "has_any_ipv4" -> ScalarFn("(source, ip, ...)", 2, Int.MaxValue, { c =>
+      val ips = c.args.tail.map(ipv4LiteralArg(c, _))
+        .map(ip => "'" + ip.replace("'", "''") + "'")
+        .mkString(", ")
+      s"exists(${ipv4Candidates(c.args(0))}, hip -> hip IN ($ips))"
+    }),
+    "has_ipv4_prefix" -> ScalarFn("(source, prefix)", 2, 2, hasIpv4PrefixSql),
+    "has_any_ipv4_prefix" -> ScalarFn("(source, prefix, ...)", 2, Int.MaxValue,
+      hasIpv4PrefixSql),
+    "zip" -> ScalarFn("(arr1, arr2)", 2, 2, c =>
+      // ADX zip(a, b) → array of 2-element pairs. Emitted as
+      // pair ARRAYS via zip_with, so both inputs must share
+      // an element type (ADX's heterogeneous dynamic pairs
+      // have no Spark ARRAY equivalent — documented
+      // restriction; arrays_zip's structs would change the
+      // element access syntax).
+      s"zip_with(${c.args(0)}, ${c.args(1)}, (__a, __b) -> array(__a, __b))"),
+    "repeat" -> ScalarFn("(value, count)", 2, 2, c =>
+      // ADX repeat(value, count) builds an ARRAY (Spark's own
+      // `repeat` is string repetition — silently wrong).
+      s"array_repeat(${c.args(0)}, CAST(${c.args(1)} AS INT))"),
+    "gettype" -> ScalarFn("(value)", 1, 1, c =>
+      // Spark type names, not ADX's (typeof('x') says
+      // 'string' in both, but long → 'bigint') — documented
+      // deviation; the function exists for dispatch-style
+      // queries where the NAME is compared to itself.
+      s"typeof(${c.args(0)})"),
+    "translate" -> ScalarFn("(searchList, replacementList, source)", 3, 3, c =>
+      // ADX translate(searchList, replacementList, source);
+      // Spark puts the SOURCE FIRST — a pass-through would
+      // silently translate the wrong argument.
+      s"translate(${c.args(2)}, ${c.args(0)}, ${c.args(1)})"),
+    "max_of" -> ScalarFn("(a, b, ...)", 2, Int.MaxValue, c =>
+      s"greatest(${c.args.mkString(", ")})"),
+    "min_of" -> ScalarFn("(a, b, ...)", 2, Int.MaxValue, c =>
+      s"least(${c.args.mkString(", ")})"),
+    "exp2" -> ScalarFn("(x)", 1, 1, c =>
+      s"power(CAST(2 AS DOUBLE), ${c.args(0)})"),
+    "exp10" -> ScalarFn("(x)", 1, 1, c =>
+      s"power(CAST(10 AS DOUBLE), ${c.args(0)})"),
+    "strcat_array" -> ScalarFn("(array, delimiter)", 2, 2, c =>
+      s"array_join(transform(${c.args(0)}, __x -> CAST(__x AS STRING)), ${c.args(1)})"),
+    "isinf" -> ScalarFn("(x)", 1, 1, c =>
+      s"(abs(CAST(${c.args(0)} AS DOUBLE)) = CAST('Infinity' AS DOUBLE))"),
+    "isfinite" -> ScalarFn("(x)", 1, 1, c =>
+      s"(NOT isnan(CAST(${c.args(0)} AS DOUBLE)) AND " +
+        s"abs(CAST(${c.args(0)} AS DOUBLE)) <> CAST('Infinity' AS DOUBLE))"),
+    "totimespan" -> ScalarFn("(timespan literal)", 1, 1, c =>
+      // ADX totimespan('[d.]hh:mm:ss') / totimespan(1h).
+      // DEVIATION (documented, the bin() convention):
+      // timespan VALUES surface as BIGINT SECONDS, not
+      // 100 ns ticks — every consumer in this dialect
+      // (bin, ago, datetime_add) speaks seconds. Literal
+      // arguments only (the value is compiled into the
+      // plan); sub-second fractions and columns reject
+      // loudly rather than truncate silently.
+      s"CAST(${parseTimespanLiteral(c.args(0).trim)} AS BIGINT)"),
+    "make_timespan" -> ScalarFn("(hour, minute, second) or (day, hour, minute, second)", 3, 4, { c =>
+      // make_timespan(h, m, s) | make_timespan(d, h, m, s)
+      // → BIGINT seconds (same convention as totimespan).
+      val (d, h, m, sec) =
+        if (c.args.length == 4) (c.args(0), c.args(1), c.args(2), c.args(3))
+        else ("0", c.args(0), c.args(1), c.args(2))
+      s"CAST(((((${d}) * 24 + (${h})) * 60 + (${m})) * 60 + (${sec})) AS BIGINT)"
+    }),
+    "format_timespan" -> ScalarFn("(timespan, format)", 2, 2, { c =>
+      // format_timespan(ts, fmt) over BIGINT-second spans.
+      // Supported formats: 'd.hh:mm:ss' and 'hh:mm:ss' (the
+      // hh field absorbs days in the second form) — others
+      // reject loudly. Pure integer render, negative → null.
+      val fmt = c.args(1).trim
+      val t = s"CAST((${c.args(0)}) AS BIGINT)"
+      def p2(x: String) = s"lpad(CAST($x AS STRING), 2, '0')"
+      val body = fmt match {
+        case "'d.hh:mm:ss'" =>
+          s"concat(CAST($t DIV 86400 AS STRING), '.', ${p2(s"$t % 86400 DIV 3600")}, " +
+            s"':', ${p2(s"$t % 3600 DIV 60")}, ':', ${p2(s"$t % 60")})"
+        case "'hh:mm:ss'" =>
+          s"concat(${p2(s"$t DIV 3600")}, ':', ${p2(s"$t % 3600 DIV 60")}, " +
+            s"':', ${p2(s"$t % 60")})"
+        case other => throw new IllegalArgumentException(
+          s"format_timespan format not supported: $other ('d.hh:mm:ss', 'hh:mm:ss')")
+      }
+      s"(CASE WHEN ($t) < 0 THEN CAST(NULL AS STRING) ELSE $body END)"
+    }),
+    "datetime_utc_to_local" -> ScalarFn("(datetime, timezone)", 2, 2, datetimeZoneSql),
+    "datetime_local_to_utc" -> ScalarFn("(datetime, timezone)", 2, 2, datetimeZoneSql),
+    "datetime_part" -> ScalarFn("(part, datetime)", 2, 2, { c =>
+      // datetime_part('part', dt) → BIGINT (ADX returns long).
+      val part = c.args(0).trim.toLowerCase.stripPrefix("'").stripSuffix("'")
+      val ex = part match {
+        case "year" => s"year(${c.args(1)})"
+        case "quarter" => s"quarter(${c.args(1)})"
+        case "month" => s"month(${c.args(1)})"
+        case "week_of_year" => s"weekofyear(${c.args(1)})"
+        case "day" => s"day(${c.args(1)})"
+        case "dayofyear" => s"dayofyear(${c.args(1)})"
+        case "hour" => s"hour(${c.args(1)})"
+        case "minute" => s"minute(${c.args(1)})"
+        case "second" => s"second(${c.args(1)})"
+        case other => throw new IllegalArgumentException(
+          s"datetime_part part not supported: $other")
+      }
+      s"CAST($ex AS BIGINT)"
+    }),
+    "make_datetime" -> ScalarFn("(year, month, day[, hour, minute, second])", 3, 6, { c =>
+      // make_datetime(y, mo, d [, h, mi, s]) → timestamp.
+      require(c.args.length == 3 || c.args.length == 6,
+        "make_datetime expects (year, month, day[, hour, minute, second])")
+      val tail = if (c.args.length == 6) c.args.drop(3).mkString(", ")
+                 else "0, 0, 0"
+      s"make_timestamp(${c.args(0)}, ${c.args(1)}, ${c.args(2)}, $tail)"
+    }),
+    "unixtime_seconds_todatetime" -> ScalarFn("(seconds)", 1, 1, c =>
+      s"timestamp_seconds(${c.args(0)})"),
+    "unixtime_milliseconds_todatetime" -> ScalarFn("(millis)", 1, 1, c =>
+      s"timestamp_millis(CAST(${c.args(0)} AS BIGINT))"),
+    "unixtime_microseconds_todatetime" -> ScalarFn("(micros)", 1, 1, c =>
+      s"timestamp_micros(CAST(${c.args(0)} AS BIGINT))"),
+    "unixtime_nanoseconds_todatetime" -> ScalarFn("(nanos)", 1, 1, c =>
+      // Spark timestamps carry microseconds — nanos TRUNCATE
+      // to micros (integer DIV, documented; ADX ticks are
+      // 100 ns so it truncates sub-tick too).
+      s"timestamp_micros(CAST(${c.args(0)} AS BIGINT) DIV 1000)"),
+    "isutf8" -> ScalarFn("(value)", 1, 1, c =>
+      // Spark strings are valid UTF-8 by construction (binary
+      // that fails decode never becomes a STRING value), so
+      // any non-null string IS valid — trivially-true
+      // deviation, documented; null → null like ADX.
+      s"(CASE WHEN CAST((${c.args(0)}) AS STRING) IS NULL " +
+        "THEN CAST(NULL AS BOOLEAN) ELSE TRUE END)"),
+    "new_guid" -> ScalarFn("()", 0, 0, _ =>
+      // Nondeterministic by contract (like rand()) — maps to
+      // Spark's uuid(); pinned by format/uniqueness in
+      // KqlSpec, never by the cross-engine oracle.
+      "uuid()"),
+    "dynamic_to_json" -> ScalarFn("(dynamic)", 1, 1, c =>
+      // ADX dynamic_to_json(d): the CANONICAL JSON form with
+      // object keys sorted. The engine's VARIANT round-trip
+      // already normalizes key order to sorted, so this is
+      // exactly to_json over the variant.
+      s"to_json(${c.args(0)})"),
+    "percentile_tdigest" -> ScalarFn("(digest, percentile)", 2, 2, c =>
+      // Reads the equi-depth digest the `tdigest` aggregate
+      // builds (deviation documented there). The optional
+      // third typeof() arg ADX takes is unnecessary here
+      // (the result is always the centroid-mean DOUBLE).
+      percentileTdigestSql(c.args(0), c.args(1))),
+    "rank_tdigest" -> ScalarFn("(digest, value)", 2, 2, c =>
+      rankTdigestSql(c.args(0), c.args(1))),
+    "binary_and" -> ScalarFn("(a, b)", 2, 2, binaryOpSql),
+    "binary_or" -> ScalarFn("(a, b)", 2, 2, binaryOpSql),
+    "binary_xor" -> ScalarFn("(a, b)", 2, 2, binaryOpSql),
+    "binary_not" -> ScalarFn("(a)", 1, 1, c =>
+      s"(~CAST(${c.args(0)} AS BIGINT))"),
+    "binary_shift_left" -> ScalarFn("(a, n)", 2, 2, binaryShiftSql),
+    "binary_shift_right" -> ScalarFn("(a, n)", 2, 2, binaryShiftSql),
+    "format_bytes" -> ScalarFn("(size [, precision])", 1, 2, { c =>
+      // ADX format_bytes(size [, precision]) → '1.5 GB'.
+      // 1024-based units; precision 0..2 (the BIGINT-exact
+      // range). DEVIATION (documented): the fraction
+      // TRUNCATES instead of rounding — pure integer
+      // arithmetic on both engines, no decimal-rounding
+      // half-tie surface. Negative or null input → null.
+      val prec = c.args.lift(1).map { a =>
+        val v = scala.util.Try(a.trim.toInt).getOrElse(
+          throw new IllegalArgumentException(
+            s"format_bytes precision must be an integer literal 0..2: $a"))
+        require(v >= 0 && v <= 2,
+          s"format_bytes precision must be in 0..2: $a")
+        v
+      }.getOrElse(0)
+      val v = s"CAST((${c.args(0)}) AS BIGINT)"
+      val units = Seq("Bytes", "KB", "MB", "GB", "TB", "PB", "EB")
+      val m = math.round(math.pow(10, prec))
+      def branch(k: Int): String = {
+        val d = 1L << (10 * k)
+        val ip = s"CAST($v DIV ${d}L AS STRING)"
+        // EB tier: (v % 2^60) * 100 would overflow BIGINT —
+        // pre-reduce both sides by 1024 (exact: 2^60/1024 =
+        // 2^50); mirrored in the oracle branch-for-branch
+        val frac =
+          if (k == 6) s"((($v % ${d}L) DIV 1024L) * ${m}L) DIV ${d / 1024}L"
+          else s"(($v % ${d}L) * ${m}L) DIV ${d}L"
+        val whole =
+          if (prec == 0) ip
+          else s"concat($ip, '.', lpad(CAST($frac AS STRING), $prec, '0'))"
+        s"concat($whole, ' ', '${units(k)}')"
+      }
+      val tiers = (6 to 1 by -1).map { k =>
+        s"WHEN $v >= ${1L << (10 * k)}L THEN ${branch(k)}"
+      }.mkString(" ")
+      s"(CASE WHEN $v IS NULL OR $v < 0 THEN CAST(NULL AS STRING) " +
+        s"$tiers ELSE ${branch(0)} END)"
+    }),
+    "bag_keys" -> ScalarFn("(bag)", 1, 1, c =>
+      // ADX bag_keys(bag) → dynamic array of the bag's
+      // TOP-LEVEL keys. ADX leaves the order unspecified;
+      // this engine SORTS them (documented determinism
+      // choice — unspecified order cannot cross an oracle).
+      // Non-object input (arrays, scalars, null) → null,
+      // ADX's convention.
+      // CAST(variant AS STRING) serializes objects/arrays as
+      // their JSON text (scalars as bare values — excluded by
+      // the '{' guard), sidestepping to_json's input-type
+      // surface
+      s"(CASE WHEN startswith(CAST((${c.args(0)}) AS STRING), '{') " +
+        s"THEN sort_array(json_object_keys(CAST((${c.args(0)}) AS STRING))) " +
+        s"ELSE CAST(NULL AS ARRAY<STRING>) END)"),
+    "bag_has_key" -> ScalarFn("(bag, key)", 2, 2, { c =>
+      // top-level key membership (ADX also accepts a JSON
+      // path — unsupported here, documented; path inputs are
+      // rejected loudly rather than silently mismatching)
+      val keyLit = c.args(1).trim
+      require(!(keyLit.startsWith("'$") || keyLit.startsWith("\"$")),
+        s"bag_has_key supports top-level keys only (JSON paths unsupported): $keyLit")
+      s"(CASE WHEN startswith(CAST((${c.args(0)}) AS STRING), '{') " +
+        s"THEN coalesce(array_contains(json_object_keys(CAST((${c.args(0)}) AS STRING)), ${c.args(1)}), false) " +
+        s"ELSE CAST(NULL AS BOOLEAN) END)"
+    }),
+    "bag_merge" -> ScalarFn("(bag1, bag2)", 2, 2, { c =>
+      // ADX bag_merge(bag1, bag2): union of top-level
+      // properties, FIRST argument wins on key conflicts.
+      // Both bags cast to MAP<STRING, VARIANT>; the second
+      // filters out keys the first already holds, so
+      // map_concat never sees a duplicate (no dependence on
+      // spark.sql.mapKeyDedupPolicy). Non-object input →
+      // null.
+      val (m1, m2) = (s"try_cast(${c.args(0)} AS MAP<STRING, VARIANT>)",
+        s"try_cast(${c.args(1)} AS MAP<STRING, VARIANT>)")
+      s"element_at(transform(array(named_struct('a', $m1, 'b', $m2)), bm -> " +
+        s"CASE WHEN bm.a IS NULL OR bm.b IS NULL THEN CAST(NULL AS VARIANT) " +
+        s"ELSE parse_json(to_json(map_concat(bm.a, " +
+        s"map_filter(bm.b, (bk, bv) -> NOT array_contains(map_keys(bm.a), bk))))) END), 1)"
+    }),
+    "bag_remove_keys" -> ScalarFn("(bag, keys)", 2, 2, { c =>
+      // ADX bag_remove_keys(bag, keys): drops the listed
+      // TOP-LEVEL keys (ADX also accepts '$.'-prefixed JSON
+      // paths in the list — unsupported here, documented:
+      // list entries are treated as literal top-level keys,
+      // matching ADX for non-path entries). Survivors render
+      // in canonical sorted-key order (the VARIANT round
+      // trip re-canonicalizes). Non-object bag or null key
+      // list → null, the bag_merge convention.
+      val (bm, bks) = (s"try_cast(${c.args(0)} AS MAP<STRING, VARIANT>)",
+        s"try_cast(${c.args(1)} AS ARRAY<STRING>)")
+      s"element_at(transform(array(named_struct('m', $bm, 'ks', $bks)), brt -> " +
+        s"CASE WHEN brt.m IS NULL OR brt.ks IS NULL THEN CAST(NULL AS VARIANT) " +
+        s"ELSE parse_json(to_json(map_filter(brt.m, (brk, brv) -> " +
+        s"NOT array_contains(brt.ks, brk)))) END), 1)"
+    }),
+    "bag_set_key" -> ScalarFn("(bag, key, value)", 3, 3, { c =>
+      // ADX bag_set_key(bag, key, value): upsert one
+      // TOP-LEVEL property ('$'-prefixed JSON paths rejected
+      // loudly, the bag_has_key convention). ADX leaves
+      // result key order unspecified; here the VARIANT
+      // round trip canonicalizes to sorted-key order
+      // (deterministic, the engine-wide bag convention).
+      // Any value type goes through one
+      // cast-to-VARIANT (scalars, arrays, bags, null — a
+      // null value sets the key to JSON null, matching ADX).
+      // Non-object bag or null key → null.
+      val keyArg = c.args(1).trim
+      require(!(keyArg.startsWith("'$") || keyArg.startsWith("\"$")),
+        s"bag_set_key supports top-level keys only (JSON paths unsupported): $keyArg")
+      // The guard above only sees LITERAL key arguments; a
+      // computed key that evaluates to a '$'-prefixed path
+      // (strcat('$', '.a')) would otherwise be treated
+      // silently as a literal top-level key, diverging from
+      // ADX's path semantics without the documented error —
+      // so the same reject is enforced at runtime too.
+      val bsm = s"try_cast(${c.args(0)} AS MAP<STRING, VARIANT>)"
+      s"element_at(transform(array(named_struct('m', $bsm, " +
+        s"'k', CAST((${c.args(1)}) AS STRING), 'v', cast((${c.args(2)}) AS VARIANT))), bst -> " +
+        s"CASE WHEN bst.m IS NULL OR bst.k IS NULL THEN CAST(NULL AS VARIANT) " +
+        s"WHEN startswith(bst.k, '$$') THEN cast(raise_error(concat(" +
+        s"'bag_set_key supports top-level keys only (JSON paths unsupported): ', bst.k)) AS VARIANT) " +
+        s"ELSE parse_json(to_json(CASE WHEN array_contains(map_keys(bst.m), bst.k) " +
+        s"THEN transform_values(bst.m, (bsk, bsv) -> IF(bsk = bst.k, bst.v, bsv)) " +
+        s"ELSE map_concat(bst.m, map(bst.k, bst.v)) END)) END), 1)"
+    }),
+    "dcount_intersect" -> ScalarFn("(hll1, hll2)", 2, 2, { c =>
+      // ADX dcount_intersect over two hll() sketches:
+      // inclusion–exclusion on DataSketches estimates —
+      // |A∩B| ≈ est(A) + est(B) − est(A∪B). Two-sketch form
+      // only (ADX takes up to three — rejected by the arity
+      // check); can go slightly negative on tiny overlaps,
+      // clamped at 0 like ADX.
+      val (h1, h2) = (c.args(0), c.args(1))
+      s"greatest(0L, hll_sketch_estimate($h1) + " +
+        s"hll_sketch_estimate($h2) - hll_sketch_estimate(hll_union($h1, $h2)))"
+    }),
+    "convert_length" -> ScalarFn("(value, from, to)", 3, 3, convertUnitsSql),
+    "convert_mass" -> ScalarFn("(value, from, to)", 3, 3, convertUnitsSql),
+    "convert_speed" -> ScalarFn("(value, from, to)", 3, 3, convertUnitsSql),
+    "convert_angle" -> ScalarFn("(value, from, to)", 3, 3, convertUnitsSql),
+    "convert_energy" -> ScalarFn("(value, from, to)", 3, 3, convertUnitsSql),
+    "convert_volume" -> ScalarFn("(value, from, to)", 3, 3, convertUnitsSql),
+    "convert_force" -> ScalarFn("(value, from, to)", 3, 3, convertUnitsSql),
+    "convert_temperature" -> ScalarFn("(value, from, to)", 3, 3, { c =>
+      // Affine (not a pure factor): via Kelvin. Supported:
+      // Kelvin, DegreeCelsius, DegreeFahrenheit (literal
+      // units, same rules as the factor family).
+      def tUnit(a: String): String = {
+        val t = a.trim
+        require(t.length >= 2 &&
+            (t.head == '\'' || t.head == '"') && t.last == t.head,
+          s"convert_temperature units must be string literals: $a")
+        t.substring(1, t.length - 1)
+      }
+      val supported = Set("Kelvin", "DegreeCelsius", "DegreeFahrenheit")
+      val (fu, tu) = (tUnit(c.args(1)), tUnit(c.args(2)))
+      for (u <- Seq(fu, tu)) require(supported(u),
+        s"convert_temperature: unsupported unit '$u' — supported: ${supported.toSeq.sorted.mkString(", ")}")
+      // ×5 then ÷9 on the DOUBLE value (never a bare literal
+      // `5.0 / 9.0` subexpression — Spark types that DECIMAL
+      // and rounds the quotient to 6 digits)
+      val k = fu match {
+        case "Kelvin" => s"(CAST((${c.args(0)}) AS DOUBLE))"
+        case "DegreeCelsius" => s"(CAST((${c.args(0)}) AS DOUBLE) + 273.15)"
+        case _ => s"((CAST((${c.args(0)}) AS DOUBLE) + 459.67) * 5.0 / 9.0)"
+      }
+      tu match {
+        case "Kelvin" => k
+        case "DegreeCelsius" => s"($k - 273.15)"
+        case _ => s"($k * 1.8 - 459.67)"
+      }
+    }),
+    "around" -> ScalarFn("(value, center, delta)", 3, 3, c =>
+      // ADX around(value, center, delta) → value within
+      // [center-delta, center+delta] inclusive.
+      s"((${c.args(0)}) BETWEEN ((${c.args(1)}) - (${c.args(2)})) " +
+        s"AND ((${c.args(1)}) + (${c.args(2)})))"),
+    "base64_encode_fromguid" -> ScalarFn("(guid)", 1, 1, { c =>
+      // r15: GUID → base64 of its 16 bytes in the .NET
+      // Guid.ToByteArray order ADX uses: the first three
+      // groups little-endian (4+2+2 bytes reversed
+      // pairwise), the last 8 bytes big-endian. Pure hex
+      // slicing, mirrored verbatim; non-GUID input → null.
+      val hx = "[0-9a-f]"
+      s"element_at(transform(array(" +
+        s"replace(lower(CAST((${c.args(0)}) AS STRING)), '-', '')), bgh -> " +
+        s"CASE WHEN lower(CAST((${c.args(0)}) AS STRING)) RLIKE " +
+        s"'^$hx{8}-$hx{4}-$hx{4}-$hx{4}-$hx{12}$$' THEN " +
+        s"base64(unhex(concat(" +
+        s"substr(bgh, 7, 2), substr(bgh, 5, 2), substr(bgh, 3, 2), substr(bgh, 1, 2), " +
+        s"substr(bgh, 11, 2), substr(bgh, 9, 2), " +
+        s"substr(bgh, 15, 2), substr(bgh, 13, 2), " +
+        s"substr(bgh, 17, 16)))) END), 1)"
+    }),
+    "base64_decode_toguid" -> ScalarFn("(base64)", 1, 1, c =>
+      // r15: inverse — base64 → 16 bytes → canonical
+      // lowercase GUID (the .NET byte order undone); wrong
+      // payload size or bad base64 → null.
+      s"element_at(transform(array(" +
+        s"lower(hex(unbase64(CAST((${c.args(0)}) AS STRING))))), bdh -> " +
+        s"CASE WHEN bdh RLIKE '^[0-9a-f]{32}$$' THEN concat(" +
+        s"substr(bdh, 7, 2), substr(bdh, 5, 2), substr(bdh, 3, 2), substr(bdh, 1, 2), '-', " +
+        s"substr(bdh, 11, 2), substr(bdh, 9, 2), '-', " +
+        s"substr(bdh, 15, 2), substr(bdh, 13, 2), '-', " +
+        s"substr(bdh, 17, 4), '-', substr(bdh, 21, 12)) END), 1)"),
+    "isascii" -> ScalarFn("(string)", 1, 1, c =>
+      // r15: ADX isascii(s) — every codepoint ≤ 127. One
+      // anchored RE2/Java-common class test; null → null
+      // (rlike's null propagation).
+      s"((${c.args(0)}) RLIKE '^[\\\\x00-\\\\x7f]*$$')"),
+    "toguid" -> ScalarFn("(string)", 1, 1, { c =>
+      // r15: ADX toguid(s) — canonical 8-4-4-4-12 GUID
+      // (lowercased) or null. The guid type surfaces as its
+      // canonical STRING here (the timespan-as-seconds
+      // convention class).
+      val hx = "[0-9a-f]"
+      s"(CASE WHEN lower(CAST((${c.args(0)}) AS STRING)) RLIKE " +
+        s"'^$hx{8}-$hx{4}-$hx{4}-$hx{4}-$hx{12}$$' " +
+        s"THEN lower(CAST((${c.args(0)}) AS STRING)) END)"
+    }),
+    "todecimal" -> ScalarFn("(value)", 1, 1, c =>
+      // r15: ADX todecimal(v) — 128-bit decimal. Surfaces as
+      // DECIMAL(38, 10) (documented precision bound; ADX's
+      // dynamic scale has no Spark/DuckDB analogue);
+      // unparseable → null via try_cast.
+      s"try_cast((${c.args(0)}) AS DECIMAL(38, 10))"),
+    "strcmp" -> ScalarFn("(s1, s2)", 2, 2, c =>
+      // r15: ordinal 3-way compare. Both engines order
+      // strings by raw bytes (Spark UTF8String, DuckDB
+      // memcmp) so the sign agrees on any UTF-8 input;
+      // null in → null out (no-ELSE CASE).
+      s"(CASE WHEN (${c.args(0)}) < (${c.args(1)}) THEN -1 " +
+        s"WHEN (${c.args(0)}) = (${c.args(1)}) THEN 0 " +
+        s"WHEN (${c.args(0)}) > (${c.args(1)}) THEN 1 END)"),
+    "regex_quote" -> ScalarFn("(string)", 1, 1, c =>
+      // r15: escape the RE2/Java-common metacharacters with
+      // a backslash — one regexp_replace with a character
+      // class, global in Spark by default (the oracle adds
+      // DuckDB's 'g' flag). \Q..\E would be Java-only.
+      s"regexp_replace(${c.args(0)}, " +
+        "'([.^$*+?()\\\\[\\\\]{}|\\\\\\\\])', '\\\\\\\\$1')"),
+    "array_sort_desc" -> ScalarFn("(array) — the multi-array form is not supported", 1, 1, c =>
+      // r15: descending sibling of the array_sort_asc rename
+      // (sort_array's second arg). Nulls sort LAST both ways
+      // here (Spark's desc convention; asc's nulls-first is
+      // documented at the rename) — the multi-array form is
+      // not supported, matching array_sort_asc.
+      s"sort_array(${c.args(0)}, false)"),
+    "jaccard_index" -> ScalarFn("(set1, set2)", 2, 2, c =>
+      // r15: |A∩B| / |A∪B| over the DISTINCT elements (ADX
+      // treats the inputs as sets); both-empty → null (0/0
+      // via nullif), ADX's real-division convention.
+      s"(CAST(size(array_intersect(${c.args(0)}, ${c.args(1)})) AS DOUBLE) " +
+        s"/ nullif(size(array_union(${c.args(0)}, ${c.args(1)})), 0))"),
+    "bag_zip" -> ScalarFn("(keys, values)", 2, 2, c =>
+      // r15: ADX bag_zip(keys, values) → property bag. Keys
+      // cast to string; length mismatch or null side → null
+      // (ADX contract); null keys drop; duplicate keys keep
+      // the FIRST occurrence (deterministic — ADX leaves it
+      // unspecified; the make_bag first-wins convention);
+      // the VARIANT round trip canonicalizes to sorted-key
+      // order (engine-wide bag convention).
+      s"element_at(transform(array(named_struct(" +
+        s"'k', try_cast(${c.args(0)} AS ARRAY<STRING>), " +
+        s"'v', try_cast(${c.args(1)} AS ARRAY<VARIANT>))), bzt -> " +
+        s"CASE WHEN bzt.k IS NULL OR bzt.v IS NULL " +
+        s"OR size(bzt.k) <> size(bzt.v) THEN CAST(NULL AS VARIANT) " +
+        s"ELSE parse_json(to_json(map_from_arrays(" +
+        s"transform(filter(sequence(1, size(bzt.k)), bzi -> " +
+        s"element_at(bzt.k, bzi) IS NOT NULL AND " +
+        s"array_position(bzt.k, element_at(bzt.k, bzi)) = bzi), " +
+        s"bzi -> element_at(bzt.k, bzi)), " +
+        s"transform(filter(sequence(1, size(bzt.k)), bzi -> " +
+        s"element_at(bzt.k, bzi) IS NOT NULL AND " +
+        s"array_position(bzt.k, element_at(bzt.k, bzi)) = bzi), " +
+        s"bzi -> element_at(bzt.v, bzi))))) END), 1)"),
+    "base64_encode_fromarray" -> ScalarFn("(bytes array)", 1, 1, c =>
+      // r15: bytes array → base64 (the decode_toarray
+      // inverse). Elements are taken mod 256 (signed bytes
+      // accepted); the fold renders each byte as 2 hex
+      // digits and unhex()es once — a per-element string
+      // fold, fine at the bounded array sizes this surface
+      // carries (same tradeoff as strcat_array).
+      s"base64(unhex(aggregate(" +
+        s"try_cast(${c.args(0)} AS ARRAY<INT>), '', " +
+        s"(b64acc, b64x) -> concat(b64acc, " +
+        s"lpad(hex((b64x % 256 + 256) % 256), 2, '0')))))"),
+    "array_split" -> ScalarFn("(arr, index or indices)", 2, 2, { c =>
+      // ADX array_split(arr, index|indices) → array of
+      // subarrays split BEFORE each zero-based index
+      // (negative indices count from the end; out-of-range
+      // clamps, so pieces can be empty). The split points
+      // may be one int or a dynamic array of ints; indices
+      // are assumed ascending (ADX's contract). Null arr or
+      // null indices → null.
+      val asArr = s"try_cast(${c.args(0)} AS ARRAY<VARIANT>)"
+      // The indices arg is either one int or an array of
+      // ints; the two shapes need DIFFERENT casts and an
+      // int→array cast is an analysis-time error, so the
+      // shape is decided at parse time: dynamic([...]) (raw —
+      // scalar() leaves it untouched), array(...) (the
+      // pack_array rename), or parse_json(...) are array
+      // forms; anything else is a scalar index expression.
+      val ixRaw = c.args(1).trim
+      val ixLower = ixRaw.toLowerCase
+      val asIx =
+        if (ixLower.startsWith("dynamic(")) {
+          val inner = ixRaw.substring(ixRaw.indexOf('(') + 1,
+            ixRaw.length - 1).trim
+          require(inner.startsWith("[") && inner.endsWith("]"),
+            s"array_split indices must be dynamic([...]): $ixRaw")
+          s"try_cast(array(${inner.substring(1, inner.length - 1)}) AS ARRAY<INT>)"
+        } else if (ixLower.startsWith("array(") ||
+                   ixLower.startsWith("parse_json("))
+          s"try_cast($ixRaw AS ARRAY<INT>)"
+        else s"array(CAST(($ixRaw) AS INT))"
+      s"element_at(transform(array(named_struct(" +
+        s"'a', $asArr, 'ix', $asIx)), asp -> " +
+        s"CASE WHEN asp.a IS NULL OR exists(asp.ix, asv -> asv IS NULL) " +
+        s"THEN CAST(NULL AS ARRAY<ARRAY<VARIANT>>) ELSE " +
+        // bounds = [0] ++ clamp(ix) ++ [size]; piece j =
+        // slice(a, bounds[j]+1, bounds[j+1]-bounds[j])
+        s"transform(sequence(1, size(asp.ix) + 1), asj -> " +
+        s"element_at(transform(array(concat(array(0), " +
+        s"transform(asp.ix, asv -> CASE WHEN asv < 0 " +
+        s"THEN greatest(0, size(asp.a) + asv) " +
+        s"ELSE least(asv, size(asp.a)) END), " +
+        s"array(size(asp.a)))), asb -> " +
+        s"slice(asp.a, element_at(asb, asj) + 1, " +
+        s"greatest(0, element_at(asb, asj + 1) - element_at(asb, asj)))), 1)) " +
+        s"END), 1)"
+    }),
+    "has_any_index" -> ScalarFn("(source, values)", 2, 2, { c =>
+      // ADX has_any_index(source, values) → the zero-based
+      // index IN `values` of the first value the source
+      // `has` (case-insensitive whole-term match, the same
+      // semantics as the has operator); -1 when none match.
+      // `values` must be a parse-time literal list
+      // (dynamic([...]) or pack_array(...)) of string
+      // literals — the term regexes compile into the plan.
+      val rawList = c.args(1).trim
+      val lowerList = rawList.toLowerCase
+      // dynamic([...]) passes through scalar() untouched;
+      // pack_array(...) arrives renamed to array(...);
+      // todynamic('[..]') arrives as parse_json('[..]').
+      val innerList =
+        if (lowerList.startsWith("dynamic(") ||
+            lowerList.startsWith("array(") ||
+            lowerList.startsWith("parse_json("))
+          rawList.substring(rawList.indexOf('(') + 1, rawList.length - 1)
+        else throw new IllegalArgumentException(
+          s"has_any_index values must be a literal dynamic([...]) or pack_array(...): $rawList")
+      val stripped0 = innerList.trim
+      // parse_json's payload is itself a quoted JSON literal
+      val stripped1 =
+        if (stripped0.length >= 2 && stripped0.head == '\'' &&
+            stripped0.last == '\'')
+          stripped0.substring(1, stripped0.length - 1).trim
+        else stripped0
+      val inner2 = stripped1.stripPrefix("[").stripSuffix("]")
+      val terms = splitTopLevel(inner2, ',').map(_.trim).filter(_.nonEmpty)
+      require(terms.nonEmpty && terms.forall(t =>
+          t.length >= 2 && (t.head == '\'' || t.head == '"') && t.last == t.head),
+        s"has_any_index expects a literal list of strings: $rawList")
+      val whens = terms.zipWithIndex.map { case (t, ti) =>
+        s"WHEN ${hasTermSql(c.args(0), t.substring(1, t.length - 1))} THEN $ti"
+      }.mkString(" ")
+      s"(CASE $whens ELSE -1 END)"
+    }),
+    "hash_md5" -> ScalarFn("(source)", 1, 1, c =>
+      // ADX hash_md5(source) → lowercase hex digest of the
+      // string form (casted, matching ADX's string coercion).
+      s"md5(CAST((${c.args(0)}) AS STRING))"),
+    "hash_sha1" -> ScalarFn("(source)", 1, 1, c =>
+      s"sha1(CAST((${c.args(0)}) AS STRING))"),
+    "hash_sha256" -> ScalarFn("(source)", 1, 1, c =>
+      s"sha2(CAST((${c.args(0)}) AS STRING), 256)"),
+    "gamma" -> ScalarFn("(x)", 1, 1, c =>
+      // ADX gamma(x) → Γ(x). exp of the loggamma chain —
+      // see loggammaSql for the Lanczos construction and
+      // the positive-domain deviation.
+      s"exp(${loggammaSql(c.args(0))})"),
+    "loggamma" -> ScalarFn("(x)", 1, 1, c =>
+      // ADX loggamma(x) → ln|Γ(x)|. DEVIATION (documented at
+      // loggammaSql): x > 0 only (negative non-integers via
+      // reflection unsupported; x ≤ 0 → null).
+      loggammaSql(c.args(0))),
+    "beta_cdf" -> ScalarFn("(x, alpha, beta)", 3, 3, c =>
+      // ADX beta_cdf(x, alpha, beta) → the regularized
+      // incomplete beta I_x(α, β). Native codegen kernel
+      // (graft.functions.SpecialMath.ibeta — fixed
+      // 200-iteration Lentz fraction): the former SQL
+      // higher-order fold evaluated interpreted and cost
+      // seconds of analysis + eval per query (r15 verdict
+      // #3); the kernel runs the identical IEEE op sequence,
+      // so the oracle's recursive-CTE replay (same shared
+      // builders) still matches bit-for-bit.
+      s"graft_ibeta(CAST((${c.args(1)}) AS DOUBLE), " +
+        s"CAST((${c.args(2)}) AS DOUBLE), CAST((${c.args(0)}) AS DOUBLE))"),
+    "beta_pdf" -> ScalarFn("(x, alpha, beta)", 3, 3, c =>
+      // ADX beta_pdf(x, alpha, beta) = x^(α−1)(1−x)^(β−1)/B(α,β)
+      // via the Lanczos lnΓ chains; outside (0,1) → 0,
+      // non-positive shape → null.
+      s"element_at(transform(array(named_struct(" +
+        s"'x', CAST((${c.args(0)}) AS DOUBLE), " +
+        s"'a', CAST((${c.args(1)}) AS DOUBLE), " +
+        s"'b', CAST((${c.args(2)}) AS DOUBLE))), bpq -> " +
+        s"CASE WHEN bpq.a <= 0.0 OR bpq.b <= 0.0 THEN CAST(NULL AS DOUBLE) " +
+        s"WHEN bpq.x <= 0.0 OR bpq.x >= 1.0 THEN 0.0 " +
+        s"ELSE exp((bpq.a - 1.0) * ln(bpq.x) + (bpq.b - 1.0) * ln(1.0 - bpq.x) " +
+        s"+ ${loggammaSql("bpq.a + bpq.b")} - ${loggammaSql("bpq.a")} " +
+        s"- ${loggammaSql("bpq.b")}) END), 1)"),
+    "erf" -> ScalarFn("(x)", 1, 1, c =>
+      // ADX erf(x) — native codegen kernel (SpecialMath.erf:
+      // fixed 160-term confluent series, ±1 saturation past
+      // |x| = 6; oracle replays the same series as a
+      // recursive CTE from the shared erfFoldStep builder).
+      s"graft_erf(CAST((${c.args(0)}) AS DOUBLE))"),
+    "erfc" -> ScalarFn("(x)", 1, 1, c =>
+      // ADX erfc(x) = 1 − erf(x). DEVIATION (documented):
+      // computed BY that subtraction, so relative accuracy
+      // degrades in the far tail (absolute error stays
+      // ~1 ulp of 1 — invisible at the micro-unit
+      // surfaces); a dedicated continued fraction would not
+      // mirror into the oracle any better.
+      s"(1.0 - graft_erf(CAST((${c.args(0)}) AS DOUBLE)))"),
+    "beta_inv" -> ScalarFn("(p, alpha, beta)", 3, 3, c =>
+      // ADX beta_inv(p, alpha, beta) — native codegen kernel
+      // (SpecialMath.betaInv: 24-iteration bisection-
+      // safeguarded Newton over the 200-step Lentz fraction,
+      // identical IEEE op order to the oracle's flattened
+      // recursion).
+      s"graft_beta_inv(CAST((${c.args(0)}) AS DOUBLE), " +
+        s"CAST((${c.args(1)}) AS DOUBLE), CAST((${c.args(2)}) AS DOUBLE))"),
+    "welch_test" -> ScalarFn("(mean1, var1, count1, mean2, var2, count2)", 6, 6, { c =>
+      // ADX welch_test(mean1, var1, count1, mean2, var2,
+      // count2) → two-sided p-value of Welch's unequal-
+      // variance t-test: t = (m1−m2)/√(v1/n1 + v2/n2),
+      // Welch–Satterthwaite df, p = I_{df/(df+t²)}(df/2, ½)
+      // (the t-CDF tail via one ibeta call — same fixed-
+      // iteration fraction as beta_cdf, fully mirrored by
+      // the oracle). counts must be ≥ 2 and variances ≥ 0
+      // with a positive pooled SE → else null.
+      val binder = s"named_struct(" +
+        s"'m1', CAST((${c.args(0)}) AS DOUBLE), 'v1', CAST((${c.args(1)}) AS DOUBLE), " +
+        s"'n1', CAST((${c.args(2)}) AS DOUBLE), 'm2', CAST((${c.args(3)}) AS DOUBLE), " +
+        s"'v2', CAST((${c.args(4)}) AS DOUBLE), 'n2', CAST((${c.args(5)}) AS DOUBLE))"
+      val se2 = "(wtq.v1 / wtq.n1 + wtq.v2 / wtq.n2)"
+      val df = s"($se2 * $se2 / " +
+        s"((wtq.v1 / wtq.n1) * (wtq.v1 / wtq.n1) / (wtq.n1 - 1.0) " +
+        s"+ (wtq.v2 / wtq.n2) * (wtq.v2 / wtq.n2) / (wtq.n2 - 1.0)))"
+      val t2 = s"((wtq.m1 - wtq.m2) * (wtq.m1 - wtq.m2) / $se2)"
+      s"element_at(transform(array($binder), wtq -> " +
+        s"CASE WHEN wtq.n1 < 2.0 OR wtq.n2 < 2.0 OR wtq.v1 < 0.0 " +
+        s"OR wtq.v2 < 0.0 OR $se2 <= 0.0 THEN CAST(NULL AS DOUBLE) " +
+        s"ELSE graft_ibeta(CAST(($df / 2.0) AS DOUBLE), " +
+        s"CAST(0.5 AS DOUBLE), CAST(($df / ($df + $t2)) AS DOUBLE)) " +
+        s"END), 1)"
+    }),
+    "unicode_codepoints_from_string" -> ScalarFn("(string)", 1, 1, { c =>
+      // ADX unicode_codepoints_from_string(s) → dynamic
+      // array of codepoints. Native expression
+      // (graft.functions.Unicode): Spark-side SQL routes
+      // fail outside Latin-1 (chr is mod-256) and per-index
+      // substring probing is O(n²); pure integer transcode,
+      // astral-safe, mirrored bit-exactly by the oracle.
+      graft.functions.GraftFunctions.register(
+        org.apache.spark.sql.SparkSession.active)
+      s"graft_codepoints(CAST((${c.args(0)}) AS STRING))"
+    }),
+    "unicode_codepoints_to_string" -> ScalarFn("(array)", 1, 1, { c =>
+      // Inverse: null on any invalid codepoint.
+      graft.functions.GraftFunctions.register(
+        org.apache.spark.sql.SparkSession.active)
+      s"graft_from_codepoints(" +
+        s"try_cast(${c.args(0)} AS ARRAY<INT>))"
+    }),
+    "url_encode" -> ScalarFn("(string)", 1, 1, urlEncodeSql),
+    "url_encode_component" -> ScalarFn("(string)", 1, 1, urlEncodeSql),
+    "url_decode" -> ScalarFn("(string)", 1, 1, { c =>
+      // r15: inverse percent-decoding — '+' → space first
+      // (the ADX form variant), then split on '%': every
+      // later piece must LEAD with two hex digits (else
+      // null, the loud-malformed convention); the byte
+      // stream is reassembled as hex (literal runs through
+      // hex(encode(..)), pairs verbatim) and decoded once,
+      // so split multi-byte sequences reassemble exactly.
+      val parts = s"split(replace(CAST((${c.args(0)}) AS STRING), '+', ' '), '%', -1)"
+      s"element_at(transform(array($parts), udp -> " +
+        s"CASE WHEN exists(slice(udp, 2, size(udp)), udx -> " +
+        s"NOT (length(udx) >= 2 AND upper(substr(udx, 1, 2)) RLIKE '^[0-9A-F]{2}$$')) " +
+        s"THEN CAST(NULL AS STRING) " +
+        s"ELSE decode(unhex(aggregate(slice(udp, 2, size(udp)), " +
+        s"hex(encode(element_at(udp, 1), 'UTF-8')), (udacc, udx) -> " +
+        s"udacc || upper(substr(udx, 1, 2)) " +
+        s"|| hex(encode(substr(udx, 3, 2147483647), 'UTF-8')))), 'UTF-8') END), 1)"
+    }),
+    "extractjson" -> ScalarFn("(jsonPath, dataSource[, typeof(t)])", 2, 3, extractJsonSql),
+    "extract_json" -> ScalarFn("(jsonPath, dataSource[, typeof(t)])", 2, 3, extractJsonSql),
+    "parse_command_line" -> ScalarFn("(command, 'windows')", 2, 2, { c =>
+      // r15: Windows CommandLineToArgvW splitting
+      // (graft.functions.CommandLine — the published MSDN
+      // backslash/quote rules need a character state
+      // machine). Only the 'windows' parser type exists (as
+      // in ADX); anything else rejects loudly.
+      val ty = c.args(1).trim.toLowerCase
+      require(ty == "'windows'" || ty == "\"windows\"",
+        s"parse_command_line: only the 'windows' parser type is supported: ${c.args(1)}")
+      graft.functions.GraftFunctions.register(
+        org.apache.spark.sql.SparkSession.active)
+      s"graft_parse_cmdline(CAST((${c.args(0)}) AS STRING))"
+    }),
+    "parse_csv" -> ScalarFn("(string)", 1, 1, { c =>
+      // r15: one CSV record → array of fields
+      // (graft.functions.CsvParse — a native expression:
+      // RFC 4180 quoting with "" escapes needs a character
+      // state machine no SQL split expresses). Embedded
+      // newlines survive inside quotes; a dangling quote →
+      // null (loud-malformed convention; ADX best-effort
+      // differs, documented at the expression).
+      graft.functions.GraftFunctions.register(
+        org.apache.spark.sql.SparkSession.active)
+      s"graft_parse_csv(CAST((${c.args(0)}) AS STRING))"
+    }),
+    "gzip_compress_to_base64_string" -> ScalarFn("(string)", 1, 1, compressionSql),
+    "gzip_decompress_from_base64_string" -> ScalarFn("(string)", 1, 1, compressionSql),
+    "zlib_compress_to_base64_string" -> ScalarFn("(string)", 1, 1, compressionSql),
+    "zlib_decompress_from_base64_string" -> ScalarFn("(string)", 1, 1, compressionSql),
+    "punycode_from_string" -> ScalarFn("(string)", 1, 1, { c =>
+      // ADX punycode_from_string(s) → RFC 3492 punycode of
+      // one label (no xn-- prefix; ADX's raw-label form).
+      // Native expression; no DuckDB oracle exists for
+      // punycode, so the contract is pinned in KqlSpec with
+      // RFC 3492 §7.1 test vectors instead.
+      graft.functions.GraftFunctions.register(
+        org.apache.spark.sql.SparkSession.active)
+      s"graft_punycode_encode(CAST((${c.args(0)}) AS STRING))"
+    }),
+    "punycode_to_string" -> ScalarFn("(string)", 1, 1, { c =>
+      // Inverse; malformed punycode → null (ADX returns
+      // empty — documented deviation, the engine's malformed
+      // convention is null).
+      graft.functions.GraftFunctions.register(
+        org.apache.spark.sql.SparkSession.active)
+      s"graft_punycode_decode(CAST((${c.args(0)}) AS STRING))"
+    }),
+    "set_union" -> ScalarFn("(arr1, arr2, ...)", 2, Int.MaxValue, c =>
+      // ADX set_* are SET-semantics array ops (results
+      // deduped); element order is unspecified in ADX, and
+      // here it is Spark's first-seen order — sort in the
+      // query when comparing.
+      c.args.reduce((x, y) => s"array_union($x, $y)")),
+    "set_intersect" -> ScalarFn("(arr1, arr2, ...)", 2, Int.MaxValue, c =>
+      c.args.reduce((x, y) => s"array_intersect($x, $y)")),
+    "set_difference" -> ScalarFn("(arr1, arr2, ...)", 2, Int.MaxValue, c =>
+      // elements of arr1 in none of the others
+      c.args.reduce((x, y) => s"array_except($x, $y)")),
+    "set_has_element" -> ScalarFn("(arr, value)", 2, 2, c =>
+      s"array_contains(${c.args(0)}, ${c.args(1)})"),
+    "array_rotate_left" -> ScalarFn("(arr, n)", 2, 2, arrayRotateSql),
+    "array_rotate_right" -> ScalarFn("(arr, n)", 2, 2, arrayRotateSql),
+    "array_shift_left" -> ScalarFn("(arr, n [, fill])", 2, 3, arrayShiftSql),
+    "array_shift_right" -> ScalarFn("(arr, n [, fill])", 2, 3, arrayShiftSql),
+    "array_slice" -> ScalarFn("(arr, start, end)", 3, 3, { c =>
+      // ADX: 0-based INCLUSIVE bounds, negatives wrap from
+      // the end
+      val a = c.args(0)
+      def idx(e: String) = s"(CASE WHEN ($e) < 0 THEN size($a) + ($e) ELSE ($e) END)"
+      val (st, en) = (idx(c.args(1)), idx(c.args(2)))
+      s"(CASE WHEN $en < $st THEN slice($a, 1, 0) " +
+        s"ELSE slice($a, $st + 1, $en - $st + 1) END)"
+    }),
+    "array_iff" -> ScalarFn("(condArr, ifTrue, ifFalse)", 3, 3, arrayIffSql),
+    "array_iif" -> ScalarFn("(condArr, ifTrue, ifFalse)", 3, 3, arrayIffSql),
+    "parse_url" -> ScalarFn("(url)", 1, 1, { c =>
+      // ADX parse_url → bag of URL components. Emitted as a
+      // typed struct over Spark's codegen'd parse_url parts;
+      // deviations (documented): the query-parameter field is
+      // named QueryParameters (no space — ADX uses "Query
+      // Parameters", unreachable through this parser's
+      // identifier paths), and absent components are '' (as
+      // in ADX) via coalesce. Port comes from the authority
+      // (Spark's parse_url has no PORT part).
+      val u = c.args(0)
+      def part(p: String) = s"coalesce(parse_url($u, '$p'), '')"
+      "named_struct(" +
+        s"'Scheme', ${part("PROTOCOL")}, " +
+        s"'Host', ${part("HOST")}, " +
+        s"'Port', regexp_extract(${part("AUTHORITY")}, ':([0-9]+)" + "$', 1), " +
+        s"'Path', ${part("PATH")}, " +
+        s"'Username', regexp_extract(${part("USERINFO")}, '^([^:]*)', 1), " +
+        s"'Password', regexp_extract(${part("USERINFO")}, ':(.*)" + "$', 1), " +
+        s"'QueryParameters', str_to_map(${part("QUERY")}, '&', '='), " +
+        s"'Fragment', ${part("REF")})"
+    }),
+    "parse_urlquery" -> ScalarFn("(query)", 1, 1, c =>
+      // ADX wraps the result in {"Query Parameters": {...}};
+      // this engine returns the parameter MAP directly
+      // (documented deviation — same reachability reason as
+      // parse_url's field naming).
+      s"str_to_map(coalesce(${c.args(0)}, ''), '&', '=')"),
+    "parse_path" -> ScalarFn("(path)", 1, 1, { c =>
+      // ADX parse_path → path-component bag. Subset
+      // implemented: RootPath ('/' or drive letter),
+      // DirectoryPath (no trailing separator), DirectoryName,
+      // Filename, Extension (no dot); both '/' and '\'
+      // separate. AlternateDataStreamName and Scheme are not
+      // emitted (documented deviation).
+      val p = c.args(0)
+      val dirPath = s"regexp_extract($p, " + """'^(.*)[/\\\\][^/\\\\]*$'""" + ", 1)"
+      "named_struct(" +
+        s"'RootPath', regexp_extract($p, " + """'^([A-Za-z]:|/)'""" + ", 1), " +
+        s"'DirectoryPath', $dirPath, " +
+        s"'DirectoryName', regexp_extract($dirPath, " + """'([^/\\\\]*)$'""" + ", 1), " +
+        s"'Filename', regexp_extract($p, " + """'([^/\\\\]*)$'""" + ", 1), " +
+        s"'Extension', regexp_extract($p, " + """'\\.([^./\\\\]*)$'""" + ", 1))"
+    }),
+    "parse_version" -> ScalarFn("(version)", 1, 1, { c =>
+      // ADX parse_version: 1-4 dot-separated numeric parts,
+      // each ≤ 8 digits, packed base-10^8 into a DECIMAL so
+      // versions order correctly; anything else → null.
+      val v = c.args(0)
+      s"(CASE WHEN regexp_like($v, " +
+        """'^[0-9]{1,8}(\\.[0-9]{1,8}){0,3}$')""" +
+        s" THEN aggregate(transform(sequence(1, 4), " +
+        s"i -> coalesce(try_cast(try_element_at(split($v, " + """'\\.'""" + "), i) AS BIGINT), CAST(0 AS BIGINT))), " +
+        s"CAST(0 AS DECIMAL(38,0)), " +
+        s"(acc, x) -> CAST(acc * 100000000 + x AS DECIMAL(38,0))) " +
+        s"ELSE CAST(NULL AS DECIMAL(38,0)) END)"
+    }),
+    "parse_xml" -> ScalarFn("(xml)", 1, 1, { c =>
+      // ADX parse_xml → dynamic bag. Subset implemented
+      // (documented deviation): the ROOT element plus its
+      // LEAF elements (<tag>text</tag> at any depth, matched
+      // with a backreferenced closing tag) become
+      // {root: {leaf: text, …}} — attributes, nesting
+      // structure, CDATA and repeated leaf tags are not
+      // modeled (repeated tags raise Spark's duplicate-map-key
+      // error rather than silently picking one). The bag is a
+      // VARIANT via to_json∘map, so dotted access and
+      // bag_unpack consume it exactly like parse_json's.
+      val x = c.args(0)
+      val rootRe = """'^\\s*<([A-Za-z_][A-Za-z0-9_.-]*)[ >]'"""
+      val pairRe = """'<([A-Za-z_][A-Za-z0-9_.-]*)>([^<]*)</\\1>'"""
+      val root = s"regexp_extract($x, $rootRe, 1)"
+      s"(CASE WHEN $root = '' THEN CAST(NULL AS VARIANT) ELSE " +
+        s"parse_json(to_json(map($root, map_from_arrays(" +
+        s"regexp_extract_all($x, $pairRe, 1), " +
+        s"regexp_extract_all($x, $pairRe, 2))))) END)"
+    }),
+    "parse_user_agent" -> ScalarFn("(ua, 'browser'|'os')", 2, 2, { c =>
+      // ADX parse_user_agent(ua, looking_for) → dynamic bag.
+      // Subset (documented deviation): looking_for must be
+      // the literal 'browser' or 'os' (ADX also accepts
+      // 'device' and arrays); detection is a deterministic
+      // ordered regex cascade over the major engine families
+      // (Edge before Chrome before Safari — UA strings embed
+      // their ancestors' tokens), not ADX's uap-core
+      // database. Versions are strings; absent components are
+      // null (nullif(…, '') pins the no-match rendering on
+      // BOTH engines — the r10 cross-engine hazard class).
+      val target = c.args(1).trim.toLowerCase.stripPrefix("'").stripSuffix("'")
+      require(target == "browser" || target == "os",
+        s"parse_user_agent looking_for must be 'browser' or 'os': ${c.args(1)}")
+      parseUserAgentSql(c.args(0), target)
+    }),
+    "geo_point_in_polygon" -> ScalarFn("(lon, lat, polygon)", 3, 3, c =>
+      // ADX geo_point_in_polygon(lon, lat, polygon) — even-odd
+      // ray casting over the OUTER ring of a GeoJSON Polygon
+      // dynamic (holes unsupported — documented deviation;
+      // points exactly on an edge are undefined, as in ADX).
+      // The ring binds once via the array-lambda trick; the
+      // crossing test's single division is mirrored op-for-op
+      // in the oracle. Invalid coordinates or a ring with
+      // fewer than 4 GeoJSON entries → null.
+      geoPointInPolygonSql(c.args(0), c.args(1), c.args(2))),
+    "geo_polygon_to_s2cells" -> ScalarFn("(polygon [, level])", 1, 2, { c =>
+      // ADX geo_polygon_to_s2cells(polygon[, level]) → the
+      // cell-cover token array of the OUTER ring (holes
+      // unsupported, same planar even-odd convention as
+      // geo_point_in_polygon so cover and verify agree; see
+      // S2.polygonCover for the completeness construction).
+      // ADX's default level heuristic is replaced by a fixed
+      // default 11 (geo_point_to_s2cell's default here).
+      val lvl = if (c.args.length == 2) c.args(1) else "11"
+      s"graft_s2_polygon_cover(try_cast(variant_get(" +
+        s"${c.args(0)}, '$$.coordinates[0]') AS ARRAY<ARRAY<DOUBLE>>), " +
+        s"CAST(($lvl) AS INT))"
+    }),
+    "geo_line_to_s2cells" -> ScalarFn("(line [, level])", 1, 2, { c =>
+      // ADX geo_line_to_s2cells(line[, level]) — the cell
+      // cover of a GeoJSON LineString (the route/corridor
+      // side of the cell join); same planar conventions,
+      // sampling construction, and default level 11 as the
+      // polygon cover (see S2.lineCover).
+      val llvl = if (c.args.length == 2) c.args(1) else "11"
+      s"graft_s2_line_cover(try_cast(variant_get(" +
+        s"${c.args(0)}, '$$.coordinates') AS ARRAY<ARRAY<DOUBLE>>), " +
+        s"CAST(($llvl) AS INT))"
+    }),
+    "geo_distance_point_to_line" -> ScalarFn("(lon, lat, line)", 3, 3, c =>
+      // ADX geo_distance_point_to_line(lon, lat, line) → m.
+      // DEVIATION (documented): equirectangular-projected
+      // planar point-to-segment minimum — vertices and the
+      // point scale to meters at the LINE's mean latitude
+      // (the geo_polygon_area convention), each segment gets
+      // the clamped projection parameter, min over segments.
+      // Within ~0.5 % of the geodesic for routes spanning a
+      // few degrees. Emitted as the NATIVE codegen expression
+      // graft_geo_dist_line (a first SQL-HOF formulation
+      // evaluated interpreted per candidate and dominated the
+      // corridor join's cost); its op order — left-to-right
+      // mean-latitude fold, (x2-x1)*kx products, clamped t,
+      // per-segment min — is mirrored exactly by the oracle,
+      // so results are bit-equal. Invalid point / <2-vertex
+      // line → null.
+      s"graft_geo_dist_line(CAST((${c.args(0)}) AS DOUBLE), " +
+        s"CAST((${c.args(1)}) AS DOUBLE), try_cast(variant_get(" +
+        s"${c.args(2)}, '$$.coordinates') AS ARRAY<ARRAY<DOUBLE>>))"),
+    "geo_line_locate_point" -> ScalarFn("(line, lng, lat)", 3, 3, c =>
+      // ADX geo_line_locate_point(line, lng, lat) → meters
+      // from the line's start to the closest point on it
+      // (kernel + deviations at geoLineLocateSql).
+      geoLineLocateSql(c.args(0), c.args(1), c.args(2))),
+    "geo_line_interpolate_point" -> ScalarFn("(line, distanceMeters)", 2, 2, c =>
+      // ADX geo_line_interpolate_point(line, distance) → the
+      // Point `distance` meters along the line (clamping
+      // deviation documented at geoLineInterpolateSql).
+      geoLineInterpolateSql(c.args(0), c.args(1))),
+    "geo_closest_point_on_line" -> ScalarFn("(lon, lat, line)", 3, 3, { c =>
+      // r15: ADX geo_closest_point_on_line(lon, lat, line)
+      // → GeoJSON Point of the argmin foot — the
+      // geo_distance_point_to_line kernel tracking the foot
+      // (first strictly-better segment wins ties, so shared
+      // vertices resolve to the lower index; degrees
+      // recovered by the inverse scale divisions —
+      // graft.functions.GeoDistPointToLine.closest).
+      graft.functions.GraftFunctions.register(
+        org.apache.spark.sql.SparkSession.active)
+      s"element_at(transform(array(graft_geo_closest_line(" +
+        s"CAST((${c.args(0)}) AS DOUBLE), CAST((${c.args(1)}) AS DOUBLE), " +
+        s"try_cast(variant_get(${c.args(2)}, '$$.coordinates') " +
+        s"AS ARRAY<ARRAY<DOUBLE>>))), gcl -> " +
+        "CASE WHEN gcl IS NULL THEN NULL ELSE " +
+        "named_struct('type', 'Point', 'coordinates', gcl) END), 1)"
+    }),
+    "geo_polygon_area" -> ScalarFn("(polygon)", 1, 1, c =>
+      // ADX geo_polygon_area(polygon) → m². DEVIATION
+      // (documented): equirectangular-projected planar
+      // shoelace instead of ADX's spheroidal area — vertices
+      // scale to meters at the ring's MEAN latitude
+      // (lon·111320·cos(latc), lat·110574), then |shoelace|/2.
+      // Within ~0.3 % of the spherical area for rings
+      // spanning a few degrees; the left-to-right edge fold
+      // is mirrored op-for-op by the oracle's frame-ordered
+      // running sum. Holes unsupported (outer ring only);
+      // degenerate ring (< 4 GeoJSON entries) → null.
+      geoPolygonAreaSql(c.args(0))),
+    "geo_polygon_perimeter" -> ScalarFn("(polygon)", 1, 1, c =>
+      // ADX geo_polygon_perimeter(polygon) → meters. Same
+      // equirectangular deviation as geo_polygon_area (local
+      // meter scales at the ring's mean latitude instead of
+      // WGS84 geodesics) — see geoPolygonPerimeterSql.
+      geoPolygonPerimeterSql(c.args(0))),
+    "geo_line_length" -> ScalarFn("(line)", 1, 1, c =>
+      // ADX geo_line_length(line) → meters (equirectangular
+      // per-edge hypot, the perimeter convention — see
+      // geoLineLengthSql).
+      geoLineLengthSql(c.args(0))),
+    "geo_line_centroid" -> ScalarFn("(line)", 1, 1, c =>
+      // ADX geo_line_centroid(line) → GeoJSON Point: length-
+      // weighted edge-midpoint average — see
+      // geoLineCentroidSql.
+      geoLineCentroidSql(c.args(0))),
+    "geo_intersects_2lines" -> ScalarFn("(line1, line2)", 2, 2, c =>
+      // ADX geo_intersects_2lines(l1, l2) → do the two
+      // LineStrings intersect (planar deviation documented
+      // at geoIntersects2LinesSql).
+      geoIntersects2LinesSql(c.args(0), c.args(1))),
+    "geo_intersection_2lines" -> ScalarFn("(line1, line2)", 2, 2, c =>
+      // ADX geo_intersection_2lines(l1, l2) → the
+      // intersection geometry (Point / MultiPoint / empty
+      // GeometryCollection — deviations documented at
+      // geoIntersection2LinesSql; same kernel as the
+      // boolean predicate above).
+      geoIntersection2LinesSql(c.args(0), c.args(1))),
+    // ADX buffer / simplify / boolean-operation tier — native
+    // [[graft.functions.Geom]] kernels (planar equirectangular meters,
+    // simple outer rings, holes discarded, canonical deterministic
+    // output; full deviation contract documented at the object).
+    // geo_point_buffer(lon, lat, radiusM); geo_line_buffer(line,
+    // radiusM) / geo_polygon_buffer: union of segment rectangles +
+    // vertex 16-gons (+ the ring itself); geo_*_simplify:
+    // Douglas–Peucker at meter tolerance (polygon default 10 m, ADX's);
+    // geo_intersection_2polygons / geo_union_polygons: Greiner–Hormann
+    // even-odd boolean; geo_intersection_line_with_polygon: inside-run
+    // clip; geo_union_lines: MultiLineString collection (no collinear
+    // dissolve — documented deviation).
+    "geo_point_buffer" -> ScalarFn("(lon, lat, radiusMeters)", 3, 3, c => geomKernel(
+      s"parse_json(graft_geo_point_buffer(" +
+        s"${dblSql(c.args(0))}, ${dblSql(c.args(1))}, ${dblSql(c.args(2))}))")),
+    "geo_line_buffer" -> ScalarFn("(line, radiusMeters)", 2, 2, c => geomKernel(
+      s"parse_json(graft_geo_line_buffer(" +
+        s"${geoLineCoords(c.args(0))}, ${dblSql(c.args(1))}))")),
+    "geo_polygon_buffer" -> ScalarFn("(polygon, radiusMeters)", 2, 2, c => geomKernel(
+      s"parse_json(graft_geo_polygon_buffer(" +
+        s"${geoRingCoords(c.args(0))}, ${dblSql(c.args(1))}))")),
+    "geo_line_simplify" -> ScalarFn("(line, toleranceMeters)", 2, 2, c => geomKernel(
+      s"parse_json(graft_geo_simplify_line(" +
+        s"${geoLineCoords(c.args(0))}, ${dblSql(c.args(1))}))")),
+    "geo_polygon_simplify" -> ScalarFn("(polygon[, toleranceMeters])", 1, 2, { c =>
+      val tol = c.args.lift(1).map(dblSql).getOrElse("CAST(10.0 AS DOUBLE)")
+      geomKernel(s"parse_json(graft_geo_simplify_polygon(" +
+        s"${geoRingCoords(c.args(0))}, $tol))")
+    }),
+    "geo_simplify_polygons_array" -> ScalarFn("(polygons[, toleranceMeters])", 1, 2, { c =>
+      val tol = c.args.lift(1).map(dblSql).getOrElse("CAST(10.0 AS DOUBLE)")
+      geomKernel(s"transform(try_cast((${c.args(0)}) AS ARRAY<VARIANT>), " +
+        s"gsp -> parse_json(graft_geo_simplify_polygon(" +
+        s"${geoRingCoords("gsp")}, $tol)))")
+    }),
+    "geo_intersection_2polygons" -> ScalarFn("(polygon1, polygon2)", 2, 2, c => geomKernel(
+      s"parse_json(graft_geo_poly_bool(" +
+        s"${geoRingCoords(c.args(0))}, ${geoRingCoords(c.args(1))}, 'i'))")),
+    "geo_intersection_line_with_polygon" -> ScalarFn("(line, polygon)", 2, 2, c => geomKernel(
+      s"parse_json(graft_geo_clip_line(" +
+        s"${geoLineCoords(c.args(0))}, ${geoRingCoords(c.args(1))}))")),
+    "geo_union_polygons" -> ScalarFn("(polygons)", 1, 1, c => geomKernel(
+      s"parse_json(graft_geo_union_polys(" +
+        s"transform(try_cast((${c.args(0)}) AS ARRAY<VARIANT>), " +
+        s"gup -> ${geoRingCoords("gup")})))")),
+    "geo_union_lines" -> ScalarFn("(lines)", 1, 1, c => geomKernel(
+      s"parse_json(graft_geo_union_lines(" +
+        s"transform(try_cast((${c.args(0)}) AS ARRAY<VARIANT>), " +
+        s"gul -> ${geoLineCoords("gul")})))")),
+    "geo_intersects_2polygons" -> ScalarFn("(polygon1, polygon2)", 2, 2, { c =>
+      // ADX geo_intersects_2polygons(p1, p2): for SIMPLE
+      // outer rings (holes unsupported — the polygon tier's
+      // convention), the polygons intersect iff any boundary
+      // segment pair intersects OR one contains the other —
+      // tested as ring1's first vertex inside p2 / ring2's
+      // first vertex inside p1 (interior overlap without
+      // boundary crossing implies containment for simple
+      // rings). Same planar deviation as the 2lines kernel.
+      def ringOf(p: String) =
+        s"try_cast(variant_get($p, '$$.coordinates[0]') AS ARRAY<ARRAY<DOUBLE>>)"
+      def v0(p: String, c: Int) =
+        s"element_at(element_at(${ringOf(p)}, 1), $c)"
+      s"((${geoSegsIntersectSql(ringOf(c.args(0)), ringOf(c.args(1)))}) OR " +
+        s"(${geoPointInPolygonSql(v0(c.args(0), 1), v0(c.args(0), 2), c.args(1))}) OR " +
+        s"(${geoPointInPolygonSql(v0(c.args(1), 1), v0(c.args(1), 2), c.args(0))}))"
+    }),
+    "geo_intersects_line_with_polygon" -> ScalarFn("(line, polygon)", 2, 2, { c =>
+      // ADX geo_intersects_line_with_polygon(line, polygon):
+      // any line segment crosses the outer ring, OR the line
+      // lies wholly inside (first line vertex inside the
+      // polygon). Same simple-ring/planar conventions.
+      val lineC =
+        s"try_cast(variant_get(${c.args(0)}, '$$.coordinates') AS ARRAY<ARRAY<DOUBLE>>)"
+      val ringC =
+        s"try_cast(variant_get(${c.args(1)}, '$$.coordinates[0]') AS ARRAY<ARRAY<DOUBLE>>)"
+      val lv0 = (c: Int) => s"element_at(element_at($lineC, 1), $c)"
+      s"((${geoSegsIntersectSql(lineC, ringC)}) OR " +
+        s"(${geoPointInPolygonSql(lv0(1), lv0(2), c.args(1))}))"
+    }),
+    "geo_polygon_centroid" -> ScalarFn("(polygon)", 1, 1, c =>
+      // ADX geo_polygon_centroid(polygon) → GeoJSON Point.
+      // Planar shoelace centroid in degree coordinates (the
+      // centroid commutes with the equirectangular axis
+      // scaling, so no trig is needed at all) — see
+      // geoPolygonCentroidSql; zero-area ring → null.
+      geoPolygonCentroidSql(c.args(0))),
+    "geo_distance_2points" -> ScalarFn("(lon1, lat1, lon2, lat2)", 4, 4, c =>
+      // ADX geo_distance_2points(lon1, lat1, lon2, lat2) →
+      // meters. DEVIATION (documented): haversine great-circle
+      // on the mean sphere R = 6 371 000 m instead of ADX's
+      // WGS84 geodesic — deterministic, oracle-expressible,
+      // and within 0.5 % of the ellipsoid everywhere. Invalid
+      // coordinates (|lat| > 90, |lon| > 180) → null, ADX's
+      // convention. The asin operand clamps to 1.0 so
+      // antipodal rounding cannot produce NaN.
+      geoDistanceSql(c.args(0), c.args(1), c.args(2), c.args(3))),
+    "geo_point_in_circle" -> ScalarFn("(lon, lat, centerLon, centerLat, radiusMeters)", 5, 5, { c =>
+      // ADX geo_point_in_circle(lon, lat, c_lon, c_lat, r) —
+      // membership via the same haversine distance; null on
+      // invalid coordinates or negative radius.
+      val d = geoDistanceSql(c.args(0), c.args(1), c.args(2), c.args(3))
+      s"(CASE WHEN (${c.args(4)}) < 0 THEN CAST(NULL AS BOOLEAN) " +
+        s"ELSE $d <= (${c.args(4)}) END)"
+    }),
+    "geo_azimuth" -> ScalarFn("(lon1, lat1, lon2, lat2)", 4, 4, c =>
+      // ADX geo_azimuth(lon1, lat1, lon2, lat2) → the initial
+      // bearing from p1 to p2, clockwise from true north, in
+      // radians [0, 2π). DEVIATION (documented): spherical
+      // initial bearing (atan2 form) instead of ADX's WGS84
+      // geodesic azimuth — within ~0.2° everywhere off the
+      // poles, deterministic and oracle-expressible. Identical
+      // points yield 0 (atan2(0, 0)); invalid coordinates
+      // null, the geo_distance_2points convention.
+      geoAzimuthSql(c.args(0), c.args(1), c.args(2), c.args(3))),
+    "geo_distance_point_to_polygon" -> ScalarFn("(lon, lat, polygon)", 3, 3, { c =>
+      // ADX geo_distance_point_to_polygon(lon, lat, polygon)
+      // → meters; 0 when the point is inside. Composition of
+      // the two existing kernels: even-odd containment
+      // (geo_point_in_polygon — outer ring only, holes
+      // unsupported) gates a point-to-ring distance, where
+      // the CLOSED outer ring fed to the point-to-line kernel
+      // covers exactly the polygon's boundary segments (same
+      // equirectangular deviation as geo_distance_point_to_
+      // line). Invalid point or degenerate ring → null.
+      val inP = geoPointInPolygonSql(c.args(0), c.args(1), c.args(2))
+      val ringDist = s"graft_geo_dist_line(CAST((${c.args(0)}) AS DOUBLE), " +
+        s"CAST((${c.args(1)}) AS DOUBLE), try_cast(variant_get(" +
+        s"${c.args(2)}, '$$.coordinates[0]') AS ARRAY<ARRAY<DOUBLE>>))"
+      s"(CASE WHEN $inP THEN CAST(0.0 AS DOUBLE) " +
+        s"ELSE $ringDist END)"
+    }),
+    "geo_closest_point_on_polygon" -> ScalarFn("(lon, lat, polygon)", 3, 3, { c =>
+      // ADX geo_closest_point_on_polygon(lon, lat, polygon) →
+      // GeoJSON Point: the point ITSELF when inside (ADX's
+      // convention), else the closest point on the outer ring
+      // (the geo_closest_point_on_line kernel over the CLOSED
+      // ring — same planar deviations, same lower-index tie
+      // rule). Invalid point / degenerate ring → null.
+      graft.functions.GraftFunctions.register(
+        org.apache.spark.sql.SparkSession.active)
+      val inCp = geoPointInPolygonSql(c.args(0), c.args(1), c.args(2))
+      s"(CASE WHEN $inCp THEN " +
+        s"parse_json(to_json(named_struct('type', 'Point', 'coordinates', " +
+        s"array(CAST((${c.args(0)}) AS DOUBLE), CAST((${c.args(1)}) AS DOUBLE))))) " +
+        s"ELSE element_at(transform(array(graft_geo_closest_line(" +
+        s"CAST((${c.args(0)}) AS DOUBLE), CAST((${c.args(1)}) AS DOUBLE), " +
+        s"try_cast(variant_get(${c.args(2)}, '$$.coordinates[0]') " +
+        s"AS ARRAY<ARRAY<DOUBLE>>))), gcp -> " +
+        "CASE WHEN gcp IS NULL THEN NULL ELSE " +
+        "parse_json(to_json(named_struct('type', 'Point', 'coordinates', gcp))) END), 1) END)"
+    }),
+    "geo_angle" -> ScalarFn("(p1_lng, p1_lat, p2_lng, p2_lat, p3_lng, p3_lat)", 6, 6, { c =>
+      // ADX geo_angle(p1_lng, p1_lat, p2_lng, p2_lat, p3_lng,
+      // p3_lat) → the clockwise angle in radians at the SHARED
+      // vertex p2, from the ray toward p1 to the ray toward
+      // p3, in [0, 2π) — normalize(azimuth(p2→p3) −
+      // azimuth(p2→p1)). DEVIATION (documented): built from
+      // the spherical-bearing azimuth rather than ADX's WGS84
+      // geodesic, same class as geo_azimuth's. Invalid
+      // coordinates null out through the azimuth chain.
+      val azTo1 = geoAzimuthSql(c.args(2), c.args(3), c.args(0), c.args(1))
+      val azTo3 = geoAzimuthSql(c.args(2), c.args(3), c.args(4), c.args(5))
+      s"((((($azTo3) - ($azTo1)) % (2.0 * pi())) + 2.0 * pi()) % (2.0 * pi()))"
+    }),
+    "geo_s2cell_to_polygon" -> ScalarFn("(token)", 1, 1, { c =>
+      // ADX geo_s2cell_to_polygon(token) → the cell rectangle
+      // as a GeoJSON Polygon VARIANT (closed 5-vertex ring,
+      // exact ST cell-bound corners; face-frame winding —
+      // deviation documented at S2.polygonOf). Malformed
+      // token → null.
+      graft.functions.GraftFunctions.register(
+        org.apache.spark.sql.SparkSession.active)
+      s"element_at(transform(array(graft_s2_cell_polygon(" +
+        s"CAST((${c.args(0)}) AS STRING))), s2r -> " +
+        "CASE WHEN s2r IS NULL THEN NULL ELSE " +
+        "parse_json(to_json(named_struct('type', 'Polygon', 'coordinates', array(s2r)))) END), 1)"
+    }),
+    "geo_point_to_s2cell" -> ScalarFn("(lon, lat[, level])", 2, 3, { c =>
+      // ADX geo_point_to_s2cell(lon, lat[, level]) → the
+      // S2 cell TOKEN (level 0..28, ADX default 11) — the
+      // second cell system over the same integer-exact
+      // cell-join backbone as geohash. Native codegen
+      // Expression ([[graft.functions.S2]]): the SQL-text
+      // route would repeat the face/uv CASE tree per Morton
+      // bit; deviations (Morton order, compact token,
+      // cross-face neighbor wrap as of r13) documented there.
+      val lvl = c.args.lift(2).map { a =>
+        val v = scala.util.Try(a.trim.toInt).getOrElse(
+          throw new IllegalArgumentException(
+            s"geo_point_to_s2cell level must be an integer literal 0..${graft.functions.S2.MaxLevel}: $a"))
+        require(v >= 0 && v <= graft.functions.S2.MaxLevel,
+          s"geo_point_to_s2cell level must be in 0..${graft.functions.S2.MaxLevel}: $a")
+        v
+      }.getOrElse(11)
+      graft.functions.GraftFunctions.register(
+        org.apache.spark.sql.SparkSession.active)
+      s"graft_s2_cell(CAST((${c.args(0)}) AS DOUBLE), " +
+        s"CAST((${c.args(1)}) AS DOUBLE), $lvl)"
+    }),
+    "geo_s2cell_to_central_point" -> ScalarFn("(token)", 1, 1, { c =>
+      // GeoJSON Point of the cell center (the
+      // geo_geohash_to_central_point shape); malformed
+      // tokens → null, ADX's convention.
+      graft.functions.GraftFunctions.register(
+        org.apache.spark.sql.SparkSession.active)
+      s"element_at(transform(array(graft_s2_center(${c.args(0)})), " +
+        "s2c -> CASE WHEN s2c IS NULL THEN NULL ELSE " +
+        "named_struct('type', 'Point', 'coordinates', s2c) END), 1)"
+    }),
+    "geo_s2cell_neighbors" -> ScalarFn("(token)", 1, 1, { c =>
+      // Same-face 8-neighborhood (off-face steps drop —
+      // documented deviation; order mirrors
+      // geo_geohash_neighbors: W→E within S→N).
+      graft.functions.GraftFunctions.register(
+        org.apache.spark.sql.SparkSession.active)
+      s"graft_s2_neighbors(${c.args(0)})"
+    }),
+    "geo_point_to_h3cell" -> ScalarFn("(lon, lat[, resolution])", 2, 3, { c =>
+      // ADX geo_point_to_h3cell(lon, lat[, resolution]) →
+      // the H3-style cell TOKEN (res 0..12, default 6) —
+      // the THIRD cell system over the integer-exact
+      // cell-join backbone: icosahedral hexes (lowest shape
+      // distortion, 6-fold neighbor symmetry). Native
+      // codegen Expression ([[graft.functions.H3]]);
+      // deviations (direct (face, q, r) token, no
+      // inter-resolution rotation, clipped edge cells
+      // instead of pentagons) documented there.
+      val res = c.args.lift(2).map { a =>
+        val v = scala.util.Try(a.trim.toInt).getOrElse(
+          throw new IllegalArgumentException(
+            s"geo_point_to_h3cell resolution must be an integer literal 0..${graft.functions.H3.MaxRes}: $a"))
+        require(v >= 0 && v <= graft.functions.H3.MaxRes,
+          s"geo_point_to_h3cell resolution must be in 0..${graft.functions.H3.MaxRes}: $a")
+        v
+      }.getOrElse(graft.functions.H3.DefaultRes)
+      graft.functions.GraftFunctions.register(
+        org.apache.spark.sql.SparkSession.active)
+      s"graft_h3_cell(CAST((${c.args(0)}) AS DOUBLE), " +
+        s"CAST((${c.args(1)}) AS DOUBLE), $res)"
+    }),
+    "geo_h3cell_to_polygon" -> ScalarFn("(token)", 1, 1, { c =>
+      // r15: the hex boundary as GeoJSON Polygon VARIANT
+      // (graft.functions.H3.boundaryOf — 6 planar corners
+      // through the same inverse-gnomonic atan2 chain as the
+      // center, closing vertex repeated; composes with
+      // geo_point_in_polygon). Malformed → null.
+      graft.functions.GraftFunctions.register(
+        org.apache.spark.sql.SparkSession.active)
+      s"element_at(transform(array(graft_h3_boundary(${c.args(0)})), " +
+        "h3b -> CASE WHEN h3b IS NULL THEN CAST(NULL AS VARIANT) ELSE " +
+        "parse_json(to_json(named_struct('type', 'Polygon', " +
+        "'coordinates', array(h3b)))) END), 1)"
+    }),
+    "geo_h3cell_to_central_point" -> ScalarFn("(token)", 1, 1, { c =>
+      // GeoJSON Point of the cell center (the
+      // geo_s2cell_to_central_point shape); malformed
+      // tokens → null, ADX's convention.
+      graft.functions.GraftFunctions.register(
+        org.apache.spark.sql.SparkSession.active)
+      s"element_at(transform(array(graft_h3_center(${c.args(0)})), " +
+        "h3c -> CASE WHEN h3c IS NULL THEN NULL ELSE " +
+        "named_struct('type', 'Point', 'coordinates', h3c) END), 1)"
+    }),
+    "geo_h3cell_neighbors" -> ScalarFn("(token)", 1, 1, { c =>
+      // 6-neighborhood, cross-face wrapped; fewer near face
+      // edges/vertices (the pentagon-analog convention —
+      // see graft.functions.H3.neighborsOf).
+      graft.functions.GraftFunctions.register(
+        org.apache.spark.sql.SparkSession.active)
+      s"graft_h3_neighbors(${c.args(0)})"
+    }),
+    "geo_polygon_to_h3cells" -> ScalarFn("(polygon [, resolution])", 1, 2, { c =>
+      // ADX geo_polygon_to_h3cells(polygon[, resolution]) →
+      // the hex cell-cover token array of the OUTER ring
+      // (holes unsupported, planar even-odd convention
+      // matching geo_point_in_polygon so cover and verify
+      // agree; see H3.polygonCover for completeness and the
+      // cross-face caveat). ADX's default-resolution
+      // heuristic is replaced by the fixed point default 6.
+      val pres = if (c.args.length == 2) c.args(1)
+        else graft.functions.H3.DefaultRes.toString
+      graft.functions.GraftFunctions.register(
+        org.apache.spark.sql.SparkSession.active)
+      s"graft_h3_polygon_cover(try_cast(variant_get(" +
+        s"${c.args(0)}, '$$.coordinates[0]') AS ARRAY<ARRAY<DOUBLE>>), " +
+        s"CAST(($pres) AS INT))"
+    }),
+    "geo_line_to_h3cells" -> ScalarFn("(line [, resolution])", 1, 2, { c =>
+      // ADX geo_line_to_h3cells(line[, resolution]) — the
+      // hex cell cover of a GeoJSON LineString (the
+      // route/corridor side of the cell join); same planar
+      // conventions, sampling construction, and default
+      // resolution 6 as the polygon cover (H3.lineCover).
+      val lres = if (c.args.length == 2) c.args(1)
+        else graft.functions.H3.DefaultRes.toString
+      graft.functions.GraftFunctions.register(
+        org.apache.spark.sql.SparkSession.active)
+      s"graft_h3_line_cover(try_cast(variant_get(" +
+        s"${c.args(0)}, '$$.coordinates') AS ARRAY<ARRAY<DOUBLE>>), " +
+        s"CAST(($lres) AS INT))"
+    }),
+    "geo_h3cell_level" -> ScalarFn("(token)", 1, 1, { c =>
+      // resolution of a cell token; null on malformed input.
+      graft.functions.GraftFunctions.register(
+        org.apache.spark.sql.SparkSession.active)
+      s"graft_h3_level(${c.args(0)})"
+    }),
+    "geo_h3cell_parent" -> ScalarFn("(token[, resolution])", 1, 2, { c =>
+      // ADX geo_h3cell_parent(cell[, resolution]) → the
+      // containing cell at a coarser resolution (default:
+      // one level up). DEVIATION (graft.functions.H3): the
+      // direct token has no aperture-7 digit hierarchy, so
+      // the parent is the cell containing THIS CELL'S CENTER
+      // at the coarser resolution; geo_h3cell_children is
+      // the exact inverse (enumeration + parent check).
+      // An explicit resolution must be an integer literal —
+      // coarser-than-cell validation happens per row (null
+      // on violation, ADX's convention).
+      graft.functions.GraftFunctions.register(
+        org.apache.spark.sql.SparkSession.active)
+      c.args.lift(1) match {
+        case None =>
+          s"graft_h3_parent(${c.args(0)}, " +
+            s"graft_h3_level(${c.args(0)}) - 1)"
+        case Some(a) =>
+          val v = scala.util.Try(a.trim.toInt).getOrElse(
+            throw new IllegalArgumentException(
+              s"geo_h3cell_parent resolution must be an integer literal: $a"))
+          require(v >= 0 && v <= graft.functions.H3.MaxRes,
+            s"geo_h3cell_parent resolution must be in 0..${graft.functions.H3.MaxRes}: $v")
+          s"graft_h3_parent(${c.args(0)}, $v)"
+      }
+    }),
+    "geo_h3cell_children" -> ScalarFn("(token[, resolution])", 1, 2, geoH3cellChildrenSql),
+    "geo_h3cell_childcount" -> ScalarFn("(token[, resolution])", 1, 2, geoH3cellChildrenSql),
+    "geo_h3cell_compact" -> ScalarFn("(cells)", 1, 1, { c =>
+      // ADX geo_h3cell_compact(cells) → the minimal mixed-
+      // resolution cover: complete sibling sets collapse to
+      // their parent, repeatedly (graft.functions.H3
+      // .compactCells — completeness against the ACTUAL
+      // child set of this token system's center-containment
+      // hierarchy, so clipped edge parents compact too).
+      // Sorted + deduped output; null on invalid, ADX's
+      // shape. Dynamic arrays cast through ARRAY<STRING>.
+      graft.functions.GraftFunctions.register(
+        org.apache.spark.sql.SparkSession.active)
+      s"graft_h3_compact(" +
+        s"try_cast((${c.args(0)}) AS ARRAY<STRING>))"
+    }),
+    "geo_h3cell_uncompact" -> ScalarFn("(cells, resolution)", 2, 2, { c =>
+      // ADX geo_h3cell_uncompact(cells, resolution) → every
+      // cell expanded to its descendant set at `resolution`
+      // (graft.functions.H3.uncompactCells — the children
+      // machinery folded over the array; gap ≤ 4 per cell,
+      // larger gaps reject loudly like geo_h3cell_children).
+      // Resolution must be an integer literal.
+      val ures = scala.util.Try(c.args(1).trim.toInt).getOrElse(
+        throw new IllegalArgumentException(
+          "geo_h3cell_uncompact resolution must be an integer " +
+            s"literal: ${c.args(1)}"))
+      require(ures >= 0 && ures <= graft.functions.H3.MaxRes,
+        s"geo_h3cell_uncompact resolution must be in " +
+          s"0..${graft.functions.H3.MaxRes}: $ures")
+      graft.functions.GraftFunctions.register(
+        org.apache.spark.sql.SparkSession.active)
+      s"graft_h3_uncompact(" +
+        s"try_cast((${c.args(0)}) AS ARRAY<STRING>), $ures)"
+    }),
+    "geo_h3cell_rings" -> ScalarFn("(token, n)", 2, 2, { c =>
+      // ADX geo_h3cell_rings(cell, N) → rings 0..N by hex
+      // distance (cross-face wrapped; inner rings win wrap
+      // collisions — graft.functions.H3.ringsOf). N must be
+      // an integer literal 0..16 (ADX's bound).
+      val nRings = scala.util.Try(c.args(1).trim.toInt).getOrElse(
+        throw new IllegalArgumentException(
+          s"geo_h3cell_rings n must be an integer literal 0..16: ${c.args(1)}"))
+      require(nRings >= 0 && nRings <= 16,
+        s"geo_h3cell_rings n must be in 0..16: $nRings")
+      graft.functions.GraftFunctions.register(
+        org.apache.spark.sql.SparkSession.active)
+      s"graft_h3_rings(${c.args(0)}, $nRings)"
+    }),
+    "geo_point_to_geohash" -> ScalarFn("(lon, lat[, accuracy])", 2, 3, { c =>
+      // ADX geo_point_to_geohash(lon, lat[, accuracy]) →
+      // base32 geohash string (accuracy 1..12 characters,
+      // ADX default 5) — the cell-binning primitive whose
+      // equal-prefix cells are the spatial-join key. Pure
+      // integer bit-interleave (Morton spread) after ONE
+      // float quantization per axis — no trig, every op
+      // single-rounded and mirrored in the oracle, so cells
+      // are bit-identical cross-engine. Accuracy must be a
+      // literal (the bit layout is compiled into the plan).
+      val acc = c.args.lift(2).map { a =>
+        val v = scala.util.Try(a.trim.toInt).getOrElse(
+          throw new IllegalArgumentException(
+            s"geo_point_to_geohash accuracy must be an integer literal 1..12: $a"))
+        require(v >= 1 && v <= 12,
+          s"geo_point_to_geohash accuracy must be in 1..12: $a")
+        v
+      }.getOrElse(5)
+      geohashSql(c.args(0), c.args(1), acc)
+    }),
+    "geo_geohash_to_central_point" -> ScalarFn("(geohash)", 1, 1, c =>
+      // ADX geo_geohash_to_central_point(gh) → GeoJSON
+      // dynamic {type: Point, coordinates: [lon, lat]} of the
+      // cell center. Decode is the exact inverse of
+      // geo_point_to_geohash's integer interleave; the center
+      // is the dyadic midpoint (ix + 0.5) / 2^bits scaled to
+      // the axis — one multiply per axis, identical
+      // cross-engine. Malformed input (bad alphabet, empty,
+      // > 12 chars) → null, ADX's convention.
+      geohashCentralPointSql(c.args(0))),
+    "geo_line_densify" -> ScalarFn("(geometry, tolerance_m)", 2, 2, densifySql),
+    "geo_polygon_densify" -> ScalarFn("(geometry, tolerance_m)", 2, 2, densifySql),
+    "geo_geohash_to_polygon" -> ScalarFn("(geohash)", 1, 1, c =>
+      // r15: the geohash cell rectangle as GeoJSON — see
+      // geohashPolygonSql (VARIANT output so it composes
+      // with the polygon predicates).
+      geohashPolygonSql(c.args(0))),
+    "geo_geohash_neighbors" -> ScalarFn("(geohash)", 1, 1, { c =>
+      // ADX geo_geohash_neighbors(gh) → the (up to) 8
+      // surrounding cells at the same accuracy, longitude
+      // wrapping across the antimeridian, polar off-grid
+      // cells dropped (a pole cell has 5 neighbors).
+      // Deterministic order: W→E within S→N (dx fastest).
+      // This is the candidate-cell generator of the
+      // cell-keyed spatial join (`kql_geo_join`): point cells
+      // equi-join site cell ∪ neighbors, which COVERS every
+      // within-R pair whenever R ≤ the minimum cell span —
+      // the bounded fan-out (≤ 9×) that replaces an all-pairs
+      // distance join at 100 TB.
+      // Composition fast path: neighbors OF A POINT'S CELL —
+      // `geo_geohash_neighbors(geo_point_to_geohash(lon, lat
+      // [, acc]))`, the spatial-join idiom — skips the
+      // string decode entirely and unrolls all 8 encodes
+      // into plain integer/concat arithmetic (no HOFs), so
+      // the whole stage stays in codegen and the expression
+      // tree stays small. Detected on the RAW argument; any
+      // other argument takes the general decode path.
+      val t = c.raw(0)
+      val po = t.indexOf('(')
+      val composed = t.toLowerCase.startsWith("geo_point_to_geohash") &&
+        po > 0 && t.substring(0, po).trim.equalsIgnoreCase("geo_point_to_geohash") &&
+        matchingParen(t, po) == t.length - 1
+      if (composed) {
+        val inner = splitTopLevel(t.substring(po + 1, t.length - 1), ',')
+          .map(a => scalar(a.trim, c.lets))
+        require(inner.length == 2 || inner.length == 3,
+          "geo_point_to_geohash expects (lon, lat[, accuracy])")
+        val acc2 = inner.lift(2).map { a =>
+          val v = scala.util.Try(a.trim.toInt).getOrElse(
+            throw new IllegalArgumentException(
+              s"geo_point_to_geohash accuracy must be an integer literal 1..12: $a"))
+          require(v >= 1 && v <= 12,
+            s"geo_point_to_geohash accuracy must be in 1..12: $a")
+          v
+        }.getOrElse(5)
+        geohashNeighborsUnrolledSql(inner(0), inner(1), acc2)
+      } else geohashNeighborsSql(c.args(0))
+    }),
+    "replace_string" -> ScalarFn("(text, lookup, rewrite)", 3, 3, c =>
+      // ADX replace_string(text, lookup, rewrite) — literal
+      // replace, Spark's replace with the same arg order.
+      s"replace(${c.args(0)}, ${c.args(1)}, ${c.args(2)})"),
+    "replace_regex" -> ScalarFn("(text, regex, rewrite)", 3, 3, c =>
+      s"regexp_replace(${c.args(0)}, ${c.args(1)}, ${c.args(2)})"),
+    "indexof_regex" -> ScalarFn("(source, regex)", 2, 2, c =>
+      // ADX: 0-based first-match position, -1 when absent —
+      // Spark regexp_instr is 1-based with 0 for absent, so
+      // the -1 shift lands BOTH conventions at once.
+      s"CAST(regexp_instr(${c.args(0)}, ${c.args(1)}) - 1 AS BIGINT)"),
+    "string_size" -> ScalarFn("(source)", 1, 1, c =>
+      // ADX string_size = SIZE IN BYTES (UTF-8), not chars.
+      s"CAST(octet_length(${c.args(0)}) AS BIGINT)"),
+    "countof" -> ScalarFn("(source, search[, kind])", 2, 3, { c =>
+      // ADX counts OVERLAPPING occurrences (countof('aaa',
+      // 'aa') = 2), so a delete-replace length delta is not
+      // enough when the needle can border itself. Two paths:
+      // a LITERAL needle with no proper border (no prefix
+      // that is also a suffix — the KMP failure condition)
+      // cannot self-overlap, so the codegen'd replace-based
+      // count is provably equal and stays on the hot path;
+      // bordered or non-literal needles take the position
+      // scan — an interpreted HOF bounded by the string
+      // length (mv-apply's budget class), with empty or
+      // too-long needles counting 0 rather than generating a
+      // DESCENDING sequence. The 3-arg form's 'regex' kind is
+      // a non-overlapping regexp match count (ADX semantics
+      // for that kind); kind 'normal' falls back to 2-arg.
+      val regexKind = c.args.length == 3 && {
+        val kind = c.args(2).trim
+        require(kind == "'regex'" || kind == "'normal'",
+          s"countof kind must be 'normal' or 'regex': $kind")
+        kind == "'regex'"
+      }
+      val (src, pat) = (c.args(0), c.args(1))
+      if (regexKind) {
+        s"CAST(size(regexp_extract_all($src, $pat, 0)) AS INT)"
+      } else {
+      val litNeedle = pat.trim match {
+        case p if p.length >= 3 && (p.head == '\'' || p.head == '"') &&
+            p.last == p.head && !p.substring(1, p.length - 1).contains(p.head) =>
+          Some(p.substring(1, p.length - 1))
+        case _ => None
+      }
+      val borderless = litNeedle.exists(nd =>
+        (1 until nd.length).forall(k => !(nd.take(k) == nd.takeRight(k))))
+      if (borderless)
+        s"CAST((length($src) - length(replace($src, $pat, ''))) " +
+          s"DIV length($pat) AS INT)"
+      else
+        s"IF(length($pat) = 0 OR length($src) < length($pat), 0, " +
+          s"aggregate(sequence(1, length($src) - length($pat) + 1), 0, " +
+          s"(acc, p) -> acc + IF(substring($src, p, length($pat)) = $pat, 1, 0)))"
+      }
+    }),
+    "substring" -> ScalarFn("(source, startIdx[, length])", 2, 3, { c =>
+      // ADX substring(source, startIdx[, length]) is 0-BASED
+      // (Spark's is 1-based — a pass-through would silently
+      // shift every result). Negative start clamps to 0, as
+      // ADX does; omitted length runs to end of string.
+      val start = s"(greatest(CAST(${c.args(1)} AS INT), 0) + 1)"
+      val len = if (c.args.length == 3) s"CAST(${c.args(2)} AS INT)"
+                else "2147483647"
+      s"substring(${c.args(0)}, $start, $len)"
+    }),
+    "indexof" -> ScalarFn("(source, lookup[, start])", 2, 3, { c =>
+      // ADX indexof(source, lookup[, start]): 0-based result,
+      // -1 when absent (Spark instr/locate are 1-based,
+      // 0-absent — the single shift maps both conventions).
+      if (c.args.length == 2)
+        s"(instr(${c.args(0)}, ${c.args(1)}) - 1)"
+      else
+        s"(locate(${c.args(1)}, ${c.args(0)}, " +
+          s"greatest(CAST(${c.args(2)} AS INT), 0) + 1) - 1)"
+    }),
+    "strrep" -> ScalarFn("(value, multiplier[, delimiter])", 2, 3, { c =>
+      // ADX strrep(value, multiplier[, delimiter]) — Spark
+      // repeat covers the plain form; the delimited form
+      // builds the repetition as an array join.
+      if (c.args.length == 2)
+        s"repeat(${c.args(0)}, CAST(${c.args(1)} AS INT))"
+      else
+        s"array_join(array_repeat(${c.args(0)}, " +
+          s"CAST(${c.args(1)} AS INT)), ${c.args(2)})"
+    }),
+    "base64_encode_tostring" -> ScalarFn("(string)", 1, 1, c =>
+      s"base64(encode(${c.args.head}, 'UTF-8'))"),
+    "base64_decode_tostring" -> ScalarFn("(string)", 1, 1, c =>
+      s"decode(unbase64(${c.args.head}), 'UTF-8')"),
+    "hash" -> ScalarFn("(source[, mod])", 1, 2, { c =>
+      // ADX hash(source[, mod]) is xxhash64-based — Spark's
+      // xxhash64 is the same family. DEVIATION: bit-level
+      // values differ from the ADX service (seed/finalization
+      // differ), and a bare Spark pass-through would have
+      // been Murmur3-32 — materially worse for the mod-shard
+      // use this function exists for. mod applies
+      // non-negatively (pmod), matching ADX's range.
+      if (c.args.length == 1) s"xxhash64(${c.args.head})"
+      else s"pmod(xxhash64(${c.args(0)}), CAST(${c.args(1)} AS BIGINT))"
+    }),
+    "hash_xxhash64" -> ScalarFn("(source[, mod])", 1, 2, { c =>
+      // ADX hash_xxhash64(source[, mod]) — the explicitly-
+      // named sibling of hash() (this engine's hash() is
+      // already xxhash64-backed; same documented bit-level
+      // deviation from the ADX service, same pmod range).
+      if (c.args.length == 1) s"xxhash64(${c.args.head})"
+      else s"pmod(xxhash64(${c.args(0)}), CAST(${c.args(1)} AS BIGINT))"
+    }),
+    "hash_many" -> ScalarFn("(value, ...)", 1, Int.MaxValue, c =>
+      // ADX hash_many(v1, v2, ...) — one hash over all
+      // arguments; Spark's xxhash64 is natively variadic, so
+      // this is the direct emission. Bit values are engine-
+      // specific (the hash() deviation); cross-engine checks
+      // assert determinism/injectivity, KqlSpec pins values.
+      s"xxhash64(${c.args.mkString(", ")})"),
+    "hash_combine" -> ScalarFn("(h1, h2, ...)", 2, Int.MaxValue, c =>
+      // ADX hash_combine(h1, h2, ...) — combines already-
+      // computed hash VALUES. DEVIATION (documented): ADX
+      // does not publish its mixer; this engine re-keys the
+      // operand hashes through the same xxhash64 family, so
+      // combined values keep full 64-bit dispersion and the
+      // function stays order-sensitive like ADX's.
+      s"xxhash64(${c.args.map(a => s"CAST(($a) AS BIGINT)").mkString(", ")})"),
+    "bag_pack_columns" -> ScalarFn("(col1, ..., colN)", 1, Int.MaxValue, { c =>
+      // ADX bag_pack_columns(col1, ..., colN) → a bag keyed
+      // by the COLUMN NAMES. Arguments must be bare column
+      // identifiers (computed expressions are rejected loudly
+      // — the bag_pack computed-key convention). Null-valued
+      // fields are omitted from the bag (the to_json path's
+      // convention, shared with bag_pack), and the VARIANT
+      // round-trip normalizes key order to SORTED.
+      require(c.raw.forall(_.matches("[A-Za-z_][A-Za-z0-9_]*")),
+        s"bag_pack_columns expects bare column names: ${c.text}")
+      val kvs = c.raw.map(n => s"'$n', ${scalar(n, c.lets)}").mkString(", ")
+      s"parse_json(to_json(named_struct($kvs)))"
+    }),
+    "replace_strings" -> ScalarFn("(text, lookups, rewrites)", 3, 3, { c =>
+      // ADX replace_strings(text, lookups, rewrites):
+      // replace each lookup with its rewrite, applied
+      // SEQUENTIALLY left-to-right (ADX's order — later pairs
+      // see earlier pairs' output) via one fold over the
+      // zipped pair arrays. Length mismatch → null (ADX
+      // errors; null is this engine's in-band convention).
+      // dynamic([...]) passes through scalar() untouched (the
+      // array_split/has_any_index convention) — unwrap it to
+      // array(...); computed array expressions cast through.
+      def rsArr(raw0: String): String = {
+        val raw = raw0.trim
+        if (raw.toLowerCase.startsWith("dynamic(")) {
+          val inner = raw.substring(raw.indexOf('(') + 1,
+            raw.length - 1).trim
+          require(inner.startsWith("[") && inner.endsWith("]"),
+            s"replace_strings lists must be dynamic([...]): $raw")
+          s"try_cast(array(${inner.substring(1, inner.length - 1)}) AS ARRAY<STRING>)"
+        } else s"try_cast(($raw) AS ARRAY<STRING>)"
+      }
+      val lk = rsArr(c.args(1))
+      val rw = rsArr(c.args(2))
+      val pairs = s"zip_with($lk, $rw, (sx, rx) -> named_struct('s', sx, 'r', rx))"
+      s"(CASE WHEN size($lk) = size($rw) THEN " +
+        s"aggregate($pairs, CAST((${c.args(0)}) AS STRING), " +
+        "(acc, p) -> replace(acc, p.s, p.r)) " +
+        "ELSE CAST(NULL AS STRING) END)"
+    }),
+    "punycode_domain_from_string" -> ScalarFn("(string)", 1, 1, { c =>
+      // ADX punycode_domain_from_string(domain): the IDNA ACE
+      // form — each dot-separated label containing any
+      // non-ASCII character becomes 'xn--' + punycode(label);
+      // pure-ASCII labels pass through. An unencodable label
+      // nulls the whole result (ADX returns empty; null is
+      // the engine's in-band convention, same as
+      // punycode_from_string).
+      val encLabels = s"transform(split(CAST((${c.args(0)}) AS STRING), '\\\\.'), " +
+        "pl -> CASE WHEN pl RLIKE '[^\\\\x00-\\\\x7F]' " +
+        "THEN concat('xn--', graft_punycode_encode(pl)) ELSE pl END)"
+      s"element_at(transform(array($encLabels), pls -> " +
+        "CASE WHEN exists(pls, px -> px IS NULL) THEN CAST(NULL AS STRING) " +
+        "ELSE array_join(pls, '.') END), 1)"
+    }),
+    "punycode_domain_to_string" -> ScalarFn("(string)", 1, 1, { c =>
+      // Inverse: labels with the 'xn--' ACE prefix decode,
+      // others pass through; a malformed ACE label nulls the
+      // whole result (array_join would silently DROP null
+      // labels, hence the explicit exists() guard — shared
+      // with the encode direction). The ACE prefix match is
+      // CASE-INSENSITIVE and the payload case-folds before
+      // decoding (r17 ADVICE: domains are case-insensitive
+      // per IDNA, so 'XN--BCHER-KVA.example' must decode —
+      // and IDNA ToUnicode lowercases, so it decodes to the
+      // same 'bücher' as the lowercase form).
+      val decLabels = s"transform(split(CAST((${c.args(0)}) AS STRING), '\\\\.'), " +
+        "pl -> CASE WHEN lower(substring(pl, 1, 4)) = 'xn--' " +
+        "THEN graft_punycode_decode(lower(substring(pl, 5, 2147483647))) ELSE pl END)"
+      s"element_at(transform(array($decLabels), pls -> " +
+        "CASE WHEN exists(pls, px -> px IS NULL) THEN CAST(NULL AS STRING) " +
+        "ELSE array_join(pls, '.') END), 1)"
+    }),
+    // isempty/isnotempty fold the ADX null-or-'' test into one coalesce
+    "isempty" -> ScalarFn("(value)", 1, 1, isEmptySql),
+    "isnotempty" -> ScalarFn("(value)", 1, 1, isEmptySql),
+    // ADX bag_pack('k1', v1, 'k2', v2, …) — a dynamic property bag
+    // (`pack` is its older name). VARIANT has no direct constructor
+    // expression, so the bag goes named_struct → to_json → parse_json;
+    // keys must be string literals (ADX allows computed keys — rejected
+    // loudly here, a documented deviation).
+    "bag_pack" -> ScalarFn("('key1', v1, 'key2', v2, …)", 2, Int.MaxValue, bagPackSql),
+    "pack" -> ScalarFn("('key1', v1, 'key2', v2, …)", 2, Int.MaxValue, bagPackSql),
+    // ADX trim/trim_start/trim_end take a REGEX first and the source
+    // second, repeatedly stripping anchored matches — not Spark's
+    // whitespace/charset trim. Desugars to one anchored regexp_replace;
+    // the pattern concat keeps non-literal regex arguments working.
+    // (Spark replaces ALL matches, so the two-anchor alternation trims
+    // both ends in one pass — DuckDB oracles need the 'g' flag for
+    // parity.)
+    "trim" -> ScalarFn("(regex, source)", 2, 2, c =>
+      trimSql(c, r => s"concat('^(?:', $r, ')+|(?:', $r, ')+$$')")),
+    "trim_start" -> ScalarFn("(regex, source)", 2, 2, c =>
+      trimSql(c, r => s"concat('^(?:', $r, ')+')")),
+    "trim_end" -> ScalarFn("(regex, source)", 2, 2, c =>
+      trimSql(c, r => s"concat('(?:', $r, ')+$$')")),
+    // ADX strcat/strcat_delim treat NULL arguments as empty strings and
+    // stringify non-string ones; Spark's concat nulls out on ANY null
+    // argument and concat_ws SKIPS null args (dropping their delimiter)
+    // — a pure name swap would be a silent semantic deviation either
+    // way. Each argument becomes coalesce(cast(arg AS string), '') so
+    // nulls become empties and every delimiter slot survives.
+    "strcat" -> ScalarFn("(arg1, ...)", 1, Int.MaxValue, c =>
+      c.args.map(strcatPad).mkString("concat(", ", ", ")")),
+    "strcat_delim" -> ScalarFn("(delimiter, arg1, ...)", 2, Int.MaxValue, c =>
+      (strcatPad(c.args.head) +: c.args.tail.map(strcatPad))
+        .mkString("concat_ws(", ", ", ")")),
+    // ADX datetime arithmetic: datetime_add(period, n, dt) and
+    // datetime_diff(period, dt1, dt2) = dt1 - dt2. Mapped to Spark
+    // timestampadd/timestampdiff with the period literal lifted into the
+    // unit keyword. DEVIATION: Spark counts whole elapsed units; ADX
+    // counts period BOUNDARIES crossed (ADX datetime_diff('year', jan1,
+    // dec31) = 1, here 0).
+    "datetime_add" -> ScalarFn("(period, …, …)", 3, 3, c =>
+      s"timestampadd(${datetimeUnit(c)}, ${c.args(1)}, ${c.args(2)})"),
+    // ADX order: dt1 - dt2; Spark diff is (start, end)
+    "datetime_diff" -> ScalarFn("(period, …, …)", 3, 3, c =>
+      s"timestampdiff(${datetimeUnit(c)}, ${c.args(2)}, ${c.args(1)})"),
+    "format_datetime" -> ScalarFn("(datetime, format)", 2, 2, { c =>
+      // ADX format_datetime(dt, 'yyyy-MM-dd HH:mm:ss') — the ADX
+      // specifier alphabet maps 1:1 onto Spark's datetime pattern
+      // except fractional seconds ('f' → 'S'). The format must be a
+      // literal (it becomes part of the plan), and only the ADX
+      // specifiers + plain separators are accepted — anything else
+      // would silently render wrong through Java pattern letters.
+      val f = c.args(1).trim
+      require(f.length >= 2 && (f.head == '\'' || f.head == '"') && f.last == f.head,
+        s"format_datetime format must be a string literal: $f")
+      val fmt = f.substring(1, f.length - 1)
+      require(fmt.matches("[yMdHhmsf \\-:/.,_]*"),
+        s"unsupported format_datetime specifier in '$fmt' " +
+          "(supported: y M d H h m s f and separators - : / . , _ space)")
+      s"date_format(${c.args(0)}, '${fmt.replace('f', 'S')}')"
+    }),
+    "datetime" -> ScalarFn("(yyyy-MM-dd[ HH:mm:ss])", 1, 1, { c =>
+      // KQL datetime(2024-03-01 10:30:00) literal — the body is an
+      // UNQUOTED ISO datetime (date-only = midnight; T/Z accepted),
+      // which Spark SQL can't parse as an expression. Emit a TIMESTAMP
+      // literal. A trailing Z marks a UTC instant (ADX datetimes are
+      // UTC) — keep the zone suffix in the literal so a non-UTC session
+      // timezone cannot silently reinterpret the wall-clock; zone-less
+      // bodies stay session-local.
+      val raw = c.raw(0)
+        .stripPrefix("\"").stripSuffix("\"")
+        .stripPrefix("'").stripSuffix("'").trim
+      val hadZ = raw.endsWith("Z")
+      val iso = raw.stripSuffix("Z").replace('T', ' ').trim
+      val full = if (iso.contains(" ")) iso else s"$iso 00:00:00"
+      s"TIMESTAMP '$full${if (hadZ) "Z" else ""}'"
+    }))
+
+  /** KQL bin(value, size) = floor-to-multiple. Spark SQL's own `bin`
+    * renders a binary STRING and its 2-arg `floor(expr, scale)` rounds
+    * to decimal DIGITS — both pass-throughs would be silently wrong —
+    * so translate to arithmetic, recursing into both arguments (they
+    * may reference lets or nested calls). Emitted as floor-mod
+    * subtraction, value - mod(value, size) with mod folded into
+    * [0, size): stays in INTEGER arithmetic for integral operands
+    * (exact past 2^53, where the old floor(v/s)*s double division lost
+    * ulps) and computes the same floor bucket for fractional ones,
+    * including negative values. A literal size must be positive at
+    * translation time; a non-literal size gets a per-row guard that
+    * raises rather than silently emitting wrong buckets. */
+  private def binSql(c: ScalarCall): String =
+    // KQL timespan literal size (1h, 30m, 7d, 90s): datetime binning —
+    // floor the epoch-second value to the span multiple. Kept in
+    // integer seconds end to end, so both engines compute the identical
+    // bucket.
+    timespanSeconds(c.raw(1), "bin()") match {
+      case Some(secs) =>
+        require(secs > 0, s"bin() timespan must be positive: ${c.raw(1)}")
+        val v = c.args(0)
+        s"timestamp_seconds((unix_timestamp($v)) - " +
+          s"(((unix_timestamp($v)) % $secs + $secs) % $secs))"
+      case _ =>
+        val (v, sz) = (c.args(0), c.args(1))
+        val arith = s"(($v) - ((($v) % ($sz) + ($sz)) % ($sz)))"
+        scala.util.Try(BigDecimal(sz.trim)).toOption match {
+          case Some(n) =>
+            require(n > 0, s"bin() size must be positive, got $sz")
+            arith
+          case None =>
+            s"(CASE WHEN ($sz) > 0 THEN $arith ELSE " +
+              s"raise_error(concat('bin() size must be positive, got ', " +
+              s"CAST(($sz) AS STRING))) END)"
+        }
+    }
+
+  /** endof*(x): the last microsecond of x's day/month/year. */
+  private def endOfSql(unit: String, x: String): String =
+    "timestampadd(MICROSECOND, -1, " +
+      s"timestampadd($unit, 1, date_trunc('$unit', $x)))"
+
+  private def bagPackSql(c: ScalarCall): String = {
+    require(c.raw.length % 2 == 0,
+      s"${c.name} expects ('key1', v1, 'key2', v2, …): ${c.text}")
+    c.args.grouped(2).foreach { kv =>
+      val k = kv.head.trim
+      require(k.length >= 2 && (k.head == '\'' || k.head == '"') && k.last == k.head,
+        s"${c.name} keys must be string literals (computed keys unsupported): $k")
+    }
+    s"parse_json(to_json(named_struct(${c.args.mkString(", ")})))"
+  }
+
+  private def trimSql(c: ScalarCall, pattern: String => String): String =
+    s"regexp_replace(${c.args(1)}, ${pattern(c.args(0))}, '')"
+
+  private def strcatPad(a: String): String = s"coalesce(cast(($a) as string), '')"
+
+  /** The period literal of datetime_add/datetime_diff as a Spark unit. */
+  private def datetimeUnit(c: ScalarCall): String = {
+    val p = c.args.head.trim
+    require(p.length >= 2 && (p.head == '\'' || p.head == '"') && p.last == p.head,
+      s"${c.name} period must be a string literal: $p")
+    val unit = p.substring(1, p.length - 1).toUpperCase
+    require(Set("YEAR", "QUARTER", "MONTH", "WEEK", "DAY",
+        "HOUR", "MINUTE", "SECOND")(unit),
+      s"unsupported period '$unit'")
+    unit
+  }
+
+  private def tryCastSql(c: ScalarCall): String = {
+    // ADX to*() conversions return null on malformed input
+    // (todouble('x') = real(null)), while the former bare
+    // name-swap to an ANSI cast THREW at runtime. try_cast
+    // restores ADX semantics; valid inputs cast
+    // identically, so every oracle mirror (plain CAST over
+    // clean columns) is unaffected.
+    val sqlType = c.name match {
+      case "todouble" | "toreal" => "DOUBLE"
+      case "tolong" => "BIGINT"
+      case "toint" => "INT"
+      case "tobool" | "toboolean" => "BOOLEAN"
+      case _ => "TIMESTAMP"
+    }
+    s"try_cast((${c.args(0)}) AS $sqlType)"
+  }
+
+  private def seriesArithSql(c: ScalarCall): String = {
+    val op = c.name match {
+      case "series_add" => "+"; case "series_subtract" => "-"
+      case "series_multiply" => "*"; case _ => "/"
+    }
+    // ADX broadcasts numeric scalars over the series
+    // side. A scalar is only statically recognizable as
+    // a numeric LITERAL (the compiled SQL for one is the
+    // literal itself) — anything else is treated as a
+    // series, matching the pre-r13 behavior.
+    def numLit(a: String): Boolean =
+      a.matches("-?[0-9]+(\\.[0-9]+)?([eE][+-]?[0-9]+)?")
+    if (numLit(c.args(1)))
+      s"transform(${c.args(0)}, x -> x $op ${c.args(1)})"
+    else if (numLit(c.args(0)))
+      s"transform(${c.args(1)}, y -> ${c.args(0)} $op y)"
+    else s"zip_with(${c.args(0)}, ${c.args(1)}, (x, y) -> x $op y)"
+  }
+
+  private def seriesUnarySql(c: ScalarCall): String = {
+    // r13: the elementwise unary tier. Conventions:
+    // null elements map to null (every lambda below is
+    // null-strict), empty series stay empty. Types stay
+    // DOUBLE (floor/ceiling/round re-cast Spark's BIGINT
+    // result) so unary ops compose with the binary tier.
+    // series_log is the natural log (ADX's convention).
+    // Deviation (documented): series_round rounds half
+    // AWAY FROM ZERO via an explicit floor chain —
+    // x+0.5/floor are single correctly-rounded IEEE ops,
+    // so the oracle mirrors it bit-for-bit, where an
+    // engine-native round() would hinge on each engine's
+    // tie rule.
+    val lam = c.name match {
+      case "series_abs" => "x -> abs(x)"
+      case "series_exp" => "x -> exp(x)"
+      case "series_log" => "x -> ln(x)"
+      case "series_sign" =>
+        // CASE with no ELSE: null in, null out
+        "x -> CAST(CASE WHEN x > 0 THEN 1 WHEN x < 0 THEN -1 " +
+          "WHEN x = 0 THEN 0 END AS DOUBLE)"
+      case "series_floor" => "x -> CAST(floor(x) AS DOUBLE)"
+      case "series_ceiling" => "x -> CAST(ceiling(x) AS DOUBLE)"
+      // r15: the elementwise trig tier (ADX series_sin
+      // et al.) — IEEE libm calls, identical in Spark
+      // and DuckDB for the correctly-rounded cases; the
+      // oracle compare floors to micro-units as with
+      // every double surface. asin/acos outside [-1,1]
+      // yield NaN in both engines → surfaced as NULL
+      // (nanvl), the loud in-band convention.
+      case "series_sin" => "x -> sin(x)"
+      case "series_cos" => "x -> cos(x)"
+      case "series_tan" => "x -> tan(x)"
+      case "series_asin" =>
+        "x -> IF(abs(x) <= 1.0D, asin(x), CAST(NULL AS DOUBLE))"
+      case "series_acos" =>
+        "x -> IF(abs(x) <= 1.0D, acos(x), CAST(NULL AS DOUBLE))"
+      case "series_atan" => "x -> atan(x)"
+      case _ => // series_round
+        "x -> IF(x >= 0D, CAST(floor(x + 0.5D) AS DOUBLE), " +
+          "CAST(-floor(-x + 0.5D) AS DOUBLE))"
+    }
+    s"transform(${c.args(0)}, $lam)"
+  }
+
+  private def seriesCompareSql(c: ScalarCall): String = {
+    // r13: the elementwise comparison tier — boolean
+    // arrays, null elements compare to null (SQL
+    // three-valued logic through zip_with).
+    val cmp = c.name match {
+      case "series_greater" => ">"
+      case "series_greater_equals" => ">="
+      case "series_less" => "<"
+      case "series_less_equals" => "<="
+      case "series_equals" => "="
+      case _ => "<>"
+    }
+    s"zip_with(${c.args(0)}, ${c.args(1)}, (x, y) -> x $cmp y)"
+  }
+
+  private def seriesFitPolySql(c: ScalarCall): String = {
+    // degree is the 2nd argument (integer literal
+    // 1..3; default 1). ADX's (y, x, degree) custom-x
+    // form is rejected loudly — see
+    // seriesFitPolyDynamic's deviation notes.
+    val deg = c.args.lift(1).map { a =>
+      scala.util.Try(a.trim.toInt).getOrElse(
+        throw new IllegalArgumentException(
+          s"${c.name} degree must be an integer literal 1..3 " +
+            s"(a custom x axis is unsupported): ${a.trim}"))
+    }.getOrElse(1)
+    require(deg >= 1 && deg <= 3,
+      s"${c.name} degree must be in 1..3: $deg")
+    if (c.name == "series_fit_poly_dynamic")
+      seriesFitPolyDynamic(c.args(0), deg)
+    else
+      s"element_at(transform(array(" +
+        s"${seriesFitPolyDynamic(c.args(0), deg)}), pfr -> pfr.poly_fit), 1)"
+  }
+
+  private def seriesFillBackwardsSql(c: ScalarCall): String =
+    // ADX spells it series_fill_backwards; the singular
+    // alias is accepted. Trailing nulls stay null.
+    seriesFillDirSql(c.args(0), forward = false)
+
+  private def ipv6IsInRangeSql(c: ScalarCall): String = {
+    // r15: range is "addr/p" (plain address = /128);
+    // equality of the top p bits via the native prefix
+    // comparator (graft_ipv6_cmp — the ipv6_is_match
+    // kernel). _in_any_range ORs the per-range tests.
+    def cidr6Prefix(e: String): String =
+      s"(CASE WHEN instr($e, '/') > 0 THEN " +
+        s"try_cast(substring($e, instr($e, '/') + 1, 2147483647) AS INT) " +
+        s"ELSE 128 END)"
+    val v6Tests = c.args.tail.map { r =>
+      s"(graft_ipv6_cmp(${c.args(0)}, ${cidrBase(r)}, ${cidr6Prefix(r)}) = 0)"
+    }
+    v6Tests.mkString("(", " OR ", ")")
+  }
+
+  private def datetimeZoneSql(c: ScalarCall): String = {
+    // r15: timezone conversion through the JVM tzdb
+    // (from_utc_timestamp / to_utc_timestamp); the zone
+    // must be a string LITERAL (compiled into the plan).
+    // IANA names resolve via the JVM (DST-correct,
+    // spec-pinned on boundary vectors); the ORACLE path
+    // uses fixed-offset zones ('+HH:MM'), the only form
+    // the DuckDB harness can replay without an ICU tzdb.
+    val tzl = c.args(1).trim
+    require(tzl.length >= 2 &&
+        (tzl.head == '\'' || tzl.head == '"') && tzl.last == tzl.head,
+      s"${c.name} timezone must be a string literal: ${c.args(1)}")
+    if (c.name == "datetime_utc_to_local")
+      s"from_utc_timestamp(${c.args(0)}, $tzl)"
+    else s"to_utc_timestamp(${c.args(0)}, $tzl)"
+  }
+
+  private def binaryOpSql(c: ScalarCall): String = {
+    // ADX binary_* names for the infix bit operators,
+    // widened to BIGINT (ADX operates on long).
+    val op = c.name match {
+      case "binary_and" => "&"; case "binary_or" => "|"; case _ => "^"
+    }
+    s"(CAST(${c.args(0)} AS BIGINT) $op CAST(${c.args(1)} AS BIGINT))"
+  }
+
+  private def binaryShiftSql(c: ScalarCall): String = {
+    val fn = if (c.name.endsWith("left")) "shiftleft" else "shiftright"
+    s"$fn(CAST(${c.args(0)} AS BIGINT), CAST(${c.args(1)} AS INT))"
+  }
+
+  private def convertUnitsSql(c: ScalarCall): String = {
+    // ADX convert_*(value, from, to) → value in `to` units.
+    // Units must be string LITERALS (the factor compiles
+    // into the plan; UnitsNet enum names, documented subset
+    // below — unknown units reject loudly listing the
+    // supported set). value · f_from / f_to with exact
+    // published factors (international yard/pound etc.),
+    // the same literal arithmetic the oracle replays.
+    def unitLit(a: String): String = {
+      val t = a.trim
+      require(t.length >= 2 &&
+          (t.head == '\'' || t.head == '"') && t.last == t.head,
+        s"${c.name} units must be string literals: $a")
+      t.substring(1, t.length - 1)
+    }
+    val table: Map[String, String] = c.name match {
+      case "convert_length" => Map(
+        "Meter" -> "1.0", "Kilometer" -> "1000.0",
+        "Centimeter" -> "0.01", "Millimeter" -> "0.001",
+        "Micrometer" -> "0.000001", "Nanometer" -> "1.0E-9",
+        "Mile" -> "1609.344", "Yard" -> "0.9144",
+        "Foot" -> "0.3048", "Inch" -> "0.0254",
+        "NauticalMile" -> "1852.0")
+      case "convert_mass" => Map(
+        "Kilogram" -> "1.0", "Gram" -> "0.001",
+        "Milligram" -> "0.000001", "Tonne" -> "1000.0",
+        "Pound" -> "0.45359237", "Ounce" -> "0.028349523125",
+        "Stone" -> "6.35029318")
+      case "convert_speed" => Map(
+        "MeterPerSecond" -> "1.0",
+        "KilometerPerHour" -> "0.2777777777777778",
+        "MilePerHour" -> "0.44704",
+        "Knot" -> "0.5144444444444445",
+        "FootPerSecond" -> "0.3048")
+      case "convert_angle" => Map(
+        "Radian" -> "1.0",
+        "Degree" -> "0.017453292519943295",
+        "Gradian" -> "0.015707963267948967",
+        "Arcminute" -> "2.908882086657216E-4",
+        "Arcsecond" -> "4.84813681109536E-6",
+        "Revolution" -> "6.283185307179586")
+      case "convert_energy" => Map(
+        "Joule" -> "1.0", "Kilojoule" -> "1000.0",
+        "Calorie" -> "4.184", "Kilocalorie" -> "4184.0",
+        "WattHour" -> "3600.0", "KilowattHour" -> "3600000.0",
+        "BritishThermalUnit" -> "1055.05585262",
+        "ElectronVolt" -> "1.602176634E-19")
+      case "convert_volume" => Map(
+        "CubicMeter" -> "1.0", "Liter" -> "0.001",
+        "Milliliter" -> "0.000001",
+        "CubicFoot" -> "0.028316846592",
+        "CubicInch" -> "0.000016387064",
+        "UsGallon" -> "0.003785411784",
+        "ImperialGallon" -> "0.00454609")
+      case _ => Map( // convert_force
+        "Newton" -> "1.0", "Kilonewton" -> "1000.0",
+        "PoundForce" -> "4.4482216152605",
+        "KilogramForce" -> "9.80665", "Dyn" -> "0.00001")
+    }
+    val (fu, tu) = (unitLit(c.args(1)), unitLit(c.args(2)))
+    for (u <- Seq(fu, tu)) require(table.contains(u),
+      s"${c.name}: unsupported unit '$u' — supported: ${table.keys.toSeq.sorted.mkString(", ")}")
+    s"(CAST((${c.args(0)}) AS DOUBLE) * ${table(fu)} / ${table(tu)})"
+  }
+
+  private def urlEncodeSql(c: ScalarCall): String = {
+    // r15: percent-encoding as a pure hex-pair fold over
+    // the UTF-8 bytes (hex(encode(s))), so multi-byte
+    // characters percent-encode byte-by-byte exactly as
+    // RFC 3986 prescribes and the oracle replays the
+    // identical walk. Unreserved set = ALPHA / DIGIT /
+    // "-" / "." / "_" / "~" (RFC 3986 §2.3); url_encode
+    // additionally renders space as '+' (the ADX form
+    // variant). Hex digits LOWERCASE (ADX's rendering).
+    // DEVIATION (documented): ADX/.NET leaves !*() bare;
+    // here they percent-encode (the RFC-strict set).
+    val uh = s"hex(encode(CAST((${c.args(0)}) AS STRING), 'UTF-8'))"
+    val pair = s"substr(ueq.h, 2 * uei - 1, 2)"
+    val byte = s"CAST(conv($pair, 16, 10) AS INT)"
+    val spaceArm =
+      if (c.name == "url_encode") s"WHEN $byte = 32 THEN '+' " else ""
+    // empty-h guard: sequence(1, 0) DESCENDS in Spark
+    s"element_at(transform(array(named_struct('h', $uh)), ueq -> " +
+      s"CASE WHEN ueq.h IS NULL THEN CAST(NULL AS STRING) " +
+      s"WHEN length(ueq.h) = 0 THEN '' " +
+      s"ELSE aggregate(sequence(1, length(ueq.h) DIV 2), '', (ueacc, uei) -> " +
+      s"ueacc || CASE WHEN ($byte BETWEEN 48 AND 57) " +
+      s"OR ($byte BETWEEN 65 AND 90) OR ($byte BETWEEN 97 AND 122) " +
+      s"OR $byte IN (45, 46, 95, 126) THEN char($byte) " +
+      spaceArm +
+      s"ELSE '%' || lower($pair) END) END), 1)"
+  }
+
+  private def extractJsonSql(c: ScalarCall): String = {
+    // r15: ADX extractjson(jsonPath, dataSource[, typeof])
+    // — JSON-text extraction by a LITERAL '$'-path
+    // (compiled into the plan as variant_get's path; keys
+    // containing a quote reject, the variant-path
+    // convention). Optional third arg `typeof(t)` casts
+    // the extracted VARIANT.
+    val pRaw = c.args(0).trim
+    require(pRaw.length >= 2 &&
+        (pRaw.head == '\'' || pRaw.head == '"') && pRaw.last == pRaw.head,
+      s"${c.name} path must be a string literal: $pRaw")
+    val pIn = pRaw.substring(1, pRaw.length - 1)
+    require(pIn.startsWith("$"),
+      s"${c.name} path must start with '$$': $pIn")
+    require(!pIn.contains('\''),
+      s"${c.name} path cannot contain a single quote " +
+        s"(cannot ride variant_get's single-quoted path): $pIn")
+    val ejBase = s"variant_get(parse_json(${c.args(1)}), '$pIn')"
+    if (c.args.length == 3) {
+      val tRaw = c.args(2).trim
+      val TypeofEj = "(?i)^typeof\\s*\\(\\s*([A-Za-z_][A-Za-z0-9_]*)\\s*\\)$".r
+      tRaw match {
+        case TypeofEj(t) =>
+          s"try_cast($ejBase AS ${kqlTypeToSpark(t)})"
+        case other => throw new IllegalArgumentException(
+          s"${c.name} third argument must be typeof(type): $other")
+      }
+    } else ejBase
+  }
+
+  private def compressionSql(c: ScalarCall): String = {
+    // r15: ADX compression codecs — native expressions
+    // over java.util.zip (RFC 1952/1950 framing, UTF-8
+    // text, standard base64). Compressed BYTES are a
+    // zlib-implementation detail (ADX's encoder differs
+    // from the JDK's), so the oracle contract is the
+    // round-trip identity + spec-pinned header bytes — see
+    // graft.functions.Codecs. Malformed decompress input →
+    // null (documented deviation from ADX's empty string).
+    graft.functions.GraftFunctions.register(
+      org.apache.spark.sql.SparkSession.active)
+    val czFn = c.name match {
+      case "gzip_compress_to_base64_string" => "graft_gzip_compress"
+      case "gzip_decompress_from_base64_string" => "graft_gzip_decompress"
+      case "zlib_compress_to_base64_string" => "graft_zlib_compress"
+      case _ => "graft_zlib_decompress"
+    }
+    s"$czFn(CAST((${c.args(0)}) AS STRING))"
+  }
+
+  private def arrayRotateSql(c: ScalarCall): String = {
+    val a = c.args(0)
+    val n0 = if (c.name.endsWith("right")) s"-(${c.args(1)})" else c.args(1)
+    // pmod guards the negative direction; the size-0 guard
+    // keeps ANSI's pmod-by-zero error out of empty arrays
+    val r = s"pmod($n0, size($a))"
+    s"(CASE WHEN size($a) <= 1 THEN $a ELSE " +
+      s"concat(slice($a, $r + 1, size($a) - $r), slice($a, 1, $r)) END)"
+  }
+
+  private def arrayShiftSql(c: ScalarCall): String = {
+    // VACATED slots take `fill` (null when omitted); a
+    // negative n shifts the other way — both directions are
+    // one index-shifted transform. The fill gates on the
+    // shifted index being OUT OF RANGE, not on the looked-up
+    // value being null — ADX fills only vacated positions,
+    // and a coalesce would also overwrite genuine null
+    // ELEMENTS carried from the source array.
+    val a = c.args(0)
+    val n0 = if (c.name.endsWith("right")) s"-(${c.args(1)})" else c.args(1)
+    // index 0 is a hard error even for try_element_at
+    // (Spark's 1-based contract) — guard the sub-1 range
+    val inRange = s"(i + 1 + ($n0) BETWEEN 1 AND size($a))"
+    c.args.lift(2) match {
+      case Some(fill) =>
+        s"transform($a, (x, i) -> CASE WHEN $inRange THEN " +
+          s"try_element_at($a, i + 1 + ($n0)) ELSE ($fill) END)"
+      case None =>
+        s"transform($a, (x, i) -> CASE WHEN $inRange THEN " +
+          s"try_element_at($a, i + 1 + ($n0)) ELSE NULL END)"
+    }
+  }
+
+  private def arrayIffSql(c: ScalarCall): String = {
+    // element-wise conditional; a null condition yields a
+    // null element (ADX), and a shorter value array yields
+    // null for the missing slots
+    val (cond, t, f) = (c.args(0), c.args(1), c.args(2))
+    s"transform($cond, (cc, i) -> CASE WHEN cc IS NULL THEN NULL " +
+      s"WHEN cc THEN try_element_at($t, i + 1) " +
+      s"ELSE try_element_at($f, i + 1) END)"
+  }
+
+  private def geoH3cellChildrenSql(c: ScalarCall): String = {
+    // ADX geo_h3cell_children(cell[, resolution]) → the
+    // finer-resolution cells whose parent is this cell
+    // (default: one level down); geo_h3cell_childcount is
+    // its count. DEVIATION (graft.functions.H3.childrenOf,
+    // the inverse of the parent deviation): no aperture-7
+    // digit hierarchy, so children come from candidate
+    // enumeration + a per-candidate parent re-encode —
+    // parent(child) == cell holds for every emitted child
+    // by construction. Resolution must be an integer
+    // literal; finer-than-cell validation happens per row
+    // (null on violation, the parent convention), and a
+    // resolution gap > 4 rejects loudly at runtime.
+    graft.functions.GraftFunctions.register(
+      org.apache.spark.sql.SparkSession.active)
+    val childExpr = c.args.lift(1) match {
+      case None =>
+        s"graft_h3_children(${c.args(0)}, " +
+          s"graft_h3_level(${c.args(0)}) + 1)"
+      case Some(a) =>
+        val v = scala.util.Try(a.trim.toInt).getOrElse(
+          throw new IllegalArgumentException(
+            s"${c.name} resolution must be an integer literal: $a"))
+        require(v >= 0 && v <= graft.functions.H3.MaxRes,
+          s"${c.name} resolution must be in 0..${graft.functions.H3.MaxRes}: $v")
+        s"graft_h3_children(${c.args(0)}, $v)"
+    }
+    if (c.name == "geo_h3cell_childcount")
+      s"size($childExpr)" else childExpr
+  }
+
+  private def densifySql(c: ScalarCall): String =
+    // r15: equal-parts edge subdivision — see geoDensifySql
+    // (planar-chord deviation + the 4096-segment loud cap
+    // documented there).
+    geoDensifySql(c.args(0), c.args(1),
+      polygon = c.name == "geo_polygon_densify")
+
+  private def isEmptySql(c: ScalarCall): String = {
+    val test = s"(coalesce(cast(${c.args.head} AS string), '') = '')"
+    if (c.name == "isempty") test else s"(NOT $test)"
+  }
+
+  /** The dotted-quad tokens of `src` that are valid IPv4 addresses.
+    * Tokenizes on the term-boundary class FIRST (a boundary-consuming
+    * match regex would miss adjacent IPs, and RE2 — the oracle's
+    * engine — has no lookaround), then full-matches each dotted token. */
+  private def ipv4Candidates(src: String): String = {
+    val oct = "(25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9][0-9]|[0-9])"
+    s"filter(split($src, '[^0-9A-Za-z.]+'), " +
+      s"hip -> hip RLIKE '^($oct[.]){3}$oct$$')"
+  }
+
+  /** The text of a string-literal IP/prefix argument of `c`. */
+  private def ipv4LiteralArg(c: ScalarCall, a: String): String = {
+    val t = a.trim
+    require(t.length >= 2 &&
+        (t.head == '\'' || t.head == '"') && t.last == t.head,
+      s"${c.name}: IP/prefix arguments must be string literals: $a")
+    t.substring(1, t.length - 1)
+  }
+
+  private def hasIpv4PrefixSql(c: ScalarCall): String = {
+    val cands = ipv4Candidates(c.args(0))
+    val tests = c.args.tail.map(ipv4LiteralArg(c, _)).map { p0 =>
+      val p = if (p0.endsWith(".")) p0 else p0 + "."
+      val lit = "'" + p.replace("'", "''") + "'"
+      // full-prefix tokens ('1.2.3.4' vs prefix '1.2.3.4') can never
+      // match a longer IP, so also accept candidate == prefix — but
+      // ONLY when the user's prefix did not itself end with '.': ADX
+      // treats an explicit trailing dot as requiring a longer token
+      // ('10.1.2.3' does not start with '10.1.2.3.')
+      if (p0.endsWith(".")) s"startswith(hip, $lit)"
+      else s"(startswith(hip, $lit) OR hip = '" +
+        p0.replace("'", "''") + "')"
+    }
+    s"exists($cands, hip -> ${tests.mkString("(", " OR ", ")")})"
+  }
+
+  /** `sql` calling a native [[graft.functions.Geom]] kernel, with the
+    * engine's functions registered in the active session. */
+  private def geomKernel(sql: String): String = {
+    graft.functions.GraftFunctions.register(
+      org.apache.spark.sql.SparkSession.active)
+    sql
+  }
+  private def geoLineCoords(e: String) =
+    s"try_cast(variant_get($e, '$$.coordinates') AS ARRAY<ARRAY<DOUBLE>>)"
+  private def geoRingCoords(e: String) =
+    s"try_cast(variant_get($e, '$$.coordinates[0]') AS ARRAY<ARRAY<DOUBLE>>)"
+  private def dblSql(e: String) = s"CAST(($e) AS DOUBLE)"
+
+  // The post-pass patterns: an identifier-ish left side, then a marker,
+  // then (where the form takes one) a string literal in either quote,
+  // with backslash escapes inside as in [[literalEnd]].
+  private val LiteralRe = """('(?:[^'\\]|\\.)*'|"(?:[^"\\]|\\.)*")"""
+  private val InfixRe = ("([A-Za-z_][A-Za-z0-9_.]*)\\s+(i|cs)like_(n?)(contains|starts|ends|has)\\s+" +
+    LiteralRe).r
+  private val CiInRe = "([A-Za-z_][A-Za-z0-9_.]*)\\s+ilike_(n?)in\\s*\\(([^)]*)\\)".r
+  private val HasListRe = "([A-Za-z_][A-Za-z0-9_.]*)\\s+ilike_has(any|all)\\s*\\(([^)]*)\\)".r
+  private val CitextRe = ("([A-Za-z_][A-Za-z0-9_.]*)\\s+ILIKE\\s+" + LiteralRe).r
+
+  /** The body of a KQL string literal (quotes stripped) as a
+    * single-quoted Spark SQL literal: backslash escapes pass through
+    * as written (Spark reads the same C-style escapes), a bare `'`
+    * doubles. */
+  private def sqlQuoted(body: String): String = {
+    val sb = new StringBuilder("'")
+    var i = 0
+    while (i < body.length) {
+      val ch = body.charAt(i)
+      if (ch == '\\' && i + 1 < body.length) { sb.append(ch).append(body.charAt(i + 1)); i += 2 }
+      else { sb.append(if (ch == '\'') "''" else ch.toString); i += 1 }
+    }
+    sb.append('\'').toString
+  }
+
+  /** The value a KQL string literal body denotes, for the `has` terms
+    * that compile into a regex: an escaped quote or backslash stands
+    * for itself; any other backslash sequence is kept as written. */
+  private def literalValue(body: String): String = {
+    val sb = new StringBuilder
+    var i = 0
+    while (i < body.length) {
+      val ch = body.charAt(i)
+      if (ch == '\\' && i + 1 < body.length) {
+        val e = body.charAt(i + 1)
+        if (e != '\'' && e != '"' && e != '\\') sb.append(ch)
+        sb.append(e); i += 2
+      } else { sb.append(ch); i += 1 }
+    }
+    sb.toString
+  }
+
+  /** Infix markers → function form: `a ilike_contains "x"` is not valid
+    * SQL, so rewrite `<lhs> marker <rhs-literal>` patterns. */
+  private def infixPostPass(sql: String): String = {
+    var r = InfixRe.replaceAllIn(sql, m => {
       val (lhs, cs, neg, kind, lit0) =
         (m.group(1), m.group(2) == "cs", m.group(3) == "n", m.group(4), m.group(5))
       val inner = lit0.substring(1, lit0.length - 1)
-      val lit = "'" + inner.replace("'", "''") + "'"
+      val lit = sqlQuoted(inner)
       val pos = (kind, cs) match {
         case ("contains", false) => s"contains(lower($lhs), lower($lit))"
         case ("starts", false)   => s"startswith(lower($lhs), lower($lit))"
         case ("ends", false)     => s"endswith(lower($lhs), lower($lit))"
-        case ("has", false)      => hasTermSql(lhs, inner)
+        case ("has", false)      => hasTermSql(lhs, literalValue(inner))
         case ("contains", true)  => s"contains($lhs, $lit)"
         case ("starts", true)    => s"startswith($lhs, $lit)"
         case ("ends", true)      => s"endswith($lhs, $lit)"
-        case _                   => hasTermCsSql(lhs, inner) // ("has", true) — kinds are regex-closed
+        case _                   => hasTermCsSql(lhs, literalValue(inner)) // ("has", true) — kinds are regex-closed
       }
       java.util.regex.Matcher.quoteReplacement(if (neg) s"(NOT $pos)" else pos)
     })
     // `x in~ (...)` / `x !in~ (...)` — case-insensitive membership over
     // a literal list (both sides lowered; literals lower at parse time)
-    val CiIn = "([A-Za-z_][A-Za-z0-9_.]*)\\s+ilike_(n?)in\\s*\\(([^)]*)\\)".r
-    r = CiIn.replaceAllIn(r, m => {
+    r = CiInRe.replaceAllIn(r, m => {
       val (lhs, neg) = (m.group(1), m.group(2) == "n")
       val items = splitTopLevel(m.group(3), ',').map(_.trim).filter(_.nonEmpty)
       require(items.nonEmpty && items.forall(t =>
           t.length >= 2 && (t.head == '\'' || t.head == '"') && t.last == t.head),
         s"in~ expects a parenthesized list of string literals")
-      val list = items.map(t =>
-        "'" + t.substring(1, t.length - 1).toLowerCase.replace("'", "''") + "'").mkString(", ")
+      val list = items.map(t => sqlQuoted(t.substring(1, t.length - 1).toLowerCase)).mkString(", ")
       java.util.regex.Matcher.quoteReplacement(
         s"(lower($lhs) ${if (neg) "NOT IN" else "IN"} ($list))")
     })
     // `lhs has_any ("a", "b", …)` / `has_all` — OR/AND of whole-term
     // matches over a literal list
-    val HasList = "([A-Za-z_][A-Za-z0-9_.]*)\\s+ilike_has(any|all)\\s*\\(([^)]*)\\)".r
-    r = HasList.replaceAllIn(r, m => {
+    r = HasListRe.replaceAllIn(r, m => {
       val (lhs, mode) = (m.group(1), m.group(2))
       val items = splitTopLevel(m.group(3), ',').map(_.trim).filter(_.nonEmpty)
       require(items.nonEmpty && items.forall(t =>
           t.length >= 2 && (t.head == '\'' || t.head == '"') && t.last == t.head),
         s"has_$mode expects a parenthesized list of string literals")
-      val terms = items.map(t => hasTermSql(lhs, t.substring(1, t.length - 1)))
+      val terms = items.map(t => hasTermSql(lhs, literalValue(t.substring(1, t.length - 1))))
       java.util.regex.Matcher.quoteReplacement(
         "(" + terms.mkString(if (mode == "any") " OR " else " AND ") + ")")
     })
     // `a ILIKE b` from =~ : case-insensitive equality
-    val Citext = "([A-Za-z_][A-Za-z0-9_.]*)\\s+ILIKE\\s+('[^']*'|\"[^\"]*\")".r
-    r = Citext.replaceAllIn(r, m =>
-      s"lower(${m.group(1)}) = lower('" +
-        m.group(2).substring(1, m.group(2).length - 1).replace("'", "''") + "')")
-    r
+    CitextRe.replaceAllIn(r, m =>
+      java.util.regex.Matcher.quoteReplacement(
+        s"lower(${m.group(1)}) = lower(${sqlQuoted(m.group(2).substring(1, m.group(2).length - 1))})"))
   }
 
   /** ADX `has` as SQL: case-insensitive WHOLE-TERM match — the literal

@@ -2288,6 +2288,54 @@ class KqlSpec extends SparkSpec {
     }
   }
 
+  test("parser: every scalar function rejects a wrong argument count by name") {
+    // one argument too many (too few for the variadic ones) is a binding
+    // error naming the function, raised before its body reads an
+    // argument (intercept fails on any other exception type, an
+    // IndexOutOfBoundsException included)
+    assert(KqlParser.scalarFns.size == 294)
+    KqlParser.scalarFns.foreach { case (name, f) =>
+      val n = if (f.maxArgs < Int.MaxValue) f.maxArgs + 1 else f.minArgs - 1
+      assert(n >= 0, name)
+      val call = s"$name(${Seq.fill(n)("x").mkString(", ")})"
+      val e = intercept[IllegalArgumentException](KqlParser.scalar(call))
+      assert(e.getMessage.startsWith(s"$name expects "), s"$call: ${e.getMessage}")
+    }
+    // an unknown series_* name is still rejected, listing the table's
+    val e = intercept[IllegalArgumentException](KqlParser.scalar("series_cross_correlate(a)"))
+    assert(e.getMessage.contains("unsupported series function") &&
+      e.getMessage.contains("series_fir"))
+    // any other name outside the table passes through to Spark SQL
+    assert(KqlParser.scalar("sqrt(x)") == "sqrt(x)")
+    assert(KqlParser.scalar("abs(x)") == "abs(x)")
+  }
+
+  test("parser: a backslash-escaped quote stays inside its string literal") {
+    val reg = Map("T" -> Seq(("don't has it", 3), ("it's bin(x)", 5), ("plain", 7))
+      .toDF("msg", "x"))
+    def xs(q: String) = KqlParser.run(q, reg).select("x").as[Int].collect().toSeq.sorted
+    // the literal's `has` and `bin(` are text, not an operator or a call
+    assert(xs("""T | where msg == 'don\'t has it'""") == Seq(3))
+    assert(KqlParser.run("""T | where x == 5 | extend n = strlen('it\'s bin(x)') | project n""",
+      reg).as[Int].collect().toSeq == Seq(11))
+    // the infix operators take the whole escaped literal
+    assert(xs("""T | where msg contains 'it\'s'""") == Seq(5))
+    assert(xs("""T | where msg has 'don\'t'""") == Seq(3))
+    assert(xs("""T | where msg =~ 'DON\'T HAS IT'""") == Seq(3))
+    // a let reference after the literal is substituted; the literal is not
+    assert(KqlParser.run("""let t = 5; let u = strcat('it\'s t', '/', t); """ +
+        "T | where x == 3 | project u", reg).as[String].collect().toSeq == Seq("it's t/5"))
+  }
+
+  test("parser: a word stops at '!', so `t!=3` reads like `t != 3`") {
+    val reg = Map("T" -> Seq((1, "a b"), (3, "c"), (5, "a")).toDF("amount", "s"))
+    def amounts(q: String) = KqlParser.run(q, reg).select("amount").as[Int].collect().toSeq.sorted
+    assert(amounts("let t = 3; T | where t!=amount") == Seq(1, 5))
+    assert(amounts("let t = 3; T | where t!=amount") == amounts("let t = 3; T | where t != amount"))
+    assert(amounts("T | where s!has 'a'") == Seq(3))
+    assert(amounts("T | where amount!in (1, 5)") == Seq(3))
+  }
+
   test("parser: an impossible datetime literal is an IllegalArgumentException naming the plugin") {
     val reg = Map("E" -> Seq(("u1", java.sql.Timestamp.valueOf("2024-01-01 05:00:00")))
       .toDF("uid", "t"))
